@@ -27,7 +27,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSpark.cpus(32)
     // platform CPU throttling makes single totals bounce ~2.7× on
     // identical code (see commit 4c5ba18): run the suite N times and
     // report per-query MEDIANS + every run's total. Default 3: with 2
@@ -41,14 +41,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
     def selected = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.session(32)
     spark.sparkContext.setLogLevel("WARN")
     // warm the FS cache / codegen paths so the first measured query
     // doesn't absorb session start-up cost, and build the JVM-lifetime

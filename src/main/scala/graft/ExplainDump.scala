@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dumper: `runMain graft.ExplainDump <sfDir> <outDir> <prefix>[,<prefix>...] [suffix]`.
   *
   * Writes `<outDir>/<query>_<suffix>.txt` with the `.explain("formatted")`
-  * output of each selected query, under the same session config as
-  * [[Bench]]. Streaming gates are skipped unless explicitly prefixed —
+  * output of each selected query, under the [[LocalSpark]] session.
+  * Streaming gates are skipped unless explicitly prefixed —
   * their returned frame is the post-run sink table, so the interesting
   * plan (the micro-batch plan) is not what explain would show.
   */
@@ -16,15 +14,7 @@ object ExplainDump {
     val outDir = args(1)
     val prefixes = args(2).split(",").toSeq
     val suffix = if (args.length > 3) args(3) else "after"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSpark.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)

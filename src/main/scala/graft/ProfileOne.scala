@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only query profiler: `runMain graft.ProfileOne <sfDir> <prefix>[,<prefix>...] [nRuns]`.
   *
-  * Same session config as [[Bench]], plus a listener that attributes,
+  * The [[LocalSpark]] session, plus a listener that attributes,
   * per timed query run: number of Spark jobs, summed task time, summed
   * stage wall time, and the driver-side gap (wall time not covered by
   * any running job = planning/analysis/collect overhead). The gap is
@@ -15,23 +14,25 @@ import org.apache.spark.sql.SparkSession
   * without a UI.
   */
 object ProfileOne {
+
+  /** `k=v;k=v` → pairs. An entry that is not `k=v` throws, naming it: a
+    * dropped A/B conf would silently profile the baseline instead.
+    */
+  def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map { entry =>
+      entry.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => (k.trim, v)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$entry' is not k=v")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val prefixes = args(1).split(",").toSeq
     val nRuns = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // extra session confs for A/B runs: SPARK_GRAFT_CONF="k=v;k=v"
-    val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }
-    val spark = extra.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
+    val spark = LocalSpark.session(32, sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(parseConf))
     spark.sparkContext.setLogLevel("ERROR")
 
     // jobId → (submitTime, endTime); stage metrics accumulated globally

@@ -1,81 +1,47 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Dev-only streaming profiler: re-runs the s04 stream-stream join
-  * topology (and s01's windowed agg) with a configurable state
-  * partition count and dumps every micro-batch's progress JSON —
-  * durationMs breakdown (addBatch/getBatch/walCommit/...) and state
-  * operator metrics (commit times, rows, memory). This answers where a
-  * bounded streaming gate's task time actually goes, which ProfileOne's
-  * whole-run aggregates cannot.
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+
+/** Dev-only streaming profiler: `runMain graft.ProfileStream <sfDir> <gate>[,<gate>...]`.
   *
-  * `runMain graft.ProfileStream <sfDir> <statePartitions> [join|agg]`
+  * Runs each named gate from [[SparkEntry.queries]] three times — the
+  * gate itself, with its own confs, sinks and checkpoints — and prints
+  * every micro-batch's progress JSON: the durationMs breakdown
+  * (addBatch/latestOffset/walCommit/...) and the state operator metrics
+  * (commit times, rows, memory). This answers where a bounded streaming
+  * gate's time goes, which ProfileOne's whole-run aggregates cannot.
   */
 object ProfileStream {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val parts = if (args.length > 1) args(1).toInt else 8
-    val mode = if (args.length > 2) args(2) else "join"
-    val provider = if (args.length > 3) args(3) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val gates = args(1).split(",").toSeq.map { n =>
+      n -> SparkEntry.queries.getOrElse(n, throw new IllegalArgumentException(s"no gate named $n"))
+    }
+    val spark = LocalSpark.session(32)
     spark.sparkContext.setLogLevel("ERROR")
-    if (provider == "rocksdb")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (provider == "nodata")
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-
-    val batchSchema = graft.queries.Tables.raw(spark, sfDir, "events").schema
-    def stream() = graft.queries.Tables.normalizeTs(
-      spark.readStream.schema(batchSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(sfDir))
-
-    for (i <- 1 to 3) {
-      val ckpt = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), "profstream_").toString
-      val plan: DataFrame = mode match {
-        case "agg" =>
-          stream().withWatermark("ts", "1 hour")
-            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-            .agg(count(lit(1)).as("cnt"),
-              sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-        case _ =>
-          val ev = stream()
-          val clicks = ev.where(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-            .withWatermark("click_ts", "1 hour")
-          val purchases = ev.where(col("event_type") === "purchase")
-            .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-              col("ts").as("purchase_ts"), col("value"))
-            .withWatermark("purchase_ts", "1 hour")
-          clicks.join(purchases,
-            col("user_id") === col("p_user") &&
-              col("purchase_ts") > col("click_ts") &&
-              col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
-      }
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    // started events reach listeners synchronously inside start(),
+    // progress and terminated ones later through the listener bus, in
+    // order per query: once every started query has reported its end,
+    // all of its progress has been printed
+    val started, terminated = new AtomicInteger
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        println(s"  PROGRESS ${e.progress.name} ${e.progress.json}")
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated.incrementAndGet()
+    })
+    for ((name, fn) <- gates; i <- 1 to 3) {
       val t0 = System.nanoTime()
-      val q = try plan.writeStream
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName(s"profsink$i")
-        .outputMode(if (mode == "agg") "complete" else "append")
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      try q.processAllAvailable() finally q.stop()
+      val rows = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"RUN$i parts=$parts wall=$wall%.2fs")
-      q.recentProgress.foreach(p => println("  PROGRESS " + p.json))
+      val deadline = System.nanoTime() + 30000000000L
+      while (terminated.get < started.get && System.nanoTime() < deadline) Thread.sleep(20)
+      if (terminated.get < started.get)
+        System.err.println(s"[profile] $name run$i: progress may be incomplete, listener bus not drained in 30 s")
+      println(f"RUN $name run$i wall=$wall%.2fs rows=$rows")
     }
     spark.stop()
   }

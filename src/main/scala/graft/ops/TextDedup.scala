@@ -1010,9 +1010,13 @@ object TextDedup {
     // anti-join, keep's anti-join) and `near` two (union + keep) — the
     // persisted inputs cached the SCANS but each consumer still re-ran
     // the join/groupBy subtrees (measured: 3× the md5 + exact-join task
-    // time on d30). A LAZY cut materializes each verdict table exactly
-    // once inside the final action; every consumer reads the pinned
-    // blocks (guide §1.2: don't recompute) and no extra job runs.
+    // time on d30). With no checkpoint dir configured, the LAZY cut is
+    // a localCheckpoint: it materializes each verdict table exactly
+    // once inside the final action, every consumer reads the pinned
+    // blocks (guide §1.2: don't recompute) and no extra job runs. With
+    // `spark.sql.graft.checkpointDir` set it is a reliable checkpoint
+    // of an unpersisted frame, so Spark computes the frame a second
+    // time, in a separate job that writes the checkpoint files.
     // Deliberately a cut, NOT persist(): the cut's stats-free LogicalRDD
     // also stops the planner broadcasting the near pass's EXPLODED
     // shingle join side — a single-threaded broadcast build of the

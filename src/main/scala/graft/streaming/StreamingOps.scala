@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Structured Streaming extension (optional beyond reference parity —
   * SURVEY §2B.10 notes the reference has no streaming surface).
@@ -53,21 +54,17 @@ object StreamingOps {
 
   /** Stateful streaming creates one state store per shuffle partition
     * per stateful operator per micro-batch; that fixed cost dominates a
-    * bounded local run. Cap the state partitions while a bounded query
-    * runs (state partitioning is fixed at query start from this conf —
-    * production sizes it to the cluster the same way) and restore the
-    * session's batch setting after.
+    * bounded local run. Cap the state partitions of a bounded query
+    * (state partitioning is fixed at query start from this conf —
+    * production sizes it to the cluster the same way).
     */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private val StatePartitions = "spark.sql.shuffle.partitions" -> "8"
 
-  /** Disable the trailing no-data micro-batch for queries whose OUTPUT
+  /** Skip the trailing no-data micro-batch for queries whose OUTPUT
     * provably cannot depend on it — the INNER and LEFT SEMI
     * stream-stream joins, which emit every result row at match time
-    * inside a data batch; the no-data batch only evicts expired state
+    * inside a data batch, and the dedups, which emit first-seen rows in
+    * their arrival batch; the no-data batch only evicts expired state
     * (an eviction scan + one commit per state store: measured 1.0-2.2 s
     * of the bounded run, ~40% of s04's wall). NOT applicable to the
     * left-outer join (s08: unmatched rows emit on watermark passage,
@@ -75,17 +72,57 @@ object StreamingOps {
     * (s16: final windows emit there) — those keep the default. On an
     * unbounded run the same setting merely defers state eviction to the
     * next data batch, which for a continuously-fed pipeline is the next
-    * trigger anyway. The conf is captured at query start, so the
-    * set/restore window scopes it to this one query.
+    * trigger anyway.
     */
-  private def withNoDataBatchesDisabled[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+  private val NoDataBatchesOff = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** The RocksDB state store provider (transformWithState requires it;
+    * s18/s22 pin that results are invariant under it).
+    */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Held from a run's conf set through `start()` to the restore. Spark
+    * clones the session conf into the stream inside `start()`, so that
+    * window is the only time a run's confs are visible on the session —
+    * and a query started on it concurrently would capture them (an s08
+    * inheriting s04's no-data skip silently loses its unmatched rows).
+    * The runs themselves still overlap.
+    */
+  private object StartLock
+
+  /** The one bounded run: starts `df` through `sink` from `checkpoint`
+    * (fresh unless a recovery phase shares one) with `confs` set on the
+    * session for the start only, waits for it (`processAllAvailable`
+    * unless the caller waits its own way) and always stops it. Returns
+    * the stopped query; its `recentProgress` stays readable.
+    */
+  private def run(df: DataFrame, outputMode: String, confs: Seq[(String, String)],
+      checkpoint: String = ckpt(), await: StreamingQuery => Unit = _.processAllAvailable())(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val conf = df.sparkSession.conf
+    val q = StartLock.synchronized {
+      val prev = confs.map { case (k, _) => k -> conf.getOption(k) }
+      confs.foreach { case (k, v) => conf.set(k, v) }
+      try sink(df.writeStream.option("checkpointLocation", checkpoint)
+        .outputMode(outputMode)).start()
+      finally prev.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None)    => conf.unset(k)
+      }
     }
+    try await(q) finally q.stop()
+    q
+  }
+
+  private def memory(queryName: String): DataStreamWriter[Row] => DataStreamWriter[Row] =
+    _.format("memory").queryName(queryName)
+
+  /** [[run]] into a memory sink; returns the sink table. */
+  private def toMemory(df: DataFrame, queryName: String, outputMode: String,
+      confs: (String, String)*): DataFrame = {
+    run(df, outputMode, confs)(memory(queryName))
+    df.sparkSession.table(queryName)
   }
 
   /** Tumbling event-time window counts with a watermark. */
@@ -112,22 +149,14 @@ object StreamingOps {
 
   /** Bounded-stream sessionization → memory sink → final state. */
   def runBoundedSessionAgg(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val agg = sessionize(boundedEventStream(spark, sfDir), "30 minutes")
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+      queryName: String): DataFrame =
+    toMemory(sessionize(boundedEventStream(spark, sfDir), "30 minutes"),
+        queryName, "complete", StatePartitions)
       .select(col("user_id"),
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
         col("n_events"), col("sum_value"))
       .orderBy(col("user_id"), col("session_start"))
-  }
 
   /** First occurrence of each (user, event_type) — streaming exact
     * dedup with explicit keyed state via flatMapGroupsWithState: state
@@ -163,17 +192,10 @@ object StreamingOps {
 
   /** Bounded-stream first-seen dedup → memory sink → final rows. */
   def runBoundedFirstSeen(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val q = withStatePartitions(spark, 8)(
-      streamFirstSeen(boundedEventStream(spark, sfDir)).writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName).orderBy(col("user_id"), col("event_type"))
-  }
+      queryName: String): DataFrame =
+    toMemory(streamFirstSeen(boundedEventStream(spark, sfDir)),
+        queryName, "append", StatePartitions)
+      .orderBy(col("user_id"), col("event_type"))
 
   /** Stream-stream self-join: click → purchase attribution within a
     * 30-minute window. Both sides carry watermarks and the join
@@ -199,22 +221,14 @@ object StreamingOps {
 
   /** Bounded-stream attribution join → memory sink → final rows. */
   def runBoundedAttribution(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val q = withNoDataBatchesDisabled(spark)(withStatePartitions(spark, 8)(
-      streamClickAttribution(boundedEventStream(spark, sfDir)).writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .start()))
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+      queryName: String): DataFrame =
+    toMemory(streamClickAttribution(boundedEventStream(spark, sfDir)),
+        queryName, "append", StatePartitions, NoDataBatchesOff)
       .select(col("user_id"), col("click_id"), col("purchase_id"),
         date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
         date_format(col("purchase_ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
         col("value"))
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
-  }
 
   /** LEFT OUTER stream-stream attribution: every click, with its
     * purchases inside the 30-minute window or NULL if none came. The
@@ -271,14 +285,7 @@ object StreamingOps {
         spark.read.parquet(dir).schema).parquet(dir))
     val joined = streamClickAttributionLeftOuter(
       boundedEventStream(spark, sfDir).unionByName(sentinels))
-    val q = withStatePartitions(spark, 8)(joined.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    toMemory(joined, queryName, "append", StatePartitions)
       .where(col("user_id") >= 0)
       .select(col("user_id"), col("click_id"), col("purchase_id"),
         date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
@@ -310,16 +317,8 @@ object StreamingOps {
       boundedEventStream(spark, sfDir), boundedEventStream(spark, sfDir))
     // dropDuplicatesWithinWatermark emits first-seen rows in their
     // arrival batch; the no-data batch only expires state — output-
-    // identical without it (see withNoDataBatchesDisabled)
-    val q = withNoDataBatchesDisabled(spark)(withStatePartitions(spark, 8)(
-      dedup.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .start()))
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    // identical without it (see NoDataBatchesOff)
+    toMemory(dedup, queryName, "append", StatePartitions, NoDataBatchesOff)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
@@ -346,15 +345,8 @@ object StreamingOps {
       queryName: String): DataFrame = {
     val dim = graft.queries.Tables.raw(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = streamStaticEnrichment(boundedEventStream(spark, sfDir), dim)
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    toMemory(streamStaticEnrichment(boundedEventStream(spark, sfDir), dim),
+        queryName, "complete", StatePartitions)
       .select(col("c_mktsegment"), col("n_events"), col("sum_value"))
       .orderBy(col("c_mktsegment"))
   }
@@ -407,10 +399,7 @@ object StreamingOps {
         }
         next.write.mode("overwrite").parquet(target)
       }
-    val q = withStatePartitions(spark, 8)(
-      agg.writeStream.option("checkpointLocation", ckpt())
-        .outputMode("update").foreachBatch(upsert).start())
-    try q.processAllAvailable() finally q.stop()
+    run(agg, "update", Seq(StatePartitions))(_.queryName(queryName).foreachBatch(upsert))
     spark.read.parquet(target)
       .select(date_format(col("ws"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("cnt"), col("sum_value"))
@@ -434,23 +423,20 @@ object StreamingOps {
     * returns the complete final aggregation state.
     */
   def runBoundedWindowAgg(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val agg = windowedEventCounts(boundedEventStream(spark, sfDir), "1 hour", "1 hour")
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try {
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(queryName)
+      queryName: String): DataFrame =
+    windowCountsToMemory(spark, sfDir, queryName, StatePartitions)
+
+  /** s01's hourly windowed counts into a memory sink, read back in
+    * window order; s18 runs the same plan under the RocksDB provider.
+    */
+  private def windowCountsToMemory(spark: SparkSession, sfDir: String,
+      queryName: String, confs: (String, String)*): DataFrame =
+    toMemory(windowedEventCounts(boundedEventStream(spark, sfDir), "1 hour", "1 hour"),
+        queryName, "complete", confs: _*)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("cnt"), col("sum_value"))
       .orderBy(col("window_start"), col("event_type"))
-  }
 
   /** Streaming incremental document dedup — the streaming face of the
     * batch d30 operator: new documents arrive as a stream carrying
@@ -515,8 +501,8 @@ object StreamingOps {
   }
 
   /** Bounded transformWithState run: one batch, so the emitted rows are
-    * the final per-user totals. The RocksDB provider is set only while
-    * this query runs (transformWithState requires it).
+    * the final per-user totals. The RocksDB provider is set only for
+    * this query's start (transformWithState requires it).
     */
   def runBoundedTransformWithState(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
@@ -528,23 +514,9 @@ object StreamingOps {
     val out = typed.groupByKey(_._1)
       .transformWithState(new RunningTotalsProcessor,
         TimeMode.None(), OutputMode.Append())
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = withStatePartitions(spark, 8)(
-        out.toDF("user_id", "n_events", "max_value", "last_event_id").writeStream
-          .option("checkpointLocation", ckpt())
-          .format("memory")
-          .queryName(queryName)
-          .outputMode("append")
-          .start())
-      try q.processAllAvailable() finally q.stop()
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case scala.None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-    spark.table(queryName).orderBy(col("user_id"))
+    toMemory(out.toDF("user_id", "n_events", "max_value", "last_event_id"),
+        queryName, "append", StatePartitions, RocksDb)
+      .orderBy(col("user_id"))
   }
 
   /** Streaming heavy hitters — the Misra-Gries sketch inside a
@@ -564,17 +536,11 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 day"))
       .agg(expr("graft_heavy_hitters(event_type)").as("cands"),
         count(lit(1)).as("n_events"))
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
+    val sink = toMemory(agg, queryName, "complete", StatePartitions)
     val exact = graft.queries.Tables.t(spark, sfDir, "events")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
-    spark.table(queryName)
+    sink
       .select(col("window"), col("n_events"),
         explode(col("cands")).as("event_type"))
       .join(exact, Seq("window", "event_type"))
@@ -607,11 +573,8 @@ object StreamingOps {
         judged.where(!col("ok")).drop("ok")
           .write.mode("append").parquet(quarantined)
       }
-    val q = withStatePartitions(spark, 8)(
-      boundedDocStream(spark, sfDir).writeStream
-        .option("checkpointLocation", ckpt())
-        .foreachBatch(route).start())
-    try q.processAllAvailable() finally q.stop()
+    run(boundedDocStream(spark, sfDir), "append", Seq(StatePartitions))(
+      _.queryName(queryName).foreachBatch(route))
     def audit(path: String, verdict: String): DataFrame =
       (try spark.read.parquet(path) catch {
         case _: Throwable => spark.emptyDataFrame
@@ -645,16 +608,10 @@ object StreamingOps {
       .where(col("doc_id") % 5 === 1)
     // unwatermarked dropDuplicates emits first-seen rows in their
     // arrival batch and never evicts — the no-data batch is pure
-    // store-commit overhead here (see withNoDataBatchesDisabled)
-    val q = withNoDataBatchesDisabled(spark)(withStatePartitions(spark, 8)(
-      streamIncrementalDedup(redelivered, historical).writeStream
-        .option("checkpointLocation", ckpt())
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .start()))
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName).orderBy(col("text_hash"))
+    // store-commit overhead here (see NoDataBatchesOff)
+    toMemory(streamIncrementalDedup(redelivered, historical),
+        queryName, "append", StatePartitions, NoDataBatchesOff)
+      .orderBy(col("text_hash"))
   }
 
   /** Streaming cardinality sketches — the streaming face of the batch
@@ -679,17 +636,11 @@ object StreamingOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(expr("graft_hll(user_id)").as("est_users"))
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
+    val sink = toMemory(agg, queryName, "complete", StatePartitions)
     val exact = graft.queries.Tables.t(spark, sfDir, "events")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
-    spark.table(queryName)
+    sink
       .join(exact, Seq("window", "event_type"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd").as("day"),
@@ -712,16 +663,9 @@ object StreamingOps {
   def runBoundedAnomalyFlags(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
     val agg = windowedEventCounts(boundedEventStream(spark, sfDir), "1 hour", "1 hour")
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
     // snapshot the sink before the self-join: two scans of the same
     // MemoryPlan share attribute ids and fail join resolution
-    val st = spark.table(queryName)
+    val st = toMemory(agg, queryName, "complete", StatePartitions)
       .select(col("event_type"), col("window.start").as("ws"), col("cnt"))
       .localCheckpoint(true)
     val base = st.groupBy(col("event_type"))
@@ -766,17 +710,10 @@ object StreamingOps {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start())
-    try {
+    run(agg, "complete", Seq(StatePartitions), await = { q =>
       q.awaitTermination(120000)
       require(!q.isActive, "AvailableNow query must self-terminate")
-    } finally if (q.isActive) q.stop()
+    })(memory(queryName).andThen(_.trigger(Trigger.AvailableNow())))
     spark.table(queryName).orderBy(col("event_type"))
   }
 
@@ -807,14 +744,8 @@ object StreamingOps {
       .groupBy(col("version"), col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName).orderBy(col("version"), col("c_mktsegment"))
+    toMemory(agg, queryName, "complete", StatePartitions)
+      .orderBy(col("version"), col("c_mktsegment"))
   }
 
   /** Checkpoint recovery — the exactly-once contract across restarts:
@@ -828,30 +759,30 @@ object StreamingOps {
     * table is the full recovered state.
     */
   def runBoundedCheckpointRecovery(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
+      queryName: String): DataFrame =
+    recover(spark, sfDir, queryName, StatePartitions)
+
+  /** The two-phase recovery run behind s19 and s22: both phases start
+    * under `confs` from one shared checkpoint.
+    */
+  private def recover(spark: SparkSession, sfDir: String, queryName: String,
+      confs: (String, String)*): DataFrame = {
     val src = Scratch.fresh("recov_src_")
-    val ck = Scratch.fresh("recov_ck_")
+    val ck = ckpt()
     val ev = graft.queries.Tables.t(spark, sfDir, "events")
-    def startPhase(qn: String) = withStatePartitions(spark, 8)(
+    def phase(qn: String): Unit = run(
       graft.queries.Tables.normalizeTs(
           spark.readStream.schema(ev.schema).parquet(src))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-        .writeStream
-        .option("checkpointLocation", ck)
-        .format("memory")
-        .queryName(qn)
-        .outputMode("complete")
-        .start())
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete", confs, checkpoint = ck)(memory(qn))
     ev.where(col("event_id") % 2 === 0)
       .coalesce(1).write.mode("append").parquet(src)
-    val q1 = startPhase(queryName + "_p1")
-    try q1.processAllAvailable() finally q1.stop()
+    phase(queryName + "_p1")
     ev.where(col("event_id") % 2 =!= 0)
       .coalesce(1).write.mode("append").parquet(src)
-    val q2 = startPhase(queryName)
-    try q2.processAllAvailable() finally q2.stop()
+    phase(queryName)
     spark.table(queryName).orderBy(col("event_type"))
   }
 
@@ -862,22 +793,12 @@ object StreamingOps {
     * so the two properties are pinned together: the recovered run's
     * final totals must equal the batch aggregation over ALL events —
     * no re-read of the committed half, no state loss across the
-    * provider-backed restart. The provider conf is scoped to the run;
-    * it is baked into both phases' state stores since both start
-    * inside the window.
+    * provider-backed restart. Both phases start under the provider
+    * conf, so it is baked into both phases' state stores.
     */
   def runBoundedRocksDbRecovery(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runBoundedCheckpointRecovery(spark, sfDir, queryName)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+      queryName: String): DataFrame =
+    recover(spark, sfDir, queryName, StatePartitions, RocksDb)
 
   /** The windowed aggregation (s01's plan) on the RocksDB state store —
     * the provider a production cluster runs, because the default
@@ -886,33 +807,10 @@ object StreamingOps {
     * disk with changelog checkpointing, so state scales with disk,
     * not heap. The gate pins that results are IDENTICAL under the
     * provider swap — state backend must be invisible to semantics.
-    * The provider conf is fixed at query start, so it is scoped to
-    * this run and restored after (same pattern as the partition cap).
     */
   def runBoundedWindowAggRocksDB(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val agg = windowedEventCounts(boundedEventStream(spark, sfDir), "1 hour", "1 hour")
-      val q = withStatePartitions(spark, 8)(agg.writeStream
-        .option("checkpointLocation", ckpt())
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("complete")
-        .start())
-      try q.processAllAvailable() finally q.stop()
-      spark.table(queryName)
-        .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("cnt"), col("sum_value"))
-        .orderBy(col("window_start"), col("event_type"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+      queryName: String): DataFrame =
+    windowCountsToMemory(spark, sfDir, queryName, StatePartitions, RocksDb)
 
   /** Stream-stream LEFT SEMI join — the third join flavor next to the
     * inner (s04) and left-outer (s08) attributions: emit each click
@@ -938,21 +836,12 @@ object StreamingOps {
 
   /** Bounded left-semi conversion run → memory sink → matched clicks. */
   def runBoundedSemiConversion(spark: SparkSession, sfDir: String,
-      queryName: String): DataFrame = {
-    val joined = streamClickConversionSemi(boundedEventStream(spark, sfDir))
-    val q = withNoDataBatchesDisabled(spark)(withStatePartitions(spark, 8)(
-      joined.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .start()))
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+      queryName: String): DataFrame =
+    toMemory(streamClickConversionSemi(boundedEventStream(spark, sfDir)),
+        queryName, "append", StatePartitions, NoDataBatchesOff)
       .select(col("user_id"), col("click_id"),
         date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"))
       .orderBy(col("user_id"), col("click_id"))
-  }
 
   /** Late-data accounting under a watermark — the semantics that make
     * unbounded aggregation state evictable at all: once the watermark
@@ -1015,17 +904,9 @@ object StreamingOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .start())
-    val dropped = try {
-      q.processAllAvailable()
-      q.recentProgress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-    } finally q.stop()
+    val q = run(agg, "append", Seq(StatePartitions))(memory(queryName))
+    val dropped = q.recentProgress.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum
     spark.table(queryName)
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("cnt"))
@@ -1083,14 +964,8 @@ object StreamingOps {
   /** Bounded-stream funnel → memory sink → final per-user stages. */
   def runBoundedFunnel(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    val q = withStatePartitions(spark, 8)(
-      streamFunnel(boundedEventStream(spark, sfDir)).writeStream
-        .option("checkpointLocation", ckpt())
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .start())
-    try q.processAllAvailable() finally q.stop()
+    val sink = toMemory(streamFunnel(boundedEventStream(spark, sfDir)),
+      queryName, "append", StatePartitions)
     // the append-mode sink holds one row per stage TRANSITION (the
     // state machine emits on every upgrade); with 2+ micro-batches a
     // user can appear at stage 1 and again at stage 3 — reduce to the
@@ -1098,7 +973,7 @@ object StreamingOps {
     // regardless of how the source files split into triggers
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("stage").desc)
-    spark.table(queryName)
+    sink
       .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
       .orderBy(col("user_id"))
   }
@@ -1119,17 +994,10 @@ object StreamingOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
     // the sink table is days×types rows; checkpoint it so the three
     // derivations below (day totals × type totals ⟕ cells) join as
     // clean re-instanced relations, not conflicting self-references
-    val counts = spark.table(queryName)
+    val counts = toMemory(agg, queryName, "complete", StatePartitions)
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"))
       .localCheckpoint(true)
@@ -1176,14 +1044,8 @@ object StreamingOps {
           |  ELSE '4_kept' END""".stripMargin))
       .groupBy(col("source"), col("stage"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_tokens"))
-    val q = withStatePartitions(spark, 8)(agg.writeStream
-      .option("checkpointLocation", ckpt())
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName).orderBy(col("source"), col("stage"))
+    toMemory(agg, queryName, "complete", StatePartitions)
+      .orderBy(col("source"), col("stage"))
   }
 
   /** Streaming ingest-time decontamination: d133's exact verbatim
@@ -1228,9 +1090,7 @@ object StreamingOps {
           batch.where(!isBench), evalDocs, n = 8)
         flagged.write.mode("append").parquet(target)
       }
-    val q = docs.writeStream.option("checkpointLocation", ckpt())
-      .outputMode("append").foreachBatch(probe).start()
-    try q.processAllAvailable() finally q.stop()
+    run(docs, "append", Nil)(_.queryName(queryName).foreachBatch(probe))
     spark.read.parquet(target).orderBy(col("doc_id"))
   }
 }
