@@ -82,27 +82,30 @@ object Bench {
     val errsJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     // the driver captures only the LAST ~2000 chars of output, so the
     // stdout line carries total + the 25 slowest queries (the ones worth
-    // trending); the complete per-query map goes to BENCH_FULL.json
-    val slow = medians.toSeq.sortBy(-_._2).take(25)
-    val qs = slow.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val full = medians.toSeq.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${names.size},"n_runs":$nRuns,"run_totals":$runsJson,"errors":$errsJson,"queries":$full,"sf":"$sfDir"}"""
+    // trending); the complete per-query map goes to BENCH_FULL_c<cores>.json;
+    // one builder writes both, so the two records cannot drift apart
+    val bySlowest = medians.toSeq.sortBy(-_._2)
+    def line(queries: Seq[(String, Double)]): String = {
+      val qs = queries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${names.size},"n_runs":$nRuns,"run_totals":$runsJson,"errors":$errsJson,"queries":$qs,"sf":"$sfDir"}"""
+    }
     // subset runs must not clobber the last full suite's record, and the
     // driver's lower-core scaling sweep must not clobber the 32-core one:
     // the record file is suffixed with the core count it measured
-    if (only.isEmpty)
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"BENCH_FULL_c$cpus.json"),
-        (fullLine + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => }
+    if (only.isEmpty) {
+      val record = s"BENCH_FULL_c$cpus.json"
+      try java.nio.file.Files.write(java.nio.file.Paths.get(record),
+        (line(bySlowest) + "\n").getBytes("UTF-8"))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] could not write $record: $e")
+      }
+    }
     // stop the session BEFORE printing: the driver keeps only the output
     // TAIL, and spark.stop()'s shutdown logging after the JSON line is
     // exactly what truncated BENCH_r05's parse (parsed: null)
     spark.sparkContext.setLogLevel("ERROR")
     try spark.stop() catch { case _: Throwable => }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${names.size},"n_runs":$nRuns,"run_totals":$runsJson,"errors":$errsJson,"queries":$qs,"sf":"$sfDir"}""")
+    println(line(bySlowest.take(25)))
   }
 }

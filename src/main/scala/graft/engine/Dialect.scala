@@ -4,7 +4,9 @@ package graft.engine
   * corpus uses that Spark SQL spells differently (SURVEY §7.3 "BigQuery
   * dialect deltas"). Applied to SQL text after macro rendering, before
   * `spark.sql`. Deliberately conservative, token-aware regexes — the
-  * corpus surface is small and pinned by tests.
+  * corpus surface is small and pinned by tests. Every pass reads quotes,
+  * backticks, comments and brackets through [[SqlLex]], the one lexer
+  * the engine has.
   */
 object Dialect {
 
@@ -53,16 +55,16 @@ object Dialect {
         var open = m.end - 1
         var continue = true
         while (continue) {
-          balancedEnd(s, open) match {
-            case Some(e) =>
-              out += ((name, open + 1, e - 1))
-              contRe.findFirstMatchIn(s.substring(e)) match {
-                case Some(cm) =>
-                  name = cm.group(1).toUpperCase
-                  open = e + cm.end - 1
-                case scala.None => continue = false
-              }
-            case scala.None => continue = false
+          val close = SqlLex.close(s, open)
+          if (close < 0) continue = false
+          else {
+            out += ((name, open + 1, close))
+            contRe.findFirstMatchIn(s.substring(close + 1)) match {
+              case Some(cm) =>
+                name = cm.group(1).toUpperCase
+                open = close + cm.end
+              case scala.None => continue = false
+            }
           }
         }
       }
@@ -105,33 +107,17 @@ object Dialect {
         byName.contains(m.group(1).toUpperCase))
       hit.foreach { m =>
         val parenOpen = out.indexOf('(', m.start)
-        balancedEnd(out, parenOpen).foreach { e =>
-          val inner = out.substring(parenOpen + 1, e - 1)
+        val close = SqlLex.close(out, parenOpen)
+        if (close >= 0) {
+          val inner = out.substring(parenOpen + 1, close)
           val rest = inner.replaceFirst(raw"(?is)^\s*[A-Za-z_]\w*", "")
           out = out.substring(0, parenOpen + 1) +
-            byName(m.group(1).toUpperCase) + " " + rest + out.substring(e - 1)
+            byName(m.group(1).toUpperCase) + " " + rest + out.substring(close)
           again = true
         }
       }
     }
     out
-  }
-
-  /** Index just past the ')' matching the '(' at `open` (literal-aware
-    * via the token stream), or None if unbalanced.
-    */
-  private def balancedEnd(s: String, open: Int): Option[Int] = {
-    var depth = 0
-    var res: Option[Int] = scala.None
-    StatementSplitter.tokens(s)
-      .filter(t => (t._1 == "(" || t._1 == ")") && t._2 >= open)
-      .foreach { case (p, pos) =>
-        if (res.isEmpty) {
-          depth += (if (p == "(") 1 else -1)
-          if (depth == 0) res = Some(pos + 1)
-        }
-      }
-    res
   }
 
   private val jsonLitKw = raw"(?i)\bJSON\s*(?=')".r
@@ -159,29 +145,26 @@ object Dialect {
     * (half-open, NULL bound = UNBOUNDED). Literal-span-aware.
     */
   private def rewriteRangeLiteral(sql: String): String =
-    rangeLitRe.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement {
-      if (inStringLiteral(sql, m.start)) m.matched
+    replaceOutside(rangeLitRe, sql) { m =>
+      val t = m.group(1).toUpperCase match {
+        case "DATETIME" => "TIMESTAMP_NTZ"
+        case other => other
+      }
+      val body = m.group(2).trim
+      if (!body.startsWith("[") || !body.endsWith(")")) m.matched // loud downstream
       else {
-        val t = m.group(1).toUpperCase match {
-          case "DATETIME" => "TIMESTAMP_NTZ"
-          case other => other
-        }
-        val body = m.group(2).trim
-        if (!body.startsWith("[") || !body.endsWith(")")) m.matched // loud downstream
+        val parts = body.substring(1, body.length - 1).split(",", 2).map(_.trim)
+        if (parts.length != 2) m.matched
         else {
-          val parts = body.substring(1, body.length - 1).split(",", 2).map(_.trim)
-          if (parts.length != 2) m.matched
-          else {
-            def bound(b: String) =
-              if (b.equalsIgnoreCase("UNBOUNDED") || b.equalsIgnoreCase("NULL"))
-                s"CAST(NULL AS $t)"
-              else s"CAST('$b' AS $t)"
-            s"named_struct('range_start', ${bound(parts(0))}, " +
-              s"'range_end', ${bound(parts(1))})"
-          }
+          def bound(b: String) =
+            if (b.equalsIgnoreCase("UNBOUNDED") || b.equalsIgnoreCase("NULL"))
+              s"CAST(NULL AS $t)"
+            else s"CAST('$b' AS $t)"
+          s"named_struct('range_start', ${bound(parts(0))}, " +
+            s"'range_end', ${bound(parts(1))})"
         }
       }
-    })
+    }
 
   private val mixedIntervalRe =
     raw"(?i)\bINTERVAL\s+'([^']*)'\s+(YEAR|MONTH|DAY|HOUR|MINUTE)\s+TO\s+(MONTH|DAY|HOUR|MINUTE|SECOND)\b".r
@@ -200,11 +183,10 @@ object Dialect {
     * → Spark's own loud error.
     */
   private def rewriteMixedInterval(sql: String): String =
-    mixedIntervalRe.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (inStringLiteral(sql, m.start)) m.matched
-        else mixedIntervalExpr(m.group(1).trim, m.group(2).toUpperCase,
-          m.group(3).toUpperCase).getOrElse(m.matched)))
+    replaceOutside(mixedIntervalRe, sql) { m =>
+      mixedIntervalExpr(m.group(1).trim, m.group(2).toUpperCase,
+        m.group(3).toUpperCase).getOrElse(m.matched)
+    }
 
   private def mixedIntervalExpr(v: String, from: String, to: String): Option[String] = {
     val fi = unitIdx(from); val ti = unitIdx(to)
@@ -269,10 +251,9 @@ object Dialect {
   }
 
   private def rewriteTimeLiteral(sql: String): String = {
-    val spans = literalSpans(sql)
-    def inLit(p: Int) = spans.exists(s => p >= s._1 && p < s._2)
+    lazy val spans = SqlLex.spans(sql)
     val ms = timeLitKw.findAllMatchIn(sql)
-      .filter(m => !inLit(m.start) && spans.exists(_._1 == m.end)).toList
+      .filter(m => !spans.inLiteral(m.start) && spans.literalEndAt(m.end) >= 0).toList
     if (ms.isEmpty) return sql
     val sb = new StringBuilder
     var idx = 0
@@ -287,17 +268,17 @@ object Dialect {
     * literals rewrite, and only when a literal actually follows.
     */
   private def rewriteJsonLiteral(sql: String): String = {
-    val spans = literalSpans(sql)
-    def inLit(p: Int) = spans.exists(s => p >= s._1 && p < s._2)
-    val ms = jsonLitKw.findAllMatchIn(sql).filter(m => !inLit(m.start)).toList
+    lazy val spans = SqlLex.spans(sql)
+    val ms = jsonLitKw.findAllMatchIn(sql).filter(m => !spans.inLiteral(m.start)).toList
     if (ms.isEmpty) return sql
     val sb = new StringBuilder
     var idx = 0
     ms.foreach { m =>
-      if (m.start >= idx) spans.find(_._1 == m.end).foreach { case (s0, e0) =>
+      val e0 = spans.literalEndAt(m.end)
+      if (m.start >= idx && e0 >= 0) {
         sb.append(sql.substring(idx, m.start))
           .append("to_json(parse_json(")
-          .append(sql.substring(s0, e0))
+          .append(sql.substring(m.end, e0))
           .append("))")
         idx = e0
       }
@@ -343,9 +324,7 @@ object Dialect {
     * function arguments — r10 ADVICE.)
     */
   private def isTableContext(cur: String, open: Int): Boolean = {
-    val spans = literalSpans(cur)
-    def spanStart(i: Int): Int =
-      spans.find(s => i >= s._1 && i < s._2).map(_._1).getOrElse(-1)
+    lazy val spans = SqlLex.spans(cur)
     var q = open - 1
     while (q >= 0 && cur.charAt(q).isWhitespace) q -= 1
     if (q < 0) return true // statement-level group: set-op branch shape
@@ -369,7 +348,7 @@ object Dialect {
       var depth = 0
       var j = q - 1
       while (j >= 0) {
-        val ss = spanStart(j)
+        val ss = spans.literalStart(j)
         if (ss >= 0) j = ss - 1
         else {
           val ch = cur.charAt(j)
@@ -391,13 +370,17 @@ object Dialect {
     } else false // operator/'='/etc. → scalar expression position
   }
 
+  private val structListEnd =
+    Set("FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION", "QUALIFY", "WINDOW")
+
   private def rewriteStructSubquery(sql: String): String = {
     var cur = sql
     var changed = true
     while (changed) {
       changed = false
+      lazy val spans = SqlLex.spans(cur)
       val candidate = selectAsStruct.findAllMatchIn(cur).find { m =>
-        !inStringLiteral(cur, m.start) && {
+        !spans.inLiteralOrComment(m.start) && {
           var p = m.start - 1
           while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
           p >= 0 && cur.charAt(p) == '(' && !isTableContext(cur, p)
@@ -406,30 +389,12 @@ object Dialect {
       candidate.foreach { m =>
         var p = m.start - 1
         while (cur.charAt(p).isWhitespace) p -= 1
-        val close = matchParen(cur, p)
+        val close = SqlLex.close(cur, p)
         if (close > 0) {
           // select list ends at the first top-level clause keyword or
           // the subquery's closing paren
-          val kw = raw"(?i)^(FROM|WHERE|GROUP|ORDER|LIMIT|HAVING|UNION|QUALIFY|WINDOW)\b".r
-          var i = m.end
-          var depth = 0
-          var listEnd = close
-          while (i < close) {
-            val ch = cur.charAt(i)
-            if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoted(cur, i)
-            else if (ch == '(') { depth += 1; i += 1 }
-            else if (ch == ')') { depth -= 1; i += 1 }
-            else if (depth == 0 && ch.isLetter && (i == m.end || {
-              val pc = cur.charAt(i - 1); !(pc.isLetterOrDigit || pc == '_') })) {
-              if (kw.findFirstIn(cur.substring(i, math.min(close, i + 10))).isDefined) {
-                listEnd = i; i = close
-              } else {
-                var j = i
-                while (j < close && (cur.charAt(j).isLetterOrDigit || cur.charAt(j) == '_')) j += 1
-                i = math.max(j, i + 1)
-              }
-            } else i += 1
-          }
+          val listEnd =
+            SqlLex.clauseEnd(cur, m.end)(i => structListEnd(SqlLex.wordAt(cur, i)))
           val list = cur.substring(m.end, listEnd).trim
           if (list.nonEmpty) {
             cur = cur.substring(0, m.start) + s"SELECT struct($list) " +
@@ -444,12 +409,11 @@ object Dialect {
 
   private def rewriteSelectAsValue(sql: String): String =
     selectAsValueRe.findFirstMatchIn(sql) match {
-      case Some(m) if !literalSpans(sql).exists(s =>
-          m.start >= s._1 && m.start < s._2) =>
+      case Some(m) if !SqlLex.spans(sql).inLiteral(m.start) =>
         val stop = Set("FROM", "UNION", "INTERSECT", "EXCEPT", "ORDER", "LIMIT")
         var depth = 0
         var exprEnd = sql.length
-        val it = StatementSplitter.tokens(sql).iterator.filter(_._2 >= m.end)
+        val it = SqlLex.tokens(sql).iterator.filter(_._2 >= m.end)
         var done = false
         while (it.hasNext && !done) {
           val (t, pos) = it.next()
@@ -472,48 +436,6 @@ object Dialect {
   /** `CREATE TEMP TABLE` → Spark temp view DDL is handled by
     * ScriptRunner; this just normalizes the keyword spelling.
     */
-  // both BigQuery string literal forms: '…' and "…" (backslash escapes);
-  // a '…' match starting earlier swallows any double quotes inside it,
-  // and vice versa, so JSON-ish payloads like '{"a":1}' stay one literal
-  private val stringLit = raw"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"".r
-
-  /** End (exclusive) of the comment starting at `i`, or -1 when `s(i)`
-    * doesn't start one.
-    */
-  private def commentEnd(s: String, i: Int): Int =
-    if (i + 1 >= s.length) -1
-    else if (s.charAt(i) == '-' && s.charAt(i + 1) == '-') {
-      val nl = s.indexOf('\n', i + 2); if (nl < 0) s.length else nl + 1
-    } else if (s.charAt(i) == '/' && s.charAt(i + 1) == '*') {
-      val e = s.indexOf("*/", i + 2); if (e < 0) s.length else e + 2
-    } else -1
-
-  /** [start, end) spans of string literals, COMMENT-AWARE: an apostrophe
-    * inside `-- don't` or a block comment must not open a phantom
-    * literal that pairs with a real literal's opening quote and exposes
-    * its content to the keyword passes. Quotes inside backtick
-    * identifiers don't open literals either.
-    */
-  private[engine] def literalSpans(s: String): Vector[(Int, Int)] =
-    literalAndCommentSpans(s)._1
-
-  /** One scan → (string-literal spans, comment spans). */
-  private def literalAndCommentSpans(
-      s: String): (Vector[(Int, Int)], Vector[(Int, Int)]) = {
-    val lits = Vector.newBuilder[(Int, Int)]
-    val comments = Vector.newBuilder[(Int, Int)]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val ce = commentEnd(s, i)
-      if (ce >= 0) { comments += ((i, ce)); i = ce }
-      else if (c == '\'' || c == '"') { val e = skipQuoted(s, i); lits += ((i, e)); i = e }
-      else if (c == '`') i = skipQuoted(s, i)
-      else i += 1
-    }
-    (lits.result(), comments.result())
-  }
-
   /** Apply `f` only to the regions of `sql` outside string literals
     * (single- OR double-quoted), so keyword rewrites can't corrupt
     * literal text like 'NUMERIC keypad' or "a DATETIME 'x". Comments
@@ -523,7 +445,7 @@ object Dialect {
   private def mapOutsideLiterals(sql: String)(f: String => String): String = {
     val sb = new StringBuilder
     var last = 0
-    literalSpans(sql).foreach { case (st, en) =>
+    SqlLex.spans(sql).literals.foreach { case (st, en) =>
       sb ++= f(sql.substring(last, st)) ++= sql.substring(st, en)
       last = en
     }
@@ -596,11 +518,10 @@ object Dialect {
       raw"\s*,\s*((?:`[^`]+`|[\w-]+)(?:\s*\.\s*(?:`[^`]+`|[\w-]+)){2})(?!\s*\()").r
 
   def mapSourceFqns(sql: String): String = {
-    val spans = literalSpans(sql)
-    def inLiteral(p: Int) = spans.exists(s => p >= s._1 && p < s._2)
-    val toks = StatementSplitter.tokens(sql)
+    val spans = SqlLex.spans(sql)
+    val toks = SqlLex.tokens(sql)
     commaJoinFqn.findAllMatchIn(sql)
-      .find(m => !inLiteral(m.start) && {
+      .find(m => !spans.inLiteral(m.start) && {
         val kwIdx = toks.indexWhere(_._2 == m.start)
         !(kwIdx >= 0 && isExprPositionFrom(toks, kwIdx))
       })
@@ -614,7 +535,7 @@ object Dialect {
       val kwIdx = toks.indexWhere(_._2 == m.start)
       val clean = m.group(2).replace("`", "").replaceAll("\\s", "")
       java.util.regex.Matcher.quoteReplacement(clean.split("\\.") match {
-        case Array(p, d, t) if !inLiteral(m.start) &&
+        case Array(p, d, t) if !spans.inLiteral(m.start) &&
             !(kwIdx >= 0 && isExprPositionFrom(toks, kwIdx)) =>
           s"${m.group(1)} ${p.replace("-", "_")}__${d.replace("-", "_")}.`$t`"
         case _ => m.group(0)
@@ -626,6 +547,33 @@ object Dialect {
     * ORIGINAL BigQuery identifiers (its output is BigQuery URNs).
     */
   private val systemTimeRe = raw"(?is)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b".r
+
+  /** The first match of `re` that starts outside every literal and comment. */
+  private def firstOutside(re: scala.util.matching.Regex,
+      sql: String): Option[scala.util.matching.Regex.Match] = {
+    lazy val spans = SqlLex.spans(sql)
+    re.findAllMatchIn(sql).find(m => !spans.inLiteralOrComment(m.start))
+  }
+
+  /** `re.replaceAllIn` that keeps every match starting inside a literal or
+    * comment as it is; `f` gives the literal replacement text of the others.
+    */
+  private def replaceOutside(re: scala.util.matching.Regex, sql: String)(
+      f: scala.util.matching.Regex.Match => String): String = {
+    lazy val spans = SqlLex.spans(sql)
+    re.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
+      if (spans.inLiteralOrComment(m.start)) m.matched else f(m)))
+  }
+
+  /** The trimmed arguments of the call whose `(` ends `m`, and the index
+    * past its `)`.
+    */
+  private def callArgs(sql: String, m: scala.util.matching.Regex.Match,
+      fn: String): (Seq[String], Int) = {
+    val close = SqlLex.close(sql, m.end - 1)
+    if (close < 0) throw new IllegalArgumentException(s"unbalanced $fn call")
+    (SqlLex.splitTopLevel(sql.substring(m.end, close)).map(_.trim), close + 1)
+  }
 
   private val vectorSearchRe = raw"(?is)\bFROM\s+VECTOR_SEARCH\s*\(".r
 
@@ -641,34 +589,8 @@ object Dialect {
     * contract.
     */
   private def rewriteVectorSearch(sql: String): String = {
-    val m0 = vectorSearchRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    val n = sql.length
-    // balanced scan over the call's argument list
-    val argStart = m0.end
-    var j = argStart
-    var depth = 1
-    val argEnds = scala.collection.mutable.ArrayBuffer.empty[Int]
-    while (j < n && depth > 0) {
-      val c = sql.charAt(j)
-      if (c == '\'' || c == '"') {
-        var k = j + 1
-        while (k < n && sql.charAt(k) != c)
-          k += (if (sql.charAt(k) == '\\') 2 else 1)
-        j = math.min(k + 1, n)
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) argEnds += j }
-        else if (c == ',' && depth == 1) argEnds += j
-        j += 1
-      }
-    }
-    if (depth != 0)
-      throw new IllegalArgumentException("unbalanced VECTOR_SEARCH call")
-    val callEnd = j // position after the closing paren
-    val bounds = (argStart +: argEnds.map(_ + 1).dropRight(1)).zip(argEnds)
-    val args = bounds.map { case (a, b) => sql.substring(a, b).trim }
+    val m0 = firstOutside(vectorSearchRe, sql).getOrElse(return sql)
+    val (args, callEnd) = callArgs(sql, m0, "VECTOR_SEARCH")
     if (args.length < 3)
       throw new IllegalArgumentException(
         "VECTOR_SEARCH needs (TABLE base, 'column', (query), ...)")
@@ -736,34 +658,8 @@ object Dialect {
     * windowed aggregation (shuffle on the partition columns).
     */
   private def rewriteRangeSessionize(sql: String): String = {
-    val m0 = rangeSessionizeRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    val n = sql.length
-    val argStart = m0.end
-    var j = argStart
-    var depth = 1
-    val argEnds = scala.collection.mutable.ArrayBuffer.empty[Int]
-    while (j < n && depth > 0) {
-      val c = sql.charAt(j)
-      if (c == '\'' || c == '"') {
-        var k = j + 1
-        while (k < n && sql.charAt(k) != c)
-          k += (if (sql.charAt(k) == '\\') 2 else 1)
-        j = math.min(k + 1, n)
-      } else {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ']') depth -= 1
-        else if (c == ')') { depth -= 1; if (depth == 0) argEnds += j }
-        else if (c == ',' && depth == 1) argEnds += j
-        j += 1
-      }
-    }
-    if (depth != 0)
-      throw new IllegalArgumentException("unbalanced RANGE_SESSIONIZE call")
-    val callEnd = j
-    val bounds = (argStart +: argEnds.map(_ + 1).dropRight(1)).zip(argEnds)
-    val args = bounds.map { case (a, b) => sql.substring(a, b).trim }
+    val m0 = firstOutside(rangeSessionizeRe, sql).getOrElse(return sql)
+    val (args, callEnd) = callArgs(sql, m0, "RANGE_SESSIONIZE")
     if (args.length < 3 || args.length > 4)
       throw new IllegalArgumentException(
         "RANGE_SESSIONIZE needs (TABLE t, 'range_col', [partition_cols][, mode])")
@@ -779,7 +675,7 @@ object Dialect {
     if (!partArg.startsWith("[") || !partArg.endsWith("]"))
       throw new IllegalArgumentException(
         s"RANGE_SESSIONIZE partition columns must be an array literal, got: $partArg")
-    val pcols = splitTopLevel(partArg.substring(1, partArg.length - 1))
+    val pcols = SqlLex.splitTopLevel(partArg.substring(1, partArg.length - 1))
       .map(_.trim).filter(_.nonEmpty)
       .map(p => "`" + p.stripPrefix("'").stripSuffix("'") + "`")
     val cmp = args.lift(3).map(_.stripPrefix("'").stripSuffix("'").toUpperCase) match {
@@ -853,33 +749,8 @@ object Dialect {
     * any windowed aggregation.
     */
   private def rewriteGapFill(sql: String): String = {
-    val m0 = gapFillRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    val n = sql.length
-    val argStart = m0.end
-    var j = argStart
-    var depth = 1
-    val argEnds = scala.collection.mutable.ArrayBuffer.empty[Int]
-    while (j < n && depth > 0) {
-      val c = sql.charAt(j)
-      if (c == '\'' || c == '"') {
-        var k = j + 1
-        while (k < n && sql.charAt(k) != c)
-          k += (if (sql.charAt(k) == '\\') 2 else 1)
-        j = math.min(k + 1, n)
-      } else {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ']') depth -= 1
-        else if (c == ')') { depth -= 1; if (depth == 0) argEnds += j }
-        else if (c == ',' && depth == 1) argEnds += j
-        j += 1
-      }
-    }
-    if (depth != 0) throw new IllegalArgumentException("unbalanced GAP_FILL call")
-    val callEnd = j
-    val bounds = (argStart +: argEnds.map(_ + 1).dropRight(1)).zip(argEnds)
-    val args = bounds.map { case (a, b) => sql.substring(a, b).trim }
+    val m0 = firstOutside(gapFillRe, sql).getOrElse(return sql)
+    val (args, callEnd) = callArgs(sql, m0, "GAP_FILL")
     if (args.isEmpty || !args(0).toUpperCase.startsWith("TABLE"))
       throw new IllegalArgumentException(
         "GAP_FILL first argument must be TABLE <name>")
@@ -900,12 +771,12 @@ object Dialect {
         case "bucket_width" => width = Some(kv(1))
         case "partitioning_columns" =>
           val body = kv(1).stripPrefix("[").stripSuffix("]")
-          pcols = splitTopLevel(body).map(unq).filter(_.nonEmpty)
+          pcols = SqlLex.splitTopLevel(body).map(unq).filter(_.nonEmpty)
         case "value_columns" =>
           val body = kv(1).trim.stripPrefix("[").stripSuffix("]")
-          vcols = splitTopLevel(body).map(_.trim).filter(_.nonEmpty).map { p =>
+          vcols = SqlLex.splitTopLevel(body).map(_.trim).filter(_.nonEmpty).map { p =>
             val inner = p.stripPrefix("(").stripSuffix(")")
-            val parts = splitTopLevel(inner).map(unq)
+            val parts = SqlLex.splitTopLevel(inner).map(unq)
             if (parts.length != 2 ||
                 !Set("null", "locf", "linear").contains(parts(1).toLowerCase))
               throw new IllegalArgumentException(
@@ -1031,13 +902,16 @@ object Dialect {
       // (x_p.d.f) must not match its tail
       val re = ("(?i)(?<![A-Za-z0-9_.])`?" +
         java.util.regex.Pattern.quote(canon) + raw"`?\s*\(").r
-      re.replaceAllIn(acc, m =>
-        if (inStringLiteral(acc, m.start))
-          java.util.regex.Matcher.quoteReplacement(m.matched)
-        else s"$flat(")
+      replaceOutside(re, acc)(_ => s"$flat(")
     }
 
   private val pipeRenameRe = raw"(?i)\|>\s*RENAME\b".r
+
+  /** End of a pipe operator's operand list from `from`: the next
+    * top-level `|>`, or the `)` closing an enclosing group.
+    */
+  private def pipeOperandEnd(sql: String, from: Int): Int =
+    SqlLex.clauseEnd(sql, from)(i => sql.startsWith("|>", i))
 
   /** BigQuery pipe-syntax `|> RENAME old AS new, …` — the one pipe
     * operator Spark 4.1 doesn't parse. Rewritten to
@@ -1050,26 +924,9 @@ object Dialect {
     * including rejecting aggregates inside `|> SELECT`.
     */
   private def rewritePipeRename(sql: String): String = {
-    val m0 = pipeRenameRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    var i = m0.end
-    var depth = 0
-    var end = sql.length
-    var found = false
-    while (i < sql.length && !found) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else {
-        if (c == '(') depth += 1
-        else if (c == ')') {
-          if (depth == 0) { end = i; found = true } else depth -= 1
-        } else if (c == '|' && depth == 0 && i + 1 < sql.length &&
-            sql.charAt(i + 1) == '>') { end = i; found = true }
-        i += 1
-      }
-    }
-    val prs = splitTopLevel(sql.substring(m0.end, end))
+    val m0 = firstOutside(pipeRenameRe, sql).getOrElse(return sql)
+    val end = pipeOperandEnd(sql, m0.end)
+    val prs = SqlLex.splitTopLevel(sql.substring(m0.end, end))
       .map(_.trim).filter(_.nonEmpty).map { it =>
         raw"(?is)^(`?[\w]+`?)\s+AS\s+(`?[\w]+`?)$$".r.findFirstMatchIn(it)
           .map(mm => (mm.group(1), mm.group(2)))
@@ -1091,26 +948,9 @@ object Dialect {
     * ran).
     */
   private def rewritePipeAssert(sql: String): String = {
-    val m0 = pipeAssertRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    var i = m0.end
-    var depth = 0
-    var end = sql.length
-    var found = false
-    while (i < sql.length && !found) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else {
-        if (c == '(') depth += 1
-        else if (c == ')') {
-          if (depth == 0) { end = i; found = true } else depth -= 1
-        } else if (c == '|' && depth == 0 && i + 1 < sql.length &&
-            sql.charAt(i + 1) == '>') { end = i; found = true }
-        i += 1
-      }
-    }
-    val parts = splitTopLevel(sql.substring(m0.end, end)).map(_.trim)
+    val m0 = firstOutside(pipeAssertRe, sql).getOrElse(return sql)
+    val end = pipeOperandEnd(sql, m0.end)
+    val parts = SqlLex.splitTopLevel(sql.substring(m0.end, end)).map(_.trim)
     val cond = parts.head
     val msg =
       if (parts.length > 1) s"CAST((${parts(1)}) AS STRING)"
@@ -1140,13 +980,11 @@ object Dialect {
     * so the expansion is static.
     */
   private def rewriteMlAnalytic(sql: String): String = {
-    val m0 = mlAnalyticRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
+    val m0 = firstOutside(mlAnalyticRe, sql).getOrElse(return sql)
     val fn = m0.group(1).toUpperCase
-    val close = matchParen(sql, m0.end - 1)
+    val close = SqlLex.close(sql, m0.end - 1)
     if (close < 0) throw new IllegalArgumentException(s"ML.$fn: unbalanced call")
-    val args = splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
+    val args = SqlLex.splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
     var k = close + 1
     while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
     if (!sql.regionMatches(true, k, "OVER", 0, 4))
@@ -1157,7 +995,7 @@ object Dialect {
     if (k >= sql.length || sql.charAt(k) != '(')
       throw new IllegalArgumentException(
         s"ML.$fn OVER must use an inline (…) window specification")
-    val wClose = matchParen(sql, k)
+    val wClose = SqlLex.close(sql, k)
     if (wClose < 0) throw new IllegalArgumentException(s"ML.$fn: unbalanced OVER")
     val w = sql.substring(k, wClose + 1)
     val x = s"(${args(0)})"
@@ -1202,10 +1040,8 @@ object Dialect {
     * matches (a plain call keeps the callRewrites lowering).
     */
   private def rewriteHllMergeOver(sql: String): String = {
-    val m0 = hllMergeOverRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    val close = matchParen(sql, m0.end - 1)
+    val m0 = firstOutside(hllMergeOverRe, sql).getOrElse(return sql)
+    val close = SqlLex.close(sql, m0.end - 1)
     if (close < 0) return sql // malformed: leave for the loud path
     var k = close + 1
     while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
@@ -1221,7 +1057,7 @@ object Dialect {
     while (w < sql.length && sql.charAt(w).isWhitespace) w += 1
     val wEnd =
       if (w < sql.length && sql.charAt(w) == '(') {
-        val wc = matchParen(sql, w)
+        val wc = SqlLex.close(sql, w)
         if (wc < 0) throw new IllegalArgumentException(
           "HLL_COUNT.MERGE: unbalanced OVER")
         wc + 1
@@ -1251,13 +1087,11 @@ object Dialect {
     * suffixes, which land in the fraction arg) fail loud.
     */
   private def rewritePercentileDisc(sql: String): String = {
-    val m0 = pdiscRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    val close = matchParen(sql, m0.end - 1)
+    val m0 = firstOutside(pdiscRe, sql).getOrElse(return sql)
+    val close = SqlLex.close(sql, m0.end - 1)
     if (close < 0)
       throw new IllegalArgumentException("PERCENTILE_DISC: unbalanced call")
-    val args = splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
+    val args = SqlLex.splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
     if (args.length != 2 || !args(1).matches("""[0-9.]+"""))
       throw new IllegalArgumentException(
         "PERCENTILE_DISC needs (value, literal fraction); " +
@@ -1276,7 +1110,7 @@ object Dialect {
         while (w < sql.length && sql.charAt(w).isWhitespace) w += 1
         val wEnd =
           if (w < sql.length && sql.charAt(w) == '(') {
-            val wc = matchParen(sql, w)
+            val wc = SqlLex.close(sql, w)
             if (wc < 0) throw new IllegalArgumentException(
               "PERCENTILE_DISC: unbalanced OVER")
             wc + 1
@@ -1320,33 +1154,8 @@ object Dialect {
     * stay loud-unsupported rather than silently approximate.
     */
   private def rewriteSearchFn(sql: String): String = {
-    val m0 = searchFnRe.findAllMatchIn(sql)
-      .find(m => !inStringLiteral(sql, m.start))
-      .getOrElse(return sql)
-    val n = sql.length
-    val argStart = m0.end
-    var j = argStart
-    var depth = 1
-    val argEnds = scala.collection.mutable.ArrayBuffer.empty[Int]
-    while (j < n && depth > 0) {
-      val c = sql.charAt(j)
-      if (c == '\'' || c == '"') {
-        var k = j + 1
-        while (k < n && sql.charAt(k) != c)
-          k += (if (sql.charAt(k) == '\\') 2 else 1)
-        j = math.min(k + 1, n)
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) argEnds += j }
-        else if (c == ',' && depth == 1) argEnds += j
-        j += 1
-      }
-    }
-    if (depth != 0)
-      throw new IllegalArgumentException("unbalanced SEARCH call")
-    val callEnd = j
-    val bounds = (argStart +: argEnds.map(_ + 1).dropRight(1)).zip(argEnds)
-    val args = bounds.map { case (a, b) => sql.substring(a, b).trim }
+    val m0 = firstOutside(searchFnRe, sql).getOrElse(return sql)
+    val (args, callEnd) = callArgs(sql, m0, "SEARCH")
     if (args.length < 2)
       throw new IllegalArgumentException(
         "SEARCH needs (data, 'query'[, analyzer => '...'])")
@@ -1403,8 +1212,9 @@ object Dialect {
     * with AS — a bare trailing alias reads as expression text.
     */
   private def rewriteSystemTimeClauses(sql: String): String = {
+    lazy val spans = SqlLex.spans(sql)
     val ms = systemTimeRe.findAllMatchIn(sql).toList
-      .filterNot(m => inStringLiteral(sql, m.start))
+      .filterNot(m => spans.inLiteralOrComment(m.start))
     if (ms.isEmpty) return sql
     val spark = org.apache.spark.sql.SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException(
@@ -1427,32 +1237,10 @@ object Dialect {
       val stopWords = Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
         "QUALIFY", "WINDOW", "JOIN", "LEFT", "RIGHT", "FULL", "INNER",
         "CROSS", "UNION", "EXCEPT", "INTERSECT", "ON", "USING", "AS")
-      val n = acc.length
-      var j = m.end
-      while (j < n && acc.charAt(j).isWhitespace) j += 1
-      val exprStart = j
-      var depth = 0
-      var done = false
-      while (j < n && !done) {
-        val c = acc.charAt(j)
-        if (c == '\'' || c == '"') {
-          var k = j + 1
-          while (k < n && acc.charAt(k) != c)
-            k += (if (acc.charAt(k) == '\\') 2 else 1)
-          j = math.min(k + 1, n)
-        } else if (c == '(') { depth += 1; j += 1 }
-        else if (c == ')') {
-          if (depth == 0) done = true else { depth -= 1; j += 1 }
-        } else if ((c == ',' || c == ';') && depth == 0) done = true
-        else if (c.isLetter && depth == 0) {
-          var k = j
-          while (k < n && (acc.charAt(k).isLetterOrDigit || acc.charAt(k) == '_'))
-            k += 1
-          if (stopWords(acc.substring(j, k).toUpperCase) && j > exprStart)
-            done = true
-          else j = k
-        } else j += 1
-      }
+      var exprStart = m.end
+      while (exprStart < acc.length && acc.charAt(exprStart).isWhitespace) exprStart += 1
+      val j = SqlLex.clauseEnd(acc, exprStart)(i => acc.charAt(i) == ',' ||
+        acc.charAt(i) == ';' || (i > exprStart && stopWords(SqlLex.wordAt(acc, i))))
       val tsExpr = acc.substring(exprStart, j).trim
       if (tsExpr.isEmpty)
         throw new IllegalArgumentException(
@@ -1499,9 +1287,7 @@ object Dialect {
     }
     while (i < sql.length) {
       val c = sql.charAt(i)
-      val ce = commentEnd(sql, i)
-      if (ce >= 0) { sb.append(sql.substring(i, ce)); i = ce }
-      else if (tripleAt(i)) {
+      if (tripleAt(i)) {
         val q = c
         // find the closing triple: skip backslash escapes, and lex
         // greedily — in a run of >3 quotes the LAST three close
@@ -1519,19 +1305,6 @@ object Dialect {
         val end = if (close < 0) sql.length else close
         sb.append(q); copyEscaped(q, i + 3, end); sb.append(q)
         i = if (close < 0) sql.length else close + 3
-      } else if (c == '\'' || c == '"') { // normal literal: verbatim
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != c) {
-          if (sql.charAt(j) == '\\' && j + 1 < sql.length) j += 2 else j += 1
-        }
-        val end = math.min(j + 1, sql.length)
-        // NB: substring, not append(s, i, end) — Scala's StringBuilder
-        // lacks that overload and auto-tupling appends "(sql,i,end)"
-        sb.append(sql.substring(i, end)); i = end
-      } else if (c == '`') { // backticked identifier: verbatim
-        val j = sql.indexOf('`', i + 1)
-        val end = if (j < 0) sql.length else j + 1
-        sb.append(sql.substring(i, end)); i = end
       } else if ((c == 'b' || c == 'B') && i + 1 < sql.length &&
           (sql.charAt(i + 1) == '\'' || sql.charAt(i + 1) == '"') &&
           (i == 0 || (!Character.isLetterOrDigit(sql.charAt(i - 1)) &&
@@ -1570,7 +1343,12 @@ object Dialect {
         }
         sb.append(q)
         i = if (j < sql.length) j + 1 else sql.length
-      } else { sb.append(c); i += 1 }
+      } else {
+        // a plain literal, backticked name or comment passes verbatim
+        val e = SqlLex.regionEnd(sql, i)
+        if (e >= 0) { sb.append(sql.substring(i, e)); i = e }
+        else { sb.append(c); i += 1 }
+      }
     }
     sb.toString
   }
@@ -1623,14 +1401,11 @@ object Dialect {
     // typed-literal syntax, so `NUMERIC '1.5'` must become a CAST before
     // the bare-keyword pass would leave invalid `DECIMAL(38,9) '1.5'`
     val numLit = raw"(?i)\b(BIGNUMERIC|NUMERIC)\s*'((?:[^'\\]|\\.)*)'".r
-    val sqlNum = numLit.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (inStringLiteral(sql, m.start)) m.matched
-        else {
-          val t = if (m.group(1).equalsIgnoreCase("BIGNUMERIC")) "DECIMAL(38,18)"
-            else "DECIMAL(38,9)"
-          s"CAST('${m.group(2)}' AS $t)"
-        }))
+    val sqlNum = replaceOutside(numLit, sql) { m =>
+      val t = if (m.group(1).equalsIgnoreCase("BIGNUMERIC")) "DECIMAL(38,18)"
+        else "DECIMAL(38,9)"
+      s"CAST('${m.group(2)}' AS $t)"
+    }
     // BigQuery NUMERIC is DECIMAL(38,9); Spark's NUMERIC keyword means
     // DECIMAL(10,0) — rewrite to BigQuery semantics (outside literals
     // only). INT64/FLOAT64 are BigQuery-only type spellings.
@@ -1852,29 +1627,17 @@ object Dialect {
     * are identical.
     */
   private def rewriteStarReplace(sql: String): String =
-    starReplaceRe.findFirstMatchIn(sql) match {
+    firstOutside(starReplaceRe, sql) match {
       case scala.None => sql
-      case Some(m) if inStringLiteral(sql, m.start) =>
-        sql.substring(0, m.end) + rewriteStarReplace(sql.substring(m.end))
       case Some(m) =>
         val open = sql.indexOf('(', m.start + 1)
-        val close = matchParen(sql, open)
+        val close = SqlLex.close(sql, open)
         if (close < 0) return sql
-        val items = splitTopLevel(sql.substring(open + 1, close)).map(_.trim)
+        val items = SqlLex.splitTopLevel(sql.substring(open + 1, close)).map(_.trim)
         // split each item on its LAST top-level AS (the expr itself may
         // contain CAST(x AS T))
         val pairs = items.map { it =>
-          val ts = StatementSplitter.tokens(it)
-          var depth = 0
-          var asPos = -1
-          ts.foreach { case (tok, pos) =>
-            tok match {
-              case "(" => depth += 1
-              case ")" => depth -= 1
-              case "AS" if depth == 0 => asPos = pos
-              case _ =>
-            }
-          }
+          val asPos = lastTopLevelAs(it)
           if (asPos < 0) scala.None
           else Some((it.substring(0, asPos).trim, it.substring(asPos + 2).trim))
         }
@@ -1896,10 +1659,8 @@ object Dialect {
     * (DECLARE/CAST type positions) is left for the type mapper.
     */
   private def rewriteTypedStruct(sql: String): String =
-    typedStructRe.findFirstMatchIn(sql) match {
+    firstOutside(typedStructRe, sql) match {
       case scala.None => sql
-      case Some(m) if inStringLiteral(sql, m.start) =>
-        sql.substring(0, m.end) + rewriteTypedStruct(sql.substring(m.end))
       case Some(m) =>
         val lt = sql.indexOf('<', m.start)
         var i = lt; var depth = 0; var gt = -1
@@ -1915,10 +1676,10 @@ object Dialect {
         var k = gt + 1
         while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
         if (k >= sql.length || sql.charAt(k) != '(') return sql
-        val close = matchParen(sql, k)
+        val close = SqlLex.close(sql, k)
         if (close < 0) return sql
-        val fields = splitTopLevel(sql.substring(lt + 1, gt)).map(_.trim)
-        val args = splitTopLevel(sql.substring(k + 1, close)).map(_.trim)
+        val fields = SqlLex.splitTopLevel(sql.substring(lt + 1, gt)).map(_.trim)
+        val args = SqlLex.splitTopLevel(sql.substring(k + 1, close)).map(_.trim)
         val fieldRe = raw"(?is)^([A-Za-z_]\w*)\s+(\S.*)$$".r
         val named = fields.map {
           case fieldRe(n, t) => Some((n, t))
@@ -1932,22 +1693,6 @@ object Dialect {
           } else s"struct(${args.mkString(", ")})"
         rewriteTypedStruct(sql.substring(0, m.start) + repl + sql.substring(close + 1))
     }
-
-  private def matchBracket(s: String, open: Int): Int = {
-    var i = open
-    var depth = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '-' | '/' if commentEnd(s, i) >= 0 => i = commentEnd(s, i) - 1
-        case '\'' | '"' | '`' => i = skipQuoted(s, i) - 1
-        case '[' => depth += 1
-        case ']' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
 
   /** Keywords after which a `[` opens an array LITERAL, not element
     * access (`SELECT [1,2]`, `THEN [1]`, `IN UNNEST([…])` …).
@@ -1967,15 +1712,10 @@ object Dialect {
   private def rewriteArrayLiteral(sql: String): String = {
     val in = sql.replaceAll(raw"(?i)\bARRAY\s*<([^<>]|<[^<>]*>)*>\s*\[", "[")
       .replaceAll(raw"(?i)\bARRAY\s*\[", "[") // bare ARRAY[…] prefix form
-    val sb = new StringBuilder
-    var i = 0
-    while (i < in.length) {
+    SqlLex.copyWalk(in) { (i, sb) =>
       val c = in.charAt(i)
-      if (commentEnd(in, i) >= 0) {
-        val e = commentEnd(in, i); sb ++= in.substring(i, e); i = e
-      } else if (c == '\'' || c == '"' || c == '`') {
-        val e = skipQuoted(in, i); sb ++= in.substring(i, e); i = e
-      } else if (c == '[') {
+      if (c != '[') { sb += c; i + 1 }
+      else {
         var p = sb.length - 1
         while (p >= 0 && sb.charAt(p).isWhitespace) p -= 1
         // preceding word: identifier → access; SQL keyword → literal
@@ -1987,16 +1727,15 @@ object Dialect {
               wc.isLetterOrDigit || wc == '_' }) w -= 1
             !literalPrecedingKeywords(sb.substring(w, p + 1).toUpperCase)
           } else false }
-        val close = if (postfix) -1 else matchBracket(in, i)
-        if (close < 0) { sb += c; i += 1 }
+        val close = if (postfix) -1 else SqlLex.close(in, i)
+        if (close < 0) { sb += c; i + 1 }
         else {
           val inner = rewriteArrayLiteral(in.substring(i + 1, close))
           sb ++= s"array(${inferStructNames(inner)})"
-          i = close + 1
+          close + 1
         }
-      } else { sb += c; i += 1 }
+      }
     }
-    sb.toString
   }
 
   /** BigQuery positional struct-name inference in array literals:
@@ -2009,13 +1748,13 @@ object Dialect {
     * passes through to Spark's own loud error.
     */
   private def inferStructNames(inner: String): String = {
-    val items = splitTopLevel(inner).map(_.trim)
+    val items = SqlLex.splitTopLevel(inner).map(_.trim)
     if (items.length < 2) return inner
     val structRe = raw"(?is)^struct\s*\(".r
     def argsOf(it: String): Option[Seq[String]] =
       structRe.findFirstMatchIn(it) match {
-        case Some(m) if matchParen(it, m.end - 1) == it.length - 1 =>
-          Some(splitTopLevel(it.substring(m.end, it.length - 1)).map(_.trim))
+        case Some(m) if SqlLex.close(it, m.end - 1) == it.length - 1 =>
+          Some(SqlLex.splitTopLevel(it.substring(m.end, it.length - 1)).map(_.trim))
         case _ => scala.None
       }
     if (!items.forall(it => structRe.findFirstMatchIn(it).isDefined)) return inner
@@ -2055,13 +1794,11 @@ object Dialect {
     * and handles identifier-path bases; other shapes pass through.
     */
   private def rewriteArrayAccess(sql: String): String =
-    arrayAccessRe.findFirstMatchIn(sql) match {
+    firstOutside(arrayAccessRe, sql) match {
       case scala.None => sql
-      case Some(m) if inStringLiteral(sql, m.start) =>
-        sql.substring(0, m.end) + rewriteArrayAccess(sql.substring(m.end))
       case Some(m) =>
         val open = sql.indexOf('(', m.end - 1)
-        val close = matchParen(sql, open)
+        val close = SqlLex.close(sql, open)
         if (close < 0) return sql
         var k = close + 1
         while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
@@ -2112,60 +1849,6 @@ object Dialect {
   // comment-skipping, innermost-first), not bare keyword regexes, so
   // nested calls and Spark-native spellings pass through unharmed.
 
-  /** Index just past a quoted region starting at `i` (', ", or `). */
-  private def skipQuoted(s: String, i: Int): Int = {
-    val q = s.charAt(i)
-    var j = i + 1
-    while (j < s.length) {
-      val c = s.charAt(j)
-      if (c == '\\' && q != '`' && j + 1 < s.length) j += 1
-      else if (c == q) return j + 1
-      j += 1
-    }
-    s.length
-  }
-
-  /** Matching ')' for the '(' at `open`, skipping quoted regions. */
-  private def matchParen(s: String, open: Int): Int = {
-    var i = open
-    var depth = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '-' | '/' if commentEnd(s, i) >= 0 => i = commentEnd(s, i) - 1
-        case '\'' | '"' | '`' => i = skipQuoted(s, i) - 1
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Split on top-level commas (outside parens, BRACKETS — a BQ array
-    * literal argument like `[0, 3, 6]` is one argument — and quoted
-    * regions).
-    */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '-' | '/' if commentEnd(s, i) >= 0 => i = commentEnd(s, i) - 1
-        case '\'' | '"' | '`' => i = skipQuoted(s, i) - 1
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(last)
-    out.result()
-  }
-
   /** Rewrite calls of mapped functions, innermost-first. A mapper
     * returning None keeps the original spelling (args still rewritten),
     * so ambiguous shapes (e.g. Spark-native `date_trunc('week', x)`)
@@ -2176,25 +1859,8 @@ object Dialect {
     * window position (its rewrite must then stay a bare function call
     * the OVER suffix can attach to).
     */
-  private def nextWordIsOver(sql: String, from: Int): Boolean = {
-    var k = from
-    while (k < sql.length) {
-      val c = sql.charAt(k)
-      if (c.isWhitespace) k += 1
-      else if (c == '-' && k + 1 < sql.length && sql.charAt(k + 1) == '-') {
-        val e = sql.indexOf('\n', k)
-        if (e < 0) return false
-        k = e + 1
-      } else if (c == '/' && k + 1 < sql.length && sql.charAt(k + 1) == '*') {
-        val e = sql.indexOf("*/", k)
-        if (e < 0) return false
-        k = e + 2
-      } else return sql.regionMatches(true, k, "OVER", 0, 4) &&
-        (k + 4 >= sql.length ||
-          !(sql.charAt(k + 4).isLetterOrDigit || sql.charAt(k + 4) == '_'))
-    }
-    false
-  }
+  private def nextWordIsOver(sql: String, from: Int): Boolean =
+    SqlLex.wordAt(sql, SqlLex.skipBlank(sql, from)) == "OVER"
 
   /** BigQuery returns NULL from ARRAY_AGG/STRING_AGG over ZERO input
     * rows where Spark's collect_list/listagg give [] / '' — reachable
@@ -2215,19 +1881,10 @@ object Dialect {
     * clause) — `(…)` inline specs or a bare named-window reference.
     */
   private def captureOverClause(sql: String, from: Int): (String, Int) = {
-    var k = from
-    var guard = true
-    while (guard) {
-      val c = sql.charAt(k)
-      if (c.isWhitespace) k += 1
-      else if (c == '-' && sql.charAt(k + 1) == '-') k = sql.indexOf('\n', k) + 1
-      else if (c == '/' && sql.charAt(k + 1) == '*') k = sql.indexOf("*/", k) + 2
-      else guard = false
-    }
-    k += 4 // the OVER keyword nextWordIsOver verified
+    var k = SqlLex.skipBlank(sql, from) + 4 // the OVER keyword nextWordIsOver verified
     while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
     if (k < sql.length && sql.charAt(k) == '(') {
-      val wClose = matchParen(sql, k)
+      val wClose = SqlLex.close(sql, k)
       if (wClose < 0) throw new IllegalArgumentException(
         "unbalanced OVER ( … ) window specification")
       (s"(${rewriteCalls(sql.substring(k + 1, wClose))})", wClose + 1)
@@ -2239,52 +1896,39 @@ object Dialect {
       "OVER must be followed by ( … ) or a named window")
   }
 
-  private def rewriteCalls(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
+  private def rewriteCalls(sql: String): String =
+    SqlLex.copyWalk(sql) { (i, out) =>
       val c = sql.charAt(i)
-      val nxt = if (i + 1 < sql.length) sql.charAt(i + 1) else '\u0000'
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = skipQuoted(sql, i); out ++= sql.substring(i, e); i = e
-      } else if (c == '-' && nxt == '-') {
-        val e = sql.indexOf('\n', i) match { case -1 => sql.length; case p => p }
-        out ++= sql.substring(i, e); i = e
-      } else if (c == '/' && nxt == '*') {
-        val e = sql.indexOf("*/", i) match { case -1 => sql.length; case p => p + 2 }
-        out ++= sql.substring(i, e); i = e
-      } else if (c.isLetter || c == '_') {
+      if (!(c.isLetter || c == '_')) { out += c; i + 1 }
+      else {
         var j = i
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
+        while (j < sql.length && SqlLex.isWordChar(sql.charAt(j))) j += 1
         val name = sql.substring(i, j)
         var k = j
         while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
         val fn = callRewrites.get(name.toUpperCase)
         val dotted = i > 0 && sql.charAt(i - 1) == '.'
-        if (fn.isDefined && !dotted && k < sql.length && sql.charAt(k) == '(') {
-          val close = matchParen(sql, k)
-          if (close < 0) { out ++= name; i = j }
-          else {
-            val inner = rewriteCalls(sql.substring(k + 1, close))
-            val args = splitTopLevel(inner).map(_.trim)
-            val rewritten = fn.get(args).getOrElse(s"$name($inner)")
-            if (emptyInputNullAggs.contains(name.toUpperCase)) {
-              if (nextWordIsOver(sql, close + 1)) {
-                val (w, after) = captureOverClause(sql, close + 1)
-                out ++= s"(CASE WHEN count(1) OVER $w = 0 THEN NULL " +
-                  s"ELSE $rewritten OVER $w END)"
-                i = after
-              } else {
-                out ++= s"(CASE WHEN count(1) = 0 THEN NULL ELSE $rewritten END)"
-                i = close + 1
-              }
-            } else { out ++= rewritten; i = close + 1 }
+        val close =
+          if (fn.isDefined && !dotted && k < sql.length && sql.charAt(k) == '(') SqlLex.close(sql, k)
+          else -1
+        if (close < 0) { out ++= name; j }
+        else {
+          val inner = rewriteCalls(sql.substring(k + 1, close))
+          val args = SqlLex.splitTopLevel(inner).map(_.trim)
+          val rewritten = fn.get(args).getOrElse(s"$name($inner)")
+          if (!emptyInputNullAggs.contains(name.toUpperCase)) { out ++= rewritten; close + 1 }
+          else if (nextWordIsOver(sql, close + 1)) {
+            val (w, after) = captureOverClause(sql, close + 1)
+            out ++= s"(CASE WHEN count(1) OVER $w = 0 THEN NULL " +
+              s"ELSE $rewritten OVER $w END)"
+            after
+          } else {
+            out ++= s"(CASE WHEN count(1) = 0 THEN NULL ELSE $rewritten END)"
+            close + 1
           }
-        } else { out ++= name; i = j }
-      } else { out += c; i += 1 }
+        }
+      }
     }
-    out.toString
-  }
 
   private val strfMap = Map('Y' -> "yyyy", 'y' -> "yy", 'm' -> "MM",
     'd' -> "dd", 'e' -> "d", 'H' -> "HH", 'I' -> "hh", 'M' -> "mm",
@@ -2401,7 +2045,7 @@ object Dialect {
 
   /** Offset of a top-level `ORDER BY` in `s`, or -1. */
   private def topLevelOrderBy(s: String): Int = {
-    val ts = StatementSplitter.tokens(s)
+    val ts = SqlLex.tokens(s)
     var depth = 0
     var idx = 0
     while (idx < ts.length) {
@@ -2651,29 +2295,12 @@ object Dialect {
     */
   private def lastTopLevelAs(arg: String): Int = {
     var depth = 0
-    var i = 0
     var last = -1
-    while (i < arg.length) {
-      val c = arg.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(arg, i)
-      else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'A' || c == 'a')) {
-          val prevOk = i == 0 || {
-            val p = arg.charAt(i - 1)
-            !(p.isLetterOrDigit || p == '_')
-          }
-          val nextS = i + 1 < arg.length &&
-            (arg.charAt(i + 1) == 'S' || arg.charAt(i + 1) == 's')
-          val endOk = i + 2 >= arg.length || {
-            val n = arg.charAt(i + 2)
-            !(n.isLetterOrDigit || n == '_')
-          }
-          if (prevOk && nextS && endOk) last = i
-        }
-        i += 1
-      }
+    SqlLex.tokens(arg).foreach {
+      case ("(", _) => depth += 1
+      case (")", _) => depth -= 1
+      case ("AS", pos) if depth == 0 => last = pos
+      case _ =>
     }
     last
   }
@@ -3604,7 +3231,7 @@ object Dialect {
         if (!sp.startsWith("[") || !sp.endsWith("]"))
           throw new IllegalArgumentException(
             "ML.BUCKETIZE split_points must be an array literal like [10, 20]")
-        val splits = splitTopLevel(sp.stripPrefix("[").stripSuffix("]")).map(_.trim)
+        val splits = SqlLex.splitTopLevel(sp.stripPrefix("[").stripSuffix("]")).map(_.trim)
         if (splits.isEmpty) throw new IllegalArgumentException(
           "ML.BUCKETIZE needs at least one split point")
         val f = s"(${a(0)})"
@@ -3633,12 +3260,12 @@ object Dialect {
             "ML.FEATURE_CROSS: the first argument must be an inline " +
               "STRUCT(…) of features (field names drive the crossed names)")
         val open = s0.indexOf('(')
-        val close = matchParen(s0, open)
+        val close = SqlLex.close(s0, open)
         if (close != s0.length - 1) throw new IllegalArgumentException(
           "ML.FEATURE_CROSS: unbalanced STRUCT(…)")
         val asRe = raw"(?is)^(.*?)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$$".r
         val bareRe = raw"^(?:[A-Za-z_][A-Za-z0-9_]*\.)*([A-Za-z_][A-Za-z0-9_]*)$$".r
-        val fields = splitTopLevel(s0.substring(open + 1, close)).map(_.trim).map {
+        val fields = SqlLex.splitTopLevel(s0.substring(open + 1, close)).map(_.trim).map {
           case asRe(e, n) => (e.trim, n)
           case bareRe(n) => (n, n)
           case other => throw new IllegalArgumentException(
@@ -4572,7 +4199,7 @@ object Dialect {
     * outside, exactly BigQuery's evaluation order.
     */
   private def rewriteQualify(sql: String): String = {
-    val ts = StatementSplitter.tokens(sql)
+    val ts = SqlLex.tokens(sql)
     var depth = 0
     var selPos = -1
     var fromPos = -1
@@ -4609,18 +4236,6 @@ object Dialect {
     s"${prefix}SELECT * EXCEPT(__qualify__) FROM (SELECT $selList, ($cond) AS __qualify__ $fromPart) WHERE __qualify__ $tail"
   }
 
-  /** is `pos` inside a single-quoted string literal of `sql`? Guards
-    * the recursive text passes (comprehension/UNNEST/access/star-
-    * replace) the way mapOutsideLiterals guards the keyword passes.
-    */
-  private def inStringLiteral(sql: String, pos: Int): Boolean = {
-    // the recursive passes and the time-travel guard must skip matches
-    // inside COMMENTS too (a commented-out FOR SYSTEM_TIME is not a
-    // time-travel query; a star-replace inside a comment is just text)
-    val (lits, comments) = literalAndCommentSpans(sql)
-    (lits ++ comments).exists(m => pos >= m._1 && pos < m._2)
-  }
-
   private val arrayCompRe = raw"(?is)\bARRAY\s*\(\s*SELECT\b".r
   private val arrayCompSelRe =
     raw"(?is)^SELECT\s+(DISTINCT\s+)?(.+?)\s+FROM\s+UNNEST\s*\(".r
@@ -4634,13 +4249,11 @@ object Dialect {
     * …) subqueries pass through.
     */
   private def rewriteArrayComprehension(sql: String): String =
-    arrayCompRe.findFirstMatchIn(sql) match {
+    firstOutside(arrayCompRe, sql) match {
       case scala.None => sql
-      case Some(m) if inStringLiteral(sql, m.start) =>
-        sql.substring(0, m.end) + rewriteArrayComprehension(sql.substring(m.end))
       case Some(m) =>
         val open = sql.indexOf('(', m.start)
-        val close = matchParen(sql, open)
+        val close = SqlLex.close(sql, open)
         if (close < 0) return sql
         def skip() = // not a rewritable shape: scan past this ARRAY(
           sql.substring(0, close) + rewriteArrayComprehension(sql.substring(close))
@@ -4649,7 +4262,7 @@ object Dialect {
           case scala.None => skip()
           case Some(sm) =>
             val uOpen = inner.indexOf('(', sm.end - 1)
-            val uClose = matchParen(inner, uOpen)
+            val uClose = SqlLex.close(inner, uOpen)
             if (uClose < 0) return skip()
             val arr = inner.substring(uOpen + 1, uClose).trim
             val tail = inner.substring(uClose + 1).trim
@@ -4692,13 +4305,11 @@ object Dialect {
     * comma/JOIN-adjacent UNNEST is the table operator.
     */
   private def rewriteFromUnnest(sql: String): String =
-    unnestFrom.findFirstMatchIn(sql) match {
+    firstOutside(unnestFrom, sql) match {
       case scala.None => sql
-      case Some(m) if inStringLiteral(sql, m.start) =>
-        sql.substring(0, m.end) + rewriteFromUnnest(sql.substring(m.end))
       case Some(m) =>
         val open = sql.indexOf('(', m.end - 1)
-        val close = matchParen(sql, open)
+        val close = SqlLex.close(sql, open)
         if (close < 0) return sql
         val arr = sql.substring(open + 1, close)
         val after = sql.substring(close + 1)

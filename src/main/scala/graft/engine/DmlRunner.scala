@@ -391,31 +391,22 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     */
   private def maskLiterals(s: String): String = {
     val sb = new StringBuilder(s)
-    def blankUntil(from: Int, stop: Int => Boolean): Int = {
-      var j = from
-      while (j < sb.length && !stop(j)) { sb.setCharAt(j, 'x'); j += 1 }
-      j
-    }
     var i = 0
-    while (i < sb.length) {
-      val q = sb.charAt(i)
-      val nxt = if (i + 1 < sb.length) sb.charAt(i + 1) else '\u0000'
-      if (q == '\'' || q == '"') {
-        var j = i + 1
-        while (j < sb.length && sb.charAt(j) != q) {
-          if (sb.charAt(j) == '\\' && j + 1 < sb.length) { sb.setCharAt(j, 'x'); j += 1 }
-          sb.setCharAt(j, 'x'); j += 1
+    while (i < s.length) {
+      val e = SqlLex.regionEnd(s, i)
+      if (e < 0) i += 1
+      else {
+        // a literal keeps its quotes, a line comment its newline, and a
+        // backticked name stays whole
+        val (from, until) = s.charAt(i) match {
+          case '\'' | '"' => (i + 1, e - 1)
+          case '-' if s.charAt(e - 1) == '\n' => (i, e - 1)
+          case '`' => (e, e)
+          case _ => (i, e)
         }
-        i = j + 1
-      } else if (q == '-' && nxt == '-') {
-        i = blankUntil(i, j => sb.charAt(j) == '\n')
-      } else if (q == '/' && nxt == '*') {
-        i = blankUntil(i,
-          j => sb.charAt(j) == '*' && j + 1 < sb.length && sb.charAt(j + 1) == '/') + 2
-        if (i <= sb.length && i - 2 < sb.length) { // blank the terminator too
-          sb.setCharAt(i - 2, 'x'); if (i - 1 < sb.length) sb.setCharAt(i - 1, 'x')
-        }
-      } else i += 1
+        (from until until).foreach(sb.setCharAt(_, 'x'))
+        i = e
+      }
     }
     sb.toString
   }
@@ -691,7 +682,7 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
         destCols.toIndexedSeq, aliases = Seq(tAlias))) }
     val matchedDelete = matchedDeleteM.map(_._2(0))
     val notMatchedInsert = findMasked(whenNotMatchedRe, whenClauses)
-      .map(gs => (gs(0), splitCsv(gs(1).get), splitCsv(gs(2).get)))
+      .map(gs => (gs(0), SqlLex.items(gs(1).get), SqlLex.items(gs(2).get)))
     val bySourceDeleteM = findMaskedAt(whenNotMatchedBySourceRe, whenClauses)
     val bySourceUpdateM = findMaskedAt(whenNotMatchedBySourceUpdateRe, whenClauses)
     val bySourceDelete = bySourceDeleteM.map(_._2(0))
@@ -830,7 +821,7 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
 
   /** `SET a = e, b = f` → map col → expr. Splits on top-level commas. */
   private def parseSetList(sets: String): Map[String, String] =
-    splitCsv(sets).map { kv =>
+    SqlLex.items(sets).map { kv =>
       val Array(k, v) = kv.split("=", 2)
       k.replace("`", "").trim.toLowerCase -> v.trim
     }.toMap
@@ -872,22 +863,6 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
       val v = expr(Dialect.rewrite(e))
       if (path.isEmpty) v else acc.withField(path.mkString("."), v)
     }
-
-  /** split on commas not inside parens/quotes. */
-  private def splitCsv(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var inStr = false
-    val cur = new StringBuilder
-    s.foreach {
-      case '\'' => inStr = !inStr; cur += '\''
-      case '(' if !inStr => depth += 1; cur += '('
-      case ')' if !inStr => depth -= 1; cur += ')'
-      case ',' if !inStr && depth == 0 => out += cur.result().trim; cur.clear()
-      case c => cur += c
-    }
-    if (cur.nonEmpty) out += cur.result().trim
-    out.result().filter(_.nonEmpty)
-  }
 
   /** insert VALUES exprs reference the source alias (`N.date`); after the
     * anti-join the frame has bare source columns.

@@ -90,6 +90,13 @@ class ScriptRunner(spark: SparkSession) {
       case "DATETIME" => "TIMESTAMP_NTZ"
       case s if s.startsWith("ARRAY<") =>
         s"ARRAY<${sparkType(s.stripPrefix("ARRAY<").stripSuffix(">"))}>"
+      case s if s.startsWith("STRUCT<") && s.endsWith(">") =>
+        SqlLex.items(s.substring(7, s.length - 1), angle = true).map { f =>
+          f.split("\\s+", 2) match {
+            case Array(name, tpe) => s"$name ${sparkType(tpe)}"
+            case _ => f
+          }
+        }.mkString("STRUCT<", ", ", ">")
       case other => other
     }
   }
@@ -113,33 +120,12 @@ class ScriptRunner(spark: SparkSession) {
       // either must stay verbatim (substituting a quoted value there
       // would nest quotes and corrupt the statement)
       val repl = "'" + spark.conf.get("graft.projectId", "graft-local") + "'"
-      val sb = new StringBuilder
-      var i = 0
-      while (i < sql.length) {
-        val c = sql.charAt(i)
-        val nxt = if (i + 1 < sql.length) sql.charAt(i + 1) else '\u0000'
-        if (c == '\'' || c == '"' || c == '`') {
-          var j = i + 1
-          while (j < sql.length && sql.charAt(j) != c) {
-            if (sql.charAt(j) == '\\' && c != '`') j += 1
-            j += 1
-          }
-          val e = math.min(j + 1, sql.length)
-          sb ++= sql.substring(i, e); i = e
-        } else if (c == '-' && nxt == '-') {
-          val e = sql.indexOf('\n', i) match { case -1 => sql.length; case p => p }
-          sb ++= sql.substring(i, e); i = e
-        } else if (c == '/' && nxt == '*') {
-          val e = sql.indexOf("*/", i) match { case -1 => sql.length; case p => p + 2 }
-          sb ++= sql.substring(i, e); i = e
-        } else if (c == '@' && nxt == '@' &&
-            sql.regionMatches(true, i, "@@project_id", 0, 12) &&
-            (i + 12 >= sql.length ||
-              !(sql.charAt(i + 12).isLetterOrDigit || sql.charAt(i + 12) == '_'))) {
-          sb ++= repl; i += 12
-        } else { sb += c; i += 1 }
+      SqlLex.copyWalk(sql) { (i, sb) =>
+        if (sql.regionMatches(true, i, "@@project_id", 0, 12) &&
+            (i + 12 >= sql.length || !SqlLex.isWordChar(sql.charAt(i + 12)))) {
+          sb ++= repl; i + 12
+        } else { sb += sql.charAt(i); i + 1 }
       }
-      sb.result()
     }
 
   /** Driver-local scalar eval: when the rewritten, variable-substituted
@@ -503,16 +489,7 @@ class ScriptRunner(spark: SparkSession) {
     // loop query = balanced-paren span starting at the opening ( —
     // parens inside string literals don't count (the lexer skips them)
     val open = m.end - 1
-    val parens = StatementSplitter.tokens(stmt)
-      .filter(t => (t._1 == "(" || t._1 == ")") && t._2 >= open)
-    var depth = 0
-    var close = -1
-    parens.foreach { case (p, pos) =>
-      if (close < 0) {
-        depth += (if (p == "(") 1 else -1)
-        if (depth == 0) close = pos
-      }
-    }
+    val close = SqlLex.close(stmt, open)
     require(close > open, s"unbalanced FOR loop query: $stmt")
     val query = stmt.substring(open + 1, close)
     val ms = topMarkers(stmt, Set("DO"))
@@ -1282,8 +1259,7 @@ class ScriptRunner(spark: SparkSession) {
     var sqlText = row.getString(0)
     if (usingPos >= 0) {
       val asRe = raw"(?is)^(.+?)\s+AS\s+(\w+)$$".r
-      val bound = splitTopCommas(tail.substring(usingPos + 5)).map(_.trim)
-        .filter(_.nonEmpty).map {
+      val bound = SqlLex.items(tail.substring(usingPos + 5)).map {
           case asRe(e, alias) => (Some(alias), evalToLiteral(e))
           case e => (Option.empty[String], evalToLiteral(e))
         }
@@ -1314,56 +1290,16 @@ class ScriptRunner(spark: SparkSession) {
     } else runScript(sqlText)
   }
 
-  /** Split on commas at paren depth 0, respecting string/backtick
-    * literals — USING parameter lists.
-    */
-  private def splitTopCommas(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var state: Char = 'n'
-    s.foreach { ch =>
-      state match {
-        case 'n' =>
-          ch match {
-            case '\'' => state = 's'; cur += ch
-            case '"' => state = 'd'; cur += ch
-            case '`' => state = 'b'; cur += ch
-            case '(' => depth += 1; cur += ch
-            case ')' => depth -= 1; cur += ch
-            case ',' if depth == 0 => out += cur.result(); cur.clear()
-            case _ => cur += ch
-          }
-        case 's' => cur += ch; if (ch == '\'') state = 'n'
-        case 'd' => cur += ch; if (ch == '"') state = 'n'
-        case 'b' => cur += ch; if (ch == '`') state = 'n'
-      }
-    }
-    out += cur.result()
-    out.result()
-  }
-
-  /** Replace `?` placeholders outside string literals with literals, in
-    * order — EXECUTE IMMEDIATE positional USING binding.
+  /** Replace `?` placeholders outside literals and comments with
+    * literals, in order — EXECUTE IMMEDIATE positional USING binding.
     */
   private def bindPositional(sql: String, params: Seq[String]): String = {
-    val sb = new StringBuilder
-    var state: Char = 'n'
     var p = 0
-    sql.foreach { ch =>
-      state match {
-        case 'n' =>
-          if (ch == '\'') { state = 's'; sb += ch }
-          else if (ch == '"') { state = 'd'; sb += ch }
-          else if (ch == '`') { state = 'b'; sb += ch }
-          else if (ch == '?' && p < params.length) { sb ++= params(p); p += 1 }
-          else sb += ch
-        case 's' => sb += ch; if (ch == '\'') state = 'n'
-        case 'd' => sb += ch; if (ch == '"') state = 'n'
-        case 'b' => sb += ch; if (ch == '`') state = 'n'
-      }
+    SqlLex.copyWalk(sql) { (i, sb) =>
+      if (sql.charAt(i) == '?' && p < params.length) { sb ++= params(p); p += 1 }
+      else sb += sql.charAt(i)
+      i + 1
     }
-    sb.toString
   }
 
   // ---- BigQuery stored procedures ------------------------------------
@@ -1379,21 +1315,8 @@ class ScriptRunner(spark: SparkSession) {
     * (STRUCT<a INT64, b STRING> commas sit inside angle brackets).
     */
   private def parseProcParams(text: String): Seq[ProcParam] = {
-    val parts = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var angle = 0
-    var paren = 0
-    text.foreach {
-      case '<' => angle += 1; cur += '<'
-      case '>' => angle -= 1; cur += '>'
-      case '(' => paren += 1; cur += '('
-      case ')' => paren -= 1; cur += ')'
-      case ',' if angle == 0 && paren == 0 => parts += cur.result(); cur.clear()
-      case c => cur += c
-    }
-    parts += cur.result()
     val paramRe = raw"(?is)^(?:(IN|OUT|INOUT)\s+)?(\w+)\s+(.+)$$".r
-    parts.result().map(_.trim).filter(_.nonEmpty).map {
+    SqlLex.items(text, angle = true).map {
       case paramRe(mode, name, tpe) =>
         ProcParam(Option(mode).map(_.toUpperCase).getOrElse("IN"), name, tpe.trim)
       case other => throw new IllegalArgumentException(
@@ -1439,10 +1362,10 @@ class ScriptRunner(spark: SparkSession) {
     val body =
       if (t.startsWith("(") && t.endsWith(")")) t.substring(1, t.length - 1)
       else t
-    val params = paramsText.split(",").filter(_.trim.nonEmpty).map { p =>
-      val Array(n, tp) = p.trim.split("\\s+", 2)
+    val params = SqlLex.items(paramsText, angle = true).map { p =>
+      val Array(n, tp) = p.split("\\s+", 2)
       (n, sparkType(tp))
-    }.toSeq
+    }
     tableFunctions(key) = TableFn(params, body)
     None
   }
@@ -1474,39 +1397,17 @@ class ScriptRunner(spark: SparkSession) {
     // match positions come from the LITERAL-MASKED text (length-
     // preserving), so `FROM f(` inside a string literal never starts an
     // expansion; text is still cut from the original by position
-    val spans = Dialect.literalSpans(sql)
-    def inLit(p: Int) = spans.exists(s => p >= s._1 && p < s._2)
-    for (m <- tvfRefRe.findAllMatchIn(sql)) if (m.start >= idx && !inLit(m.start)) {
+    lazy val spans = SqlLex.spans(sql)
+    for (m <- tvfRefRe.findAllMatchIn(sql))
+      if (m.start >= idx && !spans.inLiteralOrComment(m.start)) {
       val key = procKey(m.group(2))
       tableFunctions.get(key) match {
         case scala.None => // not a TVF — leave for other rewrites
         case Some(fn) =>
-          // balance-parse the argument list from the open paren
-          // (backslash-escape aware: 'it''s' is two literals, 'a\'b' one)
-          var i = m.end // first char after '('
-          var level = 1
-          var inStr: Char = 0
-          val argText = new StringBuilder
-          while (level > 0 && i < sql.length) {
-            val c = sql.charAt(i)
-            if (inStr != 0) {
-              if (c == '\\' && i + 1 < sql.length) { argText += c; i += 1; argText += sql.charAt(i) }
-              else { if (c == inStr) inStr = 0; argText += c }
-              i += 1
-            } else {
-              c match {
-                case '\'' | '"' => inStr = c
-                case '(' => level += 1
-                case ')' => level -= 1
-                case _ =>
-              }
-              if (level > 0) argText += c
-              i += 1
-            }
-          }
-          if (level > 0) throw new IllegalArgumentException(
+          val close = SqlLex.close(sql, m.end - 1)
+          if (close < 0) throw new IllegalArgumentException(
             s"unbalanced table function call: ${m.group(2)}(…")
-          val args = splitTopLevelCsv(argText.result())
+          val args = SqlLex.items(sql.substring(m.end, close))
           if (args.length != fn.params.length) throw new IllegalArgumentException(
             s"table function ${m.group(2)} takes ${fn.params.length} argument(s), " +
               s"got ${args.length}")
@@ -1515,7 +1416,7 @@ class ScriptRunner(spark: SparkSession) {
             bodySub = substituteOutsideLiterals(bodySub, pName,
               s"CAST(($arg) AS $pType)")
           // trailing alias? `FROM fn(1) AS d` / `FROM fn(1) d`
-          val rest = sql.substring(i)
+          val rest = sql.substring(close + 1)
           val aliasM = raw"(?is)^\s*(?:AS\s+)?(\w+)".r.findFirstMatchIn(rest)
           val hasAlias = aliasM.exists(am =>
             !nonAliasFollowers.contains(am.group(1).toLowerCase)) ||
@@ -1524,7 +1425,7 @@ class ScriptRunner(spark: SparkSession) {
           out.append(sql.substring(idx, m.start))
             .append(m.group(1)).append(" (").append(bodySub).append(")")
             .append(alias)
-          idx = i
+          idx = close + 1
           changed = true
       }
     }
@@ -1542,7 +1443,7 @@ class ScriptRunner(spark: SparkSession) {
     */
   private def runCall(name: String, argsText: String): Option[DataFrame] = {
     if (procKey(name) == "bq.refresh_materialized_view") {
-      val args = splitTopCommas(argsText).map(_.trim).filter(_.nonEmpty)
+      val args = SqlLex.items(argsText)
       if (args.length != 1) throw new IllegalArgumentException(
         s"BQ.REFRESH_MATERIALIZED_VIEW takes exactly one argument, got ${args.length}")
       refreshMv(args.head)
@@ -1552,7 +1453,7 @@ class ScriptRunner(spark: SparkSession) {
       throw new IllegalArgumentException(
         s"procedure $name is not defined in this session; CREATE PROCEDURE " +
           "must run before CALL (dataset-persisted procedures are not loaded)"))
-    val args = splitTopCommas(argsText).map(_.trim).filter(_.nonEmpty)
+    val args = SqlLex.items(argsText)
     require(args.length == proc.params.length,
       s"CALL ${proc.name}: expected ${proc.params.length} arguments, got ${args.length}")
     callDepth += 1
@@ -1713,7 +1614,7 @@ class ScriptRunner(spark: SparkSession) {
         case "ADD COLUMN" =>
           val addRe =
             raw"(?is)^ADD\s+COLUMN\s+(IF\s+NOT\s+EXISTS\s+)?(`?[\w]+`?)\s+(.+)$$".r
-          val adds = splitTopLevelCsv(rest.trim).map {
+          val adds = SqlLex.items(rest, angle = true).map {
             case addRe(ine, c, tpe) =>
               (ine != null, c.replace("`", ""), sparkType(tpe.trim))
             case bad => throw new IllegalArgumentException(
@@ -1745,7 +1646,7 @@ class ScriptRunner(spark: SparkSession) {
           }
         case "DROP COLUMN" =>
           val dropRe = raw"(?is)^DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?(`?[\w]+`?)\s*$$".r
-          val drops = splitTopLevelCsv(rest.trim).map {
+          val drops = SqlLex.items(rest).map {
             case dropRe(ie, c) => (ie != null, c.replace("`", ""))
             case bad => throw new IllegalArgumentException(
               s"malformed DROP COLUMN clause: $bad")
@@ -1870,44 +1771,18 @@ class ScriptRunner(spark: SparkSession) {
     case other => throw new IllegalArgumentException(s"malformed CREATE TABLE: $other")
   }
 
-  /** split on top-level commas (parens- and quote-aware). */
-  private def splitTopLevelCsv(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inStr: Char = 0
-    val cur = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr != 0) {
-        if (c == '\\' && i + 1 < s.length) { cur += c; i += 1; cur += s.charAt(i) }
-        else { if (c == inStr) inStr = 0; cur += c }
-      } else c match {
-        case '\'' | '"' => inStr = c; cur += c
-        case '(' => depth += 1; cur += '('
-        case ')' => depth -= 1; cur += ')'
-        case ',' if depth == 0 => out += cur.result().trim; cur.clear()
-        case other => cur += other
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.result().trim
-    out.result().filter(_.nonEmpty)
-  }
-
   /** Word-boundary parameter substitution that skips string literals —
     * a TVF parameter named `lo` must not rewrite the text of a literal
     * like 'lo and behold' in the function body.
     */
   private def substituteOutsideLiterals(body: String, name: String,
       replacement: String): String = {
-    val spans = Dialect.literalSpans(body)
-    def inLit(p: Int) = spans.exists(s => p >= s._1 && p < s._2)
+    lazy val spans = SqlLex.spans(body)
     val re = raw"(?i)\b${java.util.regex.Pattern.quote(name)}\b".r
     val sb = new StringBuilder
     var idx = 0
     re.findAllMatchIn(body).foreach { m =>
-      if (!inLit(m.start)) {
+      if (!spans.inLiteral(m.start)) {
         sb.append(body.substring(idx, m.start)).append(replacement)
         idx = m.end
       }
@@ -1948,7 +1823,7 @@ class ScriptRunner(spark: SparkSession) {
           val r = if (row.length == 1 && row.get(0).isInstanceOf[org.apache.spark.sql.Row])
             row.getAs[org.apache.spark.sql.Row](0) else row
           r.toSeq.map(literalOf)
-        } else splitTopLevelCsv(rhs)
+        } else SqlLex.items(rhs)
       if (exprs.length != vars.length) throw new IllegalArgumentException(
         s"SET (${vars.mkString(", ")}) expects ${vars.length} values, got ${exprs.length}")
       vars.zip(exprs).foreach { case (n, e) =>
@@ -2122,26 +1997,6 @@ class ScriptRunner(spark: SparkSession) {
   private val createColsHeadRe =
     raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(".r
 
-  /** Column-definition splitter for DDL lists: commas inside BOTH
-    * parens and angle brackets nest (`s STRUCT<x INT64, y STRING>` is
-    * ONE definition). Only safe for type lists — `<` is the less-than
-    * operator in expression contexts, so this must never replace
-    * [[splitTopLevelCsv]] there.
-    */
-  private def splitColumnDefs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    val cur = new StringBuilder
-    s.foreach {
-      case c @ ('(' | '<') => depth += 1; cur += c
-      case c @ (')' | '>') => depth -= 1; cur += c
-      case ',' if depth == 0 => out += cur.result().trim; cur.clear()
-      case c => cur += c
-    }
-    if (cur.nonEmpty) out += cur.result().trim
-    out.result().filter(_.nonEmpty)
-  }
-
   /** BigQuery CREATE TABLE tail clauses (between the name/column list
     * and AS/end): PARTITION BY a plain column → Spark PARTITIONED BY;
     * expression partitioning (DATE(ts), RANGE_BUCKET) and CLUSTER BY
@@ -2206,16 +2061,7 @@ class ScriptRunner(spark: SparkSession) {
       if (isTemp) m.group(4).replace("`", "").split("\\.").last
       else destTableName(m.group(4).replace("`", ""))
     val open = m.end - 1
-    var depth = 0
-    var close = -1
-    StatementSplitter.tokens(stmt)
-      .filter(t => (t._1 == "(" || t._1 == ")") && t._2 >= open)
-      .foreach { case (p, pos) =>
-        if (close < 0) {
-          depth += (if (p == "(") 1 else -1)
-          if (depth == 0) close = pos
-        }
-      }
+    val close = SqlLex.close(stmt, open)
     require(close > open, s"unbalanced column list: $stmt")
     val colsText = stmt.substring(open + 1, close)
     val tail1 = stmt.substring(close + 1).trim.stripSuffix(";").trim
@@ -2300,8 +2146,9 @@ class ScriptRunner(spark: SparkSession) {
     // (partitioned tables reorder partition columns to the end, so a
     // positional insert would misalign)
     queryOpt.foreach { q =>
-      val names = splitColumnDefs(colsText)
-        .map(_.trim.split("\\s+")(0).replace("`", ""))
+      // commas inside `STRUCT<x INT64, y STRING>` stay in one definition
+      val names = SqlLex.items(colsText, angle = true)
+        .map(_.split("\\s+")(0).replace("`", ""))
       spark.sql(s"INSERT INTO $dest (${names.mkString(", ")}) " +
         Dialect.rewrite(substituteVars(
           expandInformationSchema(expandWildcardTables(q)))))

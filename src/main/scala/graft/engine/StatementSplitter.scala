@@ -6,95 +6,15 @@ package graft.engine
   */
 object StatementSplitter {
 
-  /** Split a script into statements on `;`, respecting single/double
-    * quotes, backticks, `--` line comments and C-style block comments
-    * (what `sqlparse.split` does for the corpus).
+  /** Split a script into statements on `;` outside literals, backticked
+    * names and comments (what `sqlparse.split` does for the corpus).
     */
-  def split(script: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    var state: Char = 'n' // n=normal s='\'' d='"' b='`' l=line-comment c=block-comment
-    while (i < script.length) {
-      val ch = script.charAt(i)
-      val nxt = if (i + 1 < script.length) script.charAt(i + 1) else '\u0000'
-      state match {
-        case 'n' =>
-          ch match {
-            case '\'' => state = 's'; cur += ch
-            case '"' => state = 'd'; cur += ch
-            case '`' => state = 'b'; cur += ch
-            case '-' if nxt == '-' => state = 'l'; cur += ch
-            case '/' if nxt == '*' => state = 'c'; cur += ch
-            case ';' => out += cur.result(); cur.clear()
-            case _ => cur += ch
-          }
-        // backslash escapes WHATEVER follows ('\\' must not eat the
-        // closing quote), matching Dialect.skipQuoted
-        case 's' =>
-          cur += ch
-          if (ch == '\\' && i + 1 < script.length) { cur += nxt; i += 1 }
-          else if (ch == '\'') state = 'n'
-        case 'd' =>
-          cur += ch
-          if (ch == '\\' && i + 1 < script.length) { cur += nxt; i += 1 }
-          else if (ch == '"') state = 'n'
-        case 'b' =>
-          cur += ch
-          if (ch == '`') state = 'n'
-        case 'l' =>
-          cur += ch
-          if (ch == '\n') state = 'n'
-        case 'c' =>
-          cur += ch
-          if (ch == '*' && nxt == '/') { cur += nxt; i += 1; state = 'n' }
-      }
-      i += 1
-    }
-    out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  def split(script: String): Seq[String] = SqlLex.split(script)
 
-  /** Uppercased word tokens and parens with char offsets, skipping
-    * strings, backticks, and comments — the lexer for control-block
-    * detection.
+  /** Uppercased word tokens and parens with char offsets, outside
+    * literals and comments — the lexer for control-block detection.
     */
-  def tokens(stmt: String): Vector[(String, Int)] = {
-    val out = Vector.newBuilder[(String, Int)]
-    var i = 0
-    var state: Char = 'n'
-    while (i < stmt.length) {
-      val ch = stmt.charAt(i)
-      val nxt = if (i + 1 < stmt.length) stmt.charAt(i + 1) else '\u0000'
-      state match {
-        case 'n' =>
-          if (ch == '\'') state = 's'
-          else if (ch == '"') state = 'd'
-          else if (ch == '`') state = 'b'
-          else if (ch == '-' && nxt == '-') state = 'l'
-          else if (ch == '/' && nxt == '*') state = 'c'
-          else if (ch == '(' || ch == ')' || ch == ';') out += ((ch.toString, i))
-          else if (ch.isLetter || ch == '_') {
-            val start = i
-            while (i + 1 < stmt.length &&
-              (stmt.charAt(i + 1).isLetterOrDigit || stmt.charAt(i + 1) == '_')) i += 1
-            val word = stmt.substring(start, i + 1).toUpperCase
-            // a word reached via field access (`w.end`) is an identifier,
-            // never a keyword — mark it so END/CASE matching skips it
-            out += ((if (start > 0 && stmt.charAt(start - 1) == '.') "." + word else word,
-              start))
-          }
-        // backslash escapes whatever follows, as in `split` above
-        case 's' => if (ch == '\\' && i + 1 < stmt.length) i += 1 else if (ch == '\'') state = 'n'
-        case 'd' => if (ch == '\\' && i + 1 < stmt.length) i += 1 else if (ch == '"') state = 'n'
-        case 'b' => if (ch == '`') state = 'n'
-        case 'l' => if (ch == '\n') state = 'n'
-        case 'c' => if (ch == '*' && nxt == '/') { i += 1; state = 'n' }
-      }
-      i += 1
-    }
-    out.result()
-  }
+  def tokens(stmt: String): Vector[(String, Int)] = SqlLex.tokens(stmt)
 
   /** A token of a statement annotated with control-block nesting:
     * `depthBefore`/`depthAfter` track IF/WHILE/LOOP/BEGIN block depth;
@@ -163,15 +83,12 @@ object StatementSplitter {
       prevLabelPos = stmtPos && caseDepth == 0 && depth == before &&
         t.nonEmpty && (t.head.isLetter || t.head == '_') && {
           // a label REQUIRES its colon (`my_label: LOOP`): the lexer
-          // drops ':' so peek the raw gap between this word and the
-          // next token — a bare word in statement position (`WITH loop
-          // AS (…)`; LOOP is not reserved) must NOT arm the label path
-          // or the LOOP token would open a phantom block
-          val wordEnd = pos + t.length
-          val gapEnd = if (i + 1 < ts.length) ts(i + 1)._2 else stmt.length
-          wordEnd <= gapEnd && stmt.substring(wordEnd, gapEnd)
-            .replaceAll("(?s)/\\*.*?\\*/", " ")
-            .replaceAll("--[^\n]*", " ").trim.startsWith(":")
+          // drops ':' so peek past blanks after this word — a bare word
+          // in statement position (`WITH loop AS (…)`; LOOP is not
+          // reserved) must NOT arm the label path or the LOOP token
+          // would open a phantom block
+          val k = SqlLex.skipBlank(stmt, pos + t.length)
+          k < stmt.length && stmt.charAt(k) == ':'
         }
       prev = if (endLen == 2) "IF_CLOSED" else t
       i += 1
@@ -202,11 +119,11 @@ object StatementSplitter {
 
   /** First significant (non-comment) keyword of a statement. */
   def firstKeyword(stmt: String): String = {
-    val noComments = stmt
-      .replaceAll("(?s)/\\*.*?\\*/", " ")
-      .replaceAll("--[^\n]*", " ")
-      .trim
-    noComments.split("\\s+", 2).headOption.getOrElse("").toUpperCase
+    val start = SqlLex.skipBlank(stmt, 0)
+    var end = start
+    while (end < stmt.length && !stmt.charAt(end).isWhitespace &&
+        !SqlLex.startsComment(stmt, end)) end += 1
+    stmt.substring(start, end).toUpperCase
   }
 
   def isDdl(stmt: String): Boolean = ddlKeywords.contains(firstKeyword(stmt))

@@ -32,7 +32,14 @@ object StreamingOps {
         if (java.nio.file.Files.isWritable(shm)) shm
         else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
       val d = java.nio.file.Files.createTempDirectory(base, "graft_stream_")
-      d.toFile.deleteOnExit()
+      // deleteOnExit cannot remove a non-empty directory: drop the tree
+      sys.addShutdownHook {
+        try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[stream] could not delete scratch root $d: $e")
+        }
+      }
       d
     }
     def fresh(prefix: String): String =

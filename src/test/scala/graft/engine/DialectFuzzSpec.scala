@@ -174,6 +174,32 @@ class DialectFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The text that sets off each rewrite pass, as a statement would
+    * hold it.
+    */
+  private val triggers = Seq(
+    "FROM VECTOR_SEARCH(TABLE t, 'v', (SELECT 1)", "FROM GAP_FILL(TABLE t,",
+    "FROM RANGE_SESSIONIZE(TABLE t, 'r', ['p'])", "SEARCH(x, 'a b')",
+    "|> RENAME a AS b", "|> ASSERT x > 0", "QUALIFY ROW_NUMBER() OVER () = 1",
+    "ARRAY(SELECT x FROM UNNEST([1, 2]) AS x)",
+    "RANGE<DATE> '[2024-01-01, 2024-02-01)'", "NUMERIC '1.5'", "COUNTIF(x > 0)",
+    "FOR SYSTEM_TIME AS OF TIMESTAMP '2024-01-01'")
+
+  test("rewrite triggers inside literals and comments stay inert (48 cases)") {
+    val plain = run("SELECT 7 AS n, 'x' AS s").head
+    triggers.foreach { t =>
+      val noise = randomContent(1 + rnd.nextInt(4))
+      val lit = noise + t + noise
+      val row = run(s"SELECT '${esc(lit)}' AS s, \"${escDq(lit)}\" AS d").head
+      assert(row.getString(0) == lit, s"'…' literal corrupted: $lit")
+      assert(row.getString(1) == lit, s"\"…\" literal corrupted: $lit")
+      val line = s"SELECT 7 AS n, -- $lit\n 'x' AS s"
+      assert(run(line).head == plain, s"-- comment changed the result: $line")
+      val block = s"SELECT /* ${lit.replace("*/", "**").replace("/*", "**")} */ 7 AS n, 'x' AS s"
+      assert(run(block).head == plain, s"block comment changed the result: $block")
+    }
+  }
+
   test("SAFE./NET. rewrites don't touch same-named aliases (30 cases)") {
     for (_ <- 1 to 10) {
       val (m, n, k) = (rnd.nextInt(1000), rnd.nextInt(1000), 1 + rnd.nextInt(4))

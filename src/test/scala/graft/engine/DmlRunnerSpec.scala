@@ -521,4 +521,29 @@ class DmlRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the table is untouched
     assert(state() == Seq(("a", 1L)))
   }
+
+  test("MERGE UPDATE SET values holding commas equal the same update without one") {
+    def merged(set: String): (String, Seq[Long]) = {
+      spark.sql("DROP DATABASE IF EXISTS dmlspec CASCADE")
+      val loc = java.nio.file.Files.createTempDirectory("dmlspec")
+      spark.sql(s"CREATE DATABASE dmlspec LOCATION '$loc'")
+      spark.sql("CREATE TABLE dmlspec.n (k STRING, note STRING, tags ARRAY<BIGINT>) USING parquet")
+      spark.sql("INSERT INTO dmlspec.n VALUES ('a', 'old', array(0L))")
+      dml.run(
+        s"""MERGE INTO `dmlspec.n` T USING (SELECT 'a' AS k) S ON T.k = S.k
+           |WHEN MATCHED THEN UPDATE SET $set""".stripMargin)
+      val r = spark.table("dmlspec.n").head()
+      (r.getString(1), r.getSeq[Long](2))
+    }
+    val cases = Seq(
+      ("""note = "x, y"""", """note = CONCAT("x", CHR(44), " y")""", ("x, y", Seq(0L))),
+      ("""note = 'it\'s, ok'""", """note = CONCAT('it\'s', CHR(44), ' ok')""",
+        ("it's, ok", Seq(0L))),
+      ("tags = [1, 2]", "tags = ARRAY_CONCAT([1], [2])", ("old", Seq(1L, 2L))))
+    cases.foreach { case (withComma, without, expected) =>
+      val got = merged(withComma)
+      assert(got == merged(without), withComma)
+      assert(got == expected, withComma)
+    }
+  }
 }

@@ -1707,4 +1707,63 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (1*10+1) + (2*10+1) = 32
     assert(out.collect().head.getLong(0) == 32L)
   }
+
+  test("EXECUTE IMMEDIATE binds no ? inside an escaped literal or a comment") {
+    val sr = new ScriptRunner(spark)
+    // the dynamic text is SELECT 'it\'s ?' AS s, ? AS n
+    val r1 = sr.run(
+      """EXECUTE IMMEDIATE "SELECT 'it\\'s ?' AS s, ? AS n" USING 1""").get.head()
+    assert(r1.getString(0) == "it's ?" && r1.getInt(1) == 1)
+    val r2 = sr.run(
+      """EXECUTE IMMEDIATE "SELECT -- why?\n ? AS n" USING 2""").get.head()
+    assert(r2.getInt(0) == 2)
+  }
+
+  test("EXECUTE IMMEDIATE USING reads an escaped quote as part of one argument") {
+    val r = new ScriptRunner(spark).run(
+      """EXECUTE IMMEDIATE 'SELECT ? AS s, ? AS n' USING 'a\'b', 2""").get.head()
+    assert(r.getString(0) == "a'b" && r.getInt(1) == 2)
+  }
+
+  test("SET (a, b) = tuple keeps an array literal's commas in one value") {
+    val v = new ScriptRunner(spark).run(
+      """DECLARE a ARRAY<INT64>; DECLARE b INT64;
+        |SET (a, b) = ([1, 2], 3);
+        |SELECT ARRAY_LENGTH(a) * 10 + b AS v""".stripMargin).get.head().get(0)
+    assert(v.toString == "23")
+  }
+
+  test("a table function call inside a -- comment is not expanded") {
+    val sr = new ScriptRunner(spark)
+    sr.run(
+      """CREATE TABLE FUNCTION cmt_tvf(n INT64) AS
+        |  SELECT n AS v
+        |  UNION ALL SELECT n + 1 AS v""".stripMargin)
+    val s = sr.run(
+      """-- SELECT * FROM cmt_tvf(1)
+        |SELECT SUM(v) AS s FROM cmt_tvf(10)""".stripMargin).get.head().getLong(0)
+    assert(s == 21L)
+    sr.run("DROP TABLE FUNCTION cmt_tvf")
+  }
+
+  test("STRUCT<…> commas stay inside one ADD COLUMN type and one TVF parameter") {
+    spark.sql("DROP DATABASE IF EXISTS graft__structcol CASCADE")
+    val loc = java.nio.file.Files.createTempDirectory("structcol")
+    spark.sql(s"CREATE DATABASE graft__structcol LOCATION '$loc'")
+    val sr = new ScriptRunner(spark)
+    sr.run("CREATE TABLE graft.structcol.t AS SELECT 1 AS k")
+    sr.run("ALTER TABLE graft.structcol.t ADD COLUMN s STRUCT<a INT64, b STRING>, " +
+      "ADD COLUMN n INT64")
+    val fields = spark.table("graft__structcol.t").schema
+    val st = fields("s").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(st.fields.map(f => (f.name.toLowerCase, f.dataType.simpleString)).toSeq ==
+      Seq(("a", "bigint"), ("b", "string")))
+    assert(fields("n").dataType.simpleString == "bigint")
+    sr.run(
+      """CREATE TABLE FUNCTION st_tvf(p STRUCT<a INT64, b STRING>, m INT64) AS
+        |  SELECT p.a * m AS am, p.b AS b""".stripMargin)
+    val r = sr.run("SELECT am, b FROM st_tvf(STRUCT(4 AS a, 'x' AS b), 3)").get.head()
+    assert(r.getLong(0) == 12L && r.getString(1) == "x")
+    sr.run("DROP TABLE FUNCTION st_tvf")
+  }
 }
