@@ -6,9 +6,15 @@ package graft.engine
   * `spark.sql`. Deliberately conservative, token-aware regexes — the
   * corpus surface is small and pinned by tests. Every pass reads quotes,
   * backticks, comments and brackets through [[SqlLex]], the one lexer
-  * the engine has.
+  * the engine has. A pass finds its trigger regex through one of two
+  * loops, which alone decide that a match inside a literal or comment is
+  * left alone: [[spliceOutside]] for a pass that rewrites a construct
+  * and must know where to go on, [[replaceOutside]] for a one-to-one
+  * swap. A new pass still has to be wired into `rewriteUncached`.
   */
 object Dialect {
+
+  import scala.util.matching.Regex
 
   /** `x [NOT] IN UNNEST(arr)` → `[NOT ]array_contains(arr, x)`
     * (`query.py:29`). The optional NOT group must be explicit: without it
@@ -50,7 +56,8 @@ object Dialect {
     def defs(s: String): Seq[(String, Int, Int)] = {
       val out = Seq.newBuilder[(String, Int, Int)]
       val contRe = raw"(?is)^\s*,\s*([A-Za-z_]\w*)\s+AS\s*\(".r
-      windowDefRe.findAllMatchIn(s).foreach { m =>
+      // a visit, not a rewrite: every definition declines its splice
+      spliceOutside(windowDefRe, s) { (_, m) =>
         var name = m.group(1).toUpperCase
         var open = m.end - 1
         var continue = true
@@ -67,6 +74,7 @@ object Dialect {
             }
           }
         }
+        scala.None
       }
       out.result()
     }
@@ -96,28 +104,15 @@ object Dialect {
     }
     // pass 2: inline extensions at OVER sites
     val byName = defs(sql).map(t => t._1 -> sql.substring(t._2, t._3)).toMap
-    if (byName.isEmpty) return sql
-    var out = sql
-    var again = true
-    guard = 0
-    while (again && guard < 64) {
-      again = false
-      guard += 1
-      val hit = overRefRe.findAllMatchIn(out).find(m =>
-        byName.contains(m.group(1).toUpperCase))
-      hit.foreach { m =>
-        val parenOpen = out.indexOf('(', m.start)
-        val close = SqlLex.close(out, parenOpen)
-        if (close >= 0) {
-          val inner = out.substring(parenOpen + 1, close)
-          val rest = inner.replaceFirst(raw"(?is)^\s*[A-Za-z_]\w*", "")
-          out = out.substring(0, parenOpen + 1) +
-            byName(m.group(1).toUpperCase) + " " + rest + out.substring(close)
-          again = true
-        }
+    if (byName.isEmpty) sql
+    else spliceOutside(overRefRe, sql) { (cur, m) =>
+      val open = cur.indexOf('(', m.start)
+      val close = SqlLex.close(cur, open)
+      byName.get(m.group(1).toUpperCase).filter(_ => close >= 0).map { spec =>
+        val rest = cur.substring(open + 1, close).replaceFirst(raw"(?is)^\s*[A-Za-z_]\w*", "")
+        (open + 1, close, spec + " " + rest)
       }
     }
-    out
   }
 
   private val jsonLitKw = raw"(?i)\bJSON\s*(?=')".r
@@ -250,42 +245,19 @@ object Dialect {
     else Some(s"make_interval($years, $months, 0, $days, $hours, $mins, $secs)")
   }
 
-  private def rewriteTimeLiteral(sql: String): String = {
-    lazy val spans = SqlLex.spans(sql)
-    val ms = timeLitKw.findAllMatchIn(sql)
-      .filter(m => !spans.inLiteral(m.start) && spans.literalEndAt(m.end) >= 0).toList
-    if (ms.isEmpty) return sql
-    val sb = new StringBuilder
-    var idx = 0
-    ms.foreach { m => sb.append(sql.substring(idx, m.start)); idx = m.end }
-    sb.append(sql.substring(idx))
-    sb.result()
-  }
+  private def rewriteTimeLiteral(sql: String): String =
+    spliceOutside(timeLitKw, sql)((_, m) => Some((m.start, m.end, "")))
 
   /** `JSON '<text>'` typed literal → `to_json(parse_json('<text>'))`
     * (the engine's JSON representation is the canonical string — same
     * route as the PARSE_JSON function). Only keywords OUTSIDE string
     * literals rewrite, and only when a literal actually follows.
     */
-  private def rewriteJsonLiteral(sql: String): String = {
-    lazy val spans = SqlLex.spans(sql)
-    val ms = jsonLitKw.findAllMatchIn(sql).filter(m => !spans.inLiteral(m.start)).toList
-    if (ms.isEmpty) return sql
-    val sb = new StringBuilder
-    var idx = 0
-    ms.foreach { m =>
-      val e0 = spans.literalEndAt(m.end)
-      if (m.start >= idx && e0 >= 0) {
-        sb.append(sql.substring(idx, m.start))
-          .append("to_json(parse_json(")
-          .append(sql.substring(m.end, e0))
-          .append("))")
-        idx = e0
-      }
+  private def rewriteJsonLiteral(sql: String): String =
+    spliceOutside(jsonLitKw, sql) { (s, m) =>
+      val e0 = SqlLex.regionEnd(s, m.end)
+      Some((m.start, e0, s"to_json(parse_json(${s.substring(m.end, e0)}))"))
     }
-    sb.append(sql.substring(idx))
-    sb.result()
-  }
 
   /** BigQuery `SELECT AS VALUE <struct expr> [FROM …]` (value table of
     * structs): the enclosing query sees the struct's FIELDS as columns.
@@ -373,84 +345,32 @@ object Dialect {
   private val structListEnd =
     Set("FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION", "QUALIFY", "WINDOW")
 
-  private def rewriteStructSubquery(sql: String): String = {
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      lazy val spans = SqlLex.spans(cur)
-      val candidate = selectAsStruct.findAllMatchIn(cur).find { m =>
-        !spans.inLiteralOrComment(m.start) && {
-          var p = m.start - 1
-          while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
-          p >= 0 && cur.charAt(p) == '(' && !isTableContext(cur, p)
-        }
-      }
-      candidate.foreach { m =>
-        var p = m.start - 1
-        while (cur.charAt(p).isWhitespace) p -= 1
-        val close = SqlLex.close(cur, p)
-        if (close > 0) {
-          // select list ends at the first top-level clause keyword or
-          // the subquery's closing paren
-          val listEnd =
-            SqlLex.clauseEnd(cur, m.end)(i => structListEnd(SqlLex.wordAt(cur, i)))
-          val list = cur.substring(m.end, listEnd).trim
-          if (list.nonEmpty) {
-            cur = cur.substring(0, m.start) + s"SELECT struct($list) " +
-              cur.substring(listEnd)
-            changed = true
-          }
-        }
+  private def rewriteStructSubquery(sql: String): String =
+    spliceOutside(selectAsStruct, sql) { (cur, m) =>
+      var p = m.start - 1
+      while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
+      if (p < 0 || cur.charAt(p) != '(' || isTableContext(cur, p) ||
+          SqlLex.close(cur, p) < 0) scala.None
+      else {
+        // select list ends at the first top-level clause keyword or the
+        // subquery's closing paren
+        val listEnd =
+          SqlLex.clauseEnd(cur, m.end)(i => structListEnd(SqlLex.wordAt(cur, i)))
+        val list = cur.substring(m.end, listEnd).trim
+        if (list.isEmpty) scala.None
+        else Some((m.start, listEnd, s"SELECT struct($list) "))
       }
     }
-    cur
-  }
+
+  private val valueListEnd = Set("FROM", "UNION", "INTERSECT", "EXCEPT", "ORDER", "LIMIT")
 
   private def rewriteSelectAsValue(sql: String): String =
-    selectAsValueRe.findFirstMatchIn(sql) match {
-      case Some(m) if !SqlLex.spans(sql).inLiteral(m.start) =>
-        val stop = Set("FROM", "UNION", "INTERSECT", "EXCEPT", "ORDER", "LIMIT")
-        var depth = 0
-        var exprEnd = sql.length
-        val it = SqlLex.tokens(sql).iterator.filter(_._2 >= m.end)
-        var done = false
-        while (it.hasNext && !done) {
-          val (t, pos) = it.next()
-          t match {
-            case "(" => depth += 1
-            case ")" =>
-              depth -= 1
-              if (depth < 0) { exprEnd = pos; done = true }
-            case ";" if depth == 0 => exprEnd = pos; done = true
-            case w if depth == 0 && stop(w) => exprEnd = pos; done = true
-            case _ =>
-          }
-        }
-        val expr = sql.substring(m.end, exprEnd).trim
-        rewriteSelectAsValue(sql.substring(0, m.start) +
-          s"SELECT inline(array($expr)) " + sql.substring(exprEnd))
-      case _ => sql
+    spliceOutside(selectAsValueRe, sql) { (s, m) =>
+      // a word reached by field access (`v.limit`) is a name, not a clause
+      val exprEnd = SqlLex.clauseEnd(s, m.end)(i => s.charAt(i) == ';' ||
+        (s.charAt(i - 1) != '.' && valueListEnd(SqlLex.wordAt(s, i))))
+      Some((m.start, exprEnd, s"SELECT inline(array(${s.substring(m.end, exprEnd).trim})) "))
     }
-
-  /** `CREATE TEMP TABLE` → Spark temp view DDL is handled by
-    * ScriptRunner; this just normalizes the keyword spelling.
-    */
-  /** Apply `f` only to the regions of `sql` outside string literals
-    * (single- OR double-quoted), so keyword rewrites can't corrupt
-    * literal text like 'NUMERIC keypad' or "a DATETIME 'x". Comments
-    * count as outside (rewrites in comment text are harmless); their
-    * quotes don't shift the literal boundaries.
-    */
-  private def mapOutsideLiterals(sql: String)(f: String => String): String = {
-    val sb = new StringBuilder
-    var last = 0
-    SqlLex.spans(sql).literals.foreach { case (st, en) =>
-      sb ++= f(sql.substring(last, st)) ++= sql.substring(st, en)
-      last = en
-    }
-    (sb ++= f(sql.substring(last))).toString
-  }
 
   /** BigQuery-style 3-part source references after FROM/JOIN/USING/INTO
     * — bare `p.d.t`, fully backticked, or per-part backticked, hyphens
@@ -518,29 +438,25 @@ object Dialect {
       raw"\s*,\s*((?:`[^`]+`|[\w-]+)(?:\s*\.\s*(?:`[^`]+`|[\w-]+)){2})(?!\s*\()").r
 
   def mapSourceFqns(sql: String): String = {
-    val spans = SqlLex.spans(sql)
     val toks = SqlLex.tokens(sql)
-    commaJoinFqn.findAllMatchIn(sql)
-      .find(m => !spans.inLiteral(m.start) && {
-        val kwIdx = toks.indexWhere(_._2 == m.start)
-        !(kwIdx >= 0 && isExprPositionFrom(toks, kwIdx))
-      })
-      .foreach { m =>
-        throw new IllegalArgumentException(
-          s"comma-join table list with a fully-qualified name ('${m.group(1)}') is " +
-            "not supported: only the first table after FROM is catalog-mapped. " +
-            "Rewrite with ANSI JOIN syntax (FROM a CROSS JOIN b / JOIN b ON ...)")
-      }
-    fqnRef.replaceAllIn(sql, m => {
+    def tableFrom(m: Regex.Match) = {
       val kwIdx = toks.indexWhere(_._2 == m.start)
-      val clean = m.group(2).replace("`", "").replaceAll("\\s", "")
-      java.util.regex.Matcher.quoteReplacement(clean.split("\\.") match {
-        case Array(p, d, t) if !spans.inLiteral(m.start) &&
-            !(kwIdx >= 0 && isExprPositionFrom(toks, kwIdx)) =>
+      !(kwIdx >= 0 && isExprPositionFrom(toks, kwIdx))
+    }
+    spliceOutside(commaJoinFqn, sql) { (_, m) =>
+      if (tableFrom(m)) throw new IllegalArgumentException(
+        s"comma-join table list with a fully-qualified name ('${m.group(1)}') is " +
+          "not supported: only the first table after FROM is catalog-mapped. " +
+          "Rewrite with ANSI JOIN syntax (FROM a CROSS JOIN b / JOIN b ON ...)")
+      scala.None
+    }
+    replaceOutside(fqnRef, sql) { m =>
+      m.group(2).replace("`", "").replaceAll("\\s", "").split("\\.") match {
+        case Array(p, d, t) if tableFrom(m) =>
           s"${m.group(1)} ${p.replace("-", "_")}__${d.replace("-", "_")}.`$t`"
-        case _ => m.group(0)
-      })
-    })
+        case _ => m.matched
+      }
+    }
   }
 
   /** `mapFqns = false` is for lineage parsing, which must see the
@@ -548,27 +464,70 @@ object Dialect {
     */
   private val systemTimeRe = raw"(?is)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b".r
 
-  /** The first match of `re` that starts outside every literal and comment. */
-  private def firstOutside(re: scala.util.matching.Regex,
-      sql: String): Option[scala.util.matching.Regex.Match] = {
-    lazy val spans = SqlLex.spans(sql)
-    re.findAllMatchIn(sql).find(m => !spans.inLiteralOrComment(m.start))
+  /** The one loop of the passes that rewrite a construct. Each match of
+    * `re` that starts outside every literal and comment goes to `f`,
+    * which returns a splice `(from, until, text)` or declines. After a
+    * splice the search resumes at `from` on the new text, so a construct
+    * nested in the spliced text rewrites too, and `f` must decline its
+    * own output. After a decline it resumes just past the match; after a
+    * match inside a literal or comment, one character on.
+    */
+  private def spliceOutside(re: Regex, sql: String)(
+      f: (String, Regex.Match) => Option[(Int, Int, String)]): String = {
+    var cur = sql
+    var spans: SqlLex.Spans = null // lexed at the first match of each text
+    val mt = re.pattern.matcher(cur)
+    var pos = 0
+    while (mt.find(pos)) {
+      if (spans == null) spans = SqlLex.spans(cur)
+      if (spans.inLiteralOrComment(mt.start)) pos = mt.start + 1
+      else f(cur, new Regex.Match(cur, mt, Nil).force) match {
+        case Some((from, until, text)) =>
+          cur = cur.substring(0, from) + text + cur.substring(until)
+          spans = null
+          mt.reset(cur)
+          pos = from
+        case scala.None => pos = math.max(mt.end, mt.start + 1)
+      }
+    }
+    cur
   }
 
   /** `re.replaceAllIn` that keeps every match starting inside a literal or
-    * comment as it is; `f` gives the literal replacement text of the others.
+    * comment as it is; `f` gives the literal replacement text of the
+    * others, which is not searched again.
     */
-  private def replaceOutside(re: scala.util.matching.Regex, sql: String)(
-      f: scala.util.matching.Regex.Match => String): String = {
+  private def replaceOutside(re: Regex, sql: String)(f: Regex.Match => String): String = {
     lazy val spans = SqlLex.spans(sql)
     re.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
       if (spans.inLiteralOrComment(m.start)) m.matched else f(m)))
   }
 
+  /** The window of the OVER clause whose keyword is the next word from
+    * `from` (blanks and comments skipped): the span `[start, end)` of its
+    * `( … )` specification or named-window reference, or None when the
+    * next word is not OVER.
+    */
+  private def overWindow(sql: String, from: Int): Option[(Int, Int)] = {
+    val k = SqlLex.skipBlank(sql, from)
+    if (SqlLex.wordAt(sql, k) != "OVER") return scala.None
+    val w = SqlLex.skipBlank(sql, k + 4)
+    val end =
+      if (w < sql.length && sql.charAt(w) == '(') {
+        val close = SqlLex.close(sql, w)
+        if (close < 0) throw new IllegalArgumentException(
+          "unbalanced OVER ( … ) window specification")
+        close + 1
+      } else w + SqlLex.wordAt(sql, w).length
+    if (end == w) throw new IllegalArgumentException(
+      "OVER must be followed by ( … ) or a named window")
+    Some((w, end))
+  }
+
   /** The trimmed arguments of the call whose `(` ends `m`, and the index
     * past its `)`.
     */
-  private def callArgs(sql: String, m: scala.util.matching.Regex.Match,
+  private def callArgs(sql: String, m: Regex.Match,
       fn: String): (Seq[String], Int) = {
     val close = SqlLex.close(sql, m.end - 1)
     if (close < 0) throw new IllegalArgumentException(s"unbalanced $fn call")
@@ -588,61 +547,59 @@ object Dialect {
     * [[graft.ops.Embeddings]] API; this surface keeps the SQL
     * contract.
     */
-  private def rewriteVectorSearch(sql: String): String = {
-    val m0 = firstOutside(vectorSearchRe, sql).getOrElse(return sql)
-    val (args, callEnd) = callArgs(sql, m0, "VECTOR_SEARCH")
-    if (args.length < 3)
-      throw new IllegalArgumentException(
-        "VECTOR_SEARCH needs (TABLE base, 'column', (query), ...)")
-    val baseRef = {
-      val t = args(0)
-      if (!t.toUpperCase.startsWith("TABLE"))
+  private def rewriteVectorSearch(text: String): String =
+    spliceOutside(vectorSearchRe, text) { (sql, m0) =>
+      val (args, callEnd) = callArgs(sql, m0, "VECTOR_SEARCH")
+      if (args.length < 3)
         throw new IllegalArgumentException(
-          s"VECTOR_SEARCH first argument must be TABLE <name>, got: $t")
-      t.drop(5).trim
-    }
-    val colName = args(1).stripPrefix("'").stripSuffix("'")
-    val querySql = args(2)
-    var topK = 10
-    var distType = "EUCLIDEAN"
-    args.drop(3).foreach { opt =>
-      val kv = opt.split("=>").map(_.trim)
-      kv(0).toLowerCase match {
-        case "top_k" => topK = kv(1).toInt
-        case "distance_type" =>
-          distType = kv(1).stripPrefix("'").stripSuffix("'").toUpperCase
-        case other => throw new IllegalArgumentException(
-          s"unsupported VECTOR_SEARCH option: $other")
+          "VECTOR_SEARCH needs (TABLE base, 'column', (query), ...)")
+      val baseRef = {
+        val t = args(0)
+        if (!t.toUpperCase.startsWith("TABLE"))
+          throw new IllegalArgumentException(
+            s"VECTOR_SEARCH first argument must be TABLE <name>, got: $t")
+        t.drop(5).trim
       }
+      val colName = args(1).stripPrefix("'").stripSuffix("'")
+      val querySql = args(2)
+      var topK = 10
+      var distType = "EUCLIDEAN"
+      args.drop(3).foreach { opt =>
+        val kv = opt.split("=>").map(_.trim)
+        kv(0).toLowerCase match {
+          case "top_k" => topK = kv(1).toInt
+          case "distance_type" =>
+            distType = kv(1).stripPrefix("'").stripSuffix("'").toUpperCase
+          case other => throw new IllegalArgumentException(
+            s"unsupported VECTOR_SEARCH option: $other")
+        }
+      }
+      def fold(pairs: String) =
+        s"aggregate($pairs, cast(0.0 as double), (a, x) -> a + x)"
+      val qc = s"__vs_q.`$colName`"
+      val bc = s"__vs_b.`$colName`"
+      val dist = distType match {
+        case "EUCLIDEAN" => "sqrt(" + fold(
+          s"zip_with($qc, $bc, (x, y) -> (cast(x as double) - cast(y as double))" +
+            " * (cast(x as double) - cast(y as double)))") + ")"
+        case "COSINE" =>
+          val dot = fold(s"zip_with($qc, $bc, (x, y) -> cast(x as double) * cast(y as double))")
+          val nq = fold(s"transform($qc, x -> cast(x as double) * cast(x as double))")
+          val nb = fold(s"transform($bc, x -> cast(x as double) * cast(x as double))")
+          s"1.0 - $dot / (sqrt($nq) * sqrt($nb))"
+        case other => throw new IllegalArgumentException(
+          s"unsupported VECTOR_SEARCH distance_type: $other")
+      }
+      val repl =
+        s"""FROM (SELECT query, base, distance FROM (
+           |  SELECT struct(__vs_q.*) AS query, struct(__vs_b.*) AS base,
+           |    $dist AS distance,
+           |    row_number() OVER (PARTITION BY struct(__vs_q.*)
+           |      ORDER BY $dist, struct(__vs_b.*)) AS __vs_rn
+           |  FROM $querySql __vs_q CROSS JOIN $baseRef __vs_b
+           |) WHERE __vs_rn <= $topK)""".stripMargin
+      Some((m0.start, callEnd, repl))
     }
-    def fold(pairs: String) =
-      s"aggregate($pairs, cast(0.0 as double), (a, x) -> a + x)"
-    val qc = s"__vs_q.`$colName`"
-    val bc = s"__vs_b.`$colName`"
-    val dist = distType match {
-      case "EUCLIDEAN" => "sqrt(" + fold(
-        s"zip_with($qc, $bc, (x, y) -> (cast(x as double) - cast(y as double))" +
-          " * (cast(x as double) - cast(y as double)))") + ")"
-      case "COSINE" =>
-        val dot = fold(s"zip_with($qc, $bc, (x, y) -> cast(x as double) * cast(y as double))")
-        val nq = fold(s"transform($qc, x -> cast(x as double) * cast(x as double))")
-        val nb = fold(s"transform($bc, x -> cast(x as double) * cast(x as double))")
-        s"1.0 - $dot / (sqrt($nq) * sqrt($nb))"
-      case other => throw new IllegalArgumentException(
-        s"unsupported VECTOR_SEARCH distance_type: $other")
-    }
-    val repl =
-      s"""FROM (SELECT query, base, distance FROM (
-         |  SELECT struct(__vs_q.*) AS query, struct(__vs_b.*) AS base,
-         |    $dist AS distance,
-         |    row_number() OVER (PARTITION BY struct(__vs_q.*)
-         |      ORDER BY $dist, struct(__vs_b.*)) AS __vs_rn
-         |  FROM $querySql __vs_q CROSS JOIN $baseRef __vs_b
-         |) WHERE __vs_rn <= $topK)""".stripMargin
-    // recurse for further calls in the remainder
-    sql.substring(0, m0.start) + repl +
-      rewriteVectorSearch(sql.substring(callEnd))
-  }
 
   private val rangeSessionizeRe = raw"(?is)\bFROM\s+RANGE_SESSIONIZE\s*\(".r
 
@@ -657,70 +614,69 @@ object Dialect {
     * build the session range. One plan, no joins — scales like any
     * windowed aggregation (shuffle on the partition columns).
     */
-  private def rewriteRangeSessionize(sql: String): String = {
-    val m0 = firstOutside(rangeSessionizeRe, sql).getOrElse(return sql)
-    val (args, callEnd) = callArgs(sql, m0, "RANGE_SESSIONIZE")
-    if (args.length < 3 || args.length > 4)
-      throw new IllegalArgumentException(
-        "RANGE_SESSIONIZE needs (TABLE t, 'range_col', [partition_cols][, mode])")
-    val tableRef = {
-      val t = args(0)
-      if (!t.toUpperCase.startsWith("TABLE"))
+  private def rewriteRangeSessionize(text: String): String =
+    spliceOutside(rangeSessionizeRe, text) { (sql, m0) =>
+      val (args, callEnd) = callArgs(sql, m0, "RANGE_SESSIONIZE")
+      if (args.length < 3 || args.length > 4)
         throw new IllegalArgumentException(
-          s"RANGE_SESSIONIZE first argument must be TABLE <name>, got: $t")
-      t.drop(5).trim
+          "RANGE_SESSIONIZE needs (TABLE t, 'range_col', [partition_cols][, mode])")
+      val tableRef = {
+        val t = args(0)
+        if (!t.toUpperCase.startsWith("TABLE"))
+          throw new IllegalArgumentException(
+            s"RANGE_SESSIONIZE first argument must be TABLE <name>, got: $t")
+        t.drop(5).trim
+      }
+      val rcol = "`" + args(1).stripPrefix("'").stripSuffix("'") + "`"
+      val partArg = args(2)
+      if (!partArg.startsWith("[") || !partArg.endsWith("]"))
+        throw new IllegalArgumentException(
+          s"RANGE_SESSIONIZE partition columns must be an array literal, got: $partArg")
+      val pcols = SqlLex.splitTopLevel(partArg.substring(1, partArg.length - 1))
+        .map(_.trim).filter(_.nonEmpty)
+        .map(p => "`" + p.stripPrefix("'").stripSuffix("'") + "`")
+      val cmp = args.lift(3).map(_.stripPrefix("'").stripSuffix("'").toUpperCase) match {
+        case scala.None | Some("MEETS") => "<=" // touching ranges merge
+        case Some("OVERLAPS") => "<"
+        case Some(other) => throw new IllegalArgumentException(
+          s"unsupported RANGE_SESSIONIZE mode: $other")
+      }
+      val pBy = if (pcols.isEmpty) "" else s"PARTITION BY ${pcols.mkString(", ")} "
+      val ord = "ORDER BY __rs_o1, __rs_o2, __rs_o3, __rs_o4"
+      val pw = s"OVER ($pBy$ord ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
+      val sw = s"OVER (PARTITION BY ${(pcols :+ "__rs_sid").mkString(", ")})"
+      val endNull = s"CASE WHEN $rcol.range_end IS NULL THEN 1 ELSE 0 END"
+      val repl =
+        s"""FROM (
+           |  SELECT * EXCEPT(__rs_o1, __rs_o2, __rs_o3, __rs_o4, __rs_sid),
+           |    named_struct(
+           |      'range_start', CASE WHEN max(CASE WHEN $rcol.range_start IS NULL THEN 1 ELSE 0 END) $sw = 1
+           |        THEN NULL ELSE min($rcol.range_start) $sw END,
+           |      'range_end', CASE WHEN max($endNull) $sw = 1
+           |        THEN NULL ELSE max($rcol.range_end) $sw END) AS session_range
+           |  FROM (
+           |    SELECT * EXCEPT(__rs_new),
+           |      sum(__rs_new) OVER ($pBy$ord ROWS UNBOUNDED PRECEDING) AS __rs_sid
+           |    FROM (
+           |      SELECT *,
+           |        CASE WHEN max($endNull) $pw IS NULL THEN 1
+           |             WHEN max($endNull) $pw = 1 THEN 0
+           |             WHEN $rcol.range_start IS NULL THEN 0
+           |             WHEN $rcol.range_start $cmp max($rcol.range_end) $pw THEN 0
+           |             ELSE 1 END AS __rs_new
+           |      FROM (
+           |        SELECT *,
+           |          CASE WHEN $rcol.range_start IS NULL THEN 0 ELSE 1 END AS __rs_o1,
+           |          $rcol.range_start AS __rs_o2,
+           |          CASE WHEN $rcol.range_end IS NULL THEN 1 ELSE 0 END AS __rs_o3,
+           |          $rcol.range_end AS __rs_o4
+           |        FROM $tableRef
+           |      )
+           |    )
+           |  )
+           |)""".stripMargin
+      Some((m0.start, callEnd, repl))
     }
-    val rcol = "`" + args(1).stripPrefix("'").stripSuffix("'") + "`"
-    val partArg = args(2)
-    if (!partArg.startsWith("[") || !partArg.endsWith("]"))
-      throw new IllegalArgumentException(
-        s"RANGE_SESSIONIZE partition columns must be an array literal, got: $partArg")
-    val pcols = SqlLex.splitTopLevel(partArg.substring(1, partArg.length - 1))
-      .map(_.trim).filter(_.nonEmpty)
-      .map(p => "`" + p.stripPrefix("'").stripSuffix("'") + "`")
-    val cmp = args.lift(3).map(_.stripPrefix("'").stripSuffix("'").toUpperCase) match {
-      case scala.None | Some("MEETS") => "<=" // touching ranges merge
-      case Some("OVERLAPS") => "<"
-      case Some(other) => throw new IllegalArgumentException(
-        s"unsupported RANGE_SESSIONIZE mode: $other")
-    }
-    val pBy = if (pcols.isEmpty) "" else s"PARTITION BY ${pcols.mkString(", ")} "
-    val ord = "ORDER BY __rs_o1, __rs_o2, __rs_o3, __rs_o4"
-    val pw = s"OVER ($pBy$ord ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
-    val sw = s"OVER (PARTITION BY ${(pcols :+ "__rs_sid").mkString(", ")})"
-    val endNull = s"CASE WHEN $rcol.range_end IS NULL THEN 1 ELSE 0 END"
-    val repl =
-      s"""FROM (
-         |  SELECT * EXCEPT(__rs_o1, __rs_o2, __rs_o3, __rs_o4, __rs_sid),
-         |    named_struct(
-         |      'range_start', CASE WHEN max(CASE WHEN $rcol.range_start IS NULL THEN 1 ELSE 0 END) $sw = 1
-         |        THEN NULL ELSE min($rcol.range_start) $sw END,
-         |      'range_end', CASE WHEN max($endNull) $sw = 1
-         |        THEN NULL ELSE max($rcol.range_end) $sw END) AS session_range
-         |  FROM (
-         |    SELECT * EXCEPT(__rs_new),
-         |      sum(__rs_new) OVER ($pBy$ord ROWS UNBOUNDED PRECEDING) AS __rs_sid
-         |    FROM (
-         |      SELECT *,
-         |        CASE WHEN max($endNull) $pw IS NULL THEN 1
-         |             WHEN max($endNull) $pw = 1 THEN 0
-         |             WHEN $rcol.range_start IS NULL THEN 0
-         |             WHEN $rcol.range_start $cmp max($rcol.range_end) $pw THEN 0
-         |             ELSE 1 END AS __rs_new
-         |      FROM (
-         |        SELECT *,
-         |          CASE WHEN $rcol.range_start IS NULL THEN 0 ELSE 1 END AS __rs_o1,
-         |          $rcol.range_start AS __rs_o2,
-         |          CASE WHEN $rcol.range_end IS NULL THEN 1 ELSE 0 END AS __rs_o3,
-         |          $rcol.range_end AS __rs_o4
-         |        FROM $tableRef
-         |      )
-         |    )
-         |  )
-         |)""".stripMargin
-    sql.substring(0, m0.start) + repl +
-      rewriteRangeSessionize(sql.substring(callEnd))
-  }
 
   private val gapFillRe = raw"(?is)\bFROM\s+GAP_FILL\s*\(".r
 
@@ -748,148 +704,148 @@ object Dialect {
     * JOIN back on (partition, ts), per-row window fills — scales like
     * any windowed aggregation.
     */
-  private def rewriteGapFill(sql: String): String = {
-    val m0 = firstOutside(gapFillRe, sql).getOrElse(return sql)
-    val (args, callEnd) = callArgs(sql, m0, "GAP_FILL")
-    if (args.isEmpty || !args(0).toUpperCase.startsWith("TABLE"))
-      throw new IllegalArgumentException(
-        "GAP_FILL first argument must be TABLE <name>")
-    val tableRef = args(0).drop(5).trim
-    var tsCol: Option[String] = scala.None
-    var width: Option[String] = scala.None
-    var pcols: Seq[String] = Seq.empty
-    var vcols: Seq[(String, String)] = Seq.empty
-    var origin: Option[String] = scala.None
-    var ignoreNulls = true
-    def unq(s: String) = s.trim.stripPrefix("'").stripSuffix("'")
-    args.drop(1).foreach { a =>
-      val kv = a.split("=>", 2).map(_.trim)
-      if (kv.length != 2) throw new IllegalArgumentException(
-        s"GAP_FILL arguments must be named (ts_column => …), got: $a")
-      kv(0).toLowerCase match {
-        case "ts_column" => tsCol = Some(unq(kv(1)))
-        case "bucket_width" => width = Some(kv(1))
-        case "partitioning_columns" =>
-          val body = kv(1).stripPrefix("[").stripSuffix("]")
-          pcols = SqlLex.splitTopLevel(body).map(unq).filter(_.nonEmpty)
-        case "value_columns" =>
-          val body = kv(1).trim.stripPrefix("[").stripSuffix("]")
-          vcols = SqlLex.splitTopLevel(body).map(_.trim).filter(_.nonEmpty).map { p =>
-            val inner = p.stripPrefix("(").stripSuffix(")")
-            val parts = SqlLex.splitTopLevel(inner).map(unq)
-            if (parts.length != 2 ||
-                !Set("null", "locf", "linear").contains(parts(1).toLowerCase))
-              throw new IllegalArgumentException(
-                s"GAP_FILL value_columns entries are ('col', 'null'|'locf'|'linear'): $p")
-            (parts(0), parts(1).toLowerCase)
-          }
-        case "origin" => origin = Some(kv(1))
-        case "ignore_null_values" => kv(1).trim.toLowerCase match {
-          case "true" => ignoreNulls = true
-          case "false" => ignoreNulls = false
-          case other => throw new IllegalArgumentException(
-            s"GAP_FILL ignore_null_values must be the literal true or false, got: $other")
-        }
-        case other => throw new IllegalArgumentException(
-          s"unsupported GAP_FILL argument: $other")
-      }
-    }
-    val ts = "`" + tsCol.getOrElse(throw new IllegalArgumentException(
-      "GAP_FILL needs ts_column => '…'")) + "`"
-    val w = width.getOrElse(throw new IllegalArgumentException(
-      "GAP_FILL needs bucket_width => INTERVAL …"))
-    val pq = pcols.map(p => "`" + p + "`")
-    val pSel = if (pq.isEmpty) "" else pq.mkString(", ") + ", "
-    val pBy =
-      if (pq.isEmpty) ""
-      else s"PARTITION BY ${pq.map(p => s"__gf_b.$p").mkString(", ")} "
-    // a bucket row came from a REAL input row iff the join key matched
-    val exists = s"__gf_i.$ts IS NOT NULL"
-    val prevWin = s"($pBy ORDER BY __gf_b.$ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    val nextWin = s"($pBy ORDER BY __gf_b.$ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
-    val fills = vcols.map { case (c0, method) =>
-      val c = "`" + c0 + "`"
-      (method, ignoreNulls) match {
-        case ("null", _) => s"__gf_i.$c AS $c"
-        case ("locf", true) =>
-          s"last_value(__gf_i.$c, true) OVER $prevWin AS $c"
-        case ("locf", false) =>
-          // carry the last EXISTING row's value even when that value is
-          // NULL: the struct wrapper distinguishes "no row" (struct
-          // NULL, skipped) from "row with NULL value" (struct non-NULL)
-          s"(last_value(CASE WHEN $exists THEN named_struct('v', __gf_i.$c) END, true) " +
-            s"OVER $prevWin).v AS $c"
-        case ("linear", true) =>
-          val prevV = s"last_value(__gf_i.$c, true) OVER $prevWin"
-          val nextV = s"first_value(__gf_i.$c, true) OVER $nextWin"
-          val prevT = s"last_value(CASE WHEN __gf_i.$c IS NOT NULL THEN __gf_b.$ts END, true) OVER $prevWin"
-          val nextT = s"first_value(CASE WHEN __gf_i.$c IS NOT NULL THEN __gf_b.$ts END, true) OVER $nextWin"
-          s"(CASE WHEN __gf_i.$c IS NOT NULL THEN CAST(__gf_i.$c AS DOUBLE) " +
-            s"WHEN $prevV IS NULL OR $nextV IS NULL THEN CAST(NULL AS DOUBLE) " +
-            s"ELSE CAST($prevV AS DOUBLE) + (CAST($nextV AS DOUBLE) - CAST($prevV AS DOUBLE)) " +
-            s"* (unix_micros(CAST(__gf_b.$ts AS TIMESTAMP)) - unix_micros(CAST($prevT AS TIMESTAMP))) " +
-            s"/ (unix_micros(CAST($nextT AS TIMESTAMP)) - unix_micros(CAST($prevT AS TIMESTAMP))) END) AS $c"
-        case ("linear", false) =>
-          // anchors are the nearest EXISTING rows; a NULL anchor value
-          // propagates NULL through the interpolation arithmetic
-          val anchor = s"named_struct('v', CAST(__gf_i.$c AS DOUBLE), 't', CAST(__gf_b.$ts AS TIMESTAMP))"
-          val prevS = s"last_value(CASE WHEN $exists THEN $anchor END, true) OVER $prevWin"
-          val nextS = s"first_value(CASE WHEN $exists THEN $anchor END, true) OVER $nextWin"
-          s"(CASE WHEN $exists THEN CAST(__gf_i.$c AS DOUBLE) " +
-            s"ELSE ($prevS).v + (($nextS).v - ($prevS).v) " +
-            s"* (unix_micros(CAST(__gf_b.$ts AS TIMESTAMP)) - unix_micros(($prevS).t)) " +
-            s"/ (unix_micros(($nextS).t) - unix_micros(($prevS).t)) END) AS $c"
-      }
-    }
-    val fillSel = if (fills.isEmpty) "" else ", " + fills.mkString(", ")
-    val onCond = (pq :+ ts)
-      .map(c => s"__gf_b.$c = __gf_i.$c").mkString(" AND ")
-    // origin => re-align each input row into its origin + k*width bucket
-    // (bucket START). Only micros-expressible widths: calendar months
-    // have no fixed micros — loud. Two rows in one (partition, bucket)
-    // fail loud; the check rides the join-key column so pruning cannot
-    // drop it.
-    val inCte = origin match {
-      case scala.None => s"__gf_in AS (SELECT * FROM $tableRef),"
-      case Some(o) =>
-        val wm = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY|WEEK)\s*$$".r
-          .findFirstMatchIn(w).map { m =>
-            val n = m.group(1).toLong
-            val unit = m.group(2).toUpperCase match {
-              case "SECOND" => 1000000L
-              case "MINUTE" => 60000000L
-              case "HOUR" => 3600000000L
-              case "DAY" => 86400000000L
-              case "WEEK" => 604800000000L
+  private def rewriteGapFill(text: String): String =
+    spliceOutside(gapFillRe, text) { (sql, m0) =>
+      val (args, callEnd) = callArgs(sql, m0, "GAP_FILL")
+      if (args.isEmpty || !args(0).toUpperCase.startsWith("TABLE"))
+        throw new IllegalArgumentException(
+          "GAP_FILL first argument must be TABLE <name>")
+      val tableRef = args(0).drop(5).trim
+      var tsCol: Option[String] = scala.None
+      var width: Option[String] = scala.None
+      var pcols: Seq[String] = Seq.empty
+      var vcols: Seq[(String, String)] = Seq.empty
+      var origin: Option[String] = scala.None
+      var ignoreNulls = true
+      def unq(s: String) = s.trim.stripPrefix("'").stripSuffix("'")
+      args.drop(1).foreach { a =>
+        val kv = a.split("=>", 2).map(_.trim)
+        if (kv.length != 2) throw new IllegalArgumentException(
+          s"GAP_FILL arguments must be named (ts_column => …), got: $a")
+        kv(0).toLowerCase match {
+          case "ts_column" => tsCol = Some(unq(kv(1)))
+          case "bucket_width" => width = Some(kv(1))
+          case "partitioning_columns" =>
+            val body = kv(1).stripPrefix("[").stripSuffix("]")
+            pcols = SqlLex.splitTopLevel(body).map(unq).filter(_.nonEmpty)
+          case "value_columns" =>
+            val body = kv(1).trim.stripPrefix("[").stripSuffix("]")
+            vcols = SqlLex.splitTopLevel(body).map(_.trim).filter(_.nonEmpty).map { p =>
+              val inner = p.stripPrefix("(").stripSuffix(")")
+              val parts = SqlLex.splitTopLevel(inner).map(unq)
+              if (parts.length != 2 ||
+                  !Set("null", "locf", "linear").contains(parts(1).toLowerCase))
+                throw new IllegalArgumentException(
+                  s"GAP_FILL value_columns entries are ('col', 'null'|'locf'|'linear'): $p")
+              (parts(0), parts(1).toLowerCase)
             }
-            n * unit
-          }.getOrElse(throw new IllegalArgumentException(
-            s"GAP_FILL origin needs a SECOND…WEEK bucket_width (fixed micros), got: $w"))
-        val oMic = s"unix_micros(CAST(($o) AS TIMESTAMP))"
-        val bucket = s"timestamp_micros($oMic + CAST(FLOOR((unix_micros(CAST($ts AS TIMESTAMP)) - $oMic) / ${wm}.0) AS BIGINT) * ${wm}L)"
-        s"""__gf_in0 AS (SELECT * FROM $tableRef),
-           |  __gf_al AS (SELECT * EXCEPT ($ts), $bucket AS $ts FROM __gf_in0),
-           |  __gf_in AS (SELECT * EXCEPT ($ts),
-           |    CASE WHEN count(1) OVER (PARTITION BY ${(pq :+ ts).mkString(", ")}) > 1
-           |         THEN CAST(raise_error('GAP_FILL: multiple input rows fall into one bucket after origin re-alignment') AS TIMESTAMP)
-           |         ELSE $ts END AS $ts FROM __gf_al),""".stripMargin
+          case "origin" => origin = Some(kv(1))
+          case "ignore_null_values" => kv(1).trim.toLowerCase match {
+            case "true" => ignoreNulls = true
+            case "false" => ignoreNulls = false
+            case other => throw new IllegalArgumentException(
+              s"GAP_FILL ignore_null_values must be the literal true or false, got: $other")
+          }
+          case other => throw new IllegalArgumentException(
+            s"unsupported GAP_FILL argument: $other")
+        }
+      }
+      val ts = "`" + tsCol.getOrElse(throw new IllegalArgumentException(
+        "GAP_FILL needs ts_column => '…'")) + "`"
+      val w = width.getOrElse(throw new IllegalArgumentException(
+        "GAP_FILL needs bucket_width => INTERVAL …"))
+      val pq = pcols.map(p => "`" + p + "`")
+      val pSel = if (pq.isEmpty) "" else pq.mkString(", ") + ", "
+      val pBy =
+        if (pq.isEmpty) ""
+        else s"PARTITION BY ${pq.map(p => s"__gf_b.$p").mkString(", ")} "
+      // a bucket row came from a REAL input row iff the join key matched
+      val exists = s"__gf_i.$ts IS NOT NULL"
+      val prevWin = s"($pBy ORDER BY __gf_b.$ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+      val nextWin = s"($pBy ORDER BY __gf_b.$ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
+      val fills = vcols.map { case (c0, method) =>
+        val c = "`" + c0 + "`"
+        (method, ignoreNulls) match {
+          case ("null", _) => s"__gf_i.$c AS $c"
+          case ("locf", true) =>
+            s"last_value(__gf_i.$c, true) OVER $prevWin AS $c"
+          case ("locf", false) =>
+            // carry the last EXISTING row's value even when that value is
+            // NULL: the struct wrapper distinguishes "no row" (struct
+            // NULL, skipped) from "row with NULL value" (struct non-NULL)
+            s"(last_value(CASE WHEN $exists THEN named_struct('v', __gf_i.$c) END, true) " +
+              s"OVER $prevWin).v AS $c"
+          case ("linear", true) =>
+            val prevV = s"last_value(__gf_i.$c, true) OVER $prevWin"
+            val nextV = s"first_value(__gf_i.$c, true) OVER $nextWin"
+            val prevT = s"last_value(CASE WHEN __gf_i.$c IS NOT NULL THEN __gf_b.$ts END, true) OVER $prevWin"
+            val nextT = s"first_value(CASE WHEN __gf_i.$c IS NOT NULL THEN __gf_b.$ts END, true) OVER $nextWin"
+            s"(CASE WHEN __gf_i.$c IS NOT NULL THEN CAST(__gf_i.$c AS DOUBLE) " +
+              s"WHEN $prevV IS NULL OR $nextV IS NULL THEN CAST(NULL AS DOUBLE) " +
+              s"ELSE CAST($prevV AS DOUBLE) + (CAST($nextV AS DOUBLE) - CAST($prevV AS DOUBLE)) " +
+              s"* (unix_micros(CAST(__gf_b.$ts AS TIMESTAMP)) - unix_micros(CAST($prevT AS TIMESTAMP))) " +
+              s"/ (unix_micros(CAST($nextT AS TIMESTAMP)) - unix_micros(CAST($prevT AS TIMESTAMP))) END) AS $c"
+          case ("linear", false) =>
+            // anchors are the nearest EXISTING rows; a NULL anchor value
+            // propagates NULL through the interpolation arithmetic
+            val anchor = s"named_struct('v', CAST(__gf_i.$c AS DOUBLE), 't', CAST(__gf_b.$ts AS TIMESTAMP))"
+            val prevS = s"last_value(CASE WHEN $exists THEN $anchor END, true) OVER $prevWin"
+            val nextS = s"first_value(CASE WHEN $exists THEN $anchor END, true) OVER $nextWin"
+            s"(CASE WHEN $exists THEN CAST(__gf_i.$c AS DOUBLE) " +
+              s"ELSE ($prevS).v + (($nextS).v - ($prevS).v) " +
+              s"* (unix_micros(CAST(__gf_b.$ts AS TIMESTAMP)) - unix_micros(($prevS).t)) " +
+              s"/ (unix_micros(($nextS).t) - unix_micros(($prevS).t)) END) AS $c"
+        }
+      }
+      val fillSel = if (fills.isEmpty) "" else ", " + fills.mkString(", ")
+      val onCond = (pq :+ ts)
+        .map(c => s"__gf_b.$c = __gf_i.$c").mkString(" AND ")
+      // origin => re-align each input row into its origin + k*width bucket
+      // (bucket START). Only micros-expressible widths: calendar months
+      // have no fixed micros — loud. Two rows in one (partition, bucket)
+      // fail loud; the check rides the join-key column so pruning cannot
+      // drop it.
+      val inCte = origin match {
+        case scala.None => s"__gf_in AS (SELECT * FROM $tableRef),"
+        case Some(o) =>
+          val wm = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY|WEEK)\s*$$".r
+            .findFirstMatchIn(w).map { m =>
+              val n = m.group(1).toLong
+              val unit = m.group(2).toUpperCase match {
+                case "SECOND" => 1000000L
+                case "MINUTE" => 60000000L
+                case "HOUR" => 3600000000L
+                case "DAY" => 86400000000L
+                case "WEEK" => 604800000000L
+              }
+              n * unit
+            }.getOrElse(throw new IllegalArgumentException(
+              s"GAP_FILL origin needs a SECOND…WEEK bucket_width (fixed micros), got: $w"))
+          val oMic = s"unix_micros(CAST(($o) AS TIMESTAMP))"
+          val bucket = s"timestamp_micros($oMic + CAST(FLOOR((unix_micros(CAST($ts AS TIMESTAMP)) - $oMic) / ${wm}.0) AS BIGINT) * ${wm}L)"
+          s"""__gf_in0 AS (SELECT * FROM $tableRef),
+             |  __gf_al AS (SELECT * EXCEPT ($ts), $bucket AS $ts FROM __gf_in0),
+             |  __gf_in AS (SELECT * EXCEPT ($ts),
+             |    CASE WHEN count(1) OVER (PARTITION BY ${(pq :+ ts).mkString(", ")}) > 1
+             |         THEN CAST(raise_error('GAP_FILL: multiple input rows fall into one bucket after origin re-alignment') AS TIMESTAMP)
+             |         ELSE $ts END AS $ts FROM __gf_al),""".stripMargin
+      }
+      val repl =
+        s"""FROM (
+           |  WITH $inCte
+           |  __gf_span AS (
+           |    SELECT ${pSel}min($ts) AS __gf_lo, max($ts) AS __gf_hi
+           |    FROM __gf_in${if (pq.isEmpty) "" else s" GROUP BY ${pq.mkString(", ")}"}
+           |  ),
+           |  __gf_b AS (
+           |    SELECT ${pSel}explode(sequence(__gf_lo, __gf_hi, $w)) AS $ts
+           |    FROM __gf_span
+           |  )
+           |  SELECT ${pq.map(p => s"__gf_b.$p AS $p").mkString(", ")}${if (pq.isEmpty) "" else ", "}__gf_b.$ts AS $ts$fillSel
+           |  FROM __gf_b LEFT JOIN __gf_in __gf_i ON $onCond
+           |)""".stripMargin
+      Some((m0.start, callEnd, repl))
     }
-    val repl =
-      s"""FROM (
-         |  WITH $inCte
-         |  __gf_span AS (
-         |    SELECT ${pSel}min($ts) AS __gf_lo, max($ts) AS __gf_hi
-         |    FROM __gf_in${if (pq.isEmpty) "" else s" GROUP BY ${pq.mkString(", ")}"}
-         |  ),
-         |  __gf_b AS (
-         |    SELECT ${pSel}explode(sequence(__gf_lo, __gf_hi, $w)) AS $ts
-         |    FROM __gf_span
-         |  )
-         |  SELECT ${pq.map(p => s"__gf_b.$p AS $p").mkString(", ")}${if (pq.isEmpty) "" else ", "}__gf_b.$ts AS $ts$fillSel
-         |  FROM __gf_b LEFT JOIN __gf_in __gf_i ON $onCond
-         |)""".stripMargin
-    sql.substring(0, m0.start) + repl + rewriteGapFill(sql.substring(callEnd))
-  }
 
   /** Dataset-qualified persistent-UDF CALL SITES → their flattened
     * registered names (FnRegistry). Only names a CREATE FUNCTION
@@ -923,20 +879,20 @@ object Dialect {
     * Spark-native (probe wave 17) with BigQuery-matching semantics,
     * including rejecting aggregates inside `|> SELECT`.
     */
-  private def rewritePipeRename(sql: String): String = {
-    val m0 = firstOutside(pipeRenameRe, sql).getOrElse(return sql)
-    val end = pipeOperandEnd(sql, m0.end)
-    val prs = SqlLex.splitTopLevel(sql.substring(m0.end, end))
-      .map(_.trim).filter(_.nonEmpty).map { it =>
-        raw"(?is)^(`?[\w]+`?)\s+AS\s+(`?[\w]+`?)$$".r.findFirstMatchIn(it)
-          .map(mm => (mm.group(1), mm.group(2)))
-          .getOrElse(throw new IllegalArgumentException(
-            s"|> RENAME items are `old AS new`: $it"))
-      }
-    val repl = s"|> SELECT * EXCEPT (${prs.map(_._1).mkString(", ")}), " +
-      prs.map { case (o, n) => s"$o AS $n" }.mkString(", ") + " "
-    sql.substring(0, m0.start) + repl + rewritePipeRename(sql.substring(end))
-  }
+  private def rewritePipeRename(text: String): String =
+    spliceOutside(pipeRenameRe, text) { (sql, m0) =>
+      val end = pipeOperandEnd(sql, m0.end)
+      val prs = SqlLex.splitTopLevel(sql.substring(m0.end, end))
+        .map(_.trim).filter(_.nonEmpty).map { it =>
+          raw"(?is)^(`?[\w]+`?)\s+AS\s+(`?[\w]+`?)$$".r.findFirstMatchIn(it)
+            .map(mm => (mm.group(1), mm.group(2)))
+            .getOrElse(throw new IllegalArgumentException(
+              s"|> RENAME items are `old AS new`: $it"))
+        }
+      val repl = s"|> SELECT * EXCEPT (${prs.map(_._1).mkString(", ")}), " +
+        prs.map { case (o, n) => s"$o AS $n" }.mkString(", ") + " "
+      Some((m0.start, end, repl))
+    }
 
   private val pipeAssertRe = raw"(?i)\|>\s*ASSERT\b".r
 
@@ -947,18 +903,18 @@ object Dialect {
     * away (an EXTEND+DROP form could be column-pruned before the check
     * ran).
     */
-  private def rewritePipeAssert(sql: String): String = {
-    val m0 = firstOutside(pipeAssertRe, sql).getOrElse(return sql)
-    val end = pipeOperandEnd(sql, m0.end)
-    val parts = SqlLex.splitTopLevel(sql.substring(m0.end, end)).map(_.trim)
-    val cond = parts.head
-    val msg =
-      if (parts.length > 1) s"CAST((${parts(1)}) AS STRING)"
-      else "'" + cond.replace("'", "''").replace("\\", "\\\\") + "'"
-    val repl = s"|> WHERE (CASE WHEN ($cond) THEN TRUE " +
-      s"ELSE CAST(raise_error(CONCAT('ASSERT failed: ', $msg)) AS BOOLEAN) END) "
-    sql.substring(0, m0.start) + repl + rewritePipeAssert(sql.substring(end))
-  }
+  private def rewritePipeAssert(text: String): String =
+    spliceOutside(pipeAssertRe, text) { (sql, m0) =>
+      val end = pipeOperandEnd(sql, m0.end)
+      val parts = SqlLex.splitTopLevel(sql.substring(m0.end, end)).map(_.trim)
+      val cond = parts.head
+      val msg =
+        if (parts.length > 1) s"CAST((${parts(1)}) AS STRING)"
+        else "'" + cond.replace("'", "''").replace("\\", "\\\\") + "'"
+      val repl = s"|> WHERE (CASE WHEN ($cond) THEN TRUE " +
+        s"ELSE CAST(raise_error(CONCAT('ASSERT failed: ', $msg)) AS BOOLEAN) END) "
+      Some((m0.start, end, repl))
+    }
 
   private val mlAnalyticRe =
     raw"(?i)\bML\s*\.\s*(STANDARD_SCALER|MIN_MAX_SCALER|IMPUTER|QUANTILE_BUCKETIZE)\s*\(".r
@@ -979,56 +935,49 @@ object Dialect {
     * lower bucket (upper-inclusive bins). n must be an integer literal
     * so the expansion is static.
     */
-  private def rewriteMlAnalytic(sql: String): String = {
-    val m0 = firstOutside(mlAnalyticRe, sql).getOrElse(return sql)
-    val fn = m0.group(1).toUpperCase
-    val close = SqlLex.close(sql, m0.end - 1)
-    if (close < 0) throw new IllegalArgumentException(s"ML.$fn: unbalanced call")
-    val args = SqlLex.splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
-    var k = close + 1
-    while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-    if (!sql.regionMatches(true, k, "OVER", 0, 4))
-      throw new IllegalArgumentException(
-        s"ML.$fn is an analytic function and requires OVER (…)")
-    k += 4
-    while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-    if (k >= sql.length || sql.charAt(k) != '(')
-      throw new IllegalArgumentException(
-        s"ML.$fn OVER must use an inline (…) window specification")
-    val wClose = SqlLex.close(sql, k)
-    if (wClose < 0) throw new IllegalArgumentException(s"ML.$fn: unbalanced OVER")
-    val w = sql.substring(k, wClose + 1)
-    val x = s"(${args(0)})"
-    val repl = fn match {
-      case "STANDARD_SCALER" if args.length == 1 =>
-        s"(($x - avg($x) OVER $w) / stddev_samp($x) OVER $w)"
-      case "MIN_MAX_SCALER" if args.length == 1 =>
-        s"(($x - min($x) OVER $w) / (max($x) OVER $w - min($x) OVER $w))"
-      case "IMPUTER" if args.length == 2 =>
-        strLit(args(1)).map(_.toLowerCase) match {
-          case Some("mean") => s"coalesce($x, avg($x) OVER $w)"
-          case Some("median") => s"coalesce($x, percentile($x, 0.5) OVER $w)"
-          case Some("most_frequent") => s"coalesce($x, mode($x) OVER $w)"
-          case _ => throw new IllegalArgumentException(
-            "ML.IMPUTER strategy must be the literal 'mean', 'median' or 'most_frequent'")
-        }
-      case "QUANTILE_BUCKETIZE" if args.length == 2 =>
-        val nb = try args(1).trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            "ML.QUANTILE_BUCKETIZE: num_buckets must be an integer literal")
-        }
-        if (nb < 2 || nb > 100) throw new IllegalArgumentException(
-          s"ML.QUANTILE_BUCKETIZE: num_buckets must be in [2, 100], got $nb")
-        val sums = (1 until nb).map { i =>
-          s"(CASE WHEN $x > percentile($x, ${i.toDouble / nb}d) OVER $w " +
-            "THEN 1 ELSE 0 END)"
-        }
-        s"concat('bin_', CAST((1 + ${sums.mkString(" + ")}) AS STRING))"
-      case other => throw new IllegalArgumentException(
-        s"ML.$other: unsupported form")
+  private def rewriteMlAnalytic(text: String): String =
+    spliceOutside(mlAnalyticRe, text) { (sql, m0) =>
+      val fn = m0.group(1).toUpperCase
+      val close = SqlLex.close(sql, m0.end - 1)
+      if (close < 0) throw new IllegalArgumentException(s"ML.$fn: unbalanced call")
+      val args = SqlLex.splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
+      val (k, wEnd) = overWindow(sql, close + 1).getOrElse(throw new IllegalArgumentException(
+        s"ML.$fn is an analytic function and requires OVER (…)"))
+      if (sql.charAt(k) != '(')
+        throw new IllegalArgumentException(
+          s"ML.$fn OVER must use an inline (…) window specification")
+      val w = sql.substring(k, wEnd)
+      val x = s"(${args(0)})"
+      val repl = fn match {
+        case "STANDARD_SCALER" if args.length == 1 =>
+          s"(($x - avg($x) OVER $w) / stddev_samp($x) OVER $w)"
+        case "MIN_MAX_SCALER" if args.length == 1 =>
+          s"(($x - min($x) OVER $w) / (max($x) OVER $w - min($x) OVER $w))"
+        case "IMPUTER" if args.length == 2 =>
+          strLit(args(1)).map(_.toLowerCase) match {
+            case Some("mean") => s"coalesce($x, avg($x) OVER $w)"
+            case Some("median") => s"coalesce($x, percentile($x, 0.5) OVER $w)"
+            case Some("most_frequent") => s"coalesce($x, mode($x) OVER $w)"
+            case _ => throw new IllegalArgumentException(
+              "ML.IMPUTER strategy must be the literal 'mean', 'median' or 'most_frequent'")
+          }
+        case "QUANTILE_BUCKETIZE" if args.length == 2 =>
+          val nb = try args(1).trim.toInt catch {
+            case _: NumberFormatException => throw new IllegalArgumentException(
+              "ML.QUANTILE_BUCKETIZE: num_buckets must be an integer literal")
+          }
+          if (nb < 2 || nb > 100) throw new IllegalArgumentException(
+            s"ML.QUANTILE_BUCKETIZE: num_buckets must be in [2, 100], got $nb")
+          val sums = (1 until nb).map { i =>
+            s"(CASE WHEN $x > percentile($x, ${i.toDouble / nb}d) OVER $w " +
+              "THEN 1 ELSE 0 END)"
+          }
+          s"concat('bin_', CAST((1 + ${sums.mkString(" + ")}) AS STRING))"
+        case other => throw new IllegalArgumentException(
+          s"ML.$other: unsupported form")
+      }
+      Some((m0.start, wEnd, repl))
     }
-    sql.substring(0, m0.start) + repl + rewriteMlAnalytic(sql.substring(wClose + 1))
-  }
 
   private val hllMergeOverRe = raw"(?i)\bHLL_COUNT\s*\.\s*MERGE\s*\(".r
 
@@ -1039,39 +988,16 @@ object Dialect {
     * the wrapper: estimate(union_agg(x) OVER w). Only the window form
     * matches (a plain call keeps the callRewrites lowering).
     */
-  private def rewriteHllMergeOver(sql: String): String = {
-    val m0 = firstOutside(hllMergeOverRe, sql).getOrElse(return sql)
-    val close = SqlLex.close(sql, m0.end - 1)
-    if (close < 0) return sql // malformed: leave for the loud path
-    var k = close + 1
-    while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-    val hasOver = k + 4 <= sql.length &&
-      sql.regionMatches(true, k, "OVER", 0, 4) &&
-      (k + 4 == sql.length || !(sql.charAt(k + 4).isLetterOrDigit ||
-        sql.charAt(k + 4) == '_'))
-    if (!hasOver)
-      return sql.substring(0, close + 1) +
-        rewriteHllMergeOver(sql.substring(close + 1))
-    val x = sql.substring(m0.end, close)
-    var w = k + 4
-    while (w < sql.length && sql.charAt(w).isWhitespace) w += 1
-    val wEnd =
-      if (w < sql.length && sql.charAt(w) == '(') {
-        val wc = SqlLex.close(sql, w)
-        if (wc < 0) throw new IllegalArgumentException(
-          "HLL_COUNT.MERGE: unbalanced OVER")
-        wc + 1
-      } else {
-        var e = w
-        while (e < sql.length && (sql.charAt(e).isLetterOrDigit ||
-          sql.charAt(e) == '_')) e += 1
-        e
+  private def rewriteHllMergeOver(sql: String): String =
+    spliceOutside(hllMergeOverRe, sql) { (s, m0) =>
+      val close = SqlLex.close(s, m0.end - 1)
+      // malformed: leave for the loud path
+      if (close < 0) scala.None
+      else overWindow(s, close + 1).map { case (w, wEnd) =>
+        (m0.start, wEnd, s"hll_sketch_estimate(hll_union_agg((${s.substring(m0.end, close)}), " +
+          s"true) OVER ${s.substring(w, wEnd)})")
       }
-    val over = sql.substring(w, wEnd)
-    sql.substring(0, m0.start) +
-      s"hll_sketch_estimate(hll_union_agg(($x), true) OVER $over)" +
-      rewriteHllMergeOver(sql.substring(wEnd))
-  }
+    }
 
   private val pdiscRe = raw"(?i)\bPERCENTILE_DISC\s*\(".r
 
@@ -1086,48 +1012,27 @@ object Dialect {
     * x directly. Non-literal fractions (incl. RESPECT/IGNORE NULLS
     * suffixes, which land in the fraction arg) fail loud.
     */
-  private def rewritePercentileDisc(sql: String): String = {
-    val m0 = firstOutside(pdiscRe, sql).getOrElse(return sql)
-    val close = SqlLex.close(sql, m0.end - 1)
-    if (close < 0)
-      throw new IllegalArgumentException("PERCENTILE_DISC: unbalanced call")
-    val args = SqlLex.splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
-    if (args.length != 2 || !args(1).matches("""[0-9.]+"""))
-      throw new IllegalArgumentException(
-        "PERCENTILE_DISC needs (value, literal fraction); " +
-          "RESPECT/IGNORE NULLS is not supported")
-    val x = args(0)
-    val f = args(1)
-    var k = close + 1
-    while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-    val hasOver = k + 4 <= sql.length &&
-      sql.regionMatches(true, k, "OVER", 0, 4) &&
-      (k + 4 == sql.length || !(sql.charAt(k + 4).isLetterOrDigit ||
-        sql.charAt(k + 4) == '_'))
-    val (repl, end) =
-      if (hasOver) {
-        var w = k + 4
-        while (w < sql.length && sql.charAt(w).isWhitespace) w += 1
-        val wEnd =
-          if (w < sql.length && sql.charAt(w) == '(') {
-            val wc = SqlLex.close(sql, w)
-            if (wc < 0) throw new IllegalArgumentException(
-              "PERCENTILE_DISC: unbalanced OVER")
-            wc + 1
-          } else { // named window: OVER w_name
-            var e = w
-            while (e < sql.length && (sql.charAt(e).isLetterOrDigit ||
-              sql.charAt(e) == '_')) e += 1
-            e
-          }
-        val over = sql.substring(w, wEnd)
-        (s"graft_cast_like(percentile_disc($f) WITHIN GROUP (ORDER BY $x)" +
-          s" OVER $over, $x)", wEnd)
-      } else
-        (s"graft_cast_like(percentile_disc($f) WITHIN GROUP (ORDER BY $x)," +
-          s" first($x))", close + 1)
-    sql.substring(0, m0.start) + repl + rewritePercentileDisc(sql.substring(end))
-  }
+  private def rewritePercentileDisc(text: String): String =
+    spliceOutside(pdiscRe, text) { (sql, m0) =>
+      val close = SqlLex.close(sql, m0.end - 1)
+      if (close < 0)
+        throw new IllegalArgumentException("PERCENTILE_DISC: unbalanced call")
+      // Spark's own `percentile_disc(f) WITHIN GROUP (…)`, this pass's output
+      if (SqlLex.wordAt(sql, SqlLex.skipBlank(sql, close + 1)) == "WITHIN") scala.None
+      else {
+        val args = SqlLex.splitTopLevel(sql.substring(m0.end, close)).map(_.trim)
+        if (args.length != 2 || !args(1).matches("""[0-9.]+"""))
+          throw new IllegalArgumentException(
+            "PERCENTILE_DISC needs (value, literal fraction); " +
+              "RESPECT/IGNORE NULLS is not supported")
+        val x = args(0)
+        val pick = s"graft_cast_like(percentile_disc(${args(1)}) WITHIN GROUP (ORDER BY $x)"
+        Some(overWindow(sql, close + 1) match {
+          case Some((w, wEnd)) => (m0.start, wEnd, s"$pick OVER ${sql.substring(w, wEnd)}, $x)")
+          case scala.None => (m0.start, close + 1, s"$pick, first($x))")
+        })
+      }
+    }
 
   private val searchFnRe = raw"(?i)\bSEARCH\s*\(".r
 
@@ -1153,49 +1058,48 @@ object Dialect {
     * time); PATTERN_ANALYZER and backtick-quoted exact-phrase syntax
     * stay loud-unsupported rather than silently approximate.
     */
-  private def rewriteSearchFn(sql: String): String = {
-    val m0 = firstOutside(searchFnRe, sql).getOrElse(return sql)
-    val (args, callEnd) = callArgs(sql, m0, "SEARCH")
-    if (args.length < 2)
-      throw new IllegalArgumentException(
-        "SEARCH needs (data, 'query'[, analyzer => '...'])")
-    val dataExpr = args(0)
-    val qLit = args(1)
-    if (!(qLit.startsWith("'") && qLit.endsWith("'")))
-      throw new IllegalArgumentException(
-        s"SEARCH query must be a string literal, got: $qLit")
-    val query = qLit.substring(1, qLit.length - 1).replace("\\'", "'")
-    if (query.contains("`"))
-      throw new IllegalArgumentException(
-        "SEARCH backtick-quoted phrase matching is not supported")
-    var analyzer = "LOG_ANALYZER"
-    args.drop(2).foreach { opt =>
-      val kv = opt.split("=>").map(_.trim)
-      kv(0).toLowerCase match {
-        case "analyzer" =>
-          analyzer = kv(1).stripPrefix("'").stripSuffix("'").toUpperCase
-        case other => throw new IllegalArgumentException(
-          s"unsupported SEARCH option: $other")
+  private def rewriteSearchFn(text: String): String =
+    spliceOutside(searchFnRe, text) { (sql, m0) =>
+      val (args, callEnd) = callArgs(sql, m0, "SEARCH")
+      if (args.length < 2)
+        throw new IllegalArgumentException(
+          "SEARCH needs (data, 'query'[, analyzer => '...'])")
+      val dataExpr = args(0)
+      val qLit = args(1)
+      if (!(qLit.startsWith("'") && qLit.endsWith("'")))
+        throw new IllegalArgumentException(
+          s"SEARCH query must be a string literal, got: $qLit")
+      val query = qLit.substring(1, qLit.length - 1).replace("\\'", "'")
+      if (query.contains("`"))
+        throw new IllegalArgumentException(
+          "SEARCH backtick-quoted phrase matching is not supported")
+      var analyzer = "LOG_ANALYZER"
+      args.drop(2).foreach { opt =>
+        val kv = opt.split("=>").map(_.trim)
+        kv(0).toLowerCase match {
+          case "analyzer" =>
+            analyzer = kv(1).stripPrefix("'").stripSuffix("'").toUpperCase
+          case other => throw new IllegalArgumentException(
+            s"unsupported SEARCH option: $other")
+        }
       }
+      val repl = analyzer match {
+        case "LOG_ANALYZER" =>
+          val terms = query.toLowerCase.split(logAnalyzerDelimJava)
+            .filter(_.nonEmpty).distinct
+          if (terms.isEmpty) throw new IllegalArgumentException(
+            "SEARCH query tokenizes to nothing under LOG_ANALYZER")
+          val termArr = terms.map(t => s"'$t'").mkString("array(", ", ", ")")
+          s"forall($termArr, __st -> array_contains(" +
+            s"filter(split(lower($dataExpr), '$logAnalyzerDelimSql'), " +
+            s"__sx -> __sx <> ''), __st))"
+        case "NO_OP_ANALYZER" =>
+          s"(lower($dataExpr) = '${query.toLowerCase.replace("'", "\\'")}')"
+        case other => throw new IllegalArgumentException(
+          s"unsupported SEARCH analyzer: $other")
+      }
+      Some((m0.start, callEnd, "(" + repl + ")"))
     }
-    val repl = analyzer match {
-      case "LOG_ANALYZER" =>
-        val terms = query.toLowerCase.split(logAnalyzerDelimJava)
-          .filter(_.nonEmpty).distinct
-        if (terms.isEmpty) throw new IllegalArgumentException(
-          "SEARCH query tokenizes to nothing under LOG_ANALYZER")
-        val termArr = terms.map(t => s"'$t'").mkString("array(", ", ", ")")
-        s"forall($termArr, __st -> array_contains(" +
-          s"filter(split(lower($dataExpr), '$logAnalyzerDelimSql'), " +
-          s"__sx -> __sx <> ''), __st))"
-      case "NO_OP_ANALYZER" =>
-        s"(lower($dataExpr) = '${query.toLowerCase.replace("'", "\\'")}')"
-      case other => throw new IllegalArgumentException(
-        s"unsupported SEARCH analyzer: $other")
-    }
-    sql.substring(0, m0.start) + "(" + repl + ")" +
-      rewriteSearchFn(sql.substring(callEnd))
-  }
 
   /** BigQuery time travel (`FROM t FOR SYSTEM_TIME AS OF <ts expr>`),
     * resolved against the full pre-write images the staged-swap commit
@@ -1211,16 +1115,11 @@ object Dialect {
     * nearest snapshot fails loud in the resolver. Alias the clause
     * with AS — a bare trailing alias reads as expression text.
     */
-  private def rewriteSystemTimeClauses(sql: String): String = {
-    lazy val spans = SqlLex.spans(sql)
-    val ms = systemTimeRe.findAllMatchIn(sql).toList
-      .filterNot(m => spans.inLiteralOrComment(m.start))
-    if (ms.isEmpty) return sql
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession.getOrElse(
-      throw new IllegalStateException(
-        "FOR SYSTEM_TIME AS OF needs an active SparkSession to resolve snapshots"))
-    // right-to-left so earlier match offsets stay valid after splicing
-    ms.foldRight(sql) { (m, acc) =>
+  private def rewriteSystemTimeClauses(sql: String): String =
+    spliceOutside(systemTimeRe, sql) { (acc, m) =>
+      val spark = org.apache.spark.sql.SparkSession.getActiveSession.getOrElse(
+        throw new IllegalStateException(
+          "FOR SYSTEM_TIME AS OF needs an active SparkSession to resolve snapshots"))
       // table ref = the whitespace-delimited token ending before FOR
       var e = m.start
       while (e > 0 && acc.charAt(e - 1).isWhitespace) e -= 1
@@ -1256,9 +1155,8 @@ object Dialect {
         case PartitionCommit.AsOfEmpty => s"(SELECT * FROM $ref WHERE 1=0)"
         case PartitionCommit.AsOfSnapshot(p) => s"parquet.`$p`"
       }
-      acc.substring(0, b) + repl + acc.substring(j)
+      Some((b, j, repl))
     }
-  }
 
   /** BigQuery literal forms Spark lacks, normalized to standard
     * single-line quoted literals before any other pass runs:
@@ -1392,98 +1290,88 @@ object Dialect {
     })
   }
 
+  /** BigQuery type spellings → Spark's, applied in this order. BigQuery
+    * NUMERIC is DECIMAL(38,9) where Spark's NUMERIC keyword means
+    * DECIMAL(10,0); BIGNUMERIC is 76 digits in BigQuery and Spark
+    * decimals cap at 38, so 38,18 keeps the wider fraction. TIME/BYTES
+    * cast targets are mapped inside the CAST/SAFE_CAST handlers
+    * (mapCastTailType): a full-text `AS TIME` rule would also rename a
+    * select-list alias `x AS time`.
+    */
+  private val typeSpellings: Seq[(Regex, String)] = Seq(
+    // `DATETIME '…'` (wall-clock, no zone) is Spark's TIMESTAMP_NTZ; so
+    // is DATETIME as a cast target
+    raw"""(?i)\bDATETIME\b(?=\s*(?:['"]|$$))""".r -> "TIMESTAMP_NTZ",
+    raw"(?i)(?<=\bAS)\s+DATETIME\b".r -> " TIMESTAMP_NTZ",
+    // parameterized NUMERIC(p,s)/BIGNUMERIC(p,s) keep their parameters;
+    // the bare keywords take BigQuery's defaults
+    raw"(?i)\bBIGNUMERIC\s*\(".r -> "DECIMAL(",
+    raw"(?i)\bNUMERIC\s*\(".r -> "DECIMAL(",
+    raw"(?i)\bBIGNUMERIC\b".r -> "DECIMAL(38,18)",
+    raw"(?i)\bNUMERIC\b".r -> "DECIMAL(38,9)",
+    raw"(?i)\bINT64\b".r -> "BIGINT",
+    raw"(?i)\bFLOAT64\b".r -> "DOUBLE",
+    // BOOL the type keyword — not BOOL(json), the strict converter
+    raw"(?i)\bBOOL\b(?!\s*\()".r -> "BOOLEAN",
+    // STRING(L) → VARCHAR(L): Spark enforces the length on write, as
+    // BigQuery does. BYTES(L) → plain BINARY: Spark has no parameterized
+    // binary, so the length is not enforced. Only digit arguments:
+    // STRING(json_expr) is the conversion function.
+    raw"(?i)\bSTRING(?=\s*\(\s*\d+\s*\))".r -> "VARCHAR",
+    raw"(?i)\bBYTES\s*\(\s*\d+\s*\)".r -> "BINARY",
+    // BigQuery TABLESAMPLE SYSTEM (n PERCENT) → Spark TABLESAMPLE
+    raw"(?i)\bTABLESAMPLE\s+SYSTEM\s*\(".r -> "TABLESAMPLE (")
+
+  private val numLit = raw"(?i)\b(BIGNUMERIC|NUMERIC)\s*'((?:[^'\\]|\\.)*)'".r
+
   private def rewriteUncached(sql0: String, mapFqns: Boolean): String = {
-    val sql = normalizeLiteralForms(sql0)
-    // time travel resolves later (post-FQN-mapping) against the
-    // snapshots the staged-swap commit protocol retains — see
-    // rewriteSystemTimeClauses
     // typed NUMERIC/BIGNUMERIC literals first: Spark has no decimal
     // typed-literal syntax, so `NUMERIC '1.5'` must become a CAST before
-    // the bare-keyword pass would leave invalid `DECIMAL(38,9) '1.5'`
-    val numLit = raw"(?i)\b(BIGNUMERIC|NUMERIC)\s*'((?:[^'\\]|\\.)*)'".r
-    val sqlNum = replaceOutside(numLit, sql) { m =>
+    // the bare-keyword spelling would leave invalid `DECIMAL(38,9) '1.5'`
+    val sqlNum = replaceOutside(numLit, normalizeLiteralForms(sql0)) { m =>
       val t = if (m.group(1).equalsIgnoreCase("BIGNUMERIC")) "DECIMAL(38,18)"
         else "DECIMAL(38,9)"
       s"CAST('${m.group(2)}' AS $t)"
     }
-    // BigQuery NUMERIC is DECIMAL(38,9); Spark's NUMERIC keyword means
-    // DECIMAL(10,0) — rewrite to BigQuery semantics (outside literals
-    // only). INT64/FLOAT64 are BigQuery-only type spellings.
-    var out = mapOutsideLiterals({
-      // time travel after FQN mapping, so the clause's table is a
-      // Spark-catalog name the snapshot resolver can DESCRIBE; the
-      // lineage path (mapFqns = false) leaves the text untouched — the
-      // extractor reads the clause's table as a plain source
-      val vs = rewriteGapFill(rewriteRangeSessionize(rewriteVectorSearch(
-        rewriteMlAnalytic(rewritePercentileDisc(rewriteHllMergeOver(
-          rewritePipeRename(rewritePipeAssert(
-            mapPersistentFns(sqlNum)))))))))
-      val mapped = if (mapFqns) mapSourceFqns(vs) else vs
-      if (mapFqns) rewriteSystemTimeClauses(mapped) else mapped
-    })(
-      // typed literal first: `DATETIME '…'` (wall-clock, no zone) is
-      // Spark's TIMESTAMP_NTZ; bare DATETIME (a type position, e.g. in
-      // CAST) maps the same way
-      // (mapOutsideLiterals chunks end right before a quote, so the
-      // typed-literal case appears as DATETIME at segment end)
-      s => rewriteSafeNetPrefix(
-        s.replaceAll(raw"(?i)\bDATETIME\b(?=\s*(?:'|$$))", "TIMESTAMP_NTZ")
-        .replaceAll(raw"(?i)(\bAS\s+)DATETIME\b", "$1TIMESTAMP_NTZ")
-        // BIGNUMERIC is 76 digits in BigQuery; Spark decimals cap at
-        // 38 — 38,18 keeps the wider fraction (precision reduction)
-        // parameterized NUMERIC(p,s)/BIGNUMERIC(p,s) keep their
-        // parameters; the bare keywords take BigQuery's defaults
-        .replaceAll(raw"(?i)\bBIGNUMERIC\s*\(", "DECIMAL(")
-        .replaceAll(raw"(?i)\bNUMERIC\s*\(", "DECIMAL(")
-        .replaceAll(raw"(?i)\bBIGNUMERIC\b", "DECIMAL(38,18)")
-        .replaceAll(raw"(?i)\bNUMERIC\b", "DECIMAL(38,9)")
-        .replaceAll(raw"(?i)\bINT64\b", "BIGINT")
-        .replaceAll(raw"(?i)\bFLOAT64\b", "DOUBLE")
-        // BOOL the type keyword — not BOOL(json), the strict converter
-        .replaceAll(raw"(?i)\bBOOL\b(?!\s*\()", "BOOLEAN")
-        // parameterized STRING(L) → VARCHAR(L) (Spark enforces the
-        // length on write, as BigQuery does); BYTES(L) → plain BINARY
-        // (no parameterized binary in Spark — length unenforced,
-        // documented). Only digit arguments: STRING(json_expr) is the
-        // conversion function.
-        .replaceAll(raw"(?i)\bSTRING\s*\(\s*(\d+)\s*\)", "VARCHAR($1)")
-        .replaceAll(raw"(?i)\bBYTES\s*\(\s*\d+\s*\)", "BINARY")
-        // TIME/BYTES cast targets are mapped inside the CAST/SAFE_CAST
-        // call handlers (mapCastTailType) — a full-text `AS TIME` rule
-        // would also rename a select-list alias `x AS time`
-        // BigQuery TABLESAMPLE SYSTEM (n PERCENT) → Spark TABLESAMPLE
-        .replaceAll(raw"(?i)\bTABLESAMPLE\s+SYSTEM\s*\(", "TABLESAMPLE (")))
+    val vs = rewriteGapFill(rewriteRangeSessionize(rewriteVectorSearch(
+      rewriteMlAnalytic(rewritePercentileDisc(rewriteHllMergeOver(
+        rewritePipeRename(rewritePipeAssert(
+          mapPersistentFns(sqlNum)))))))))
+    val mapped = if (mapFqns) mapSourceFqns(vs) else vs
+    // time travel after FQN mapping, so the clause's table is a
+    // Spark-catalog name the snapshot resolver can DESCRIBE; the
+    // lineage path (mapFqns = false) leaves the text untouched — the
+    // extractor reads the clause's table as a plain source
+    val travelled = if (mapFqns) rewriteSystemTimeClauses(mapped) else mapped
+    var out = rewriteSafeNetPrefix(typeSpellings.foldLeft(travelled) {
+      case (acc, (re, to)) => replaceOutside(re, acc)(_ => to)
+    })
     // BigQuery hex integer literals (0x1A) → decimal (Spark has none);
     // and BigQuery's legal trailing comma in the SELECT list (`SELECT
-    // a, b, FROM t`) → dropped. Both literal-aware.
-    out = mapOutsideLiterals(out) { s =>
-      val hexed = hexIntLit.replaceAllIn(s, m =>
-        BigInt(m.group(1), 16).toString)
-      trailingSelectComma.replaceAllIn(hexed, "$1 FROM")
-    }
+    // a, b, FROM t`) → dropped
+    out = replaceOutside(hexIntLit, out)(m => BigInt(m.group(1), 16).toString)
+    out = replaceOutside(trailingSelectComma, out)(m => m.group(1) + " FROM")
     out = rewriteTypedStruct(out)
     // BigQuery: IN UNNEST(NULL) is FALSE (NOT IN → TRUE), never NULL —
     // bare array_contains(NULL, x) would yield NULL (probe wave 20).
     // NULL ELEMENTS keep IN's three-valued logic on both engines.
-    out = inUnnest.replaceAllIn(out, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (m.group(2) != null)
-          s"((${m.group(3)}) IS NULL OR NOT array_contains(${m.group(3)}, ${m.group(1)}))"
-        else
-          s"((${m.group(3)}) IS NOT NULL AND array_contains(${m.group(3)}, ${m.group(1)}))"))
+    out = replaceOutside(inUnnest, out) { m =>
+      if (m.group(2) != null)
+        s"((${m.group(3)}) IS NULL OR NOT array_contains(${m.group(3)}, ${m.group(1)}))"
+      else
+        s"((${m.group(3)}) IS NOT NULL AND array_contains(${m.group(3)}, ${m.group(1)}))"
+    }
     // expression-context SELECT AS STRUCT first: the comprehension and
     // flatten passes below must see the already-struct-wrapped list
     out = rewriteStructSubquery(out)
     out = rewriteArrayComprehension(out)
     out = rewriteFromUnnest(out)
-    out = dateTz.replaceAllIn(out, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"to_date(from_utc_timestamp(${m.group(1)}, '${m.group(2)}'))"))
-    out = timestampCall.replaceAllIn(out, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"to_timestamp(replace('${m.group(1)}', 'T', ' '))"))
-    // TIME typed literal (literal-span-aware; DATETIME ran first so no
-    // \bTIME\b overlap; SYSTEM_TIME's underscore blocks the boundary)
+    out = replaceOutside(dateTz, out)(m =>
+      s"to_date(from_utc_timestamp(${m.group(1)}, '${m.group(2)}'))")
+    out = replaceOutside(timestampCall, out)(m =>
+      s"to_timestamp(replace('${m.group(1)}', 'T', ' '))")
+    // TIME typed literal (DATETIME ran first so no \bTIME\b overlap;
+    // SYSTEM_TIME's underscore blocks the boundary)
     out = rewriteTimeLiteral(out)
     // RANGE<T> typed literal → struct<range_start, range_end>; before
     // rewriteCalls so the emitted CASTs pass through the CAST handler
@@ -1493,17 +1381,16 @@ object Dialect {
     // where Spark's split interval classes cannot hold the value; before
     // rewriteCalls so CAST(… AS STRING) can see the make_interval source
     out = rewriteMixedInterval(out)
-    out = mapOutsideLiterals(out)(selectAsStruct.replaceAllIn(_, "SELECT "))
+    out = replaceOutside(selectAsStruct, out)(_ => "SELECT ")
     out = rewriteSelectAsValue(out)
     // EXTRACT(part FROM ts AT TIME ZONE 'tz') → shift into the zone
-    // first (the tz is itself a literal, so this match deliberately
-    // spans literal boundaries; simple-expression forms only — nested
+    // first (the tz is itself a literal: only the match's start must be
+    // outside literals; simple-expression forms only — nested
     // parens stay loud on the unconsumed AT)
-    out = extractAtTzRe.replaceAllIn(out, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"EXTRACT(${m.group(1)} FROM from_utc_timestamp(${m.group(2)}, ${m.group(3)}))"))
+    out = replaceOutside(extractAtTzRe, out)(m =>
+      s"EXTRACT(${m.group(1)} FROM from_utc_timestamp(${m.group(2)}, ${m.group(3)}))")
     out = rewriteCalls(out)
-    out = mapOutsideLiterals(out)(rewriteIntervalExpr)
+    out = rewriteIntervalExpr(out)
     out = rewriteArrayLiteral(out)
     out = rewriteArrayAccess(out)
     out = rewriteStarReplace(out)
@@ -1555,33 +1442,32 @@ object Dialect {
   }
 
   private def rewriteSafeNetPrefixOnce(sql: String): String =
-    safeNetPrefixRe.replaceAllIn(sql, m => {
+    replaceOutside(safeNetPrefixRe, sql) { m =>
       val underscored = s"${m.group(1)}_${m.group(2)}".toUpperCase
       val bare = m.group(2).toUpperCase
-      java.util.regex.Matcher.quoteReplacement(
-        if (callRewrites.contains(underscored))
-          s"${m.group(1).toUpperCase}_${m.group(2)}"
-        // generic SAFE.: BigQuery's error-suppressing prefix over any
-        // scalar function. Spark's non-ANSI math already returns NULL
-        // on domain errors (LOG(-1), LN(0), …), so stripping the
-        // prefix IS the SAFE semantic here; functions with a dedicated
-        // SAFE_ handler took the branch above. The NaN-producing set
-        // (SQRT(-1), ASIN(2)…) additionally maps to the SAFE_NANVL_
-        // marker, which the call rewriter wraps in nanvl → NULL.
-        else if (m.group(1).equalsIgnoreCase("SAFE") && safeNanFns.contains(bare))
-          s"SAFE_NANVL_${m.group(2)}"
-        // handlers whose LOWERING can throw at eval time (raise_error
-        // branches, strict decode kernels, ANSI casts): bare prefix
-        // stripping would error where BigQuery's SAFE. returns NULL —
-        // route through a marker the call rewriter wraps in graft_try
-        // (Catalyst TryEval: any eval-time exception → NULL)
-        else if (m.group(1).equalsIgnoreCase("SAFE") && safeWrapFns.contains(bare))
-          s"GRAFT_SAFE_WRAP_${m.group(2)}"
-        else if (m.group(1).equalsIgnoreCase("SAFE") &&
-            (callRewrites.contains(bare) || sparkBuiltinFns.contains(bare)))
-          m.group(2)
-        else m.matched)
-    })
+      if (callRewrites.contains(underscored))
+        s"${m.group(1).toUpperCase}_${m.group(2)}"
+      // generic SAFE.: BigQuery's error-suppressing prefix over any
+      // scalar function. Spark's non-ANSI math already returns NULL
+      // on domain errors (LOG(-1), LN(0), …), so stripping the
+      // prefix IS the SAFE semantic here; functions with a dedicated
+      // SAFE_ handler took the branch above. The NaN-producing set
+      // (SQRT(-1), ASIN(2)…) additionally maps to the SAFE_NANVL_
+      // marker, which the call rewriter wraps in nanvl → NULL.
+      else if (m.group(1).equalsIgnoreCase("SAFE") && safeNanFns.contains(bare))
+        s"SAFE_NANVL_${m.group(2)}"
+      // handlers whose LOWERING can throw at eval time (raise_error
+      // branches, strict decode kernels, ANSI casts): bare prefix
+      // stripping would error where BigQuery's SAFE. returns NULL —
+      // route through a marker the call rewriter wraps in graft_try
+      // (Catalyst TryEval: any eval-time exception → NULL)
+      else if (m.group(1).equalsIgnoreCase("SAFE") && safeWrapFns.contains(bare))
+        s"GRAFT_SAFE_WRAP_${m.group(2)}"
+      else if (m.group(1).equalsIgnoreCase("SAFE") &&
+          (callRewrites.contains(bare) || sparkBuiltinFns.contains(bare)))
+        m.group(2)
+      else m.matched
+    }
 
   // Spark returns NaN (BigQuery: error / SAFE → NULL) for these
   private val safeNanFns = Set("SQRT", "ASIN", "ACOS", "ACOSH", "ATANH",
@@ -1626,27 +1512,25 @@ object Dialect {
     * the projection (BigQuery keeps their position); names and values
     * are identical.
     */
-  private def rewriteStarReplace(sql: String): String =
-    firstOutside(starReplaceRe, sql) match {
-      case scala.None => sql
-      case Some(m) =>
-        val open = sql.indexOf('(', m.start + 1)
-        val close = SqlLex.close(sql, open)
-        if (close < 0) return sql
-        val items = SqlLex.splitTopLevel(sql.substring(open + 1, close)).map(_.trim)
-        // split each item on its LAST top-level AS (the expr itself may
-        // contain CAST(x AS T))
-        val pairs = items.map { it =>
+  private def rewriteStarReplace(text: String): String =
+    spliceOutside(starReplaceRe, text) { (sql, m) =>
+      val open = sql.indexOf('(', m.start + 1)
+      val close = SqlLex.close(sql, open)
+      // split each item on its LAST top-level AS (the expr itself may
+      // contain CAST(x AS T))
+      val pairs = if (close < 0) Seq(scala.None)
+        else SqlLex.splitTopLevel(sql.substring(open + 1, close)).map(_.trim).map { it =>
           val asPos = lastTopLevelAs(it)
           if (asPos < 0) scala.None
           else Some((it.substring(0, asPos).trim, it.substring(asPos + 2).trim))
         }
-        if (pairs.exists(_.isEmpty)) return sql // malformed: let Spark report
+      if (pairs.exists(_.isEmpty)) scala.None // malformed: let Spark report
+      else {
         val ps = pairs.flatten
         val names = ps.map(_._2).mkString(", ")
         val repls = ps.map { case (e, n) => s"$e AS $n" }.mkString(", ")
-        rewriteStarReplace(sql.substring(0, m.start) +
-          s"* EXCEPT ($names), $repls" + sql.substring(close + 1))
+        Some((m.start, close + 1, s"* EXCEPT ($names), $repls"))
+      }
     }
 
   private val typedStructRe = raw"(?is)\bSTRUCT\s*<".r
@@ -1658,26 +1542,23 @@ object Dialect {
     * Spark-spelled (INT64→BIGINT ran first). Non-constructor STRUCT<…>
     * (DECLARE/CAST type positions) is left for the type mapper.
     */
-  private def rewriteTypedStruct(sql: String): String =
-    firstOutside(typedStructRe, sql) match {
-      case scala.None => sql
-      case Some(m) =>
-        val lt = sql.indexOf('<', m.start)
-        var i = lt; var depth = 0; var gt = -1
-        while (i < sql.length && gt < 0) {
-          sql.charAt(i) match {
-            case '<' => depth += 1
-            case '>' => depth -= 1; if (depth == 0) gt = i
-            case _ =>
-          }
-          i += 1
+  private def rewriteTypedStruct(text: String): String =
+    spliceOutside(typedStructRe, text) { (sql, m) =>
+      val lt = sql.indexOf('<', m.start)
+      var i = lt; var depth = 0; var gt = -1
+      while (i < sql.length && gt < 0) {
+        sql.charAt(i) match {
+          case '<' => depth += 1
+          case '>' => depth -= 1; if (depth == 0) gt = i
+          case _ =>
         }
-        if (gt < 0) return sql
-        var k = gt + 1
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k >= sql.length || sql.charAt(k) != '(') return sql
-        val close = SqlLex.close(sql, k)
-        if (close < 0) return sql
+        i += 1
+      }
+      // a type position (CAST, DECLARE) has no `(` after the type list
+      val k = if (gt < 0) sql.length else SqlLex.skipBlank(sql, gt + 1)
+      val close = if (k < sql.length && sql.charAt(k) == '(') SqlLex.close(sql, k) else -1
+      if (close < 0) scala.None
+      else {
         val fields = SqlLex.splitTopLevel(sql.substring(lt + 1, gt)).map(_.trim)
         val args = SqlLex.splitTopLevel(sql.substring(k + 1, close)).map(_.trim)
         val fieldRe = raw"(?is)^([A-Za-z_]\w*)\s+(\S.*)$$".r
@@ -1691,7 +1572,8 @@ object Dialect {
               .map { case ((n, t), a) => s"'$n', CAST($a AS $t)" }
             s"named_struct(${parts.mkString(", ")})"
           } else s"struct(${args.mkString(", ")})"
-        rewriteTypedStruct(sql.substring(0, m.start) + repl + sql.substring(close + 1))
+        Some((m.start, close + 1, repl))
+      }
     }
 
   /** Keywords after which a `[` opens an array LITERAL, not element
@@ -1709,9 +1591,10 @@ object Dialect {
     * ACCESS (BigQuery requires OFFSET/ORDINAL there; Spark-native
     * `a[0]` passes through unharmed), everything else is a literal.
     */
+  private val arrayPrefixRe = raw"(?i)\bARRAY\s*(?:<(?:[^<>]|<[^<>]*>)*>)?\s*\[".r
+
   private def rewriteArrayLiteral(sql: String): String = {
-    val in = sql.replaceAll(raw"(?i)\bARRAY\s*<([^<>]|<[^<>]*>)*>\s*\[", "[")
-      .replaceAll(raw"(?i)\bARRAY\s*\[", "[") // bare ARRAY[…] prefix form
+    val in = replaceOutside(arrayPrefixRe, sql)(_ => "[")
     SqlLex.copyWalk(in) { (i, sb) =>
       val c = in.charAt(i)
       if (c != '[') { sb += c; i + 1 }
@@ -1793,22 +1676,17 @@ object Dialect {
     * try_element_at, which is 1-based). SAFE_ needs the base expression
     * and handles identifier-path bases; other shapes pass through.
     */
-  private def rewriteArrayAccess(sql: String): String =
-    firstOutside(arrayAccessRe, sql) match {
-      case scala.None => sql
-      case Some(m) =>
-        val open = sql.indexOf('(', m.end - 1)
-        val close = SqlLex.close(sql, open)
-        if (close < 0) return sql
-        var k = close + 1
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k >= sql.length || sql.charAt(k) != ']') return sql
+  private def rewriteArrayAccess(text: String): String =
+    spliceOutside(arrayAccessRe, text) { (sql, m) =>
+      val open = sql.indexOf('(', m.end - 1)
+      val close = SqlLex.close(sql, open)
+      val k = if (close < 0) sql.length else SqlLex.skipBlank(sql, close + 1)
+      if (k >= sql.length || sql.charAt(k) != ']') scala.None
+      else {
         val e = sql.substring(open + 1, close).trim
         m.group(1).toUpperCase match {
-          case "OFFSET" =>
-            rewriteArrayAccess(sql.substring(0, m.start) + s"[($e)]" + sql.substring(k + 1))
-          case "ORDINAL" =>
-            rewriteArrayAccess(sql.substring(0, m.start) + s"[($e) - 1]" + sql.substring(k + 1))
+          case "OFFSET" => Some((m.start, k + 1, s"[($e)]"))
+          case "ORDINAL" => Some((m.start, k + 1, s"[($e) - 1]"))
           case safe =>
             var b = m.start
             // the base may END with a balanced (…)/[…] group — a call
@@ -1831,13 +1709,11 @@ object Dialect {
             while (b > 0 && { val ch = sql.charAt(b - 1)
               ch.isLetterOrDigit || ch == '_' || ch == '.' || ch == '`' }) b -= 1
             val base = sql.substring(b, m.start)
-            if (base.isEmpty) sql
-            else {
-              val pos = if (safe == "SAFE_OFFSET") s"($e) + 1" else s"($e)"
-              rewriteArrayAccess(sql.substring(0, b) +
-                s"try_element_at($base, $pos)" + sql.substring(k + 1))
-            }
+            val pos = if (safe == "SAFE_OFFSET") s"($e) + 1" else s"($e)"
+            if (base.isEmpty) scala.None
+            else Some((b, k + 1, s"try_element_at($base, $pos)"))
         }
+      }
     }
 
   // ===== BigQuery function vocabulary beyond the corpus ==============
@@ -1848,19 +1724,6 @@ object Dialect {
   // These rewrites are call-shape-aware (balanced parens, literal- and
   // comment-skipping, innermost-first), not bare keyword regexes, so
   // nested calls and Spark-native spellings pass through unharmed.
-
-  /** Rewrite calls of mapped functions, innermost-first. A mapper
-    * returning None keeps the original spelling (args still rewritten),
-    * so ambiguous shapes (e.g. Spark-native `date_trunc('week', x)`)
-    * fall through untouched.
-    */
-  /** True when the next non-whitespace/non-comment token at or after
-    * `from` is the word OVER — decides whether an aggregate call is in
-    * window position (its rewrite must then stay a bare function call
-    * the OVER suffix can attach to).
-    */
-  private def nextWordIsOver(sql: String, from: Int): Boolean =
-    SqlLex.wordAt(sql, SqlLex.skipBlank(sql, from)) == "OVER"
 
   /** BigQuery returns NULL from ARRAY_AGG/STRING_AGG over ZERO input
     * rows where Spark's collect_list/listagg give [] / '' — reachable
@@ -1875,27 +1738,19 @@ object Dialect {
     */
   private val emptyInputNullAggs = Set("ARRAY_AGG", "STRING_AGG")
 
-  /** Parse the OVER clause beginning at `from` (already known to start
-    * with the word OVER, comments/whitespace allowed before it):
-    * returns (clause text after call-rewriting, index past the
-    * clause) — `(…)` inline specs or a bare named-window reference.
+  /** The window `[w, end)` of an OVER clause with its calls rewritten:
+    * the inside of a `( … )` specification, or a named-window reference
+    * as it is.
     */
-  private def captureOverClause(sql: String, from: Int): (String, Int) = {
-    var k = SqlLex.skipBlank(sql, from) + 4 // the OVER keyword nextWordIsOver verified
-    while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-    if (k < sql.length && sql.charAt(k) == '(') {
-      val wClose = SqlLex.close(sql, k)
-      if (wClose < 0) throw new IllegalArgumentException(
-        "unbalanced OVER ( … ) window specification")
-      (s"(${rewriteCalls(sql.substring(k + 1, wClose))})", wClose + 1)
-    } else if (k < sql.length && (sql.charAt(k).isLetter || sql.charAt(k) == '_')) {
-      var e = k
-      while (e < sql.length && (sql.charAt(e).isLetterOrDigit || sql.charAt(e) == '_')) e += 1
-      (sql.substring(k, e), e)
-    } else throw new IllegalArgumentException(
-      "OVER must be followed by ( … ) or a named window")
-  }
+  private def captureOverClause(sql: String, w: Int, end: Int): String =
+    if (sql.charAt(w) == '(') s"(${rewriteCalls(sql.substring(w + 1, end - 1))})"
+    else sql.substring(w, end)
 
+  /** Rewrite calls of mapped functions, innermost-first. A mapper
+    * returning None keeps the original spelling (args still rewritten),
+    * so ambiguous shapes (e.g. Spark-native `date_trunc('week', x)`)
+    * fall through untouched.
+    */
   private def rewriteCalls(sql: String): String =
     SqlLex.copyWalk(sql) { (i, out) =>
       val c = sql.charAt(i)
@@ -1917,14 +1772,15 @@ object Dialect {
           val args = SqlLex.splitTopLevel(inner).map(_.trim)
           val rewritten = fn.get(args).getOrElse(s"$name($inner)")
           if (!emptyInputNullAggs.contains(name.toUpperCase)) { out ++= rewritten; close + 1 }
-          else if (nextWordIsOver(sql, close + 1)) {
-            val (w, after) = captureOverClause(sql, close + 1)
-            out ++= s"(CASE WHEN count(1) OVER $w = 0 THEN NULL " +
-              s"ELSE $rewritten OVER $w END)"
-            after
-          } else {
-            out ++= s"(CASE WHEN count(1) = 0 THEN NULL ELSE $rewritten END)"
-            close + 1
+          else overWindow(sql, close + 1) match {
+            case Some((w, after)) =>
+              val win = captureOverClause(sql, w, after)
+              out ++= s"(CASE WHEN count(1) OVER $win = 0 THEN NULL " +
+                s"ELSE $rewritten OVER $win END)"
+              after
+            case scala.None =>
+              out ++= s"(CASE WHEN count(1) = 0 THEN NULL ELSE $rewritten END)"
+              close + 1
           }
         }
       }
@@ -2538,7 +2394,7 @@ object Dialect {
       raw"\s+(YEAR|QUARTER|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND|MILLISECOND|MICROSECOND)\b").r
 
   private def rewriteIntervalExpr(sql: String): String =
-    intervalExprRe.replaceAllIn(sql, m => {
+    replaceOutside(intervalExprRe, sql) { m =>
       val e = m.group(1)
       val slots = Array("0", "0", "0", "0", "0", "0", "0")
       m.group(2).toUpperCase match {
@@ -2553,9 +2409,8 @@ object Dialect {
         case "MILLISECOND" => slots(6) = s"(($e) / 1000.0)"
         case "MICROSECOND" => slots(6) = s"(($e) / 1000000.0)"
       }
-      java.util.regex.Matcher.quoteReplacement(
-        s"make_interval(${slots.mkString(", ")})")
-    })
+      s"make_interval(${slots.mkString(", ")})"
+    }
 
   /** JSON_ARRAY_INSERT / JSON_ARRAY_APPEND: (json, path, value) pairs
     * chain; the optional `insert_each_element`/`append_each_element`
@@ -4248,41 +4103,31 @@ object Dialect {
     * — stays inside codegen, no subquery. Non-comprehension ARRAY(SELECT
     * …) subqueries pass through.
     */
-  private def rewriteArrayComprehension(sql: String): String =
-    firstOutside(arrayCompRe, sql) match {
-      case scala.None => sql
-      case Some(m) =>
-        val open = sql.indexOf('(', m.start)
-        val close = SqlLex.close(sql, open)
-        if (close < 0) return sql
-        def skip() = // not a rewritable shape: scan past this ARRAY(
-          sql.substring(0, close) + rewriteArrayComprehension(sql.substring(close))
-        val inner = sql.substring(open + 1, close).trim
-        arrayCompSelRe.findFirstMatchIn(inner) match {
-          case scala.None => skip()
-          case Some(sm) =>
-            val uOpen = inner.indexOf('(', sm.end - 1)
-            val uClose = SqlLex.close(inner, uOpen)
-            if (uClose < 0) return skip()
-            val arr = inner.substring(uOpen + 1, uClose).trim
-            val tail = inner.substring(uClose + 1).trim
-            arrayCompTailRe.findFirstMatchIn(tail) match {
-              case scala.None => skip()
-              case Some(tm) =>
-                val distinct = sm.group(1) != null
-                val sel = sm.group(2).trim
-                val v = Option(tm.group(1)).getOrElse("__x")
-                val cond = Option(tm.group(2))
-                val base = cond.map(c => s"filter($arr, $v -> ($c))")
-                  .getOrElse(s"($arr)")
-                val mapped =
-                  if (sel == v || sel == "*") base
-                  else s"transform($base, $v -> $sel)"
-                val fin = if (distinct) s"array_distinct($mapped)" else mapped
-                rewriteArrayComprehension(
-                  sql.substring(0, m.start) + fin + sql.substring(close + 1))
-            }
-        }
+  private def rewriteArrayComprehension(text: String): String =
+    spliceOutside(arrayCompRe, text) { (sql, m) =>
+      val open = sql.indexOf('(', m.start)
+      val close = SqlLex.close(sql, open)
+      val inner = if (close < 0) "" else sql.substring(open + 1, close).trim
+      // a shape that is not a comprehension declines
+      for {
+        sm <- arrayCompSelRe.findFirstMatchIn(inner)
+        uOpen = inner.indexOf('(', sm.end - 1)
+        uClose = SqlLex.close(inner, uOpen)
+        if uClose >= 0
+        tm <- arrayCompTailRe.findFirstMatchIn(inner.substring(uClose + 1).trim)
+      } yield {
+        val arr = inner.substring(uOpen + 1, uClose).trim
+        val distinct = sm.group(1) != null
+        val sel = sm.group(2).trim
+        val v = Option(tm.group(1)).getOrElse("__x")
+        val cond = Option(tm.group(2))
+        val base = cond.map(c => s"filter($arr, $v -> ($c))")
+          .getOrElse(s"($arr)")
+        val mapped =
+          if (sel == v || sel == "*") base
+          else s"transform($base, $v -> $sel)"
+        (m.start, close + 1, if (distinct) s"array_distinct($mapped)" else mapped)
+      }
     }
 
   private val unnestFrom =
@@ -4304,47 +4149,43 @@ object Dialect {
     * rewritten away before this runs, so every remaining
     * comma/JOIN-adjacent UNNEST is the table operator.
     */
-  private def rewriteFromUnnest(sql: String): String =
-    firstOutside(unnestFrom, sql) match {
-      case scala.None => sql
-      case Some(m) =>
-        val open = sql.indexOf('(', m.end - 1)
-        val close = SqlLex.close(sql, open)
-        if (close < 0) return sql
+  private val leftOnTrue = raw"(?is)^\s*ON\s+TRUE".r
+
+  private def rewriteFromUnnest(text: String): String =
+    spliceOutside(unnestFrom, text) { (sql, m) =>
+      val open = sql.indexOf('(', m.end - 1)
+      val close = SqlLex.close(sql, open)
+      // the alias pattern is all optional, so it matches wherever the call closes
+      if (close < 0) scala.None
+      else unnestAlias.findFirstMatchIn(sql.substring(close + 1)).map { am =>
         val arr = sql.substring(open + 1, close)
-        val after = sql.substring(close + 1)
-        unnestAlias.findFirstMatchIn(after) match {
-          case Some(am) =>
-            // alias-less BigQuery form gets a synthesized alias (the
-            // element column is then only addressable positionally, as
-            // in BigQuery when the array is unaliased)
-            val v = Option(am.group(1)).getOrElse("__unnest_col")
-            val hasOff = am.group(2) != null
-            val off = Option(am.group(3)).getOrElse("__offset")
-            val kw = m.group(1).trim.toUpperCase
-            val isLeft = kw.startsWith("LEFT")
-            var rest = after.substring(am.end)
-            if (isLeft) rest = rest.replaceFirst(raw"(?is)^\s*ON\s+TRUE", "")
-            val prefix = sql.substring(0, m.start).replaceAll("\\s+$", "")
-            // the alias-less form's zero-width match consumed the space
-            // before the next keyword — restore the separator
-            val sep = if (rest.isEmpty || rest.head.isWhitespace ||
-              rest.head == ',' || rest.head == ')') "" else " "
-            if (kw == "FROM") {
-              // UNNEST as the SOLE table: a derived table, no lateral base
-              val gen =
-                if (hasOff) s"(SELECT posexplode($arr) AS ($off, $v))"
-                else s"(SELECT explode($arr) AS $v)"
-              rewriteFromUnnest(prefix + s" FROM $gen" + sep + rest)
-            } else {
-              val lv = if (isLeft) "LATERAL VIEW OUTER" else "LATERAL VIEW"
-              val gen =
-                if (hasOff) s"posexplode($arr) __u AS $off, $v"
-                else s"explode($arr) __u AS $v"
-              rewriteFromUnnest(prefix + s" $lv $gen" + sep + rest)
-            }
-          case scala.None => sql
-        }
+        // alias-less BigQuery form gets a synthesized alias (the
+        // element column is then only addressable positionally, as
+        // in BigQuery when the array is unaliased)
+        val v = Option(am.group(1)).getOrElse("__unnest_col")
+        val hasOff = am.group(2) != null
+        val off = Option(am.group(3)).getOrElse("__offset")
+        val kw = m.group(1).trim.toUpperCase
+        val isLeft = kw.startsWith("LEFT")
+        var until = close + 1 + am.end
+        if (isLeft) until += leftOnTrue.findPrefixMatchOf(sql.substring(until)).fold(0)(_.end)
+        var from = m.start
+        while (from > 0 && sql.charAt(from - 1).isWhitespace) from -= 1
+        // the alias-less form's zero-width match consumed the space
+        // before the next keyword — restore the separator
+        val sep = if (until == sql.length || sql.charAt(until).isWhitespace ||
+          sql.charAt(until) == ',' || sql.charAt(until) == ')') "" else " "
+        val gen =
+          if (kw == "FROM") // UNNEST as the SOLE table: a derived table, no lateral base
+            if (hasOff) s"FROM (SELECT posexplode($arr) AS ($off, $v))"
+            else s"FROM (SELECT explode($arr) AS $v)"
+          else {
+            val lv = if (isLeft) "LATERAL VIEW OUTER" else "LATERAL VIEW"
+            if (hasOff) s"$lv posexplode($arr) __u AS $off, $v"
+            else s"$lv explode($arr) __u AS $v"
+          }
+        (from, until, s" $gen$sep")
+      }
     }
 
   /** Normalize a BigQuery table identifier for the Spark catalog:

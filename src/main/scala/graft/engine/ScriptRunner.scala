@@ -13,8 +13,8 @@ import scala.collection.mutable
   *   CREATE TEMP TABLE name AS (select ...);
   *   <final DML/CTE statement>  → returned as DataFrame
   *
-  * Session variables are substituted textually (word-boundary regex,
-  * like the macro layer) after being evaluated driver-side — each is a
+  * Session variables are substituted textually (whole words outside
+  * literals and comments) after being evaluated driver-side — each is a
   * scalar or small array by construction. Temp tables become Spark temp
   * views (distributed, never collected).
   */
@@ -101,32 +101,36 @@ class ScriptRunner(spark: SparkSession) {
     }
   }
 
-  /** Render declared variables into a statement (word-boundary safe). */
-  private def substituteVars(sql: String): String =
-    variables.foldLeft(substituteSysVars(sql)) { case (acc, (name, value)) =>
-      acc.replaceAll(raw"\b" + java.util.regex.Pattern.quote(name) + raw"\b",
-        java.util.regex.Matcher.quoteReplacement(value))
-    }
-
-  /** BigQuery system variables with a local meaning: @@project_id (the
-    * engine's warehouse "project", configurable via graft.projectId).
-    * @@error.* substitutes in EXCEPTION scope elsewhere; unknown @@vars
-    * stay put → Spark's loud parse error.
+  /** Render declared variables and the system variables with a local
+    * meaning into a statement, in one pass over the code: a maximal word
+    * equal to a declared name takes its value, inside backticked names and
+    * alias positions too (`SELECT v AS v` becomes `5L AS 5L`), while
+    * literals and comments pass as they are. `@@project_id` is the engine's
+    * warehouse "project" (graft.projectId); @@error.* substitutes in
+    * EXCEPTION scope elsewhere, and unknown @@vars stay put → Spark's loud
+    * parse error.
     */
-  private def substituteSysVars(sql: String): String =
-    if (!sql.contains("@@")) sql
-    else {
-      // scan outside string literals and comments — an occurrence inside
-      // either must stay verbatim (substituting a quoted value there
-      // would nest quotes and corrupt the statement)
-      val repl = "'" + spark.conf.get("graft.projectId", "graft-local") + "'"
-      SqlLex.copyWalk(sql) { (i, sb) =>
-        if (sql.regionMatches(true, i, "@@project_id", 0, 12) &&
-            (i + 12 >= sql.length || !SqlLex.isWordChar(sql.charAt(i + 12)))) {
-          sb ++= repl; i + 12
-        } else { sb += sql.charAt(i); i + 1 }
-      }
+  private def substituteVars(sql: String): String = {
+    lazy val project = "'" + spark.conf.get("graft.projectId", "graft-local") + "'"
+    val out = new StringBuilder(sql.length + 16)
+    var i = 0
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      val e = if (c == '`') -1 else SqlLex.regionEnd(sql, i)
+      if (e >= 0) { out.underlying.append(sql, i, e); i = e }
+      else if (SqlLex.isWordChar(c)) {
+        var j = i + 1
+        while (j < sql.length && SqlLex.isWordChar(sql.charAt(j))) j += 1
+        val word = sql.substring(i, j)
+        out ++= variables.getOrElse(word, word)
+        i = j
+      } else if (sql.regionMatches(true, i, "@@project_id", 0, 12) &&
+          (i + 12 >= sql.length || !SqlLex.isWordChar(sql.charAt(i + 12)))) {
+        out ++= project; i += 12
+      } else { out += c; i += 1 }
     }
+    out.toString
+  }
 
   /** Driver-local scalar eval: when the rewritten, variable-substituted
     * expression references no columns/tables, no subqueries, and nothing

@@ -1017,13 +1017,12 @@ object TextDedup {
     // `spark.sql.graft.checkpointDir` set it is a reliable checkpoint
     // of an unpersisted frame, so Spark computes the frame a second
     // time, in a separate job that writes the checkpoint files.
-    // Deliberately a cut, NOT persist(): the cut's stats-free LogicalRDD
-    // also stops the planner broadcasting the near pass's EXPLODED
-    // shingle join side — a single-threaded broadcast build of the
-    // biggest intermediate in the op (measured A/B on d30: cut 2.0-2.3 s
-    // task time / 16-18 jobs vs persist 11-19 s, and at 100 TB a
-    // broadcast of exploded history shingles is an OOM, while the
-    // shuffle join it becomes is the right shape).
+    // Deliberately a cut, NOT persist() (measured A/B on d30: cut
+    // 2.0-2.3 s task time / 16-18 jobs vs persist 11-19 s). The near
+    // pass's join on the EXPLODED shingles carries a merge hint: a
+    // broadcast build of the biggest intermediate in the op is
+    // single-threaded, and at 100 TB a broadcast of exploded history
+    // shingles is an OOM, while the shuffle join is the right shape.
     val exact0 = hashed(newBatch).join(histHash, "h")
       .groupBy(col(idCol)).agg(min(col("hist_id")).as("matched"))
       .withColumn("verdict", lit("exact_dup"))
@@ -1045,7 +1044,7 @@ object TextDedup {
     val near0 = restSh.select(col("doc_id"), size(col("shingles")).as("na"),
         explode(expr("transform(shingles, s -> graft_md5_60(s))")).as("sh"))
       .join(histSh.select(col("hist_id"), size(col("hsh")).as("nb"),
-        explode(expr("transform(hsh, s -> graft_md5_60(s))")).as("sh")), "sh")
+        explode(expr("transform(hsh, s -> graft_md5_60(s))")).as("sh")).hint("merge"), "sh")
       .groupBy(col("doc_id"), col("hist_id")).agg(count(lit(1)).as("shared"),
         min(col("na")).as("na"), min(col("nb")).as("nb"))
       .where(col("shared").cast(DoubleType)

@@ -2072,4 +2072,24 @@ class DialectExecSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the genuine typed literal still strips, even after another literal
     assert(one("SELECT CONCAT('at ', TIME '09:10:11')") == "at 09:10:11")
   }
+
+  test("a pass goes on past a type position or a literal holding its trigger") {
+    graft.functions.BitSketchExpressions.register(spark)
+    val st = spark.sql(Dialect.rewrite(
+      "SELECT CAST(NULL AS STRUCT<a INT64>) AS x, STRUCT<a INT64>(1) AS y")).collect()(0)
+    assert(st.isNullAt(0) && st.getStruct(1).getLong(0) == 1L)
+    val v = spark.sql(Dialect.rewrite("WITH t AS (SELECT 'SELECT AS VALUE' AS s) " +
+      "SELECT AS VALUE STRUCT(s AS s) FROM t")).collect()(0)
+    assert(v.getString(0) == "SELECT AS VALUE")
+    val w = spark.sql(Dialect.rewrite("SELECT 'OVER (w ORDER BY x)' AS s, " +
+      "sum(n) OVER (w ORDER BY n) AS t FROM VALUES (1) AS v(n) " +
+      "WINDOW w AS (PARTITION BY n)")).collect()(0)
+    assert(w.getString(0) == "OVER (w ORDER BY x)" && w.getLong(1) == 1L)
+    Seq("SELECT 'ARRAY<INT64>[1]' AS s", "SELECT 'a IN UNNEST(b)' AS s",
+      "SELECT \"DATE(ts, 'UTC')\" AS s",
+      "SELECT \"TIMESTAMP('2021-01-01T00:00:00')\" AS s").foreach { q =>
+      val lit = q.substring(8, q.length - 6)
+      assert(one(q) == lit, s"literal corrupted in: $q")
+    }
+  }
 }

@@ -183,9 +183,13 @@ class DialectFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     "|> RENAME a AS b", "|> ASSERT x > 0", "QUALIFY ROW_NUMBER() OVER () = 1",
     "ARRAY(SELECT x FROM UNNEST([1, 2]) AS x)",
     "RANGE<DATE> '[2024-01-01, 2024-02-01)'", "NUMERIC '1.5'", "COUNTIF(x > 0)",
-    "FOR SYSTEM_TIME AS OF TIMESTAMP '2024-01-01'")
+    "FOR SYSTEM_TIME AS OF TIMESTAMP '2024-01-01'",
+    "ARRAY<INT64>[1]", "ARRAY[1]", "a IN UNNEST(b)", "DATE(ts, 'UTC')",
+    "TIMESTAMP('2021-01-01T00:00:00')", "EXTRACT(HOUR FROM ts AT TIME ZONE 'UTC')",
+    "STRUCT<a INT64>(1)", "SELECT AS VALUE", "TIME '12:00:00'", "JSON '{}'",
+    "* REPLACE (1 AS a)", "x[SAFE_OFFSET(0)]")
 
-  test("rewrite triggers inside literals and comments stay inert (48 cases)") {
+  test("rewrite triggers inside literals and comments stay inert (96 cases)") {
     val plain = run("SELECT 7 AS n, 'x' AS s").head
     triggers.foreach { t =>
       val noise = randomContent(1 + rnd.nextInt(4))

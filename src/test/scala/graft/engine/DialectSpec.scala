@@ -421,6 +421,36 @@ class DialectSpec extends AnyFunSuite {
       "SELECT named_struct('a', 1) FROM t")
   }
 
+  test("keyword passes leave literal text byte for byte") {
+    // a trigger inside a literal or comment is text, not a construct
+    Seq("SELECT 'ARRAY<INT64>[1]' AS s",
+      "SELECT 'ARRAY[1]' AS s",
+      "SELECT 'a IN UNNEST(b)' AS s",
+      "SELECT \"DATE(ts, 'UTC')\" AS s",
+      "SELECT \"TIMESTAMP('2021-01-01T00:00:00')\" AS s",
+      "SELECT \"EXTRACT(HOUR FROM ts AT TIME ZONE 'UTC')\" AS s",
+      "SELECT 'x INT64 y' AS s -- a NUMERIC comment"
+    ).foreach(q => assert(Dialect.rewrite(q) == q, s"literal corrupted in: $q"))
+    // the same triggers in code still rewrite
+    assert(Dialect.rewrite("SELECT ARRAY<INT64>[1] AS s") == "SELECT array(1) AS s")
+    assert(Dialect.rewrite("SELECT DATE(ts, 'UTC') AS s") ==
+      "SELECT to_date(from_utc_timestamp(ts, 'UTC')) AS s")
+  }
+
+  test("a window extension in a literal stays put; the real OVER site inlines") {
+    val q = "SELECT 'OVER (w ORDER BY x)' AS s, sum(n) OVER (w ORDER BY n) AS t " +
+      "FROM VALUES (1) AS v(n) WINDOW w AS (PARTITION BY n)"
+    val out = Dialect.rewrite(q)
+    assert(out.startsWith("SELECT 'OVER (w ORDER BY x)' AS s, " +
+      "sum(n) OVER (PARTITION BY n  ORDER BY n) AS t"), out)
+  }
+
+  test("a declined match does not end the pass") {
+    // STRUCT<…> in a type position declines; the constructor after it rewrites
+    assert(Dialect.rewrite("SELECT CAST(NULL AS STRUCT<a INT64>) AS x, STRUCT<a INT64>(1) AS y") ==
+      "SELECT CAST(NULL AS STRUCT<a BIGINT>) AS x, named_struct('a', graft_int64(1)) AS y")
+  }
+
   test("comma-join with an unmapped 3-part FQN fails loud") {
     val e = intercept[IllegalArgumentException] {
       Dialect.mapSourceFqns("SELECT * FROM proj.ds.a, proj.ds.b WHERE a.id = b.id")

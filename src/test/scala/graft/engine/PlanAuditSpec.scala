@@ -321,6 +321,20 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"batch-vs-index dedup must stay equi-join only:\n$p")
   }
 
+  test("d30 near pass: the exploded shingle join shuffles, never broadcasts") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val df = PipelineQueries.incrementalDedupPlan(spark, sfDir)
+    df.collect()
+    // the joins of the final adaptive plan keyed on the shingle hash
+    val shJoins = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "sh")) => j
+    }
+    assert(shJoins.nonEmpty, s"no join on the shingle hash in:\n${df.queryExecution.executedPlan}")
+    assert(!shJoins.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"the exploded history side must never be a broadcast build:\n${shJoins.mkString("\n")}")
+  }
+
   test("d35 paragraph dedup: chunks shuffle as md5 hashes, never text") {
     val df = PipelineQueries.queries("d35_paragraph_dedup")(spark, sfDir)
     df.collect()

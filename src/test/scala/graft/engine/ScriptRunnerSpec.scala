@@ -68,6 +68,23 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getLong(0) == 5L && row.getInt(1) == 7)
   }
 
+  test("variables substitute whole words in code, never in literals or comments") {
+    val row = new ScriptRunner(spark).run(
+      """DECLARE x INT64 DEFAULT 5;
+        |DECLARE y STRING DEFAULT 'x and y';
+        |SELECT 'x marks the spot' AS s, y AS t, x + 1 AS u""".stripMargin)
+      .get.collect().head
+    assert(row.getString(0) == "x marks the spot")
+    // a later variable no longer rewrites an earlier one's STRING value
+    assert(row.getString(1) == "x and y")
+    assert(row.getLong(2) == 6L)
+    val Seq(text) = new ScriptRunner(spark).renderStatements(
+      "DECLARE x INT64 DEFAULT 5; SELECT x AS x, `x` /* x */ FROM t -- x")
+    // a backticked name and an alias position still substitute
+    assert(!text.contains("x AS") && !text.contains("`x`"), text)
+    assert(text.endsWith("/* x */ FROM t -- x"), text)
+  }
+
   test("IF/ELSEIF/ELSE executes exactly the matching branch") {
     val out = new ScriptRunner(spark).run(
       """DECLARE mode INT64 DEFAULT 2;
