@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{EngineQueries, PipelineQueries, RelationalQueries, StreamingQueries, Tables}
+import graft.queries.{EngineQueries, PipelineQueries, RelationalQueries, StreamingQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

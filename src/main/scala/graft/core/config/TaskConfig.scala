@@ -96,7 +96,7 @@ object TaskConfig {
     v
   }
 
-  private def build(get: String => Option[String], requireWindow: Boolean): TaskConfig = {
+  private def build(get: String => Option[String]): TaskConfig = {
     def required(k: String) = validateNotEmpty(
       get(k).getOrElse(throw new IllegalArgumentException(s"missing required config: $k")), k)
     def optional(k: String, default: String) = get(k).getOrElse(default)
@@ -124,15 +124,14 @@ object TaskConfig {
 
   /** `TaskConfigFromEnv` — `config.py:114-192`. */
   def fromEnv(env: Map[String, String]): TaskConfig =
-    build(k => env.get(k).filter(_.nonEmpty), requireWindow = false)
+    build(k => env.get(k).filter(_.nonEmpty))
 
   /** `TaskConfigFromFile` — `config.py:321-435`: INI sections flattened,
     * values stripped of surrounding double quotes, case-preserving keys.
     */
   def fromIni(raw: String): TaskConfig = {
     val props = IniParser.parse(raw)
-    val cfg = build(k => props.get(k).map(_.stripPrefix("\"").stripSuffix("\"")),
-      requireWindow = true)
+    val cfg = build(k => props.get(k).map(_.stripPrefix("\"").stripSuffix("\"")))
     // file-based configs carry the window spec (required there)
     if (cfg.windowSize.isEmpty)
       throw new IllegalArgumentException("missing required config: WINDOW_SIZE")

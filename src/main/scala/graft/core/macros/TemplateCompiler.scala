@@ -1,6 +1,6 @@
 package graft.core.macros
 
-import java.time.{Instant, LocalDateTime, ZoneOffset}
+import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 /** Go-text/template-subset renderer — the reference's `compiler.go:16-57`:

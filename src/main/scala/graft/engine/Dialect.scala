@@ -11,38 +11,81 @@ package graft.engine
   * left alone: [[spliceOutside]] for a pass that rewrites a construct
   * and must know where to go on, [[replaceOutside]] for a one-to-one
   * swap. A new pass still has to be wired into `rewriteUncached`.
+  *
+  * Every trigger is declared with [[trigger]], which pairs the regex with
+  * its anchors: upper-case words of which every match contains at least
+  * one (`UNNEST`, `QUALIFY`, `|>`, `[`, `0X`). Both loops return the text
+  * untouched, with no regex run and no lexing, when none of the anchors
+  * is in it, so a new pass must declare an anchor that is a substring of
+  * every match of its regex; `DialectFuzzSpec` checks that over its
+  * texts. A pass with no regex loop opens with the same [[absent]] check.
   */
 object Dialect {
 
   import scala.util.matching.Regex
+
+  /** A pass's trigger regex and its anchors (see the header). */
+  private[engine] final class Trigger(val re: Regex, val anchors: Seq[String])
+
+  private val declared = Vector.newBuilder[Trigger]
+
+  private def trigger(pattern: String, anchors: String*): Trigger = {
+    require(anchors.nonEmpty && anchors.forall(a =>
+      a.nonEmpty && a == a.toUpperCase(java.util.Locale.ROOT)), pattern)
+    val t = new Trigger(pattern.r, anchors)
+    declared += t
+    t
+  }
+
+  /** Every trigger the object declares, for the gate spec. */
+  private[engine] lazy val triggers: Seq[Trigger] = declared.result()
+
+  // the upper-cased copy of the last text a gate read, per thread: a pass
+  // that changes nothing hands on the same instance, so a run of skipped
+  // passes upper-cases the text once
+  private val lastUpper = ThreadLocal.withInitial[(String, String)](() => (null, ""))
+
+  /** True when none of `anchors` is in `text`, case-insensitively. */
+  private def absent(text: String, anchors: String*): Boolean = {
+    val (seen, up) = lastUpper.get
+    val u = if (seen eq text) up else {
+      val fresh = text.toUpperCase(java.util.Locale.ROOT)
+      lastUpper.set((text, fresh))
+      fresh
+    }
+    !anchors.exists(u.contains)
+  }
 
   /** `x [NOT] IN UNNEST(arr)` → `[NOT ]array_contains(arr, x)`
     * (`query.py:29`). The optional NOT group must be explicit: without it
     * the operand capture would swallow the NOT keyword itself.
     */
   private val inUnnest =
-    raw"(?i)([\w.`]+)\s+(NOT\s+)?IN\s+UNNEST\s*\(((?:[^()]|\([^()]*\))*)\)".r
+    trigger(raw"(?i)([\w.`]+)\s+(NOT\s+)?IN\s+UNNEST\s*\(((?:[^()]|\([^()]*\))*)\)", "UNNEST")
 
   /** `DATE(ts, 'Asia/Jakarta')` → tz-aware date
     * (`weekly_partitioned/query.sql:2`).
     */
   private val dateTz =
-    raw"(?i)\bDATE\s*\(\s*([\w.`]+)\s*,\s*'([^']+)'\s*\)".r
+    trigger(raw"(?i)\bDATE\s*\(\s*([\w.`]+)\s*,\s*'([^']+)'\s*\)", "DATE")
 
   /** BigQuery `TIMESTAMP('2021-09-01T01:02:03')` literal-ish call works
     * in Spark as `to_timestamp(...)`; `T` separator needs normalizing.
     */
   private val timestampCall =
-    raw"(?i)\bTIMESTAMP\s*\(\s*'([^']+)'\s*\)".r
+    trigger(raw"(?i)\bTIMESTAMP\s*\(\s*'([^']+)'\s*\)", "TIMESTAMP")
 
   /** `SELECT AS STRUCT a, b` → `SELECT struct(a, b)` (only used in
     * scalar-subquery SET position — `query.py:17`).
     */
-  private val selectAsStruct = raw"(?i)SELECT\s+AS\s+STRUCT\b".r
-  private val selectAsValueRe = raw"(?i)\bSELECT\s+AS\s+VALUE\b".r
+  private val selectAsStruct = trigger(raw"(?i)SELECT\s+AS\s+STRUCT\b", "STRUCT")
+  private val selectAsValueRe = trigger(raw"(?i)\bSELECT\s+AS\s+VALUE\b", "VALUE")
 
-  private val windowDefRe = raw"(?i)\bWINDOW\s+([A-Za-z_]\w*)\s+AS\s*\(".r
-  private val overRefRe = raw"(?i)\bOVER\s*\(\s*([A-Za-z_]\w*)\b".r
+  private val windowDefRe = trigger(raw"(?i)\bWINDOW\s+([A-Za-z_]\w*)\s+AS\s*\(", "WINDOW")
+  private val overRefRe = trigger(raw"(?i)\bOVER\s*\(\s*([A-Za-z_]\w*)\b", "OVER")
+  // `, w2 AS (` continuing a WINDOW list; the window name opening a spec
+  private val windowContRe = raw"(?is)^\s*,\s*([A-Za-z_]\w*)\s+AS\s*\(".r
+  private val leadingNameRe = raw"(?is)^\s*([A-Za-z_]\w*)\b".r
 
   /** BigQuery window EXTENSION: `OVER (w ORDER BY …)` and window-on-
     * window definitions (`WINDOW w2 AS (w1 ORDER BY x)`) splice the
@@ -55,7 +98,6 @@ object Dialect {
     // ones: `WINDOW a AS (…), b AS (…)`); specEnd = the CLOSING paren
     def defs(s: String): Seq[(String, Int, Int)] = {
       val out = Seq.newBuilder[(String, Int, Int)]
-      val contRe = raw"(?is)^\s*,\s*([A-Za-z_]\w*)\s+AS\s*\(".r
       // a visit, not a rewrite: every definition declines its splice
       spliceOutside(windowDefRe, s) { (_, m) =>
         var name = m.group(1).toUpperCase
@@ -66,7 +108,7 @@ object Dialect {
           if (close < 0) continue = false
           else {
             out += ((name, open + 1, close))
-            contRe.findFirstMatchIn(s.substring(close + 1)) match {
+            windowContRe.findFirstMatchIn(s.substring(close + 1)) match {
               case Some(cm) =>
                 name = cm.group(1).toUpperCase
                 open = close + cm.end
@@ -90,12 +132,12 @@ object Dialect {
       d.foreach { case (_, s0, e0) =>
         if (!changed) {
           val spec = sql.substring(s0, e0)
-          raw"(?is)^\s*([A-Za-z_]\w*)\b".r.findFirstMatchIn(spec)
+          leadingNameRe.findFirstMatchIn(spec)
             .map(_.group(1).toUpperCase)
             .filter(byName.contains)
             .foreach { ref =>
               val inlined = byName(ref) + " " +
-                spec.replaceFirst(raw"(?is)^\s*[A-Za-z_]\w*", "")
+                leadingNameRe.replaceFirstIn(spec, "")
               sql = sql.substring(0, s0) + inlined + sql.substring(e0)
               changed = true
             }
@@ -109,21 +151,21 @@ object Dialect {
       val open = cur.indexOf('(', m.start)
       val close = SqlLex.close(cur, open)
       byName.get(m.group(1).toUpperCase).filter(_ => close >= 0).map { spec =>
-        val rest = cur.substring(open + 1, close).replaceFirst(raw"(?is)^\s*[A-Za-z_]\w*", "")
+        val rest = leadingNameRe.replaceFirstIn(cur.substring(open + 1, close), "")
         (open + 1, close, spec + " " + rest)
       }
     }
   }
 
-  private val jsonLitKw = raw"(?i)\bJSON\s*(?=')".r
+  private val jsonLitKw = trigger(raw"(?i)\bJSON\s*(?=')", "JSON")
   // a hex literal never follows an identifier char or '.' (0x1A in
   // `tab0x1A` or a float's mantissa must not rewrite)
-  private val hexIntLit = raw"(?<![\w.$$])0[xX]([0-9A-Fa-f]+)\b".r
-  private val trailingSelectComma = raw"(?i),(\s*)\bFROM\b".r
+  private val hexIntLit = trigger(raw"(?<![\w.$$])0[xX]([0-9A-Fa-f]+)\b", "0X")
+  private val trailingSelectComma = trigger(raw"(?i),(\s*)\bFROM\b", "FROM")
   private val extractAtTzRe =
-    (raw"(?i)\bEXTRACT\s*\(\s*(\w+(?:\s*\(\s*\w+\s*\))?)\s+FROM\s+" +
-      raw"([^()]+?)\s+AT\s+TIME\s+ZONE\s+('[^']*'|[\w.]+)\s*\)").r
-  private val timeLitKw = raw"(?i)\bTIME\s*(?=')".r
+    trigger(raw"(?i)\bEXTRACT\s*\(\s*(\w+(?:\s*\(\s*\w+\s*\))?)\s+FROM\s+" +
+      raw"([^()]+?)\s+AT\s+TIME\s+ZONE\s+('[^']*'|[\w.]+)\s*\)", "ZONE")
+  private val timeLitKw = trigger(raw"(?i)\bTIME\s*(?=')", "TIME")
 
   /** `TIME '15:30:45'` typed literal → the bare string (TIME values are
     * 'HH:mm:ss' strings in this engine; Spark has no TIME type).
@@ -133,7 +175,7 @@ object Dialect {
     * following quote OPENS a literal are stripped.
     */
   private val rangeLitRe =
-    raw"(?i)\bRANGE\s*<\s*(DATE|DATETIME|TIMESTAMP)\s*>\s*'([^']*)'".r
+    trigger(raw"(?i)\bRANGE\s*<\s*(DATE|DATETIME|TIMESTAMP)\s*>\s*'([^']*)'", "RANGE")
 
   /** BigQuery RANGE<T> typed literal `RANGE<DATE> '[lo, hi)'` → the
     * engine's range representation `STRUCT<range_start T, range_end T>`
@@ -162,7 +204,10 @@ object Dialect {
     }
 
   private val mixedIntervalRe =
-    raw"(?i)\bINTERVAL\s+'([^']*)'\s+(YEAR|MONTH|DAY|HOUR|MINUTE)\s+TO\s+(MONTH|DAY|HOUR|MINUTE|SECOND)\b".r
+    trigger(raw"(?i)\bINTERVAL\s+'([^']*)'\s+(YEAR|MONTH|DAY|HOUR|MINUTE)\s+TO\s+(MONTH|DAY|HOUR|MINUTE|SECOND)\b",
+      "INTERVAL")
+  private val ymRe = raw"^(-?)(\d+)-(\d+)$$".r
+  private val numRe = raw"^(-?)(\d+)$$".r
   private val unitIdx = Map("YEAR" -> 0, "MONTH" -> 1, "DAY" -> 2,
     "HOUR" -> 3, "MINUTE" -> 4, "SECOND" -> 5)
 
@@ -192,8 +237,6 @@ object Dialect {
     var hours = 0L; var mins = 0L; var secs = "0"
     def next(): Option[String] =
       if (idx < parts.length) { idx += 1; Some(parts(idx - 1)) } else scala.None
-    val ymRe = raw"^(-?)(\d+)-(\d+)$$".r
-    val numRe = raw"^(-?)(\d+)$$".r
     try {
       if (from == "YEAR") next() match {
         case Some(ymRe(sg, y, mo)) =>
@@ -380,7 +423,8 @@ object Dialect {
     * references and `USING parquet` clauses pass through unchanged.
     */
   private val fqnRef =
-    raw"(?i)\b(FROM|JOIN|USING|INTO|TABLE)\s+(`[^`]+`(?:\s*\.\s*`[^`]+`)*|[\w$$.-]+)".r
+    trigger(raw"(?i)\b(FROM|JOIN|USING|INTO|TABLE)\s+(`[^`]+`(?:\s*\.\s*`[^`]+`)*|[\w$$.-]+)",
+      "FROM", "JOIN", "USING", "INTO", "TABLE")
 
   /** Words that put a following FROM in EXPRESSION position, where a
     * 3-part path is `alias.struct.field`, not a table: EXTRACT units
@@ -434,8 +478,8 @@ object Dialect {
     * corrupt expressions). Fail loud instead of wrong-catalog errors.
     */
   private val commaJoinFqn =
-    (raw"(?is)\bFROM\s+(?:`[^`]+`|[\w$$.-]+)(?:\s+(?:AS\s+)?[A-Za-z_]\w*)?" +
-      raw"\s*,\s*((?:`[^`]+`|[\w-]+)(?:\s*\.\s*(?:`[^`]+`|[\w-]+)){2})(?!\s*\()").r
+    trigger(raw"(?is)\bFROM\s+(?:`[^`]+`|[\w$$.-]+)(?:\s+(?:AS\s+)?[A-Za-z_]\w*)?" +
+      raw"\s*,\s*((?:`[^`]+`|[\w-]+)(?:\s*\.\s*(?:`[^`]+`|[\w-]+)){2})(?!\s*\()", "FROM")
 
   def mapSourceFqns(sql: String): String = {
     val toks = SqlLex.tokens(sql)
@@ -462,7 +506,7 @@ object Dialect {
   /** `mapFqns = false` is for lineage parsing, which must see the
     * ORIGINAL BigQuery identifiers (its output is BigQuery URNs).
     */
-  private val systemTimeRe = raw"(?is)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b".r
+  private val systemTimeRe = trigger(raw"(?is)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b", "SYSTEM_TIME")
 
   /** The one loop of the passes that rewrite a construct. Each match of
     * `re` that starts outside every literal and comment goes to `f`,
@@ -472,11 +516,12 @@ object Dialect {
     * own output. After a decline it resumes just past the match; after a
     * match inside a literal or comment, one character on.
     */
-  private def spliceOutside(re: Regex, sql: String)(
+  private def spliceOutside(t: Trigger, sql: String)(
       f: (String, Regex.Match) => Option[(Int, Int, String)]): String = {
+    if (absent(sql, t.anchors: _*)) return sql
     var cur = sql
     var spans: SqlLex.Spans = null // lexed at the first match of each text
-    val mt = re.pattern.matcher(cur)
+    val mt = t.re.pattern.matcher(cur)
     var pos = 0
     while (mt.find(pos)) {
       if (spans == null) spans = SqlLex.spans(cur)
@@ -495,11 +540,14 @@ object Dialect {
 
   /** `re.replaceAllIn` that keeps every match starting inside a literal or
     * comment as it is; `f` gives the literal replacement text of the
-    * others, which is not searched again.
+    * others, which is not searched again. A text with no match comes
+    * back as the same instance.
     */
-  private def replaceOutside(re: Regex, sql: String)(f: Regex.Match => String): String = {
+  private def replaceOutside(t: Trigger, sql: String)(f: Regex.Match => String): String = {
+    if (absent(sql, t.anchors: _*)) return sql
+    if (!t.re.pattern.matcher(sql).find()) return sql
     lazy val spans = SqlLex.spans(sql)
-    re.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
+    t.re.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
       if (spans.inLiteralOrComment(m.start)) m.matched else f(m)))
   }
 
@@ -534,7 +582,7 @@ object Dialect {
     (SqlLex.splitTopLevel(sql.substring(m.end, close)).map(_.trim), close + 1)
   }
 
-  private val vectorSearchRe = raw"(?is)\bFROM\s+VECTOR_SEARCH\s*\(".r
+  private val vectorSearchRe = trigger(raw"(?is)\bFROM\s+VECTOR_SEARCH\s*\(", "VECTOR_SEARCH")
 
   /** BigQuery `VECTOR_SEARCH(TABLE base, 'col', (query), top_k => N,
     * distance_type => 'EUCLIDEAN'|'COSINE')` → a brute-force top-k
@@ -601,7 +649,8 @@ object Dialect {
       Some((m0.start, callEnd, repl))
     }
 
-  private val rangeSessionizeRe = raw"(?is)\bFROM\s+RANGE_SESSIONIZE\s*\(".r
+  private val rangeSessionizeRe =
+    trigger(raw"(?is)\bFROM\s+RANGE_SESSIONIZE\s*\(", "RANGE_SESSIONIZE")
 
   /** BigQuery `FROM RANGE_SESSIONIZE(TABLE t, 'range_col',
     * ['p1', …][, 'MEETS'|'OVERLAPS'])` — merges a partition's
@@ -678,7 +727,22 @@ object Dialect {
       Some((m0.start, callEnd, repl))
     }
 
-  private val gapFillRe = raw"(?is)\bFROM\s+GAP_FILL\s*\(".r
+  private val fixedIntervalRe =
+    raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY|WEEK)\s*$$".r
+
+  /** `INTERVAL n SECOND…WEEK` as microseconds; None for any other text. */
+  private def fixedIntervalMicros(w: String): Option[Long] =
+    fixedIntervalRe.findFirstMatchIn(w).map { m =>
+      m.group(1).toLong * (m.group(2).toUpperCase match {
+        case "SECOND" => 1000000L
+        case "MINUTE" => 60000000L
+        case "HOUR" => 3600000000L
+        case "DAY" => 86400000000L
+        case "WEEK" => 604800000000L
+      })
+    }
+
+  private val gapFillRe = trigger(raw"(?is)\bFROM\s+GAP_FILL\s*\(", "GAP_FILL")
 
   /** BigQuery `FROM GAP_FILL(TABLE t, ts_column => 'ts',
     * bucket_width => INTERVAL n unit[, partitioning_columns => [...]]
@@ -808,18 +872,7 @@ object Dialect {
       val inCte = origin match {
         case scala.None => s"__gf_in AS (SELECT * FROM $tableRef),"
         case Some(o) =>
-          val wm = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY|WEEK)\s*$$".r
-            .findFirstMatchIn(w).map { m =>
-              val n = m.group(1).toLong
-              val unit = m.group(2).toUpperCase match {
-                case "SECOND" => 1000000L
-                case "MINUTE" => 60000000L
-                case "HOUR" => 3600000000L
-                case "DAY" => 86400000000L
-                case "WEEK" => 604800000000L
-              }
-              n * unit
-            }.getOrElse(throw new IllegalArgumentException(
+          val wm = fixedIntervalMicros(w).getOrElse(throw new IllegalArgumentException(
               s"GAP_FILL origin needs a SECOND…WEEK bucket_width (fixed micros), got: $w"))
           val oMic = s"unix_micros(CAST(($o) AS TIMESTAMP))"
           val bucket = s"timestamp_micros($oMic + CAST(FLOOR((unix_micros(CAST($ts AS TIMESTAMP)) - $oMic) / ${wm}.0) AS BIGINT) * ${wm}L)"
@@ -856,12 +909,14 @@ object Dialect {
     FnRegistry.entries.foldLeft(sql) { case (acc, (canon, flat)) =>
       // left boundary: a longer identifier ending in the canonical name
       // (x_p.d.f) must not match its tail
-      val re = ("(?i)(?<![A-Za-z0-9_.])`?" +
-        java.util.regex.Pattern.quote(canon) + raw"`?\s*\(").r
-      replaceOutside(re, acc)(_ => s"$flat(")
+      val t = new Trigger(("(?i)(?<![A-Za-z0-9_.])`?" +
+        java.util.regex.Pattern.quote(canon) + raw"`?\s*\(").r,
+        Seq(canon.toUpperCase(java.util.Locale.ROOT)))
+      replaceOutside(t, acc)(_ => s"$flat(")
     }
 
-  private val pipeRenameRe = raw"(?i)\|>\s*RENAME\b".r
+  private val pipeRenameRe = trigger(raw"(?i)\|>\s*RENAME\b", "|>")
+  private val renameItemRe = raw"(?is)^(`?[\w]+`?)\s+AS\s+(`?[\w]+`?)$$".r
 
   /** End of a pipe operator's operand list from `from`: the next
     * top-level `|>`, or the `)` closing an enclosing group.
@@ -884,7 +939,7 @@ object Dialect {
       val end = pipeOperandEnd(sql, m0.end)
       val prs = SqlLex.splitTopLevel(sql.substring(m0.end, end))
         .map(_.trim).filter(_.nonEmpty).map { it =>
-          raw"(?is)^(`?[\w]+`?)\s+AS\s+(`?[\w]+`?)$$".r.findFirstMatchIn(it)
+          renameItemRe.findFirstMatchIn(it)
             .map(mm => (mm.group(1), mm.group(2)))
             .getOrElse(throw new IllegalArgumentException(
               s"|> RENAME items are `old AS new`: $it"))
@@ -894,7 +949,7 @@ object Dialect {
       Some((m0.start, end, repl))
     }
 
-  private val pipeAssertRe = raw"(?i)\|>\s*ASSERT\b".r
+  private val pipeAssertRe = trigger(raw"(?i)\|>\s*ASSERT\b", "|>")
 
   /** BigQuery `|> ASSERT condition [, message]` — rows pass through
     * unchanged; any row failing the condition errors the query. Lowered
@@ -917,7 +972,8 @@ object Dialect {
     }
 
   private val mlAnalyticRe =
-    raw"(?i)\bML\s*\.\s*(STANDARD_SCALER|MIN_MAX_SCALER|IMPUTER|QUANTILE_BUCKETIZE)\s*\(".r
+    trigger(raw"(?i)\bML\s*\.\s*(STANDARD_SCALER|MIN_MAX_SCALER|IMPUTER|QUANTILE_BUCKETIZE)\s*\(",
+      "SCALER", "IMPUTER", "BUCKETIZE")
 
   /** BigQuery ML analytic preprocessing functions — rewritten into the
     * equivalent window-aggregate compositions over the SAME OVER clause
@@ -979,7 +1035,7 @@ object Dialect {
       Some((m0.start, wEnd, repl))
     }
 
-  private val hllMergeOverRe = raw"(?i)\bHLL_COUNT\s*\.\s*MERGE\s*\(".r
+  private val hllMergeOverRe = trigger(raw"(?i)\bHLL_COUNT\s*\.\s*MERGE\s*\(", "HLL_COUNT")
 
   /** `HLL_COUNT.MERGE(sketch) OVER w` (the r10-documented loud edge):
     * the aggregate-position lowering wraps the union aggregate in
@@ -999,7 +1055,7 @@ object Dialect {
       }
     }
 
-  private val pdiscRe = raw"(?i)\bPERCENTILE_DISC\s*\(".r
+  private val pdiscRe = trigger(raw"(?i)\bPERCENTILE_DISC\s*\(", "PERCENTILE_DISC")
 
   /** `PERCENTILE_DISC(x, f) [OVER w]` → Spark's percentile_disc, with
     * BigQuery's input-type preservation restored (r10 ask #6): Spark
@@ -1034,7 +1090,7 @@ object Dialect {
       }
     }
 
-  private val searchFnRe = raw"(?i)\bSEARCH\s*\(".r
+  private val searchFnRe = trigger(raw"(?i)\bSEARCH\s*\(", "SEARCH")
 
   /** Java/RE2-compatible class of BigQuery's published LOG_ANALYZER
     * delimiters (space/tab/newline + `[ ] < > ( ) { } | ! ; , ' " * &
@@ -1277,7 +1333,8 @@ object Dialect {
     scala.collection.concurrent.TrieMap[(Long, Boolean, String), String]()
 
   def rewrite(sql0: String, mapFqns: Boolean = true): String = {
-    if (systemTimeRe.findFirstIn(sql0).isDefined)
+    if (!absent(sql0, systemTimeRe.anchors: _*) &&
+        systemTimeRe.re.findFirstIn(sql0).isDefined)
       return rewriteUncached(sql0, mapFqns)
     val key = (FnRegistry.epoch, mapFqns, sql0)
     rewriteCache.getOrElse(key, {
@@ -1298,31 +1355,31 @@ object Dialect {
     * (mapCastTailType): a full-text `AS TIME` rule would also rename a
     * select-list alias `x AS time`.
     */
-  private val typeSpellings: Seq[(Regex, String)] = Seq(
+  private val typeSpellings: Seq[(Trigger, String)] = Seq(
     // `DATETIME '…'` (wall-clock, no zone) is Spark's TIMESTAMP_NTZ; so
     // is DATETIME as a cast target
-    raw"""(?i)\bDATETIME\b(?=\s*(?:['"]|$$))""".r -> "TIMESTAMP_NTZ",
-    raw"(?i)(?<=\bAS)\s+DATETIME\b".r -> " TIMESTAMP_NTZ",
+    trigger(raw"""(?i)\bDATETIME\b(?=\s*(?:['"]|$$))""", "DATETIME") -> "TIMESTAMP_NTZ",
+    trigger(raw"(?i)(?<=\bAS)\s+DATETIME\b", "DATETIME") -> " TIMESTAMP_NTZ",
     // parameterized NUMERIC(p,s)/BIGNUMERIC(p,s) keep their parameters;
     // the bare keywords take BigQuery's defaults
-    raw"(?i)\bBIGNUMERIC\s*\(".r -> "DECIMAL(",
-    raw"(?i)\bNUMERIC\s*\(".r -> "DECIMAL(",
-    raw"(?i)\bBIGNUMERIC\b".r -> "DECIMAL(38,18)",
-    raw"(?i)\bNUMERIC\b".r -> "DECIMAL(38,9)",
-    raw"(?i)\bINT64\b".r -> "BIGINT",
-    raw"(?i)\bFLOAT64\b".r -> "DOUBLE",
+    trigger(raw"(?i)\bBIGNUMERIC\s*\(", "BIGNUMERIC") -> "DECIMAL(",
+    trigger(raw"(?i)\bNUMERIC\s*\(", "NUMERIC") -> "DECIMAL(",
+    trigger(raw"(?i)\bBIGNUMERIC\b", "BIGNUMERIC") -> "DECIMAL(38,18)",
+    trigger(raw"(?i)\bNUMERIC\b", "NUMERIC") -> "DECIMAL(38,9)",
+    trigger(raw"(?i)\bINT64\b", "INT64") -> "BIGINT",
+    trigger(raw"(?i)\bFLOAT64\b", "FLOAT64") -> "DOUBLE",
     // BOOL the type keyword — not BOOL(json), the strict converter
-    raw"(?i)\bBOOL\b(?!\s*\()".r -> "BOOLEAN",
+    trigger(raw"(?i)\bBOOL\b(?!\s*\()", "BOOL") -> "BOOLEAN",
     // STRING(L) → VARCHAR(L): Spark enforces the length on write, as
     // BigQuery does. BYTES(L) → plain BINARY: Spark has no parameterized
     // binary, so the length is not enforced. Only digit arguments:
     // STRING(json_expr) is the conversion function.
-    raw"(?i)\bSTRING(?=\s*\(\s*\d+\s*\))".r -> "VARCHAR",
-    raw"(?i)\bBYTES\s*\(\s*\d+\s*\)".r -> "BINARY",
+    trigger(raw"(?i)\bSTRING(?=\s*\(\s*\d+\s*\))", "STRING") -> "VARCHAR",
+    trigger(raw"(?i)\bBYTES\s*\(\s*\d+\s*\)", "BYTES") -> "BINARY",
     // BigQuery TABLESAMPLE SYSTEM (n PERCENT) → Spark TABLESAMPLE
-    raw"(?i)\bTABLESAMPLE\s+SYSTEM\s*\(".r -> "TABLESAMPLE (")
+    trigger(raw"(?i)\bTABLESAMPLE\s+SYSTEM\s*\(", "TABLESAMPLE") -> "TABLESAMPLE (")
 
-  private val numLit = raw"(?i)\b(BIGNUMERIC|NUMERIC)\s*'((?:[^'\\]|\\.)*)'".r
+  private val numLit = trigger(raw"(?i)\b(BIGNUMERIC|NUMERIC)\s*'((?:[^'\\]|\\.)*)'", "NUMERIC")
 
   private def rewriteUncached(sql0: String, mapFqns: Boolean): String = {
     // typed NUMERIC/BIGNUMERIC literals first: Spark has no decimal
@@ -1409,7 +1466,8 @@ object Dialect {
   }
 
   private val safeNetPrefixRe =
-    raw"(?i)\b(SAFE|NET|HLL_COUNT|AEAD|KEYS|ML|KLL_QUANTILES)\s*\.\s*([A-Za-z_][A-Za-z0-9_]*)(?=\s*\()".r
+    trigger(raw"(?i)\b(SAFE|NET|HLL_COUNT|AEAD|KEYS|ML|KLL_QUANTILES)\s*\.\s*([A-Za-z_][A-Za-z0-9_]*)(?=\s*\()",
+      "SAFE", "NET", "HLL_COUNT", "AEAD", "KEYS", "ML", "KLL_QUANTILES")
 
   /** SAFE. error-suppressing prefix → SAFE_ spelling handled by the call
     * rewriter (SAFE_CAST, SAFE_PARSE_x, SAFE_SUBSTR…); same for the NET.
@@ -1505,7 +1563,7 @@ object Dialect {
     "DETERMINISTIC_ENCRYPT", "DETERMINISTIC_DECRYPT_STRING",
     "DETERMINISTIC_DECRYPT_BYTES")
 
-  private val starReplaceRe = raw"(?is)\*\s*REPLACE\s*\(".r
+  private val starReplaceRe = trigger(raw"(?is)\*\s*REPLACE\s*\(", "REPLACE")
 
   /** `SELECT [t.]* REPLACE (expr AS col, …)` → `* EXCEPT (col, …),
     * expr AS col, …`. Deviation: the replaced columns move to the END of
@@ -1533,7 +1591,8 @@ object Dialect {
       }
     }
 
-  private val typedStructRe = raw"(?is)\bSTRUCT\s*<".r
+  private val typedStructRe = trigger(raw"(?is)\bSTRUCT\s*<", "STRUCT")
+  private val structFieldRe = raw"(?is)^([A-Za-z_]\w*)\s+(\S.*)$$".r
 
   /** Typed struct constructor `STRUCT<a INT64, b STRING>(1, 'x')` →
     * `named_struct('a', CAST(1 AS BIGINT), …)` — the field names live in
@@ -1561,9 +1620,8 @@ object Dialect {
       else {
         val fields = SqlLex.splitTopLevel(sql.substring(lt + 1, gt)).map(_.trim)
         val args = SqlLex.splitTopLevel(sql.substring(k + 1, close)).map(_.trim)
-        val fieldRe = raw"(?is)^([A-Za-z_]\w*)\s+(\S.*)$$".r
         val named = fields.map {
-          case fieldRe(n, t) => Some((n, t))
+          case structFieldRe(n, t) => Some((n, t))
           case _ => Option.empty[(String, String)]
         }
         val repl =
@@ -1591,9 +1649,10 @@ object Dialect {
     * ACCESS (BigQuery requires OFFSET/ORDINAL there; Spark-native
     * `a[0]` passes through unharmed), everything else is a literal.
     */
-  private val arrayPrefixRe = raw"(?i)\bARRAY\s*(?:<(?:[^<>]|<[^<>]*>)*>)?\s*\[".r
+  private val arrayPrefixRe = trigger(raw"(?i)\bARRAY\s*(?:<(?:[^<>]|<[^<>]*>)*>)?\s*\[", "ARRAY")
 
   private def rewriteArrayLiteral(sql: String): String = {
+    if (absent(sql, "[")) return sql
     val in = replaceOutside(arrayPrefixRe, sql)(_ => "[")
     SqlLex.copyWalk(in) { (i, sb) =>
       val c = in.charAt(i)
@@ -1621,6 +1680,9 @@ object Dialect {
     }
   }
 
+  private val structCallRe = raw"(?is)^struct\s*\(".r
+  private val plainNameRe = raw"^[A-Za-z_][A-Za-z0-9_]*$$|^`[^`]+`$$".r
+
   /** BigQuery positional struct-name inference in array literals:
     * `[STRUCT(1 AS a, 2 AS b), STRUCT(3, 4)]` takes the later
     * elements' field names from the first element. By this point the
@@ -1633,22 +1695,20 @@ object Dialect {
   private def inferStructNames(inner: String): String = {
     val items = SqlLex.splitTopLevel(inner).map(_.trim)
     if (items.length < 2) return inner
-    val structRe = raw"(?is)^struct\s*\(".r
     def argsOf(it: String): Option[Seq[String]] =
-      structRe.findFirstMatchIn(it) match {
+      structCallRe.findFirstMatchIn(it) match {
         case Some(m) if SqlLex.close(it, m.end - 1) == it.length - 1 =>
           Some(SqlLex.splitTopLevel(it.substring(m.end, it.length - 1)).map(_.trim))
         case _ => scala.None
       }
-    if (!items.forall(it => structRe.findFirstMatchIn(it).isDefined)) return inner
-    val nameRe = raw"^[A-Za-z_][A-Za-z0-9_]*$$|^`[^`]+`$$".r
+    if (!items.forall(it => structCallRe.findFirstMatchIn(it).isDefined)) return inner
     val firstNames = argsOf(items.head) match {
       case Some(args) =>
         val ns = args.map { a =>
           val p = lastTopLevelAs(a)
           if (p < 0) "" else {
             val n = a.substring(p + 2).trim
-            if (nameRe.findFirstIn(n).isDefined) n else ""
+            if (plainNameRe.findFirstIn(n).isDefined) n else ""
           }
         }
         if (ns.exists(_.isEmpty)) return inner
@@ -1668,7 +1728,7 @@ object Dialect {
   }
 
   private val arrayAccessRe =
-    raw"(?is)\[\s*(OFFSET|ORDINAL|SAFE_OFFSET|SAFE_ORDINAL)\s*\(".r
+    trigger(raw"(?is)\[\s*(OFFSET|ORDINAL|SAFE_OFFSET|SAFE_ORDINAL)\s*\(", "[")
 
   /** BigQuery array element access: `arr[OFFSET(i)]` (0-based, errors
     * out-of-bounds — matches Spark's ANSI bracket), `arr[ORDINAL(i)]`
@@ -2390,8 +2450,9 @@ object Dialect {
   // native). Runs AFTER rewriteCalls, so the *_ADD/_SUB handlers have
   // already consumed their own INTERVAL arguments.
   private val intervalExprRe =
-    (raw"(?i)\bINTERVAL\s+(\((?:[^()']|'[^']*'|\([^()]*\))*\)|[A-Za-z_]\w*)" +
-      raw"\s+(YEAR|QUARTER|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND|MILLISECOND|MICROSECOND)\b").r
+    trigger(raw"(?i)\bINTERVAL\s+(\((?:[^()']|'[^']*'|\([^()]*\))*\)|[A-Za-z_]\w*)" +
+      raw"\s+(YEAR|QUARTER|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND|MILLISECOND|MICROSECOND)\b",
+      "INTERVAL")
 
   private def rewriteIntervalExpr(sql: String): String =
     replaceOutside(intervalExprRe, sql) { m =>
@@ -2436,6 +2497,19 @@ object Dialect {
     */
   // BigQuery's documented KLL_QUANTILES default precision
   private val KllDefaultPrecision = 1000
+
+  // the bucket widths TIMESTAMP/DATETIME_BUCKET and DATE_BUCKET accept
+  private val subWeekIntervalRe = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY)\s*$$".r
+  private val dayWeekIntervalRe = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(DAY|WEEK)\s*$$".r
+
+  // the EXTRACT parts whose Spark spelling differs
+  private val extractWeek = raw"(?is)^WEEK\s+FROM\s+(.+)$$".r
+  private val extractWeekDay = raw"(?is)^WEEK\s*\(\s*(\w+)\s*\)\s+FROM\s+(.+)$$".r
+  private val extractIsoWeek = raw"(?is)^ISOWEEK\s+FROM\s+(.+)$$".r
+  private val extractDate = raw"(?is)^DATE\s+FROM\s+(.+)$$".r
+  private val extractDatetime = raw"(?is)^DATETIME\s+FROM\s+(.+)$$".r
+  private val extractTime = raw"(?is)^TIME\s+FROM\s+(.+)$$".r
+  private val extractDayOfYear = raw"(?is)^DAYOFYEAR\s+FROM\s+(.+)$$".r
 
   private lazy val callRewrites: Map[String, Seq[String] => Option[String]] =
     baseRewrites ++ safeWrapFns.map { n =>
@@ -2537,21 +2611,11 @@ object Dialect {
     // step parsed to micros here; element-type dispatch (DATE vs
     // TIMESTAMP range) happens in the kernel on the resolved type
     "GENERATE_RANGE_ARRAY" -> { a =>
-      val iv = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY|WEEK)\s*$$".r
       if (a.length < 2 || a.length > 3) scala.None
-      else a(1) match {
-        case iv(n, unit) =>
-          val mult = unit.toUpperCase match {
-            case "SECOND" => 1000000L
-            case "MINUTE" => 60000000L
-            case "HOUR" => 3600000000L
-            case "DAY" => 86400000000L
-            case "WEEK" => 604800000000L
-          }
-          val inc = if (a.length == 3) a(2).trim.toUpperCase else "TRUE"
-          if (inc != "TRUE" && inc != "FALSE") scala.None
-          else Some(s"graft_gen_range_array(${a(0)}, ${n.toLong * mult}L, $inc)")
-        case _ => scala.None
+      else fixedIntervalMicros(a(1)).flatMap { micros =>
+        val inc = if (a.length == 3) a(2).trim.toUpperCase else "TRUE"
+        if (inc != "TRUE" && inc != "FALSE") scala.None
+        else Some(s"graft_gen_range_array(${a(0)}, ${micros}L, $inc)")
       }
     },
     "ARRAY_LENGTH" -> renameTo("array_size"),
@@ -3239,10 +3303,9 @@ object Dialect {
     // rewrite (MONTH+ widths vary — loud-unresolved). DATETIME_BUCKET
     // is intentionally not mapped (engine has no separate DATETIME).
     "TIMESTAMP_BUCKET" -> { a =>
-      val iv = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY)\s*$$".r
       if (a.length < 2 || a.length > 3) scala.None
       else a(1) match {
-        case iv(n, unit) =>
+        case subWeekIntervalRe(n, unit) =>
           val mult = unit.toUpperCase match {
             case "SECOND" => 1000000L
             case "MINUTE" => 60000000L
@@ -3261,10 +3324,9 @@ object Dialect {
     // session runs UTC, so the NTZ↔TZ casts are value-identity) with
     // the result cast back to Spark's DATETIME spelling (timestamp_ntz)
     "DATETIME_BUCKET" -> { a =>
-      val iv = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY)\s*$$".r
       if (a.length < 2 || a.length > 3) scala.None
       else a(1) match {
-        case iv(n, unit) =>
+        case subWeekIntervalRe(n, unit) =>
           val mult = unit.toUpperCase match {
             case "SECOND" => 1000000L
             case "MINUTE" => 60000000L
@@ -3280,10 +3342,9 @@ object Dialect {
       }
     },
     "DATE_BUCKET" -> { a =>
-      val iv = raw"(?is)^\s*INTERVAL\s+(\d+)\s+(DAY|WEEK)\s*$$".r
       if (a.length < 2 || a.length > 3) scala.None
       else a(1) match {
-        case iv(n, unit) =>
+        case dayWeekIntervalRe(n, unit) =>
           val days = n.toLong * (if (unit.equalsIgnoreCase("WEEK")) 7L else 1L)
           val o = if (a.length == 3) a(2) else "DATE '1950-01-01'"
           Some(s"date_sub(${a(0)}, pmod(datediff(${a(0)}, $o), $days))")
@@ -3905,28 +3966,21 @@ object Dialect {
     "EXTRACT" -> { a =>
       if (a.length != 1) scala.None
       else {
-        val week = raw"(?is)^WEEK\s+FROM\s+(.+)$$".r
-        val weekDay = raw"(?is)^WEEK\s*\(\s*(\w+)\s*\)\s+FROM\s+(.+)$$".r
-        val isoweek = raw"(?is)^ISOWEEK\s+FROM\s+(.+)$$".r
-        val datePart = raw"(?is)^DATE\s+FROM\s+(.+)$$".r
-        val datetimePart = raw"(?is)^DATETIME\s+FROM\s+(.+)$$".r
-        val timePart = raw"(?is)^TIME\s+FROM\s+(.+)$$".r
-        val doyPart = raw"(?is)^DAYOFYEAR\s+FROM\s+(.+)$$".r
         a(0) match {
-          case week(x) => Some(
+          case extractWeek(x) => Some(
             s"((dayofyear($x) + 6 - ((8 - dayofweek(date_trunc('YEAR', $x))) % 7)) div 7)")
-          case weekDay(day, x) if weekdayIndex.contains(day.toUpperCase) =>
+          case extractWeekDay(day, x) if weekdayIndex.contains(day.toUpperCase) =>
             // same week-0-before-first-<day> convention, start-day shifted
             val k = weekdayIndex(day.toUpperCase)
             Some(s"((dayofyear($x) + 6 - ((7 + $k - dayofweek(date_trunc('YEAR', $x))) % 7)) div 7)")
-          case isoweek(x) => Some(s"extract(WEEK FROM $x)")
+          case extractIsoWeek(x) => Some(s"extract(WEEK FROM $x)")
           // EXTRACT(DATE/DATETIME/TIME FROM ts) — part extractions
           // Spark's extract has no field for
-          case datePart(x) => Some(s"cast($x as date)")
-          case datetimePart(x) => Some(s"cast($x as timestamp_ntz)")
-          case timePart(x) => Some(s"date_format($x, 'HH:mm:ss')")
+          case extractDate(x) => Some(s"cast($x as date)")
+          case extractDatetime(x) => Some(s"cast($x as timestamp_ntz)")
+          case extractTime(x) => Some(s"date_format($x, 'HH:mm:ss')")
           // Spark spells the day-of-year field DOY
-          case doyPart(x) => Some(s"extract(DOY FROM $x)")
+          case extractDayOfYear(x) => Some(s"extract(DOY FROM $x)")
           case _ => scala.None
         }
       }
@@ -4054,6 +4108,7 @@ object Dialect {
     * outside, exactly BigQuery's evaluation order.
     */
   private def rewriteQualify(sql: String): String = {
+    if (absent(sql, "QUALIFY")) return sql
     val ts = SqlLex.tokens(sql)
     var depth = 0
     var selPos = -1
@@ -4091,7 +4146,7 @@ object Dialect {
     s"${prefix}SELECT * EXCEPT(__qualify__) FROM (SELECT $selList, ($cond) AS __qualify__ $fromPart) WHERE __qualify__ $tail"
   }
 
-  private val arrayCompRe = raw"(?is)\bARRAY\s*\(\s*SELECT\b".r
+  private val arrayCompRe = trigger(raw"(?is)\bARRAY\s*\(\s*SELECT\b", "ARRAY")
   private val arrayCompSelRe =
     raw"(?is)^SELECT\s+(DISTINCT\s+)?(.+?)\s+FROM\s+UNNEST\s*\(".r
   private val arrayCompTailRe =
@@ -4131,7 +4186,8 @@ object Dialect {
     }
 
   private val unnestFrom =
-    raw"(?is)(,|\bCROSS\s+JOIN\b|\bLEFT\s+(?:OUTER\s+)?JOIN\b|\bINNER\s+JOIN\b|\bFROM\b)\s*UNNEST\s*\(".r
+    trigger(raw"(?is)(,|\bCROSS\s+JOIN\b|\bLEFT\s+(?:OUTER\s+)?JOIN\b|\bINNER\s+JOIN\b|\bFROM\b)\s*UNNEST\s*\(",
+      "UNNEST")
   /** keywords that may directly follow an alias-less `UNNEST(e)` — the
     * alias capture must not swallow them (`FROM t, UNNEST(e) WHERE …`).
     */

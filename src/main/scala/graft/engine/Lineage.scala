@@ -85,17 +85,18 @@ object Lineage {
   def findDependenciesWithCatalyst(spark: SparkSession, query: String,
       destination: String): Result = {
     val ignored = findDependenciesWithRegex(query, destination).ignored
+    val stmts = StatementSplitter.split(query)
     // temp tables DEFINED by the script are intermediate state, not
     // upstream dependencies — a later statement reading one must not
     // report it
-    val tempFull = StatementSplitter.split(query).collect {
+    val tempFull = stmts.collect {
       case createTempNameRe(n) => n
     }.toSet
     // short names only shadow UNQUALIFIED references (temp views are
     // single-part); a qualified table that happens to share the last
     // segment is a genuine upstream dependency
     val tempShort = tempFull.map(_.split("\\.").last)
-    val deps = StatementSplitter.split(query).flatMap { stmt =>
+    val deps = stmts.flatMap { stmt =>
       Try(spark.sessionState.sqlParser.parsePlan(
           Dialect.rewrite(stmt, mapFqns = false))).toOption match {
         case Some(plan) =>

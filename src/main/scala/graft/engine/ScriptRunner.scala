@@ -19,6 +19,7 @@ import scala.collection.mutable
   * views (distributed, never collected).
   */
 class ScriptRunner(spark: SparkSession) {
+  import ScriptRunner._
 
   // native graft_* expressions (graft_normalize backs NORMALIZE) must
   // resolve in any session that runs rewritten SQL
@@ -28,18 +29,6 @@ class ScriptRunner(spark: SparkSession) {
   // variable stays BIGINT through SET arithmetic and substitution
   private val declaredTypes = mutable.LinkedHashMap[String, String]()
 
-  private val declareRe =
-    raw"(?is)^DECLARE\s+(\w+)\s+([\w<>,() ]+?)(?:\s+DEFAULT\s+(.+))?$$".r
-  private val setSimpleRe = raw"(?is)^SET\s+(\w+)\s*=\s*(.+)$$".r
-  private val setStructRe = raw"(?is)^SET\s*\(\s*(\w+)\s*\)\s*=\s*\((.+)\)$$".r
-  // SET (a, b, …) = (expr, expr, …) | (SELECT AS STRUCT …): positional
-  // multi-assignment (BigQuery scripting)
-  private val setMultiRe =
-    raw"(?is)^SET\s*\(\s*(\w+(?:\s*,\s*\w+)+)\s*\)\s*=\s*\((.+)\)$$".r
-  private val createTempRe =
-    raw"(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+`?([\w.]+)`?\s+AS\s*\((.+)\)$$|^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+`?([\w.]+)`?\s+AS\s+(.+)$$".r
-  private val createTableAsRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*((?:PARTITION\s+BY|CLUSTER\s+BY|OPTIONS\s*\().*?)?\s*AS\s+(.+)$$".r
   /** BigQuery FQN → the engine's catalog spelling (`proj.ds.t` →
     * `proj__ds.t`), shared by the CTAS and CLONE destinations.
     */
@@ -52,30 +41,6 @@ class ScriptRunner(spark: SparkSession) {
       case _ => clean
     }
   }
-
-  private val createCloneRe =
-    raw"(?is)^CREATE\s+(SNAPSHOT\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s+CLONE\s+(`[\w.-]+`|[\w.-]+)\s*(FOR\s+SYSTEM_TIME\s+AS\s+OF\s+.+)?$$".r
-  private val createFnJsRe =
-    raw"(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+FUNCTION\s+(\w+).*\bLANGUAGE\s+js\b.*$$".r
-  private val createFnRe =
-    raw"(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+FUNCTION\s+(\w+)\s*\(([^)]*)\)\s*(?:RETURNS\s+([\w<>, ()]+?))?\s*AS\s*\((.+)\)\s*$$".r
-  // persistent SQL UDF: CREATE [OR REPLACE] FUNCTION [IF NOT EXISTS]
-  // name(params) [RETURNS T] AS (body) — name may be dataset-qualified
-  // (`p.d.f`); registered under the flattened spelling, call sites
-  // rewritten by the dialect (FnRegistry). Session-persisted here
-  // (BigQuery persists to the dataset — documented scope).
-  private val createPersistentFnRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(([^)]*)\)\s*(?:RETURNS\s+([\w<>, ()]+?))?\s*AS\s*\((.+)\)\s*$$".r
-  private val dropFnRe =
-    raw"(?is)^DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*$$".r
-  // BigQuery stored procedures (scripting surface the reference's BQ
-  // backend exposes; dataset-persisted there, session-scoped here). The
-  // stored body keeps its BEGIN…END wrapper so EXCEPTION handlers run.
-  private val createProcRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?PROCEDURE\s+(IF\s+NOT\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*\((.*?)\)\s*(?:OPTIONS\s*\([^)]*\)\s*)?(BEGIN\b.*END)\s*$$".r
-  private val callRe = raw"(?is)^CALL\s+(`[\w.-]+`|[\w.-]+)\s*\((.*)\)\s*$$".r
-  private val dropProcRe =
-    raw"(?is)^DROP\s+PROCEDURE\s+(IF\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*$$".r
 
   /** BigQuery scalar type names → Spark SQL DDL types. */
   private def sparkType(t: String): String = {
@@ -486,8 +451,7 @@ class ScriptRunner(spark: SparkSession) {
     * to catch a data-sized query being misused as a loop driver.
     */
   private def runFor(stmt: String, label: Option[String] = scala.None): Option[DataFrame] = {
-    val forRe = raw"(?is)^FOR\s+(\w+)\s+IN\s*\(".r
-    val m = forRe.findFirstMatchIn(stmt).getOrElse(
+    val m = forHeadRe.findFirstMatchIn(stmt).getOrElse(
       throw new IllegalArgumentException(s"malformed FOR: $stmt"))
     val rec = m.group(1)
     // loop query = balanced-paren span starting at the opening ( —
@@ -537,8 +501,7 @@ class ScriptRunner(spark: SparkSession) {
     ms.find(_.text == "EXCEPTION") match {
       case Some(ex) =>
         val body = stmt.substring(beginTok.pos + 5, ex.pos)
-        val handler = raw"(?is)^EXCEPTION\s+WHEN\s+ERROR\s+THEN\b".r
-          .replaceFirstIn(stmt.substring(ex.pos, ms.last.pos), "")
+        val handler = exceptionHeadRe.replaceFirstIn(stmt.substring(ex.pos, ms.last.pos), "")
         // materialize the body's result INSIDE the try — Spark is lazy,
         // so a runtime error (ANSI overflow, bad cast on real rows)
         // would otherwise fire at the caller's action, past the handler.
@@ -556,8 +519,8 @@ class ScriptRunner(spark: SparkSession) {
             val stmtLit = lit(lastAttemptedStmt)
             val prev = currentError
             currentError = Some(e)
-            try runScript(raw"(?i)@@error\.message".r.replaceAllIn(
-              raw"(?i)@@error\.statement_text".r.replaceAllIn(handler,
+            try runScript(errorMessageRe.replaceAllIn(
+              errorStatementRe.replaceAllIn(handler,
                 java.util.regex.Matcher.quoteReplacement(stmtLit)),
               java.util.regex.Matcher.quoteReplacement(msgLit)))
             finally currentError = prev
@@ -585,8 +548,7 @@ class ScriptRunner(spark: SparkSession) {
       return Seq(stmt0)
     // the exception clause is one fixed phrase — strip it before the
     // token pass so WHEN/THEN inside MERGE statements are untouched
-    val stmt = raw"(?is)\bEXCEPTION\s+WHEN\s+ERROR\s+THEN\b".r
-      .replaceAllIn(stmt0, ";")
+    val stmt = exceptionClauseRe.replaceAllIn(stmt0, ";")
     val ann = StatementSplitter.annotate(stmt)
     // only the THEN/DO that terminates an opener's own condition is
     // scaffolding; a MERGE's WHEN…THEN inside a branch body is part of
@@ -616,8 +578,7 @@ class ScriptRunner(spark: SparkSession) {
       if (condEnd) pendingCond = false
       prevText = t.text
       if (closer) {
-        val len = raw"(?is)^END\s+(IF|WHILE|LOOP|FOR|REPEAT|CASE)".r
-          .findFirstIn(stmt.substring(t.pos)).map(_.length).getOrElse(3)
+        val len = endBlockRe.findFirstIn(stmt.substring(t.pos)).map(_.length).getOrElse(3)
         Some((t.pos, t.pos + len))
       } else if (opener || elseif || onlyElse || condEnd || caseWhen || untilTok)
         Some((t.pos, t.pos + t.text.length))
@@ -662,19 +623,6 @@ class ScriptRunner(spark: SparkSession) {
   private[engine] def txnOpen: Boolean = dmlRunnerOpt.exists(_.txnOpen)
   private[engine] def rollbackOpenTxn(): Unit =
     dmlRunnerOpt.foreach(_.rollbackOpenTxn())
-  // mutation heads THIS runner executes itself — inside an open
-  // transaction their target must be pinned before the write runs
-  private val txnMutationHeadRe =
-    raw"(?is)^\s*(?:INSERT\s+(?:INTO\s+)?|CREATE\s+(?:OR\s+REPLACE\s+)?(?:SNAPSHOT\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?|DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?|LOAD\s+DATA\s+(?:INTO|OVERWRITE)\s+)(`[^`]+`|[\w.\-]+)".r
-
-  // script-path statements that physically DELETE the target's files
-  // (DROP; CREATE OR REPLACE's implicit drop; LOAD DATA OVERWRITE) —
-  // inside a transaction their pinned pre-state must move aside first
-  private val destructiveScriptHeadRe =
-    raw"(?is)^\s*(?:DROP\s+TABLE|CREATE\s+OR\s+REPLACE\s+(?:SNAPSHOT\s+)?TABLE|LOAD\s+DATA\s+OVERWRITE)\b".r
-
-  // BigQuery allows omitting INTO: `INSERT t VALUES …` / `INSERT t SELECT …`
-  private val insertNoIntoRe = raw"(?is)^(\s*)INSERT\s+(?!INTO\b|OVERWRITE\b)".r
 
   def runStatement(stmt0: String): Option[DataFrame] = {
     val stmt = insertNoIntoRe.replaceFirstIn(stmt0, "$1INSERT INTO ")
@@ -689,7 +637,7 @@ class ScriptRunner(spark: SparkSession) {
       // snapshot silently. DROP stays legal (BigQuery allows deleting a
       // snapshot table) and CREATE OR REPLACE explicitly supersedes the
       // marked table — both release the mark where they execute.
-      if (raw"(?is)^\s*(?:INSERT|LOAD\s+DATA)\b".r.findFirstIn(subbed).isDefined)
+      if (insertOrLoadHeadRe.findFirstIn(subbed).isDefined)
         CloneRegistry.requireWritable(destTableName(target))
       if (txnOpen) {
         if (destructiveScriptHeadRe.findFirstIn(subbed).isDefined)
@@ -744,19 +692,7 @@ class ScriptRunner(spark: SparkSession) {
   }
 
   private def signalLabel(stmt: String): Option[String] =
-    raw"(?is)^\s*(?:BREAK|LEAVE|CONTINUE|ITERATE)\s+([A-Za-z_]\w*)\s*;?\s*$$".r
-      .findFirstMatchIn(stmt).map(_.group(1).toUpperCase)
-
-  // `label: LOOP|WHILE|FOR|REPEAT …` — strip the label (and its
-  // repetition after the closing END <kw>) and remember it for the
-  // loop's BREAK/CONTINUE matching
-  private val loopLabelRe =
-    raw"(?is)^\s*([A-Za-z_]\w*)\s*:\s*((?:LOOP|WHILE|FOR|REPEAT)\b.*)$$".r
-
-  private val exportDataRe =
-    raw"(?is)^EXPORT\s+DATA\s+OPTIONS\s*\((.*?)\)\s+AS\s+(.+)$$".r
-  // option keys may be dotted (graft.autoRefresh)
-  private val optionRe = raw"(?is)([\w.]+)\s*=\s*('(?:[^']|'')*'|\w+)".r
+    loopJumpLabelRe.findFirstMatchIn(stmt).map(_.group(1).toUpperCase)
 
   /** EXPORT DATA OPTIONS(uri='…/part-*.ext', format='CSV|JSON|PARQUET'
     * [, header=…, field_delimiter=…, overwrite=…]) AS SELECT … — the
@@ -804,9 +740,6 @@ class ScriptRunner(spark: SparkSession) {
     case other => throw new IllegalArgumentException(s"malformed EXPORT DATA: $other")
   }
 
-  private val createExternalRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?EXTERNAL\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*(?:\(([^)]*)\)\s*)?OPTIONS\s*\((.*)\)\s*$$".r
-
   /** CREATE [OR REPLACE] EXTERNAL TABLE [IF NOT EXISTS] name [(cols)]
     * OPTIONS(format=…, uris=[…], [skip_leading_rows, field_delimiter])
     * — BigQuery's external-table DDL. Unlike LOAD DATA (which
@@ -828,7 +761,7 @@ class ScriptRunner(spark: SparkSession) {
         val uriBody = urisRe.findFirstMatchIn(optsText).map(_.group(1))
           .getOrElse(throw new IllegalArgumentException(
             "CREATE EXTERNAL TABLE requires a uris=[…] option"))
-        val uriList = raw"'((?:[^']|'')*)'".r.findAllMatchIn(uriBody)
+        val uriList = quotedUriRe.findAllMatchIn(uriBody)
           .map(_.group(1).replace("''", "'")).toSeq
         if (uriList.size != 1) throw new IllegalArgumentException(
           s"CREATE EXTERNAL TABLE needs exactly one uri (glob allowed), got ${uriList.size}")
@@ -882,12 +815,6 @@ class ScriptRunner(spark: SparkSession) {
         throw new IllegalArgumentException(s"malformed CREATE EXTERNAL TABLE: $other")
     }
 
-  private val createMvRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+AS\s+(.+)$$".r
-  private val dropMvRe =
-    raw"(?is)^DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*$$".r
-  private val dropTableHeadRe =
-    raw"(?is)^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)".r
   private val mvReadOnlyReason =
     "a materialized view — it refreshes via CALL " +
       "BQ.REFRESH_MATERIALIZED_VIEW('…'), never DML"
@@ -901,7 +828,7 @@ class ScriptRunner(spark: SparkSession) {
     * partition-scoped.
     */
   private def materializeMv(dest: String, query: String,
-      partCol: Option[String] = None): Unit = {
+      partCol: Option[String]): Unit = {
     val stage = s"${dest}__mv_stage"
     spark.sql(s"DROP TABLE IF EXISTS $stage")
     val part = partCol.map(c => s" PARTITIONED BY ($c)").getOrElse("")
@@ -1098,10 +1025,6 @@ class ScriptRunner(spark: SparkSession) {
       case _ => false
     }
 
-  private val loadDataRe =
-    raw"(?is)^LOAD\s+DATA\s+(INTO|OVERWRITE)\s+(`[^`]+`|[\w.\-]+)\s*(?:\(([^)]*)\)\s*)?FROM\s+FILES\s*\((.*)\)\s*$$".r
-  private val urisRe = raw"(?is)uris\s*=\s*\[(.*?)\]".r
-
   /** LOAD DATA {INTO|OVERWRITE} table [(col type, …)] FROM
     * FILES(format='CSV|JSON|PARQUET', uris=[…], [skip_leading_rows,
     * field_delimiter]) — the BigQuery batch-load statement, the
@@ -1124,7 +1047,7 @@ class ScriptRunner(spark: SparkSession) {
       val uriBody = urisRe.findFirstMatchIn(optsText).map(_.group(1))
         .getOrElse(throw new IllegalArgumentException(
           "LOAD DATA requires a uris=[…] option"))
-      val uriList = raw"'((?:[^']|'')*)'".r.findAllMatchIn(uriBody)
+      val uriList = quotedUriRe.findAllMatchIn(uriBody)
         .map(_.group(1).replace("''", "'")).toSeq
       if (uriList.isEmpty) throw new IllegalArgumentException(
         "LOAD DATA uris list is empty")
@@ -1198,8 +1121,6 @@ class ScriptRunner(spark: SparkSession) {
     */
   private var currentError: Option[Throwable] = scala.None
 
-  private val raiseMsgRe = raw"(?is)^RAISE\s+USING\s+MESSAGE\s*=\s*(.+?)\s*$$".r
-
   /** RAISE [USING MESSAGE = expr] — BigQuery scripting: with a message,
     * raise a new error; bare RAISE is only legal inside an EXCEPTION
     * handler and re-raises the caught error.
@@ -1215,9 +1136,6 @@ class ScriptRunner(spark: SparkSession) {
         "RAISE without a message is only allowed inside an EXCEPTION handler"))
   }
 
-  private val assertRe =
-    raw"(?is)^ASSERT\s+(.+?)(?:\s+AS\s+('(?:[^'\\]|\\.)*'))?\s*$$".r
-
   /** ASSERT condition [AS 'description'] — the condition evaluates
     * driver-side like every other scripting condition; failure aborts
     * the script with the description (BigQuery semantics).
@@ -1231,8 +1149,6 @@ class ScriptRunner(spark: SparkSession) {
       None
     case other => throw new IllegalArgumentException(s"malformed ASSERT: $other")
   }
-
-  private val executeImmediateRe = raw"(?is)^EXECUTE\s+IMMEDIATE\s+(.+)$$".r
 
   /** EXECUTE IMMEDIATE sql_expr [INTO var, …] [USING expr [AS name], …].
     * The query TEXT is itself an expression (variable, CONCAT, …):
@@ -1347,11 +1263,6 @@ class ScriptRunner(spark: SparkSession) {
   private final case class TableFn(params: Seq[(String, String)], body: String)
   private val tableFunctions = mutable.LinkedHashMap[String, TableFn]()
 
-  private val createTvfRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+FUNCTION\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(([^)]*)\)\s*(?:RETURNS\s+TABLE\s*<[^>]*>\s*)?(?:OPTIONS\s*\([^)]*\)\s*)?AS\s+(.+)$$".r
-  private val dropTvfRe =
-    raw"(?is)^DROP\s+TABLE\s+FUNCTION\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
-
   private def runCreateTvf(orReplace: String, ifNotExists: String,
       name: String, paramsText: String, rawBody: String): Option[DataFrame] = {
     val key = procKey(name)
@@ -1374,9 +1285,6 @@ class ScriptRunner(spark: SparkSession) {
     None
   }
 
-  // a TVF reference: FROM/JOIN <name> ( … ) — the arg list is balance-
-  // parsed from the open paren, so expressions with nested calls work
-  private val tvfRefRe = raw"(?is)\b(FROM|JOIN)\s+(`[^`]+`|[\w.$$\-]+)\s*\(".r
   // the word after the call site that would START a new clause — i.e.
   // NOT an alias
   private val nonAliasFollowers = Set("where", "group", "order", "limit",
@@ -1508,9 +1416,6 @@ class ScriptRunner(spark: SparkSession) {
 
   // ---- BigQuery DDL beyond CTAS: views, ALTER TABLE, LIKE/COPY --------
 
-  private val schemaDdlRe =
-    raw"(?is)^(CREATE|DROP)\s+SCHEMA\s+(IF\s+(?:NOT\s+)?EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*(?:OPTIONS\s*\((.*?)\)\s*)?(CASCADE\s*)?;?\s*$$".r
-
   /** BigQuery dataset DDL → Spark database DDL with the engine's FQN
     * flattening (`proj.ds` → `proj__ds`). CREATE SCHEMA's description
     * option becomes the database comment; other options are inert
@@ -1544,21 +1449,6 @@ class ScriptRunner(spark: SparkSession) {
       scala.None
     case other => throw new IllegalArgumentException(s"malformed SCHEMA DDL: $other")
   }
-
-  private val createViewRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*(?:OPTIONS\s*\(([^)]*)\)\s*)?AS\s+(.+)$$".r
-  private val dropViewRe =
-    raw"(?is)^DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
-  private val alterTableRe =
-    raw"(?is)^ALTER\s+TABLE\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+((?:ADD|RENAME|DROP|ALTER)\s+COLUMN\b.*|RENAME\s+TO\b.*|SET\s+OPTIONS\b.*|ADD\s+(?:CONSTRAINT\b|PRIMARY\s+KEY|FOREIGN\s+KEY).*|DROP\s+(?:CONSTRAINT\b.*|PRIMARY\s+KEY.*))$$".r
-  // dataset/view option DDL: description maps to the comment, other
-  // options are inert service metadata and drop
-  private val alterSchemaRe =
-    raw"(?is)^ALTER\s+SCHEMA\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+SET\s+OPTIONS\s*\((.*)\)\s*;?\s*$$".r
-  private val alterViewRe =
-    raw"(?is)^ALTER\s+(?:MATERIALIZED\s+)?VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+SET\s+OPTIONS\s*\((.*)\)\s*;?\s*$$".r
-  private val createLikeRe =
-    raw"(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+(LIKE|COPY)\s+(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
 
   /** CREATE [OR REPLACE] VIEW — stored with the REWRITTEN body (Spark
     * resolves the view text itself at read time) and the BigQuery FQN
@@ -1821,7 +1711,7 @@ class ScriptRunner(spark: SparkSession) {
     case setMultiRe(names, rhs) =>
       val vars = names.split(",").map(_.trim).toSeq
       val exprs: Seq[String] =
-        if (raw"(?is)^\s*SELECT\b".r.findFirstIn(rhs).isDefined) {
+        if (selectHeadRe.findFirstIn(rhs).isDefined) {
           val row = spark.sql(Dialect.rewrite(substituteVars(rhs.trim))).collect()(0)
           // SELECT AS STRUCT yields one struct column; unwrap its fields
           val r = if (row.length == 1 && row.get(0).isInstanceOf[org.apache.spark.sql.Row])
@@ -1995,12 +1885,6 @@ class ScriptRunner(spark: SparkSession) {
         expandInformationSchema(expandWildcardTables(other))))))
   }
 
-  // column-list CREATE TABLE with BigQuery tail clauses (PARTITION BY
-  // expr / CLUSTER BY / OPTIONS) — the plain column-list form without a
-  // tail also routes here (same emission, no tail to translate)
-  private val createColsHeadRe =
-    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(".r
-
   /** BigQuery CREATE TABLE tail clauses (between the name/column list
     * and AS/end): PARTITION BY a plain column → Spark PARTITIONED BY;
     * expression partitioning (DATE(ts), RANGE_BUCKET) and CLUSTER BY
@@ -2167,9 +2051,6 @@ class ScriptRunner(spark: SparkSession) {
       .exists(r => r.getString(0) == "graft.temp" && r.getString(1) == "true"))
       .getOrElse(false)
 
-  private val infoSchemaRe =
-    raw"(?i)`?([\w-]+(?:\.[\w-]+)?)\.INFORMATION_SCHEMA\.(TABLES|COLUMNS)`?".r
-
   /** BigQuery `dataset.INFORMATION_SCHEMA.{TABLES,COLUMNS}` → an inline
     * VALUES relation built from the Spark catalog at statement-prep time
     * (metadata is driver-side and dataset-bounded). Session temp views
@@ -2216,7 +2097,8 @@ class ScriptRunner(spark: SparkSession) {
       }
     })
 
-  private val wildcardTableRe = raw"`([\w][\w.-]*\*)`".r
+  private def inSqlLiteral(sql: String, pos: Int): Boolean =
+    sqlStringLit.findAllMatchIn(sql).exists(m => pos >= m.start && pos < m.end)
 
   /** BigQuery wildcard (sharded) tables: `` `proj.ds.events_*` `` scans
     * every table whose name starts with the prefix and exposes the rest
@@ -2227,10 +2109,6 @@ class ScriptRunner(spark: SparkSession) {
     * prunes those scans entirely (the sharded-table analog of partition
     * pruning; shards must share a schema).
     */
-  private val sqlStringLit = raw"'(?:[^'\\]|\\.)*'".r
-  private def inSqlLiteral(sql: String, pos: Int): Boolean =
-    sqlStringLit.findAllMatchIn(sql).exists(m => pos >= m.start && pos < m.end)
-
   private def expandWildcardTables(sql0: String): String = {
     // TVF expansion rides the same statement-prep chain: every site
     // that expands wildcards also wants `FROM fn(args)` inlined
@@ -2269,4 +2147,176 @@ class ScriptRunner(spark: SparkSession) {
     if (out != sql0) ExternalTables.refreshReferenced(spark, out)
     out
   }
+}
+
+/** The statement shapes [[ScriptRunner]] dispatches on, compiled once per
+  * JVM rather than once per runner.
+  */
+object ScriptRunner {
+
+  private val declareRe =
+    raw"(?is)^DECLARE\s+(\w+)\s+([\w<>,() ]+?)(?:\s+DEFAULT\s+(.+))?$$".r
+
+  private val setSimpleRe = raw"(?is)^SET\s+(\w+)\s*=\s*(.+)$$".r
+
+  private val setStructRe = raw"(?is)^SET\s*\(\s*(\w+)\s*\)\s*=\s*\((.+)\)$$".r
+
+  // SET (a, b, …) = (expr, expr, …) | (SELECT AS STRUCT …): positional
+  // multi-assignment (BigQuery scripting)
+  private val setMultiRe =
+    raw"(?is)^SET\s*\(\s*(\w+(?:\s*,\s*\w+)+)\s*\)\s*=\s*\((.+)\)$$".r
+
+  private val createTempRe =
+    raw"(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+`?([\w.]+)`?\s+AS\s*\((.+)\)$$|^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+`?([\w.]+)`?\s+AS\s+(.+)$$".r
+
+  private val createTableAsRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*((?:PARTITION\s+BY|CLUSTER\s+BY|OPTIONS\s*\().*?)?\s*AS\s+(.+)$$".r
+
+  private val createCloneRe =
+    raw"(?is)^CREATE\s+(SNAPSHOT\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s+CLONE\s+(`[\w.-]+`|[\w.-]+)\s*(FOR\s+SYSTEM_TIME\s+AS\s+OF\s+.+)?$$".r
+
+  private val createFnJsRe =
+    raw"(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+FUNCTION\s+(\w+).*\bLANGUAGE\s+js\b.*$$".r
+
+  private val createFnRe =
+    raw"(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+FUNCTION\s+(\w+)\s*\(([^)]*)\)\s*(?:RETURNS\s+([\w<>, ()]+?))?\s*AS\s*\((.+)\)\s*$$".r
+
+  // persistent SQL UDF: CREATE [OR REPLACE] FUNCTION [IF NOT EXISTS]
+  // name(params) [RETURNS T] AS (body) — name may be dataset-qualified
+  // (`p.d.f`); registered under the flattened spelling, call sites
+  // rewritten by the dialect (FnRegistry). Session-persisted here
+  // (BigQuery persists to the dataset — documented scope).
+  private val createPersistentFnRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(([^)]*)\)\s*(?:RETURNS\s+([\w<>, ()]+?))?\s*AS\s*\((.+)\)\s*$$".r
+
+  private val dropFnRe =
+    raw"(?is)^DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*$$".r
+
+  // BigQuery stored procedures (scripting surface the reference's BQ
+  // backend exposes; dataset-persisted there, session-scoped here). The
+  // stored body keeps its BEGIN…END wrapper so EXCEPTION handlers run.
+  private val createProcRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?PROCEDURE\s+(IF\s+NOT\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*\((.*?)\)\s*(?:OPTIONS\s*\([^)]*\)\s*)?(BEGIN\b.*END)\s*$$".r
+
+  private val callRe = raw"(?is)^CALL\s+(`[\w.-]+`|[\w.-]+)\s*\((.*)\)\s*$$".r
+
+  private val dropProcRe =
+    raw"(?is)^DROP\s+PROCEDURE\s+(IF\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*$$".r
+
+  // mutation heads THIS runner executes itself — inside an open
+  // transaction their target must be pinned before the write runs
+  private val txnMutationHeadRe =
+    raw"(?is)^\s*(?:INSERT\s+(?:INTO\s+)?|CREATE\s+(?:OR\s+REPLACE\s+)?(?:SNAPSHOT\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?|DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?|LOAD\s+DATA\s+(?:INTO|OVERWRITE)\s+)(`[^`]+`|[\w.\-]+)".r
+
+  // script-path statements that physically DELETE the target's files
+  // (DROP; CREATE OR REPLACE's implicit drop; LOAD DATA OVERWRITE) —
+  // inside a transaction their pinned pre-state must move aside first
+  private val destructiveScriptHeadRe =
+    raw"(?is)^\s*(?:DROP\s+TABLE|CREATE\s+OR\s+REPLACE\s+(?:SNAPSHOT\s+)?TABLE|LOAD\s+DATA\s+OVERWRITE)\b".r
+
+  // BigQuery allows omitting INTO: `INSERT t VALUES …` / `INSERT t SELECT …`
+  private val insertNoIntoRe = raw"(?is)^(\s*)INSERT\s+(?!INTO\b|OVERWRITE\b)".r
+
+  private val insertOrLoadHeadRe = raw"(?is)^\s*(?:INSERT|LOAD\s+DATA)\b".r
+
+  private val selectHeadRe = raw"(?is)^\s*SELECT\b".r
+
+  // block scaffolding: FOR's head, the EXCEPTION clause (as a block's
+  // handler head, and anywhere when lineage strips control flow), the
+  // keyword after END, and a BREAK/CONTINUE's label
+  private val forHeadRe = raw"(?is)^FOR\s+(\w+)\s+IN\s*\(".r
+  private val exceptionHeadRe = raw"(?is)^EXCEPTION\s+WHEN\s+ERROR\s+THEN\b".r
+  private val exceptionClauseRe = raw"(?is)\bEXCEPTION\s+WHEN\s+ERROR\s+THEN\b".r
+  private val endBlockRe = raw"(?is)^END\s+(IF|WHILE|LOOP|FOR|REPEAT|CASE)".r
+  private val loopJumpLabelRe =
+    raw"(?is)^\s*(?:BREAK|LEAVE|CONTINUE|ITERATE)\s+([A-Za-z_]\w*)\s*;?\s*$$".r
+
+  // the system variables an EXCEPTION handler reads
+  private val errorMessageRe = raw"(?i)@@error\.message".r
+  private val errorStatementRe = raw"(?i)@@error\.statement_text".r
+
+  // one quoted entry of an OPTIONS uris list
+  private val quotedUriRe = raw"'((?:[^']|'')*)'".r
+
+  // `label: LOOP|WHILE|FOR|REPEAT …` — strip the label (and its
+  // repetition after the closing END <kw>) and remember it for the
+  // loop's BREAK/CONTINUE matching
+  private val loopLabelRe =
+    raw"(?is)^\s*([A-Za-z_]\w*)\s*:\s*((?:LOOP|WHILE|FOR|REPEAT)\b.*)$$".r
+
+  private val exportDataRe =
+    raw"(?is)^EXPORT\s+DATA\s+OPTIONS\s*\((.*?)\)\s+AS\s+(.+)$$".r
+
+  // option keys may be dotted (graft.autoRefresh)
+  private val optionRe = raw"(?is)([\w.]+)\s*=\s*('(?:[^']|'')*'|\w+)".r
+
+  private val createExternalRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?EXTERNAL\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*(?:\(([^)]*)\)\s*)?OPTIONS\s*\((.*)\)\s*$$".r
+
+  private val createMvRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+AS\s+(.+)$$".r
+
+  private val dropMvRe =
+    raw"(?is)^DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*$$".r
+
+  private val dropTableHeadRe =
+    raw"(?is)^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)".r
+
+  private val loadDataRe =
+    raw"(?is)^LOAD\s+DATA\s+(INTO|OVERWRITE)\s+(`[^`]+`|[\w.\-]+)\s*(?:\(([^)]*)\)\s*)?FROM\s+FILES\s*\((.*)\)\s*$$".r
+
+  private val urisRe = raw"(?is)uris\s*=\s*\[(.*?)\]".r
+
+  private val raiseMsgRe = raw"(?is)^RAISE\s+USING\s+MESSAGE\s*=\s*(.+?)\s*$$".r
+
+  private val assertRe =
+    raw"(?is)^ASSERT\s+(.+?)(?:\s+AS\s+('(?:[^'\\]|\\.)*'))?\s*$$".r
+
+  private val executeImmediateRe = raw"(?is)^EXECUTE\s+IMMEDIATE\s+(.+)$$".r
+
+  private val createTvfRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+FUNCTION\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(([^)]*)\)\s*(?:RETURNS\s+TABLE\s*<[^>]*>\s*)?(?:OPTIONS\s*\([^)]*\)\s*)?AS\s+(.+)$$".r
+
+  private val dropTvfRe =
+    raw"(?is)^DROP\s+TABLE\s+FUNCTION\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
+
+  // a TVF reference: FROM/JOIN <name> ( … ) — the arg list is balance-
+  // parsed from the open paren, so expressions with nested calls work
+  private val tvfRefRe = raw"(?is)\b(FROM|JOIN)\s+(`[^`]+`|[\w.$$\-]+)\s*\(".r
+
+  private val schemaDdlRe =
+    raw"(?is)^(CREATE|DROP)\s+SCHEMA\s+(IF\s+(?:NOT\s+)?EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*(?:OPTIONS\s*\((.*?)\)\s*)?(CASCADE\s*)?;?\s*$$".r
+
+  private val createViewRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*(?:OPTIONS\s*\(([^)]*)\)\s*)?AS\s+(.+)$$".r
+
+  private val dropViewRe =
+    raw"(?is)^DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
+
+  private val alterTableRe =
+    raw"(?is)^ALTER\s+TABLE\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+((?:ADD|RENAME|DROP|ALTER)\s+COLUMN\b.*|RENAME\s+TO\b.*|SET\s+OPTIONS\b.*|ADD\s+(?:CONSTRAINT\b|PRIMARY\s+KEY|FOREIGN\s+KEY).*|DROP\s+(?:CONSTRAINT\b.*|PRIMARY\s+KEY.*))$$".r
+
+  // dataset/view option DDL: description maps to the comment, other
+  // options are inert service metadata and drop
+  private val alterSchemaRe =
+    raw"(?is)^ALTER\s+SCHEMA\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+SET\s+OPTIONS\s*\((.*)\)\s*;?\s*$$".r
+
+  private val alterViewRe =
+    raw"(?is)^ALTER\s+(?:MATERIALIZED\s+)?VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+SET\s+OPTIONS\s*\((.*)\)\s*;?\s*$$".r
+
+  private val createLikeRe =
+    raw"(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+(LIKE|COPY)\s+(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
+
+  // column-list CREATE TABLE with BigQuery tail clauses (PARTITION BY
+  // expr / CLUSTER BY / OPTIONS) — the plain column-list form without a
+  // tail also routes here (same emission, no tail to translate)
+  private val createColsHeadRe =
+    raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(".r
+
+  private val infoSchemaRe =
+    raw"(?i)`?([\w-]+(?:\.[\w-]+)?)\.INFORMATION_SCHEMA\.(TABLES|COLUMNS)`?".r
+
+  private val wildcardTableRe = raw"`([\w][\w.-]*\*)`".r
+
+  private val sqlStringLit = raw"'(?:[^'\\]|\\.)*'".r
 }

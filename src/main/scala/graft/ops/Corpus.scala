@@ -601,8 +601,7 @@ object Corpus {
     * Exact-integer inputs (60-bit content hash dedup, integer token
     * sums); exp runs once per SOURCE, never per row.
     */
-  def dataConstrainedPlan(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", srcCol: String = "source",
+  def dataConstrainedPlan(df: DataFrame, textCol: String = "text", srcCol: String = "source",
       budgetMult: Double = 4.0, rStar: Double = 15.4): DataFrame = {
     val uniq = df.select(col(srcCol).as("source"),
         expr(s"cast(conv(substring(md5($textCol), 1, 15), 16, 10) as bigint)")
@@ -770,8 +769,7 @@ object Corpus {
     * text. Pure per-row codegen'd regex work — scales with the scan,
     * no shuffle.
     */
-  def redactPii(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+  def redactPii(df: DataFrame, textCol: String = "text"): DataFrame = {
     val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
     val ip = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
     val phone = "\\+\\d[\\d-]{7,14}\\d"

@@ -94,8 +94,6 @@ object Embeddings {
       .select(col("a"), col("b"), col("cos"))
   }
 
-  private val l2 = "graft_l2_i64(q, cq)"
-
   /** Nearest-centroid assignment (exact-int L2², centroids broadcast):
     * (vec_id, cent_id, q, nrm, dist). `centroids` needs (cent_id, cq).
     *

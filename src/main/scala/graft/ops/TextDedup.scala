@@ -954,8 +954,7 @@ object TextDedup {
     * Returns one row: (n_new, n_exact_dups, no_false_negatives,
     * fp_rate_ok).
     */
-  def bloomDedupStats(history: DataFrame, newBatch: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
+  def bloomDedupStats(history: DataFrame, newBatch: DataFrame, textCol: String = "text",
       fpp: Double = 0.03, materialize: Boolean = true): DataFrame = {
     val spark = history.sparkSession
     def hashed(df: DataFrame): DataFrame = df.withColumn("h",

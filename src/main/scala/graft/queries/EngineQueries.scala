@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.config.{LoadMethod, TaskConfig}
 import graft.core.macros.AssetCompiler
-import graft.core.window.{CustomWindow, WindowFactory}
+import graft.core.window.CustomWindow
 import graft.engine.{DmlRunner, Lineage, MetricsCollector, ScriptRunner, TransformRunner}
 
 /** End-to-end flows through the engine layer (SURVEY §2A operators
@@ -251,7 +251,7 @@ object EngineQueries {
     },
 
     // --- A21/A22: lineage extraction (Catalyst + regex + annotations) --
-    "e06_lineage" -> { (s, d) =>
+    "e06_lineage" -> { (s, _) =>
       import s.implicits._
       val sql =
         """-- a comment with proj.dataset.fake_table inside
@@ -977,7 +977,7 @@ object EngineQueries {
           |ORDER BY doc_id""".stripMargin).get
     },
 
-    "e45b_farm_fingerprint_fixture" -> { (s, d) =>
+    "e45b_farm_fingerprint_fixture" -> { (s, _) =>
       // real rows+schema+hash oracle for the FarmHash kernel (r10 ask
       // #9): a fixed 12-string fixture covering every length-class
       // branch (0/1-16/17-32/33-64/>64 bytes, multi-byte UTF-8), with
@@ -1411,7 +1411,7 @@ object EngineQueries {
           |FROM shapes ORDER BY id""".stripMargin).get
     },
 
-    "e91_aes_cbc_raw_keys" -> { (s, d) =>
+    "e91_aes_cbc_raw_keys" -> { (s, _) =>
       // AES_CBC_PKCS raw keys (r12, converts the last encryption-
       // surface skip): the ciphertext constant was produced OUTSIDE the
       // engine (openssl aes-128-cbc, IV prepended) — decrypting it
@@ -1456,7 +1456,7 @@ object EngineQueries {
           |FROM nation ORDER BY id""".stripMargin).get
     },
 
-    "e85_ml_quantile_bucketize" -> { (s, d) =>
+    "e85_ml_quantile_bucketize" -> { (s, _) =>
       // ML.QUANTILE_BUCKETIZE by EXACT interpolated quantile boundaries
       // (r12, converts the last ML-namespace skip — the documented
       // blocker was ntile-vs-boundary tie behavior). The fixture makes
@@ -1477,7 +1477,7 @@ object EngineQueries {
           |ORDER BY leg, id""".stripMargin).get
     },
 
-    "e87_tink_keyset_interop" -> { (s, d) =>
+    "e87_tink_keyset_interop" -> { (s, _) =>
       // Tink keyset byte-interop (r12 — converts the r11 documented
       // keyset-format deviation): keysets are real serialized Tink
       // protos (type URLs and JSON layout observable via
@@ -1562,7 +1562,7 @@ object EngineQueries {
           |FROM src""".stripMargin).get
     },
 
-    "e83_tojson_chr" -> { (s, d) =>
+    "e83_tojson_chr" -> { (s, _) =>
       // TO_JSON (canonical JSON type text) and code-point CHR (r11):
       // fixture rows with a VALUES oracle, e45b-style — DuckDB's json
       // preserves insertion order, so the expected texts are written
@@ -1606,7 +1606,7 @@ object EngineQueries {
           |ORDER BY id""".stripMargin).get
     },
 
-    "e76b_standard_scaler" -> { (s, d) =>
+    "e76b_standard_scaler" -> { (s, _) =>
       // ML.STANDARD_SCALER against a tolerance-free fixture (closes the
       // spec-only gap the r10 verdict flagged): per-group values
       // {10g+1, 10g+2, 10g+3} have mean 10g+2 and sample variance
@@ -2463,7 +2463,7 @@ object EngineQueries {
     },
 
     // --- INFORMATION_SCHEMA.TABLES / .COLUMNS over a known dataset -----
-    "e33_information_schema" -> { (s, d) =>
+    "e33_information_schema" -> { (s, _) =>
       // fixed DDL → fully-determined metadata, so the oracle is a
       // literal VALUES restatement (DuckDB can't see our catalog)
       freshDb(s, "graft__pg33")

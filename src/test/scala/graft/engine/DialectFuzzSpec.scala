@@ -346,4 +346,61 @@ class DialectFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e2 = intercept[Exception](Dialect.rewrite(sql))
     assert(e1.getClass == e2.getClass)
   }
+
+  /** Samples that set off the triggers the statement-shaped list above
+    * leaves out, so that every trigger matches somewhere below.
+    */
+  private val moreTriggers = Seq(
+    "SELECT AS STRUCT 1 AS a", "WINDOW w AS (ORDER BY x)", "OVER (w ORDER BY y)",
+    "0x1F", "a, FROM t", "INTERVAL '1-2 3' YEAR TO DAY", "FROM p.d.a x, p.d.b",
+    "ML.STANDARD_SCALER(x) OVER ()", "HLL_COUNT.MERGE(s) OVER ()",
+    "PERCENTILE_DISC(x, 0.5)", "DATETIME '2024-01-01 00:00:00'",
+    "CAST(x AS DATETIME)", "BIGNUMERIC(10, 2)", "NUMERIC(5)", "BIGNUMERIC",
+    "FLOAT64", "CAST(x AS BOOL)", "STRING(10)", "BYTES(10)",
+    "TABLESAMPLE SYSTEM (10 PERCENT)", "SAFE.SQRT(x)", "INTERVAL n DAY",
+    "FROM t, UNNEST(a) AS v")
+
+  test("every trigger match holds one of its anchors, so a skipped pass had nothing to do") {
+    val planted = (triggers ++ moreTriggers).flatMap { t =>
+      val noise = randomContent(1 + rnd.nextInt(4))
+      Seq(t, noise + t + noise, t.toLowerCase)
+    }
+    val texts = planted ++ Seq.fill(400)(randomContent(1 + rnd.nextInt(40)))
+    Dialect.triggers.foreach { t =>
+      var hits = 0
+      texts.foreach { text =>
+        t.re.findAllMatchIn(text).foreach { m =>
+          hits += 1
+          val up = m.matched.toUpperCase(java.util.Locale.ROOT)
+          assert(t.anchors.exists(up.contains),
+            s"match '${m.matched}' of ${t.re} holds none of ${t.anchors}")
+        }
+      }
+      assert(hits > 0, s"no sample sets off ${t.re}")
+    }
+  }
+
+  test("a trigger that only an earlier pass's output holds still rewrites") {
+    // the SAFE. prefix meets AEAD_DECRYPT_STRING only after the AEAD.
+    // namespace maps; the JSON keyword meets a quote only after the raw
+    // literal is normalized
+    assert(Dialect.rewrite("SELECT SAFE.AEAD.DECRYPT_STRING(k, c, 'a') AS p") ==
+      "SELECT graft_try(graft_aead_decrypt_string(k, c, 'a')) AS p")
+    assert(Dialect.rewrite("""SELECT JSON r'{"a": 1}' AS j""") ==
+      """SELECT to_json(parse_json('{"a": 1}')) AS j""")
+    assert(run("""SELECT JSON r'{"b": 2, "a": 1}' AS j""").head.getString(0) ==
+      """{"a":1,"b":2}""")
+  }
+
+  test("an anchor with no real match comes back byte for byte") {
+    val sqls = Seq(
+      "SELECT unnest_n, qualify_flag, window_w, json_doc, interval_days, search_term, " +
+        "array_len, struct_id, x0xff, safe_v, net_v FROM t WHERE note = 'a [b] |> c'",
+      "SELECT a FROM t WINDOW w AS (ORDER BY a) -- x IN UNNEST(y), ARRAY[1]",
+      "SELECT timestamp_col, date_col, time_col FROM t /* TIME '1' */ WHERE over_x > 0")
+    sqls.foreach { sql =>
+      assert(Dialect.rewrite(sql) == sql)
+      assert(Dialect.rewrite(sql, mapFqns = false) == sql)
+    }
+  }
 }

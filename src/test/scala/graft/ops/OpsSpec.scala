@@ -229,7 +229,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = docs(
       (101L to 110L).map(i => i -> s"historical doc number ${i - 100} body") ++ // 10 exact dups
       (201L to 230L).map(i => i -> s"fresh unseen content item $i"): _*)        // 30 new
-    val row = TextDedup.bloomDedupStats(history, batch, idCol = "id", textCol = "body")
+    val row = TextDedup.bloomDedupStats(history, batch, textCol = "body")
       .collect()(0)
     assert(row.getLong(0) == 40L)      // n_new
     assert(row.getLong(1) == 10L)      // n_exact_dups
@@ -602,7 +602,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = sited(
       (1L, "a", "w x y z"), (2L, "a", "w x y z"), // exact dup: U_a = 4
       (3L, "b", "one two three four five six seven eight nine ten eleven twelve"))
-    val out = Corpus.dataConstrainedPlan(df, idCol = "id", textCol = "body",
+    val out = Corpus.dataConstrainedPlan(df, textCol = "body",
         srcCol = "site").orderBy(col("source")).collect()
     // total U = 16, 2 sources, slice = 4·16/2 = 32
     val a = out(0)
@@ -614,7 +614,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tight = Corpus.dataConstrainedPlan(
         sited((1L, "a", "w x y z"),
           (2L, "b", (1 to 28).map(i => s"t$i").mkString(" "))),
-        idCol = "id", textCol = "body", srcCol = "site",
+        textCol = "body", srcCol = "site",
         budgetMult = 0.5).orderBy(col("source")).collect()
     assert(tight(1).getDouble(3) == 8.0)   // slice = 0.5·32/2 = 8 < U_b
     assert(tight(1).getDouble(5) == 8.0)   // eff = slice (all unique)
