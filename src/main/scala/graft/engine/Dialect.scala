@@ -6,55 +6,29 @@ package graft.engine
   * `spark.sql`. Deliberately conservative, token-aware regexes — the
   * corpus surface is small and pinned by tests. Every pass reads quotes,
   * backticks, comments and brackets through [[SqlLex]], the one lexer
-  * the engine has. A pass finds its trigger regex through one of two
-  * loops, which alone decide that a match inside a literal or comment is
-  * left alone: [[spliceOutside]] for a pass that rewrites a construct
-  * and must know where to go on, [[replaceOutside]] for a one-to-one
-  * swap. A new pass still has to be wired into `rewriteUncached`.
+  * the engine has, and finds its trigger regex through one of the two
+  * loops [[SqlLex]] keeps for every text edit of the engine,
+  * [[SqlLex.spliceOutside]] and [[SqlLex.replaceOutside]], which alone
+  * decide that a match inside a literal or comment is left alone. A new
+  * pass still has to be wired into `rewriteUncached`.
   *
   * Every trigger is declared with [[trigger]], which pairs the regex with
-  * its anchors: upper-case words of which every match contains at least
-  * one (`UNNEST`, `QUALIFY`, `|>`, `[`, `0X`). Both loops return the text
-  * untouched, with no regex run and no lexing, when none of the anchors
-  * is in it, so a new pass must declare an anchor that is a substring of
-  * every match of its regex; `DialectFuzzSpec` checks that over its
-  * texts. A pass with no regex loop opens with the same [[absent]] check.
+  * its anchors (`UNNEST`, `QUALIFY`, `|>`, `[`, `0X`) and lists it for
+  * `DialectFuzzSpec`, which checks over its texts that each anchor is a
+  * substring of every match. A pass with no regex loop opens with the
+  * same [[SqlLex.absent]] check.
   */
 object Dialect {
 
   import scala.util.matching.Regex
 
-  /** A pass's trigger regex and its anchors (see the header). */
-  private[engine] final class Trigger(val re: Regex, val anchors: Seq[String])
+  import SqlLex.{Trigger, absent, replaceOutside, spliceOutside}
 
-  private val declared = Vector.newBuilder[Trigger]
-
-  private def trigger(pattern: String, anchors: String*): Trigger = {
-    require(anchors.nonEmpty && anchors.forall(a =>
-      a.nonEmpty && a == a.toUpperCase(java.util.Locale.ROOT)), pattern)
-    val t = new Trigger(pattern.r, anchors)
-    declared += t
-    t
-  }
+  /** Declares a trigger of this object, for the gate spec. */
+  private val trigger = new SqlLex.Triggers
 
   /** Every trigger the object declares, for the gate spec. */
-  private[engine] lazy val triggers: Seq[Trigger] = declared.result()
-
-  // the upper-cased copy of the last text a gate read, per thread: a pass
-  // that changes nothing hands on the same instance, so a run of skipped
-  // passes upper-cases the text once
-  private val lastUpper = ThreadLocal.withInitial[(String, String)](() => (null, ""))
-
-  /** True when none of `anchors` is in `text`, case-insensitively. */
-  private def absent(text: String, anchors: String*): Boolean = {
-    val (seen, up) = lastUpper.get
-    val u = if (seen eq text) up else {
-      val fresh = text.toUpperCase(java.util.Locale.ROOT)
-      lastUpper.set((text, fresh))
-      fresh
-    }
-    !anchors.exists(u.contains)
-  }
+  private[engine] lazy val triggers: Seq[Trigger] = trigger.all
 
   /** `x [NOT] IN UNNEST(arr)` → `[NOT ]array_contains(arr, x)`
     * (`query.py:29`). The optional NOT group must be explicit: without it
@@ -507,49 +481,6 @@ object Dialect {
     * ORIGINAL BigQuery identifiers (its output is BigQuery URNs).
     */
   private val systemTimeRe = trigger(raw"(?is)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b", "SYSTEM_TIME")
-
-  /** The one loop of the passes that rewrite a construct. Each match of
-    * `re` that starts outside every literal and comment goes to `f`,
-    * which returns a splice `(from, until, text)` or declines. After a
-    * splice the search resumes at `from` on the new text, so a construct
-    * nested in the spliced text rewrites too, and `f` must decline its
-    * own output. After a decline it resumes just past the match; after a
-    * match inside a literal or comment, one character on.
-    */
-  private def spliceOutside(t: Trigger, sql: String)(
-      f: (String, Regex.Match) => Option[(Int, Int, String)]): String = {
-    if (absent(sql, t.anchors: _*)) return sql
-    var cur = sql
-    var spans: SqlLex.Spans = null // lexed at the first match of each text
-    val mt = t.re.pattern.matcher(cur)
-    var pos = 0
-    while (mt.find(pos)) {
-      if (spans == null) spans = SqlLex.spans(cur)
-      if (spans.inLiteralOrComment(mt.start)) pos = mt.start + 1
-      else f(cur, new Regex.Match(cur, mt, Nil).force) match {
-        case Some((from, until, text)) =>
-          cur = cur.substring(0, from) + text + cur.substring(until)
-          spans = null
-          mt.reset(cur)
-          pos = from
-        case scala.None => pos = math.max(mt.end, mt.start + 1)
-      }
-    }
-    cur
-  }
-
-  /** `re.replaceAllIn` that keeps every match starting inside a literal or
-    * comment as it is; `f` gives the literal replacement text of the
-    * others, which is not searched again. A text with no match comes
-    * back as the same instance.
-    */
-  private def replaceOutside(t: Trigger, sql: String)(f: Regex.Match => String): String = {
-    if (absent(sql, t.anchors: _*)) return sql
-    if (!t.re.pattern.matcher(sql).find()) return sql
-    lazy val spans = SqlLex.spans(sql)
-    t.re.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
-      if (spans.inLiteralOrComment(m.start)) m.matched else f(m)))
-  }
 
   /** The window of the OVER clause whose keyword is the next word from
     * `from` (blanks and comments skipped): the span `[start, end)` of its
@@ -1977,6 +1908,16 @@ object Dialect {
     -1
   }
 
+  // argument shapes of the aggregate rewrites below: ORDER BY tails (one
+  // key, an optional direction, a LIMIT that STRING_AGG requires and
+  // ARRAY_AGG may take), DISTINCT, IGNORE|RESPECT NULLS and HAVING MAX|MIN
+  private val keyDirLimitRe = raw"(?is)^(.*?)(?:\s+(ASC|DESC))?\s+LIMIT\s+(\d+)$$".r
+  private val keyDirOptLimitRe = raw"(?is)^(.*?)(?:\s+(ASC|DESC))?(?:\s+LIMIT\s+(\d+))?$$".r
+  private val keyDirRe = raw"(?is)^(.*?)(?:\s+(ASC|DESC))?$$".r
+  private val distinctRe = raw"(?is)^DISTINCT\s+(.+)$$".r
+  private val ignoreNullsRe = raw"(?is)^(.*?)\s+(IGNORE|RESPECT)\s+NULLS\s*$$".r
+  private val havingRe = raw"(?is)^(.+?)\s+HAVING\s+(MAX|MIN)\s+(.+)$$".r
+
   /** STRING_AGG(x[, sep][ ORDER BY …]) → listagg WITHIN GROUP when
     * ordered, string_agg otherwise (both BigQuery-compatible:
     * unordered STRING_AGG is nondeterministic in BigQuery too).
@@ -1999,9 +1940,8 @@ object Dialect {
         // `ORDER BY key [ASC|DESC] LIMIT n` — listagg has no LIMIT, so
         // the limited form routes through the ordered-collect + slice
         // shape ARRAY_AGG uses (single sort key, like arrayAgg)
-        val kdl = raw"(?is)^(.*?)(?:\s+(ASC|DESC))?\s+LIMIT\s+(\d+)$$".r
         ob match {
-          case kdl(key, dir, lim) if key.trim.nonEmpty =>
+          case keyDirLimitRe(key, dir, lim) if key.trim.nonEmpty =>
             val base = s"transform(array_sort(collect_list(" +
               s"struct(${key.trim} AS _o, $v AS _v))), s -> s._v)"
             val ordered =
@@ -2024,8 +1964,7 @@ object Dialect {
     */
   private def ignoreNullsArg(fn: String): Seq[String] => Option[String] = { a =>
     if (a.length != 1) scala.None
-    else raw"(?is)^(.*?)\s+(IGNORE|RESPECT)\s+NULLS\s*$$".r
-      .findFirstMatchIn(a(0))
+    else ignoreNullsRe.findFirstMatchIn(a(0))
       .map(m => s"$fn(${m.group(1)}, ${m.group(2).equalsIgnoreCase("IGNORE")})")
   }
 
@@ -2048,11 +1987,10 @@ object Dialect {
     // DISTINCT + ORDER BY: only the order-by-the-value-itself shape has
     // a set-based rewrite (the struct trick would defeat dedup); other
     // keys stay loud-unresolved
-    raw"(?is)^DISTINCT\s+(.+)$$".r.findFirstMatchIn(v).foreach { dm =>
+    distinctRe.findFirstMatchIn(v).foreach { dm =>
       val dv = dm.group(1).trim
-      val kd = raw"(?is)^(.*?)(?:\s+(ASC|DESC))?$$".r
       return ob0 match {
-        case kd(key, dir) if key.trim == dv =>
+        case keyDirRe(key, dir) if key.trim == dv =>
           val base = s"array_sort(collect_set($dv))"
           Some(if (dir != null && dir.equalsIgnoreCase("DESC")) s"reverse($base)" else base)
         case _ => scala.None
@@ -2060,9 +1998,8 @@ object Dialect {
     }
     // single key with optional ASC|DESC and LIMIT n (multi-key forms
     // were comma-split before reaching here and stay loud-unresolved)
-    val kdl = raw"(?is)^(.*?)(?:\s+(ASC|DESC))?(?:\s+LIMIT\s+(\d+))?$$".r
     ob0 match {
-      case kdl(key, dir, lim) if key.trim.nonEmpty =>
+      case keyDirOptLimitRe(key, dir, lim) if key.trim.nonEmpty =>
         val base0 =
           s"transform(array_sort(collect_list(struct(${key.trim} AS _o, $v AS _v))), s -> s._v)"
         // collect_list drops null INPUTS but the struct wrapper is
@@ -2082,9 +2019,8 @@ object Dialect {
     */
   private def anyValueHaving(a: Seq[String]): Option[String] = {
     if (a.length != 1) return scala.None
-    val m = raw"(?is)^(.+?)\s+HAVING\s+(MAX|MIN)\s+(.+)$$".r
     a.head match {
-      case m(v, kind, k) =>
+      case havingRe(v, kind, k) =>
         val fn = if (kind.toUpperCase == "MAX") "max_by" else "min_by"
         Some(s"$fn(${v.trim}, ${k.trim})")
       case _ => scala.None
@@ -2473,15 +2409,16 @@ object Dialect {
       s"make_interval(${slots.mkString(", ")})"
     }
 
+  private val eachElementRe = raw"(?is)^\s*(?:insert|append)_each_element\s*=>\s*(.+)$$".r
+
   /** JSON_ARRAY_INSERT / JSON_ARRAY_APPEND: (json, path, value) pairs
     * chain; the optional `insert_each_element`/`append_each_element`
     * named argument becomes the kernel's 4th child (BigQuery default
     * true: an array value spreads element-by-element).
     */
   private def jsonArrayMutator(fnName: String): Seq[String] => Option[String] = { a =>
-    val nmRe = raw"(?is)^\s*(?:insert|append)_each_element\s*=>\s*(.+)$$".r
-    val (named, pos) = a.partition(s => nmRe.findFirstIn(s).isDefined)
-    val each = named.headOption.collect { case nmRe(v) => v }.getOrElse("true")
+    val (named, pos) = a.partition(s => eachElementRe.findFirstIn(s).isDefined)
+    val each = named.headOption.collect { case eachElementRe(v) => v }.getOrElse("true")
     if (named.length > 1 || pos.length < 3 || pos.length % 2 == 0 ||
         pos.exists(_.contains("=>"))) scala.None
     else Some(canonicalJson(pos.tail.grouped(2).foldLeft(pos.head) {
@@ -2510,6 +2447,18 @@ object Dialect {
   private val extractDatetime = raw"(?is)^DATETIME\s+FROM\s+(.+)$$".r
   private val extractTime = raw"(?is)^TIME\s+FROM\s+(.+)$$".r
   private val extractDayOfYear = raw"(?is)^DAYOFYEAR\s+FROM\s+(.+)$$".r
+
+  // the static patterns of the handlers below
+  private val fmtSpecRe = raw"%(?:[-+ #0,']*\d*(?:\.\d+)?([a-zA-Z])|%)".r
+  private val fmtGroupRe = raw"%([-+ #0]*)(?:\\'|''|')".r
+  private val wktLineRe = raw"(?i)^\s*LINESTRING\s*\((.*)\)\s*$$".r
+  private val wktPolyRe = raw"(?is)^\s*POLYGON\s*\((.*)\)\s*$$".r
+  private val featAsRe = raw"(?is)^(.*?)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$$".r
+  private val featBareRe = raw"^(?:[A-Za-z_][A-Za-z0-9_]*\.)*([A-Za-z_][A-Za-z0-9_]*)$$".r
+  private val selectHeadRe = raw"(?is)^\s*SELECT\b".r
+  private val stripNullsArgRe = raw"(?is)^\s*(include_arrays|remove_empty)\s*=>\s*(.+)$$".r
+  private val jsonModeArgRe = raw"(?is)^\s*mode\s*=>\s*(.+)$$".r
+  private val intervalArgRe = raw"(?is)^\s*(year|month|day|hour|minute|second)\s*=>\s*(.+)$$".r
 
   private lazy val callRewrites: Map[String, Seq[String] => Option[String]] =
     baseRewrites ++ safeWrapFns.map { n =>
@@ -2669,13 +2618,11 @@ object Dialect {
           // intact). Args CAST per conversion spec: java's Formatter
           // rejects Spark Decimals on %f and BigQuery's %i/%u/%t have
           // no java spelling — numeric specs coerce, %t stringifies.
-          val specRe = raw"%(?:[-+ #0,']*\d*(?:\.\d+)?([a-zA-Z])|%)".r
-          val convs = specRe.findAllMatchIn(f).flatMap(m => Option(m.group(1))).toList
+          val convs = fmtSpecRe.findAllMatchIn(f).flatMap(m => Option(m.group(1))).toList
           // BigQuery's grouped-digits flag is ' (C printf); java's is ,
           // — the quote may arrive escaped (\') from literal
           // normalization of a double-quoted format string
-          val fg = raw"%([-+ #0]*)(?:\\'|''|')".r
-            .replaceAllIn(f, mm => java.util.regex.Matcher.quoteReplacement(
+          val fg = fmtGroupRe.replaceAllIn(f, mm => java.util.regex.Matcher.quoteReplacement(
               s"%${mm.group(1)},"))
           val fmt = "'" +
             fg.replace("%t", "%s").replace("%i", "%d").replace("%u", "%d") + "'"
@@ -2946,7 +2893,7 @@ object Dialect {
         s"named_struct('lon', CAST('$lon' AS DOUBLE), 'lat', CAST('$lat' AS DOUBLE))"
       }
       val lsLit = if (a.length == 1) strLit(a(0)).flatMap { s =>
-        raw"(?i)^\s*LINESTRING\s*\((.*)\)\s*$$".r.findFirstMatchIn(s).map { g =>
+        wktLineRe.findFirstMatchIn(s).map { g =>
           val pts = g.group(1).split(",").map(pointSql(_, "LINESTRING"))
           if (pts.length < 2) throw new IllegalArgumentException(
             "ST_GEOGFROMTEXT: LINESTRING needs at least 2 points")
@@ -2954,7 +2901,7 @@ object Dialect {
         }
       } else scala.None
       val polyLit = if (a.length == 1) strLit(a(0)).flatMap { s =>
-        raw"(?is)^\s*POLYGON\s*\((.*)\)\s*$$".r.findFirstMatchIn(s).map { g =>
+        wktPolyRe.findFirstMatchIn(s).map { g =>
           // rings are parenthesized coordinate lists: (r1), (r2), …
           val body = g.group(1).trim
           val rings = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -3182,11 +3129,9 @@ object Dialect {
         val close = SqlLex.close(s0, open)
         if (close != s0.length - 1) throw new IllegalArgumentException(
           "ML.FEATURE_CROSS: unbalanced STRUCT(…)")
-        val asRe = raw"(?is)^(.*?)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$$".r
-        val bareRe = raw"^(?:[A-Za-z_][A-Za-z0-9_]*\.)*([A-Za-z_][A-Za-z0-9_]*)$$".r
         val fields = SqlLex.splitTopLevel(s0.substring(open + 1, close)).map(_.trim).map {
-          case asRe(e, n) => (e.trim, n)
-          case bareRe(n) => (n, n)
+          case featAsRe(e, n) => (e.trim, n)
+          case featBareRe(n) => (n, n)
           case other => throw new IllegalArgumentException(
             s"ML.FEATURE_CROSS: feature '$other' needs an AS name")
         }
@@ -3524,7 +3469,7 @@ object Dialect {
     // contract is enforced by the generated column-list alias.
     "ARRAY" -> { a =>
       val inner = a.mkString(", ")
-      if (raw"(?is)^\s*SELECT\b".r.findFirstIn(inner).isDefined)
+      if (selectHeadRe.findFirstIn(inner).isDefined)
         Some(s"(SELECT collect_list(__graft_arr_c) FROM ($inner) " +
           "AS __graft_arr_sub(__graft_arr_c))")
       else scala.None // ARRAY(1, 2) literal-function form stays as-is
@@ -3669,13 +3614,12 @@ object Dialect {
         a.tail.foldLeft(a.head)((acc, p) => s"graft_json_remove($acc, $p)")))
     },
     "JSON_STRIP_NULLS" -> { a =>
-      val nmRe = raw"(?is)^\s*(include_arrays|remove_empty)\s*=>\s*(.+)$$".r
-      val (named, pos) = a.partition(s => nmRe.findFirstIn(s).isDefined)
+      val (named, pos) = a.partition(s => stripNullsArgRe.findFirstIn(s).isDefined)
       if (pos.isEmpty || pos.length > 2) scala.None
       else {
         var ia = "true" // BigQuery defaults
         var re = "false"
-        named.foreach { case nmRe(k, v) =>
+        named.foreach { case stripNullsArgRe(k, v) =>
           if (k.equalsIgnoreCase("include_arrays")) ia = v else re = v
         }
         Some(canonicalJson(s"graft_json_strip_nulls(${pos(0)}, " +
@@ -3687,9 +3631,8 @@ object Dialect {
     // JSON_KEYS(json [, max_depth] [, mode => 'strict'|'lax'|'lax recursive'])
     // → sorted dotted key paths (ARRAY<STRING>); non-object root → NULL
     "JSON_KEYS" -> { a =>
-      val modeRe = raw"(?is)^\s*mode\s*=>\s*(.+)$$".r
-      val (named, pos) = a.partition(s => modeRe.findFirstIn(s).isDefined)
-      val mode = named.headOption.collect { case modeRe(v) => v }.getOrElse("'strict'")
+      val (named, pos) = a.partition(s => jsonModeArgRe.findFirstIn(s).isDefined)
+      val mode = named.headOption.collect { case jsonModeArgRe(v) => v }.getOrElse("'strict'")
       if (named.length > 1 || pos.isEmpty || pos.length > 2 ||
           pos.exists(_.contains("=>"))) scala.None
       else Some(s"graft_json_keys(${pos(0)}, " +
@@ -3725,14 +3668,13 @@ object Dialect {
     // with BigQuery's named arguments (`day => 3`) — Spark's
     // make_interval is positional-only and adds a weeks slot
     "MAKE_INTERVAL" -> { a =>
-      val nmRe = raw"(?is)^\s*(year|month|day|hour|minute|second)\s*=>\s*(.+)$$".r
       val slots = Array("0", "0", "0", "0", "0", "0")
       val order = Seq("year", "month", "day", "hour", "minute", "second")
       var pos = 0
       var named = false
       var ok = a.length <= 6 // 7-slot = already Spark's positional form
       if (ok) a.foreach {
-        case nmRe(k, v) =>
+        case intervalArgRe(k, v) =>
           named = true
           slots(order.indexOf(k.toLowerCase)) = v
         case p if !named => slots(pos) = p; pos += 1

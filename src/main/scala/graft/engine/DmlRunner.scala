@@ -305,6 +305,8 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     dispatch(stmt)
   }
 
+  private val subqueryRe = raw"(?is)\(\s*SELECT\b".r
+
   private val destructiveHeadRe =
     raw"(?is)^\s*(?:DROP\s+TABLE|CREATE\s+OR\s+REPLACE\s+TABLE)\b".r
 
@@ -341,8 +343,8 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
       updateFrom(destFqn, tAlias, sets, fromSrc, cond)
     case UpdateStmt(destFqn, alias, sets, cond) =>
       if (alias == null) update(destFqn, sets, cond)
-      else if (raw"(?is)\(\s*SELECT\b".r.findFirstIn(sets).isDefined ||
-               raw"(?is)\(\s*SELECT\b".r.findFirstIn(cond).isDefined)
+      else if (subqueryRe.findFirstIn(sets).isDefined ||
+               subqueryRe.findFirstIn(cond).isDefined)
         // correlated-subquery SETs must keep their alias-qualified outer
         // references intact: stripAlias over the whole text would turn
         // `WHERE s.k = a.k` into `s.k = k`, re-resolving the correlation
@@ -539,8 +541,10 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
       val spellings = Seq(destFqn.replace("`", ""), dest)
         .filter(_.contains(".")).distinct
       spellings.foldLeft(text) { (t, p) =>
-        t.replaceAll(raw"(?i)(?<![\w.$$])" +
-          java.util.regex.Pattern.quote(p) + raw"\.", tAlias + ".")
+        val ref = new SqlLex.Trigger(
+          (raw"(?i)(?<![\w.$$])" + java.util.regex.Pattern.quote(p) + raw"\.").r,
+          Seq(p.toUpperCase(java.util.Locale.ROOT) + "."))
+        SqlLex.replaceOutside(ref, t)(_ => tAlias + ".")
       }
     }
     val sets = unqualify(sets0)
@@ -612,7 +616,6 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     // single SQL statement instead: Spark resolves correlated scalar
     // subqueries in a select list, and the outer alias (the table's
     // bare name) is what BigQuery correlation references.
-    val subqueryRe = raw"(?is)\(\s*SELECT\b".r
     if (subqueryRe.findFirstIn(sets).isDefined ||
         subqueryRe.findFirstIn(cond).isDefined) {
       val base0 = spark.table(dest)
@@ -868,7 +871,7 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     * anti-join the frame has bare source columns.
     */
   private def stripAlias(e: String, alias: String): String =
-    e.replaceAll(raw"(?i)\b" + java.util.regex.Pattern.quote(alias) + raw"\.", "")
+    SqlLex.replaceOutside(SqlLex.nameTrigger(alias + ".", ignoreCase = true), e)(_ => "")
 
   /** Crash-atomic whole-table rewrite: the complete new contents stage
     * as a plain parquet write under the table location (the live table

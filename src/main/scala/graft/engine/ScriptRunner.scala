@@ -97,6 +97,19 @@ class ScriptRunner(spark: SparkSession) {
     out.toString
   }
 
+  /** A query's text as Spark runs it, the steps in this order: table
+    * functions inlined, wildcard tables expanded (either may surface
+    * auto-refresh external tables the statement's own freshness pass
+    * could not see, so that pass runs again on the expanded text),
+    * INFORMATION_SCHEMA inlined, variables substituted, then the
+    * dialect rewrite.
+    */
+  private def prep(query: String): String = {
+    val expanded = expandWildcardTables(expandTableFunctions(query))
+    if (expanded != query) ExternalTables.refreshReferenced(spark, expanded)
+    Dialect.rewrite(substituteVars(expandInformationSchema(expanded)))
+  }
+
   /** Driver-local scalar eval: when the rewritten, variable-substituted
     * expression references no columns/tables, no subqueries, and nothing
     * nondeterministic, resolve it against a one-row plan and evaluate it
@@ -467,21 +480,20 @@ class ScriptRunner(spark: SparkSession) {
     val body = stmt.substring(doTok.pos + 2, ms.last.pos)
     val rows = spark.sql(Dialect.rewrite(substituteVars(query))).limit(10001).collect()
     require(rows.length <= 10000, "FOR loop query exceeded 10000 rows")
+    // rec.field → literal of that row's field, outside literals and
+    // comments. Struct fields render as NAMED structs — nested access
+    // through the loop variable (`r.st.a`) substitutes the prefix `r.st`
+    // and leaves `.a` as a field extraction, which needs the names (and
+    // must NOT take literalOf's single-field unwrap)
+    val fields = rows.headOption.toSeq.flatMap(_.schema.fields.toSeq).zipWithIndex
+      .map { case (f, idx) => (SqlLex.nameTrigger(s"$rec.${f.name}"), f.dataType, idx) }
     var last: Option[DataFrame] = None
     import scala.util.control.Breaks
     val loop = new Breaks
     loop.breakable {
       rows.foreach { row =>
-        // rec.field → literal of that row's field (word-boundary safe).
-        // Struct fields render as NAMED structs — nested access through
-        // the loop variable (`r.st.a`) substitutes the prefix `r.st`
-        // and leaves `.a` as a field extraction, which needs the names
-        // (and must NOT take literalOf's single-field unwrap)
-        val bodyRendered = row.schema.fields.zipWithIndex.foldLeft(body) {
-          case (acc, (f, idx)) =>
-            acc.replaceAll(raw"\b" + java.util.regex.Pattern.quote(s"$rec.${f.name}") + raw"\b",
-              java.util.regex.Matcher.quoteReplacement(
-                literalOfTyped(row.get(idx), f.dataType)))
+        val bodyRendered = fields.foldLeft(body) { case (acc, (t, tpe, idx)) =>
+          SqlLex.replaceOutside(t, acc)(_ => literalOfTyped(row.get(idx), tpe))
         }
         try runScript(bodyRendered).foreach(df => last = Some(df))
         catch {
@@ -519,10 +531,8 @@ class ScriptRunner(spark: SparkSession) {
             val stmtLit = lit(lastAttemptedStmt)
             val prev = currentError
             currentError = Some(e)
-            try runScript(errorMessageRe.replaceAllIn(
-              errorStatementRe.replaceAllIn(handler,
-                java.util.regex.Matcher.quoteReplacement(stmtLit)),
-              java.util.regex.Matcher.quoteReplacement(msgLit)))
+            try runScript(SqlLex.replaceOutside(errorVarRe, handler)(m =>
+              if (m.group(1).equalsIgnoreCase("message")) msgLit else stmtLit))
             finally currentError = prev
         }
       case scala.None =>
@@ -548,7 +558,7 @@ class ScriptRunner(spark: SparkSession) {
       return Seq(stmt0)
     // the exception clause is one fixed phrase — strip it before the
     // token pass so WHEN/THEN inside MERGE statements are untouched
-    val stmt = exceptionClauseRe.replaceAllIn(stmt0, ";")
+    val stmt = SqlLex.replaceOutside(exceptionClauseRe, stmt0)(_ => ";")
     val ann = StatementSplitter.annotate(stmt)
     // only the THEN/DO that terminates an opener's own condition is
     // scaffolding; a MERGE's WHEN…THEN inside a branch body is part of
@@ -720,8 +730,7 @@ class ScriptRunner(spark: SparkSession) {
       // materialize ONCE: exported_rows and the written files must come
       // from the same execution, or a non-deterministic source (e.g.
       // TABLESAMPLE) could report a count the export never wrote
-      val df = spark.sql(Dialect.rewrite(substituteVars(
-        expandInformationSchema(expandWildcardTables(query))))).localCheckpoint(true)
+      val df = spark.sql(prep(query)).localCheckpoint(true)
       val n = df.count()
       val writer = df.write.mode(
         if (opts.get("overwrite").exists(_.equalsIgnoreCase("true"))) "overwrite"
@@ -758,14 +767,14 @@ class ScriptRunner(spark: SparkSession) {
     substituteVars(stmt.trim) match {
       case createExternalRe(orReplace, ifNotExists, rawName, colList, optsText) =>
         val dest = destTableName(rawName.replace("`", ""))
-        val uriBody = urisRe.findFirstMatchIn(optsText).map(_.group(1))
+        val uriBody = urisBody(optsText)
           .getOrElse(throw new IllegalArgumentException(
             "CREATE EXTERNAL TABLE requires a uris=[…] option"))
         val uriList = quotedUriRe.findAllMatchIn(uriBody)
           .map(_.group(1).replace("''", "'")).toSeq
         if (uriList.size != 1) throw new IllegalArgumentException(
           s"CREATE EXTERNAL TABLE needs exactly one uri (glob allowed), got ${uriList.size}")
-        val scalarOpts = optionRe.findAllMatchIn(urisRe.replaceAllIn(optsText, ""))
+        val scalarOpts = optionRe.findAllMatchIn(SqlLex.replaceOutside(urisRe, optsText)(_ => ""))
           .map { m =>
             val v = m.group(2)
             val clean = if (v.startsWith("'"))
@@ -832,8 +841,7 @@ class ScriptRunner(spark: SparkSession) {
     val stage = s"${dest}__mv_stage"
     spark.sql(s"DROP TABLE IF EXISTS $stage")
     val part = partCol.map(c => s" PARTITIONED BY ($c)").getOrElse("")
-    spark.sql(s"CREATE TABLE $stage USING PARQUET$part AS " + Dialect.rewrite(
-      substituteVars(expandInformationSchema(expandWildcardTables(query)))))
+    spark.sql(s"CREATE TABLE $stage USING PARQUET$part AS " + prep(query))
     spark.sql(s"DROP TABLE IF EXISTS $dest")
     spark.sql(s"ALTER TABLE $stage RENAME TO $dest")
   }
@@ -849,9 +857,11 @@ class ScriptRunner(spark: SparkSession) {
   private def detectMvBase(query: String): Option[(String, String)] = {
     val up = query.toUpperCase
     if (Seq(" JOIN ", " UNION ", "UNNEST(").exists(up.contains)) return scala.None
-    val froms = raw"(?is)\bFROM\s+(`[^`]+`|[\w.\-]+)".r
-      .findAllMatchIn(query).map(_.group(1).replace("`", "")).toList
-    froms match {
+    val froms = List.newBuilder[String]
+    SqlLex.spliceOutside(mvFromRe, query) { (_, m) =>
+      froms += m.group(1).replace("`", ""); scala.None
+    }
+    froms.result() match {
       case one :: Nil =>
         val base = destTableName(one)
         if (!spark.catalog.tableExists(base)) scala.None
@@ -896,9 +906,7 @@ class ScriptRunner(spark: SparkSession) {
     detectMvBase(query) match {
       case Some((base, p)) =>
         val carries = scala.util.Try(
-          spark.sql(Dialect.rewrite(substituteVars(
-            expandInformationSchema(expandWildcardTables(query)))))
-            .schema.fieldNames.contains(p)).getOrElse(false)
+          spark.sql(prep(query)).schema.fieldNames.contains(p)).getOrElse(false)
         if (!carries) scala.None
         else {
           MvRegistry.registerBase(dest,
@@ -1006,10 +1014,7 @@ class ScriptRunner(spark: SparkSession) {
           val nullPred = if (nullKeys.isEmpty) scala.None
             else Some(s"${b.partCol} IS NULL")
           val stalePred = (inPred.toSeq ++ nullPred.toSeq).mkString(" OR ")
-          val df = spark.sql(
-            s"SELECT * FROM (${Dialect.rewrite(substituteVars(
-              expandInformationSchema(expandWildcardTables(query))))}) " +
-              s"WHERE $stalePred")
+          val df = spark.sql(s"SELECT * FROM (${prep(query)}) WHERE $stalePred")
           MvRegistry.lastRefreshPlan = Some(df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
           val stageDir = PartitionCommit.newStageDir(spark, dest)
@@ -1044,14 +1049,14 @@ class ScriptRunner(spark: SparkSession) {
     case loadDataRe(mode, rawName, colList, optsText) =>
       val dest = destTableName(rawName.replace("`", ""))
       CloneRegistry.requireWritable(dest)
-      val uriBody = urisRe.findFirstMatchIn(optsText).map(_.group(1))
+      val uriBody = urisBody(optsText)
         .getOrElse(throw new IllegalArgumentException(
           "LOAD DATA requires a uris=[…] option"))
       val uriList = quotedUriRe.findAllMatchIn(uriBody)
         .map(_.group(1).replace("''", "'")).toSeq
       if (uriList.isEmpty) throw new IllegalArgumentException(
         "LOAD DATA uris list is empty")
-      val scalarOpts = optionRe.findAllMatchIn(urisRe.replaceAllIn(optsText, ""))
+      val scalarOpts = optionRe.findAllMatchIn(SqlLex.replaceOutside(urisRe, optsText)(_ => ""))
         .map { m =>
           val v = m.group(2)
           val clean = if (v.startsWith("'"))
@@ -1178,15 +1183,13 @@ class ScriptRunner(spark: SparkSession) {
     require(!row.isNullAt(0), s"EXECUTE IMMEDIATE evaluated to NULL: $tail")
     var sqlText = row.getString(0)
     if (usingPos >= 0) {
-      val asRe = raw"(?is)^(.+?)\s+AS\s+(\w+)$$".r
       val bound = SqlLex.items(tail.substring(usingPos + 5)).map {
-          case asRe(e, alias) => (Some(alias), evalToLiteral(e))
+          case usingAsRe(e, alias) => (Some(alias), evalToLiteral(e))
           case e => (Option.empty[String], evalToLiteral(e))
         }
       bound.foreach { case (alias, litV) =>
         alias.foreach { a =>
-          sqlText = sqlText.replaceAll(raw"@" + a + raw"\b",
-            java.util.regex.Matcher.quoteReplacement(litV))
+          sqlText = SqlLex.replaceOutside(SqlLex.nameTrigger("@" + a), sqlText)(_ => litV)
         }
       }
       val positional = bound.collect { case (scala.None, l) => l }
@@ -1235,9 +1238,8 @@ class ScriptRunner(spark: SparkSession) {
     * (STRUCT<a INT64, b STRING> commas sit inside angle brackets).
     */
   private def parseProcParams(text: String): Seq[ProcParam] = {
-    val paramRe = raw"(?is)^(?:(IN|OUT|INOUT)\s+)?(\w+)\s+(.+)$$".r
     SqlLex.items(text, angle = true).map {
-      case paramRe(mode, name, tpe) =>
+      case procParamRe(mode, name, tpe) =>
         ProcParam(Option(mode).map(_.toUpperCase).getOrElse("IN"), name, tpe.trim)
       case other => throw new IllegalArgumentException(
         s"malformed procedure parameter: $other")
@@ -1303,46 +1305,37 @@ class ScriptRunner(spark: SparkSession) {
     if (tableFunctions.isEmpty) return sql
     if (depth > 8) throw new IllegalArgumentException(
       "table function expansion exceeded depth 8 (cyclic TVF references?)")
-    val out = new StringBuilder
-    var idx = 0
-    var changed = false
-    // match positions come from the LITERAL-MASKED text (length-
-    // preserving), so `FROM f(` inside a string literal never starts an
-    // expansion; text is still cut from the original by position
-    lazy val spans = SqlLex.spans(sql)
-    for (m <- tvfRefRe.findAllMatchIn(sql))
-      if (m.start >= idx && !spans.inLiteralOrComment(m.start)) {
+    SqlLex.spliceOutside(tvfRefRe, sql) { (cur, m) =>
       val key = procKey(m.group(2))
-      tableFunctions.get(key) match {
-        case scala.None => // not a TVF — leave for other rewrites
-        case Some(fn) =>
-          val close = SqlLex.close(sql, m.end - 1)
-          if (close < 0) throw new IllegalArgumentException(
-            s"unbalanced table function call: ${m.group(2)}(…")
-          val args = SqlLex.items(sql.substring(m.end, close))
-          if (args.length != fn.params.length) throw new IllegalArgumentException(
-            s"table function ${m.group(2)} takes ${fn.params.length} argument(s), " +
-              s"got ${args.length}")
-          var bodySub = fn.body
-          for (((pName, pType), arg) <- fn.params.zip(args))
-            bodySub = substituteOutsideLiterals(bodySub, pName,
-              s"CAST(($arg) AS $pType)")
-          // trailing alias? `FROM fn(1) AS d` / `FROM fn(1) d`
-          val rest = sql.substring(close + 1)
-          val aliasM = raw"(?is)^\s*(?:AS\s+)?(\w+)".r.findFirstMatchIn(rest)
-          val hasAlias = aliasM.exists(am =>
-            !nonAliasFollowers.contains(am.group(1).toLowerCase)) ||
-            aliasM.exists(_ => raw"(?is)^\s*AS\s+".r.findFirstIn(rest).isDefined)
-          val alias = if (hasAlias) "" else s" AS ${key.split("\\.").last}"
-          out.append(sql.substring(idx, m.start))
-            .append(m.group(1)).append(" (").append(bodySub).append(")")
-            .append(alias)
-          idx = close + 1
-          changed = true
+      tableFunctions.get(key).map { fn => // other names: left for other rewrites
+        val close = SqlLex.close(cur, m.end - 1)
+        if (close < 0) throw new IllegalArgumentException(
+          s"unbalanced table function call: ${m.group(2)}(…")
+        val args = SqlLex.items(cur.substring(m.end, close))
+        if (args.length != fn.params.length) throw new IllegalArgumentException(
+          s"table function ${m.group(2)} takes ${fn.params.length} argument(s), " +
+            s"got ${args.length}")
+        // every parameter in one pass, so that an argument's text is
+        // never searched for another parameter's name
+        val bodySub = expandTableFunctions(if (fn.params.isEmpty) fn.body else {
+          val casts = fn.params.zip(args).map { case ((pName, pType), arg) =>
+            pName.toUpperCase(java.util.Locale.ROOT) -> s"CAST(($arg) AS $pType)"
+          }.toMap
+          val params = new SqlLex.Trigger(fn.params.map(p => java.util.regex.Pattern.quote(p._1))
+            .mkString(raw"(?i)\b(?:", "|", raw")\b").r, casts.keys.toSeq)
+          SqlLex.replaceOutside(params, fn.body)(pm =>
+            casts(pm.matched.toUpperCase(java.util.Locale.ROOT)))
+        }, depth + 1)
+        // trailing alias? `FROM fn(1) AS d` / `FROM fn(1) d`
+        val rest = cur.substring(close + 1)
+        val aliasM = tvfAliasRe.findFirstMatchIn(rest)
+        val hasAlias = aliasM.exists(am =>
+          !nonAliasFollowers.contains(am.group(1).toLowerCase)) ||
+          tvfAsRe.findFirstIn(rest).isDefined
+        val alias = if (hasAlias) "" else s" AS ${key.split("\\.").last}"
+        (m.start, close + 1, s"${m.group(1)} ($bodySub)$alias")
       }
     }
-    out.append(sql.substring(idx))
-    if (changed) expandTableFunctions(out.result(), depth + 1) else sql
   }
 
   /** CALL proc(args): IN/INOUT arguments evaluate in the CALLER's scope;
@@ -1459,8 +1452,7 @@ class ScriptRunner(spark: SparkSession) {
       val dest = destTableName(rawName.replace("`", ""))
       val or = if (orReplace != null) "OR REPLACE " else ""
       val i = if (ine != null) "IF NOT EXISTS " else ""
-      spark.sql(s"CREATE ${or}VIEW $i$dest AS " + Dialect.rewrite(substituteVars(
-        expandInformationSchema(expandWildcardTables(query)))))
+      spark.sql(s"CREATE ${or}VIEW $i$dest AS " + prep(query))
       // OPTIONS: description → view comment; other options are inert
       // service metadata (same policy as ALTER VIEW SET OPTIONS)
       Option(opts).foreach { o =>
@@ -1506,10 +1498,8 @@ class ScriptRunner(spark: SparkSession) {
       val head = rest.trim.split("\\s+").take(2).mkString(" ").toUpperCase
       head match {
         case "ADD COLUMN" =>
-          val addRe =
-            raw"(?is)^ADD\s+COLUMN\s+(IF\s+NOT\s+EXISTS\s+)?(`?[\w]+`?)\s+(.+)$$".r
           val adds = SqlLex.items(rest, angle = true).map {
-            case addRe(ine, c, tpe) =>
+            case addColRe(ine, c, tpe) =>
               (ine != null, c.replace("`", ""), sparkType(tpe.trim))
             case bad => throw new IllegalArgumentException(
               s"malformed ADD COLUMN clause: $bad")
@@ -1525,7 +1515,6 @@ class ScriptRunner(spark: SparkSession) {
             spark.sql(s"ALTER TABLE $dest ADD COLUMNS (" +
               todo.map { case (_, c, t) => s"${quote(c)} $t" }.mkString(", ") + ")")
         case "RENAME COLUMN" =>
-          val rnRe = raw"(?is)^RENAME\s+COLUMN\s+(`?[\w]+`?)\s+TO\s+(`?[\w]+`?)\s*;?\s*$$".r
           rest.trim match {
             case rnRe(from0, to0) =>
               val (from, to) = (from0.replace("`", ""), to0.replace("`", ""))
@@ -1539,9 +1528,8 @@ class ScriptRunner(spark: SparkSession) {
               s"malformed RENAME COLUMN: $bad")
           }
         case "DROP COLUMN" =>
-          val dropRe = raw"(?is)^DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?(`?[\w]+`?)\s*$$".r
           val drops = SqlLex.items(rest).map {
-            case dropRe(ie, c) => (ie != null, c.replace("`", ""))
+            case dropColRe(ie, c) => (ie != null, c.replace("`", ""))
             case bad => throw new IllegalArgumentException(
               s"malformed DROP COLUMN clause: $bad")
           }
@@ -1566,7 +1554,7 @@ class ScriptRunner(spark: SparkSession) {
           // elimination, never validated), so accepting-and-dropping
           // preserves every observable result. ENFORCED stays loud —
           // BigQuery rejects it too.
-          if (raw"(?is)\bNOT\s+ENFORCED\s*;?\s*$$".r.findFirstIn(rest).isEmpty)
+          if (notEnforcedRe.findFirstIn(rest).isEmpty)
             throw new IllegalArgumentException(
               "only NOT ENFORCED table constraints are supported " +
                 "(BigQuery enforces none either)")
@@ -1577,8 +1565,6 @@ class ScriptRunner(spark: SparkSession) {
           // (BigQuery allows widening; the cast fails loud on narrowing
           // data); DROP NOT NULL is a no-op here (parquet columns are
           // nullable already); other forms fail loud
-          val typeRe = raw"(?is)^ALTER\s+COLUMN\s+(IF\s+EXISTS\s+)?(`?[\w]+`?)\s+SET\s+DATA\s+TYPE\s+(.+?)\s*;?\s*$$".r
-          val dropNnRe = raw"(?is)^ALTER\s+COLUMN\s+(IF\s+EXISTS\s+)?(`?[\w]+`?)\s+DROP\s+NOT\s+NULL\s*;?\s*$$".r
           rest.trim match {
             case typeRe(ie, c0, tpe) =>
               val cName = c0.replace("`", "")
@@ -1608,7 +1594,7 @@ class ScriptRunner(spark: SparkSession) {
           // renames within the same database
           val newName = rest.trim.stripPrefix("RENAME").trim.stripPrefix("TO")
             .trim.stripSuffix(";").trim.replace("`", "")
-          require(raw"^[\w]+$$".r.matches(newName),
+          require(bareNameRe.matches(newName),
             s"RENAME TO expects a bare table name, got: $newName")
           val db = dest.split("\\.").dropRight(1).mkString(".")
           val target = if (db.isEmpty) newName else s"$db.$newName"
@@ -1663,26 +1649,6 @@ class ScriptRunner(spark: SparkSession) {
         spark.sql(s"CREATE TABLE $i$dest USING PARQUET AS SELECT * FROM $src")
       scala.None
     case other => throw new IllegalArgumentException(s"malformed CREATE TABLE: $other")
-  }
-
-  /** Word-boundary parameter substitution that skips string literals —
-    * a TVF parameter named `lo` must not rewrite the text of a literal
-    * like 'lo and behold' in the function body.
-    */
-  private def substituteOutsideLiterals(body: String, name: String,
-      replacement: String): String = {
-    lazy val spans = SqlLex.spans(body)
-    val re = raw"(?i)\b${java.util.regex.Pattern.quote(name)}\b".r
-    val sb = new StringBuilder
-    var idx = 0
-    re.findAllMatchIn(body).foreach { m =>
-      if (!spans.inLiteral(m.start)) {
-        sb.append(body.substring(idx, m.start)).append(replacement)
-        idx = m.end
-      }
-    }
-    sb.append(body.substring(idx))
-    sb.result()
   }
 
   private def runSimpleStatement(stmt: String): Option[DataFrame] = stmt match {
@@ -1867,22 +1833,17 @@ class ScriptRunner(spark: SparkSession) {
       }
       val ine = if (ifNotExists != null) "IF NOT EXISTS " else ""
       val (part, comment) = parseCreateTail(Option(tail).getOrElse(""))
-      spark.sql(s"CREATE TABLE $ine$dest USING PARQUET$part$comment AS " +
-        Dialect.rewrite(substituteVars(
-          expandInformationSchema(expandWildcardTables(query)))))
+      spark.sql(s"CREATE TABLE $ine$dest USING PARQUET$part$comment AS " + prep(query))
       None
     case ct if createColsHeadRe.findFirstIn(ct.trim).isDefined =>
       runCreateColsTable(ct.trim)
     case createTempRe(n1, q1, n2, q2) =>
       val (name, query) = if (n1 != null) (n1, q1) else (n2, q2)
       val viewName = name.split("\\.").last // temp views are single-part
-      spark.sql(Dialect.rewrite(substituteVars(
-        expandInformationSchema(expandWildcardTables(query)))))
-        .createOrReplaceTempView(viewName)
+      spark.sql(prep(query)).createOrReplaceTempView(viewName)
       None
     case other =>
-      Some(spark.sql(Dialect.rewrite(substituteVars(
-        expandInformationSchema(expandWildcardTables(other))))))
+      Some(spark.sql(prep(other)))
   }
 
   /** BigQuery CREATE TABLE tail clauses (between the name/column list
@@ -1897,17 +1858,15 @@ class ScriptRunner(spark: SparkSession) {
     var rest = tail.trim
     if (rest.isEmpty) return ("", "")
     var partExpr: Option[String] = scala.None
-    raw"(?is)^PARTITION\s+BY\s+(.+?)\s*(?=CLUSTER\s+BY\b|OPTIONS\s*\(|$$)".r
-      .findFirstMatchIn(rest).foreach { mm =>
-        partExpr = Some(mm.group(1).trim)
-        rest = rest.substring(mm.group(0).length).trim
-      }
-    raw"(?is)^CLUSTER\s+BY\s+(.+?)\s*(?=OPTIONS\s*\(|$$)".r
-      .findFirstMatchIn(rest).foreach { mm =>
-        rest = rest.substring(mm.group(0).length).trim // layout-only
-      }
+    partitionByRe.findFirstMatchIn(rest).foreach { mm =>
+      partExpr = Some(mm.group(1).trim)
+      rest = rest.substring(mm.group(0).length).trim
+    }
+    clusterByRe.findFirstMatchIn(rest).foreach { mm =>
+      rest = rest.substring(mm.group(0).length).trim // layout-only
+    }
     var comment = ""
-    raw"(?is)^OPTIONS\s*\((.*)\)\s*$$".r.findFirstMatchIn(rest).foreach { mm =>
+    optionsTailRe.findFirstMatchIn(rest).foreach { mm =>
       comment = optionRe.findAllMatchIn(mm.group(1))
         .find(_.group(1).equalsIgnoreCase("description"))
         .map(om => s" COMMENT ${om.group(2).replace("''", "'")}").getOrElse("")
@@ -1915,8 +1874,8 @@ class ScriptRunner(spark: SparkSession) {
     }
     require(rest.isEmpty, s"unrecognized CREATE TABLE tail: $rest")
     val partClause = partExpr match {
-      case Some(p) if raw"(?is)^[\w]+$$".r.matches(p) => s" PARTITIONED BY ($p)"
-      case Some(p) if raw"(?is)^[\w.]+\s*\(.*\)$$".r.matches(p) =>
+      case Some(p) if bareNameRe.matches(p) => s" PARTITIONED BY ($p)"
+      case Some(p) if partitionCallRe.matches(p) =>
         "" // expression partitioning (DATE(ts), RANGE_BUCKET): layout-only
       case Some(p) => throw new IllegalArgumentException(
         s"unrecognized PARTITION BY expression: $p")
@@ -1972,9 +1931,7 @@ class ScriptRunner(spark: SparkSession) {
     // a tail that is not BigQuery's (e.g. Spark's own `USING parquet`)
     // — or no tail and no query — passes through unchanged, as before;
     // OR REPLACE still needs the drop (v1 catalogs reject REPLACE TABLE)
-    val bqTail = tail0.isEmpty ||
-      raw"(?is)^(?:PARTITION\s+BY\b|CLUSTER\s+BY\b|OPTIONS\s*\()".r
-        .findFirstIn(tail0).isDefined
+    val bqTail = tail0.isEmpty || bqTailHeadRe.findFirstIn(tail0).isDefined
     if (orReplace || isTemp) {
       // TEMP always drops first: BigQuery scopes temp tables to the
       // script, so a fresh script creating the same temp name must not
@@ -2037,9 +1994,7 @@ class ScriptRunner(spark: SparkSession) {
       // commas inside `STRUCT<x INT64, y STRING>` stay in one definition
       val names = SqlLex.items(colsText, angle = true)
         .map(_.split("\\s+")(0).replace("`", ""))
-      spark.sql(s"INSERT INTO $dest (${names.mkString(", ")}) " +
-        Dialect.rewrite(substituteVars(
-          expandInformationSchema(expandWildcardTables(q)))))
+      spark.sql(s"INSERT INTO $dest (${names.mkString(", ")}) " + prep(q))
     }
     scala.None
   }
@@ -2057,10 +2012,7 @@ class ScriptRunner(spark: SparkSession) {
     * are excluded — BigQuery's view is per-dataset.
     */
   private def expandInformationSchema(sql: String): String =
-    infoSchemaRe.replaceAllIn(sql, m => {
-      if (inSqlLiteral(sql, m.start))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
+    SqlLex.replaceOutside(infoSchemaRe, sql) { m =>
       val qualifier = m.group(1)
       val parts = qualifier.split("\\.")
       val (cat, schema) = if (parts.length == 2) (parts(0), parts(1)) else ("", parts(0))
@@ -2090,15 +2042,9 @@ class ScriptRunner(spark: SparkSession) {
           }
           (header, vs.toSeq, "('', '', '', '', 0, '', '')")
       }
-      val body =
-        if (rows._2.nonEmpty) s"(SELECT * FROM (VALUES ${rows._2.mkString(", ")}) AS ${rows._1})"
-        else s"(SELECT * FROM (VALUES ${rows._3}) AS ${rows._1} WHERE FALSE)"
-      java.util.regex.Matcher.quoteReplacement(body)
-      }
-    })
-
-  private def inSqlLiteral(sql: String, pos: Int): Boolean =
-    sqlStringLit.findAllMatchIn(sql).exists(m => pos >= m.start && pos < m.end)
+      if (rows._2.nonEmpty) s"(SELECT * FROM (VALUES ${rows._2.mkString(", ")}) AS ${rows._1})"
+      else s"(SELECT * FROM (VALUES ${rows._3}) AS ${rows._1} WHERE FALSE)"
+    }
 
   /** BigQuery wildcard (sharded) tables: `` `proj.ds.events_*` `` scans
     * every table whose name starts with the prefix and exposes the rest
@@ -2109,14 +2055,8 @@ class ScriptRunner(spark: SparkSession) {
     * prunes those scans entirely (the sharded-table analog of partition
     * pruning; shards must share a schema).
     */
-  private def expandWildcardTables(sql0: String): String = {
-    // TVF expansion rides the same statement-prep chain: every site
-    // that expands wildcards also wants `FROM fn(args)` inlined
-    val sql = expandTableFunctions(sql0)
-    val out = wildcardTableRe.replaceAllIn(sql, m => {
-      if (inSqlLiteral(sql, m.start))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
+  private def expandWildcardTables(sql: String): String =
+    SqlLex.replaceOutside(wildcardTableRe, sql) { m =>
       val full = m.group(1)
       val parts = full.split("\\.")
       val (db, tableGlob) = parts match {
@@ -2135,24 +2075,18 @@ class ScriptRunner(spark: SparkSession) {
           val suffix = t.substring(prefix.length).replace("'", "''")
           s"SELECT *, '$suffix' AS _TABLE_SUFFIX FROM $db.$t"
         }
-        java.util.regex.Matcher.quoteReplacement(
-          s"(${branches.mkString(" UNION ALL ")})")
+        s"(${branches.mkString(" UNION ALL ")})"
       }
-      }
-    })
-    // TVF bodies and wildcard expansions may surface auto-refresh
-    // external tables the pre-expansion scan could not see — re-run the
-    // freshness pass on the expanded text (no-op when nothing expanded
-    // or the registry is empty)
-    if (out != sql0) ExternalTables.refreshReferenced(spark, out)
-    out
-  }
+    }
 }
 
 /** The statement shapes [[ScriptRunner]] dispatches on, compiled once per
   * JVM rather than once per runner.
   */
 object ScriptRunner {
+
+  /** Declares a trigger of this object, for the gate spec. */
+  private val trigger = new SqlLex.Triggers
 
   private val declareRe =
     raw"(?is)^DECLARE\s+(\w+)\s+([\w<>,() ]+?)(?:\s+DEFAULT\s+(.+))?$$".r
@@ -2198,6 +2132,7 @@ object ScriptRunner {
   private val createProcRe =
     raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?PROCEDURE\s+(IF\s+NOT\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*\((.*?)\)\s*(?:OPTIONS\s*\([^)]*\)\s*)?(BEGIN\b.*END)\s*$$".r
 
+  private val procParamRe = raw"(?is)^(?:(IN|OUT|INOUT)\s+)?(\w+)\s+(.+)$$".r
   private val callRe = raw"(?is)^CALL\s+(`[\w.-]+`|[\w.-]+)\s*\((.*)\)\s*$$".r
 
   private val dropProcRe =
@@ -2226,14 +2161,14 @@ object ScriptRunner {
   // keyword after END, and a BREAK/CONTINUE's label
   private val forHeadRe = raw"(?is)^FOR\s+(\w+)\s+IN\s*\(".r
   private val exceptionHeadRe = raw"(?is)^EXCEPTION\s+WHEN\s+ERROR\s+THEN\b".r
-  private val exceptionClauseRe = raw"(?is)\bEXCEPTION\s+WHEN\s+ERROR\s+THEN\b".r
+  private val exceptionClauseRe =
+    trigger(raw"(?is)\bEXCEPTION\s+WHEN\s+ERROR\s+THEN\b", "EXCEPTION")
   private val endBlockRe = raw"(?is)^END\s+(IF|WHILE|LOOP|FOR|REPEAT|CASE)".r
   private val loopJumpLabelRe =
     raw"(?is)^\s*(?:BREAK|LEAVE|CONTINUE|ITERATE)\s+([A-Za-z_]\w*)\s*;?\s*$$".r
 
   // the system variables an EXCEPTION handler reads
-  private val errorMessageRe = raw"(?i)@@error\.message".r
-  private val errorStatementRe = raw"(?i)@@error\.statement_text".r
+  private val errorVarRe = trigger(raw"(?i)@@error\.(message|statement_text)", "@@ERROR.")
 
   // one quoted entry of an OPTIONS uris list
   private val quotedUriRe = raw"'((?:[^']|'')*)'".r
@@ -2265,7 +2200,19 @@ object ScriptRunner {
   private val loadDataRe =
     raw"(?is)^LOAD\s+DATA\s+(INTO|OVERWRITE)\s+(`[^`]+`|[\w.\-]+)\s*(?:\(([^)]*)\)\s*)?FROM\s+FILES\s*\((.*)\)\s*$$".r
 
-  private val urisRe = raw"(?is)uris\s*=\s*\[(.*?)\]".r
+  private val urisRe = trigger(raw"(?is)uris\s*=\s*\[(.*?)\]", "URIS")
+
+  /** The body of the first `uris=[…]` outside literals and comments, the
+    * one the OPTIONS strip removes.
+    */
+  private[engine] def urisBody(optsText: String): Option[String] = {
+    var body: Option[String] = None
+    SqlLex.spliceOutside(urisRe, optsText) { (_, m) =>
+      if (body.isEmpty) body = Some(m.group(1))
+      None
+    }
+    body
+  }
 
   private val raiseMsgRe = raw"(?is)^RAISE\s+USING\s+MESSAGE\s*=\s*(.+?)\s*$$".r
 
@@ -2273,6 +2220,7 @@ object ScriptRunner {
     raw"(?is)^ASSERT\s+(.+?)(?:\s+AS\s+('(?:[^'\\]|\\.)*'))?\s*$$".r
 
   private val executeImmediateRe = raw"(?is)^EXECUTE\s+IMMEDIATE\s+(.+)$$".r
+  private val usingAsRe = raw"(?is)^(.+?)\s+AS\s+(\w+)$$".r
 
   private val createTvfRe =
     raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+FUNCTION\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(([^)]*)\)\s*(?:RETURNS\s+TABLE\s*<[^>]*>\s*)?(?:OPTIONS\s*\([^)]*\)\s*)?AS\s+(.+)$$".r
@@ -2282,7 +2230,13 @@ object ScriptRunner {
 
   // a TVF reference: FROM/JOIN <name> ( … ) — the arg list is balance-
   // parsed from the open paren, so expressions with nested calls work
-  private val tvfRefRe = raw"(?is)\b(FROM|JOIN)\s+(`[^`]+`|[\w.$$\-]+)\s*\(".r
+  private val tvfRefRe =
+    trigger(raw"(?is)\b(FROM|JOIN)\s+(`[^`]+`|[\w.$$\-]+)\s*\(", "FROM", "JOIN")
+  private val tvfAliasRe = raw"(?is)^\s*(?:AS\s+)?(\w+)".r
+  private val tvfAsRe = raw"(?is)^\s*AS\s+".r
+
+  // a materialized view's FROM <table>, for the incremental contract
+  private val mvFromRe = trigger(raw"(?is)\bFROM\s+(`[^`]+`|[\w.\-]+)", "FROM")
 
   private val schemaDdlRe =
     raw"(?is)^(CREATE|DROP)\s+SCHEMA\s+(IF\s+(?:NOT\s+)?EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*(?:OPTIONS\s*\((.*?)\)\s*)?(CASCADE\s*)?;?\s*$$".r
@@ -2292,6 +2246,25 @@ object ScriptRunner {
 
   private val dropViewRe =
     raw"(?is)^DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
+
+  // ALTER TABLE column clauses
+  private val addColRe = raw"(?is)^ADD\s+COLUMN\s+(IF\s+NOT\s+EXISTS\s+)?(`?[\w]+`?)\s+(.+)$$".r
+  private val rnRe = raw"(?is)^RENAME\s+COLUMN\s+(`?[\w]+`?)\s+TO\s+(`?[\w]+`?)\s*;?\s*$$".r
+  private val dropColRe = raw"(?is)^DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?(`?[\w]+`?)\s*$$".r
+  private val notEnforcedRe = raw"(?is)\bNOT\s+ENFORCED\s*;?\s*$$".r
+  private val typeRe =
+    raw"(?is)^ALTER\s+COLUMN\s+(IF\s+EXISTS\s+)?(`?[\w]+`?)\s+SET\s+DATA\s+TYPE\s+(.+?)\s*;?\s*$$".r
+  private val dropNnRe =
+    raw"(?is)^ALTER\s+COLUMN\s+(IF\s+EXISTS\s+)?(`?[\w]+`?)\s+DROP\s+NOT\s+NULL\s*;?\s*$$".r
+  private val bareNameRe = raw"\w+".r
+
+  // CREATE TABLE tail clauses
+  private val partitionByRe =
+    raw"(?is)^PARTITION\s+BY\s+(.+?)\s*(?=CLUSTER\s+BY\b|OPTIONS\s*\(|$$)".r
+  private val clusterByRe = raw"(?is)^CLUSTER\s+BY\s+(.+?)\s*(?=OPTIONS\s*\(|$$)".r
+  private val optionsTailRe = raw"(?is)^OPTIONS\s*\((.*)\)\s*$$".r
+  private val partitionCallRe = raw"(?is)^[\w.]+\s*\(.*\)$$".r
+  private val bqTailHeadRe = raw"(?is)^(?:PARTITION\s+BY\b|CLUSTER\s+BY\b|OPTIONS\s*\()".r
 
   private val alterTableRe =
     raw"(?is)^ALTER\s+TABLE\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s+((?:ADD|RENAME|DROP|ALTER)\s+COLUMN\b.*|RENAME\s+TO\b.*|SET\s+OPTIONS\b.*|ADD\s+(?:CONSTRAINT\b|PRIMARY\s+KEY|FOREIGN\s+KEY).*|DROP\s+(?:CONSTRAINT\b.*|PRIMARY\s+KEY.*))$$".r
@@ -2313,10 +2286,12 @@ object ScriptRunner {
   private val createColsHeadRe =
     raw"(?is)^CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*\(".r
 
-  private val infoSchemaRe =
-    raw"(?i)`?([\w-]+(?:\.[\w-]+)?)\.INFORMATION_SCHEMA\.(TABLES|COLUMNS)`?".r
+  private val infoSchemaRe = trigger(
+    raw"(?i)`?([\w-]+(?:\.[\w-]+)?)\.INFORMATION_SCHEMA\.(TABLES|COLUMNS)`?",
+    "INFORMATION_SCHEMA")
 
-  private val wildcardTableRe = raw"`([\w][\w.-]*\*)`".r
+  private val wildcardTableRe = trigger(raw"`([\w][\w.-]*\*)`", "*`")
 
-  private val sqlStringLit = raw"'(?:[^'\\]|\\.)*'".r
+  /** Every trigger the object declares, for the gate spec. */
+  private[engine] lazy val triggers: Seq[SqlLex.Trigger] = trigger.all
 }

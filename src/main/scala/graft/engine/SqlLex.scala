@@ -13,8 +13,110 @@ package graft.engine
   * also nests `<`/`>`. Raw, triple-quoted and bytes literals are not in
   * this grammar: [[Dialect.normalizeLiteralForms]] rewrites them to plain
   * literals before any other pass runs.
+  *
+  * Every regex edit of SQL text in the engine goes through one of two
+  * loops, which alone decide that a match starting inside a literal or
+  * comment is left alone: [[spliceOutside]] for a pass that rewrites a
+  * construct and must know where to go on, [[replaceOutside]] for a
+  * one-to-one swap. Both take a [[Trigger]], the regex paired with its
+  * anchors: upper-case strings of which every match contains at least
+  * one. The loops return the text untouched, with no regex run and no
+  * lexing, when none of the anchors is in it ([[absent]]). A pattern
+  * built from a runtime name takes that name as its anchor (`@A`,
+  * `REC.N`, `S.`).
   */
 object SqlLex {
+
+  import scala.util.matching.Regex
+
+  /** A pass's trigger regex and its anchors (see the header). */
+  final class Trigger(val re: Regex, val anchors: Seq[String]) {
+    require(anchors.nonEmpty && anchors.forall(a =>
+      a.nonEmpty && a == a.toUpperCase(java.util.Locale.ROOT)), re.regex)
+  }
+
+  /** The static triggers an object declares, collected for the gate
+    * spec: `apply` compiles and enrols one, `all` lists them.
+    */
+  final class Triggers {
+    private val declared = Vector.newBuilder[Trigger]
+    def apply(pattern: String, anchors: String*): Trigger = {
+      val t = new Trigger(pattern.r, anchors)
+      declared += t
+      t
+    }
+    lazy val all: Seq[Trigger] = declared.result()
+  }
+
+  /** The name `name` as a whole, anchored at itself: a word boundary
+    * guards each end that is a word character (`rec.n`, `@a`, `S.`).
+    */
+  def nameTrigger(name: String, ignoreCase: Boolean = false): Trigger = {
+    def edge(c: Char) = if (isWordChar(c)) raw"\b" else ""
+    new Trigger(((if (ignoreCase) "(?i)" else "") + edge(name.head) +
+      java.util.regex.Pattern.quote(name) + edge(name.last)).r,
+      Seq(name.toUpperCase(java.util.Locale.ROOT)))
+  }
+
+  // the upper-cased copy of the last text a gate read, per thread: a pass
+  // that changes nothing hands on the same instance, so a run of skipped
+  // passes upper-cases the text once
+  private val lastUpper = ThreadLocal.withInitial[(String, String)](() => (null, ""))
+
+  /** True when none of `anchors` is in `text`, case-insensitively. */
+  def absent(text: String, anchors: String*): Boolean = {
+    val (seen, up) = lastUpper.get
+    val u = if (seen eq text) up else {
+      val fresh = text.toUpperCase(java.util.Locale.ROOT)
+      lastUpper.set((text, fresh))
+      fresh
+    }
+    !anchors.exists(u.contains)
+  }
+
+  /** The one loop of the passes that rewrite a construct. Each match of
+    * `t`'s regex that starts outside every literal and comment goes to
+    * `f`, which returns a splice `(from, until, text)` or declines. After
+    * a splice the search resumes at `from` on the new text, so a
+    * construct nested in the spliced text rewrites too, and `f` must
+    * decline its own output. After a decline it resumes just past the
+    * match; after a match inside a literal or comment, one character on.
+    * A scan that only reads the matches declines them all.
+    */
+  def spliceOutside(t: Trigger, sql: String)(
+      f: (String, Regex.Match) => Option[(Int, Int, String)]): String = {
+    if (absent(sql, t.anchors: _*)) return sql
+    var cur = sql
+    var spans: Spans = null // lexed at the first match of each text
+    val mt = t.re.pattern.matcher(cur)
+    var pos = 0
+    while (mt.find(pos)) {
+      if (spans == null) spans = SqlLex.spans(cur)
+      if (spans.inLiteralOrComment(mt.start)) pos = mt.start + 1
+      else f(cur, new Regex.Match(cur, mt, Nil).force) match {
+        case Some((from, until, text)) =>
+          cur = cur.substring(0, from) + text + cur.substring(until)
+          spans = null
+          mt.reset(cur)
+          pos = from
+        case None => pos = math.max(mt.end, mt.start + 1)
+      }
+    }
+    cur
+  }
+
+  /** `re.replaceAllIn` that keeps every match starting inside a literal or
+    * comment as it is; `f` gives the literal replacement text of the
+    * others, which is not searched again. A text with no match comes
+    * back as the same instance.
+    */
+  def replaceOutside(t: Trigger, sql: String)(f: Regex.Match => String): String = {
+    if (absent(sql, t.anchors: _*)) return sql
+    if (!t.re.pattern.matcher(sql).find()) return sql
+    lazy val spans = SqlLex.spans(sql)
+    t.re.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
+      if (spans.inLiteralOrComment(m.start)) m.matched else f(m)))
+  }
 
   /** End (exclusive) of the literal, backticked name or comment that
     * starts at `i`, or -1 when none starts there.

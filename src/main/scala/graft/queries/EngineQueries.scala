@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,6 +9,7 @@ import graft.core.config.{LoadMethod, TaskConfig}
 import graft.core.macros.AssetCompiler
 import graft.core.window.CustomWindow
 import graft.engine.{DmlRunner, Lineage, MetricsCollector, ScriptRunner, TransformRunner}
+import graft.streaming.StreamingOps.Scratch
 
 /** End-to-end flows through the engine layer (SURVEY §2A operators
   * A1–A27): each query seeds a destination table in a fresh temp
@@ -31,7 +31,7 @@ object EngineQueries {
   /** fresh database at a fresh temp location (no stale files). */
   private def freshDb(s: SparkSession, db: String): Unit = {
     s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    val loc = Files.createTempDirectory(s"graft_$db").toAbsolutePath.toString
+    val loc = Scratch.onDisk(s"graft_$db")
     s.sql(s"CREATE DATABASE $db LOCATION '$loc'")
   }
 
@@ -68,10 +68,10 @@ object EngineQueries {
     Tables.views(s, d, "orders", "customer")
     fixtureOnce(s, "graft__pg16", d) {
       t(s, d, "orders").write.bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", Files.createTempDirectory("b_orders").toString)
+        .option("path", Scratch.onDisk("b_orders"))
         .mode("overwrite").saveAsTable("graft__pg16.orders_b")
       t(s, d, "customer").write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", Files.createTempDirectory("b_cust").toString)
+        .option("path", Scratch.onDisk("b_cust"))
         .mode("overwrite").saveAsTable("graft__pg16.customer_b")
     }
     val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -496,7 +496,7 @@ object EngineQueries {
     //     equivalent of the gsheet-backed table + JS temp function in
     //     samples/tasks/select/federated_table/query.sql) --------------
     "e12_external_source_udf" -> { (s, d) =>
-      val csvDir = Files.createTempDirectory("graft_ext").toAbsolutePath
+      val csvDir = Scratch.onDisk("graft_ext")
       t(s, d, "documents").select(col("doc_id"), col("lang"), col("source"))
         .coalesce(1).write.mode("overwrite").option("header", "true")
         .csv(csvDir.toString)
@@ -589,7 +589,7 @@ object EngineQueries {
       // The JSON sibling of e12's CSV external table: explicit schema
       // (no inference scan at 100 TB), a nested struct field navigated
       // with dot syntax, and a filter on the nested field.
-      val jsonDir = Files.createTempDirectory("graft_json").toAbsolutePath
+      val jsonDir = Scratch.onDisk("graft_json")
       t(s, d, "documents")
         .select(col("doc_id"), struct(col("lang"), col("source")).as("meta"),
           col("n_chars"))
@@ -609,7 +609,7 @@ object EngineQueries {
       // Third external-table format: ORC with explicit schema — like
       // parquet, a columnar source whose predicate pushdown and column
       // pruning reach the stripe reader.
-      val orcDir = Files.createTempDirectory("graft_orc").toAbsolutePath
+      val orcDir = Scratch.onDisk("graft_orc")
       t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .coalesce(1).write.mode("overwrite").orc(orcDir.toString)
@@ -1870,7 +1870,7 @@ object EngineQueries {
       Tables.views(s, d, "nation")
       val sr = new ScriptRunner(s)
       sr.run("DROP SCHEMA IF EXISTS `graft.pg67` CASCADE")
-      val pg67loc = Files.createTempDirectory("graft_pg67").toAbsolutePath
+      val pg67loc = Scratch.onDisk("graft_pg67")
       sr.run(
         s"""CREATE SCHEMA `graft.pg67` OPTIONS(location = '$pg67loc');
           |CREATE TABLE `graft.pg67.t`
@@ -2033,7 +2033,7 @@ object EngineQueries {
       // dataset location option (fresh temp dir — same staleness
       // discipline as freshDb: a prior JVM's warehouse leftovers must
       // not shadow this run's table)
-      val pg62loc = Files.createTempDirectory("graft_pg62").toAbsolutePath
+      val pg62loc = Scratch.onDisk("graft_pg62")
       sr.run(
         s"""CREATE SCHEMA `graft.pg62` OPTIONS(description = 'pack-8 vocab', location = '$pg62loc');
           |CREATE TABLE `graft.pg62.acct` AS
@@ -2500,7 +2500,7 @@ object EngineQueries {
     // --- EXPORT DATA: write-out + read-back round trip -----------------
     "e35_export_data" -> { (s, d) =>
       Tables.views(s, d, "orders")
-      val dir = Files.createTempDirectory("graft_e35").toString
+      val dir = Scratch.onDisk("graft_e35")
       new ScriptRunner(s).run(
         s"""EXPORT DATA OPTIONS(uri='$dir/out/part-*.csv', format='CSV',
            |  header=true, overwrite=true) AS
@@ -2524,7 +2524,7 @@ object EngineQueries {
       // only the row count touches the driver.
       Tables.views(s, d, "nation")
       freshDb(s, "graft__pg53")
-      val dir = Files.createTempDirectory("graft_e53").toString
+      val dir = Scratch.onDisk("graft_e53")
       new ScriptRunner(s).run(
         s"""EXPORT DATA OPTIONS(uri='$dir/nat/part-*.csv', format='CSV',
            |  header=true, overwrite=true) AS
@@ -2547,7 +2547,7 @@ object EngineQueries {
       // time, never at DDL time.
       Tables.views(s, d, "region")
       freshDb(s, "graft__pg54")
-      val dir = Files.createTempDirectory("graft_e54").toString
+      val dir = Scratch.onDisk("graft_e54")
       new ScriptRunner(s).run(
         s"""EXPORT DATA OPTIONS(uri='$dir/reg/part-*.csv', format='CSV',
            |  header=true, overwrite=true) AS

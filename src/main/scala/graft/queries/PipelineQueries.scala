@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.streaming.StreamingOps.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -3777,13 +3778,12 @@ object PipelineQueries {
     builtLshIdx.synchronized {
       if (!builtLshIdx.contains(key)) {
         s.sql("DROP DATABASE IF EXISTS graft__pidx CASCADE")
-        val loc = java.nio.file.Files.createTempDirectory("graft_pidx")
+        val loc = Scratch.onDisk("graft_pidx")
         s.sql(s"CREATE DATABASE graft__pidx LOCATION '$loc'")
         val (history, _) = incrementalDedupInputs(s, d)
         lshBands(history).withColumnRenamed("doc_id", "hist_id")
           .write.bucketBy(8, "band", "bh").sortBy("band", "bh")
-          .option("path",
-            java.nio.file.Files.createTempDirectory("lsh_idx").toString)
+          .option("path", Scratch.onDisk("lsh_idx"))
           .mode("overwrite").saveAsTable("graft__pidx.lsh_index")
         builtLshIdx.add(key)
       }

@@ -22,28 +22,37 @@ object StreamingOps {
     * a JVM-lifetime root on `/dev/shm` (tmpfs) when writable — per-
     * micro-batch checkpoint I/O is pure fixed cost in a bounded local
     * run and never needs to survive the JVM — falling back to the
-    * default temp dir otherwise. `once` builds a keyed fixture a single
-    * time per JVM (e.g. the split source files a replay streams from).
+    * default temp dir otherwise. `onDisk` hands out directories under a
+    * second root in the default temp dir, for the gates' catalog
+    * fixtures (database and dataset locations, external table files,
+    * export targets), which stay on disk. Both roots and all under them
+    * are deleted when the JVM exits. `once` builds a keyed fixture a
+    * single time per JVM (e.g. the split source files a replay streams
+    * from).
     */
-  private object Scratch {
-    private lazy val root: java.nio.file.Path = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val base =
-        if (java.nio.file.Files.isWritable(shm)) shm
-        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val d = java.nio.file.Files.createTempDirectory(base, "graft_stream_")
+  private[graft] object Scratch {
+    private val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    private def rootAt(base: java.nio.file.Path, prefix: String): java.nio.file.Path = {
+      val d = java.nio.file.Files.createTempDirectory(base, prefix)
       // deleteOnExit cannot remove a non-empty directory: drop the tree
       sys.addShutdownHook {
         try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
         catch {
           case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[stream] could not delete scratch root $d: $e")
+            System.err.println(s"[scratch] could not delete scratch root $d: $e")
         }
       }
       d
     }
+    private lazy val root: java.nio.file.Path = {
+      val shm = java.nio.file.Paths.get("/dev/shm")
+      rootAt(if (java.nio.file.Files.isWritable(shm)) shm else tmp, "graft_stream_")
+    }
+    private lazy val diskRoot = rootAt(tmp, "graft_fixtures_")
     def fresh(prefix: String): String =
       java.nio.file.Files.createTempDirectory(root, prefix).toString
+    def onDisk(prefix: String): String =
+      java.nio.file.Files.createTempDirectory(diskRoot, prefix).toString
     private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def once(key: String)(build: String => Unit): String =
       built.computeIfAbsent(key, { k =>

@@ -403,4 +403,42 @@ class DialectFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Dialect.rewrite(sql, mapFqns = false) == sql)
     }
   }
+
+  /** Samples of the runners' text sites: the static triggers of
+    * [[ScriptRunner]] and the per-name patterns of the FOR, EXECUTE
+    * IMMEDIATE, TVF and MERGE/DELETE alias edits.
+    */
+  private val runnerSamples = Seq("@@error.message", "EXCEPTION WHEN ERROR THEN",
+    "uris = ['gs://b/*.csv']", "FROM ds.t", "JOIN f(", "ds.INFORMATION_SCHEMA.TABLES",
+    "`ds.ev_*`", "@a", "rec.n", "S.k", "lo")
+
+  test("runner text sites: anchors hold, planted literals and comments come back byte for byte") {
+    val sites = ScriptRunner.triggers ++ Seq(SqlLex.nameTrigger("@a"),
+      SqlLex.nameTrigger("rec.n"), SqlLex.nameTrigger("S.", ignoreCase = true),
+      SqlLex.nameTrigger("lo", ignoreCase = true))
+    // noise that opens no region and joins no match across one
+    val safe = Vector("a", "z", "0", " ", ",", "(", ")", "[", "]", "$")
+    def noise = (1 to 1 + rnd.nextInt(4)).map(_ => safe(rnd.nextInt(safe.size))).mkString
+    sites.foreach { t =>
+      val samples = runnerSamples.filter(t.re.findFirstIn(_).isDefined)
+      assert(samples.nonEmpty, s"no sample sets off ${t.re}")
+      for (_ <- 1 to 5; sample <- samples) {
+        val regions = Seq(s"'${esc(sample)}'", "\"" + escDq(sample) + "\"",
+          s"-- $sample\n", s"/* $sample */")
+        val text = regions.map(noise + " " + _).mkString + s" $sample " + noise
+        t.re.findAllMatchIn(text).foreach { m =>
+          assert(t.anchors.exists(m.matched.toUpperCase(java.util.Locale.ROOT).contains),
+            s"match '${m.matched}' of ${t.re} holds none of ${t.anchors}")
+        }
+        val out = SqlLex.replaceOutside(t, text)(_ => "<X>")
+        regions.foreach(r => assert(out.contains(r), s"$r rewritten in: $out"))
+        assert(out.contains(" <X>"), s"the code copy of $sample kept in: $out")
+        val spliced = SqlLex.spliceOutside(t, text)((_, m) => Some((m.start, m.end, "<X>")))
+        assert(spliced == out, s"the two loops disagree on: $text")
+      }
+    }
+    // the uris list an OPTIONS clause reads is the one its strip removes
+    val opts = "description='uris=[x]', uris=['gs://b/*.csv'] /* uris=[y] */"
+    assert(ScriptRunner.urisBody(opts).contains("'gs://b/*.csv'"))
+  }
 }

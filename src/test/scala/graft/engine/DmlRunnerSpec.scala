@@ -546,4 +546,23 @@ class DmlRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got == expected, withComma)
     }
   }
+
+  test("MERGE INSERT keeps the source alias inside a VALUES literal") {
+    freshTable(Seq(("a", 1L)))
+    dml.run(
+      """MERGE INTO `dmlspec.t` T
+        |USING (SELECT 'x' AS k, 9 AS v) S
+        |ON T.k = S.k
+        |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (concat(S.k, ' S.k'), S.v)""".stripMargin)
+    assert(state() == Seq(("a", 1L), ("x S.k", 9L)))
+  }
+
+  test("UPDATE...FROM keeps the target's full name inside a literal") {
+    freshTable(Seq(("a", 1L)))
+    dml.run(
+      """UPDATE dmlspec.t SET k = concat(s.k, ' dmlspec.t.k'), v = s.nv
+        |FROM (SELECT 'a' AS k, 11 AS nv) s
+        |WHERE dmlspec.t.k = s.k""".stripMargin)
+    assert(state() == Seq(("a dmlspec.t.k", 11L)))
+  }
 }

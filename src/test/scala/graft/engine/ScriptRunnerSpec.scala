@@ -1783,4 +1783,63 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(0) == 12L && r.getString(1) == "x")
     sr.run("DROP TABLE FUNCTION st_tvf")
   }
+
+  test("EXECUTE IMMEDIATE binds @name outside literals only") {
+    val row = new ScriptRunner(spark).run(
+      """EXECUTE IMMEDIATE "SELECT '@a' AS s, CAST(@a AS BIGINT) AS t" USING 6 AS a""")
+      .get.collect().head
+    assert((row.getString(0), row.getLong(1)) == (("@a", 6L)))
+  }
+
+  test("FOR record fields substitute outside literals only") {
+    val v = new ScriptRunner(spark).run(
+      """DECLARE lbl STRING DEFAULT '';
+        |FOR rec IN (SELECT 1 AS n) DO
+        |  SET lbl = CONCAT('rec.n=', CAST(rec.n AS STRING));
+        |END FOR;
+        |SELECT lbl AS v""".stripMargin).get.collect().head.getString(0)
+    assert(v == "rec.n=1")
+  }
+
+  test("@@error.message inside a handler's literal stays text") {
+    val row = new ScriptRunner(spark).run(
+      """BEGIN
+        |  RAISE USING MESSAGE = 'boom';
+        |EXCEPTION WHEN ERROR THEN
+        |  SELECT '@@error.message' AS k, @@error.message AS msg;
+        |END""".stripMargin).get.collect().head
+    assert((row.getString(0), row.getString(1)) == (("@@error.message", "boom")))
+  }
+
+  test("wildcard tables and INFORMATION_SCHEMA in \"…\" literals and -- comments stay text") {
+    val out = new ScriptRunner(spark).run(
+      """SELECT "`nowc.ev_*` nowc.INFORMATION_SCHEMA.TABLES" AS s
+        |-- `nowc.ev_*` nowc.INFORMATION_SCHEMA.COLUMNS
+        |""".stripMargin).get
+    assert(out.collect().head.getString(0) == "`nowc.ev_*` nowc.INFORMATION_SCHEMA.TABLES")
+  }
+
+  test("a TVF parameter name inside a /* */ comment of the body stays text") {
+    val sr = new ScriptRunner(spark)
+    sr.run("CREATE TABLE FUNCTION tag_tvf(tag STRING) AS (SELECT tag AS v /* tag */)")
+    // substituted into the comment, the argument's `*/` would close it early
+    assert(sr.run("SELECT v FROM tag_tvf('*/')").get.collect().head.getString(0) == "*/")
+    sr.run("DROP TABLE FUNCTION tag_tvf")
+  }
+
+  test("a table function with no parameters expands") {
+    val sr = new ScriptRunner(spark)
+    sr.run("CREATE TABLE FUNCTION none_tvf() AS (SELECT 1 AS x)")
+    assert(sr.run("SELECT x FROM none_tvf()").get.collect().head.getInt(0) == 1)
+    sr.run("DROP TABLE FUNCTION none_tvf")
+  }
+
+  test("a TVF argument is not searched for the other parameters' names") {
+    val sr = new ScriptRunner(spark)
+    sr.run("CREATE TABLE FUNCTION two_tvf(a INT64, b INT64) AS (SELECT a * 10 + b AS s)")
+    val v = sr.run("DECLARE b INT64 DEFAULT 7; SELECT s FROM two_tvf(b, 2)")
+      .get.collect().head.getLong(0)
+    assert(v == 72L)
+    sr.run("DROP TABLE FUNCTION two_tvf")
+  }
 }
