@@ -3,10 +3,15 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** MERGE / DELETE / DROP on plain-Parquet catalog tables — the engine
-  * rewrite SURVEY §7.3 ranks as hard-part #1. Spark's built-in MERGE
-  * needs a v2 ACID source, so we rewrite to equivalent join plans and
-  * overwrite the destination:
+/** MERGE / UPDATE / DELETE / TRUNCATE and BEGIN/COMMIT/ROLLBACK
+  * TRANSACTION on plain-Parquet catalog tables — the engine rewrite SURVEY
+  * §7.3 ranks as hard-part #1. [[run]] runs a whole script, the MERGE load
+  * method's user-authored one, through [[ScriptRunner]]'s loop with full
+  * scripting (DECLARE/SET, IF, loops, procedures, one end-of-script
+  * transaction contract); that loop hands its DML and transaction
+  * statements to this runner. Spark's built-in MERGE needs a v2 ACID
+  * source, so we rewrite to equivalent join plans and overwrite the
+  * destination:
   *
   *   MERGE dest S USING (src) N ON cond
   *     WHEN MATCHED [AND c] THEN UPDATE SET a = e, ...
@@ -61,29 +66,16 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
       raw")?\s*THEN\s+UPDATE\s+SET\s+(.+?)(?=\s+WHEN\s+|\s*;?\s*$$)").r
   private val deleteRe =
     raw"(?is)^\s*DELETE\s+FROM\s+`?([\w.$$-]+)`?(?:\s+(?:AS\s+)?(?!WHERE\b)([A-Za-z_]\w*))?\s+WHERE\s+(.+?)\s*;?\s*$$".r
-  private val dropRe = raw"(?is)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?`?([\w.$$-]+)`?\s*;?\s*$$".r
+  private val truncateRe =
+    raw"(?is)^\s*TRUNCATE\s+TABLE\s+`?([\w.$$-]+)`?\s*;?\s*$$".r
 
-  def run(script: String): Unit = {
-    // same pre-split normalization as ScriptRunner.run: BQ-only literal
-    // forms become standard quotes before `;`-splitting
-    try {
-      StatementSplitter.split(Dialect.normalizeLiteralForms(script)).foreach(runStatement)
-      // BigQuery rolls back a transaction left open when the script
-      // ends and reports it — losing writes silently is never right
-      if (txn.isDefined) {
-        rollback()
-        throw new IllegalStateException(
-          "transaction was still open at end of script; it has been rolled back " +
-            "(add COMMIT TRANSACTION)")
-      }
-    } catch {
-      // a statement failure inside an open transaction aborts it: undo
-      // every write since BEGIN TRANSACTION, then surface the error
-      case e: Throwable if txn.isDefined =>
-        rollback()
-        throw e
-    }
-  }
+  // the script loop of run and runStatement; it hands this runner its DML
+  // and transaction statements, so they share one transaction
+  private lazy val scripts = new ScriptRunner(spark, Some(this))
+
+  def run(script: String): Unit = { scripts.run(script); () }
+
+  def runStatement(stmt: String): Unit = { scripts.runStatement(stmt); () }
 
   // --- multi-statement transactions (BEGIN/COMMIT/ROLLBACK TRANSACTION) --
   // Parquet has no native MVCC, so atomicity is POINTER-based: the
@@ -124,16 +116,6 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
   }
   private var txn: Option[TxnState] = None
   private var txnListener: Option[(Path, Path) => Unit] = None
-
-  private val beginTxnRe = raw"(?is)^\s*BEGIN\s+TRANSACTION\s*;?\s*$$".r
-  private val commitTxnRe = raw"(?is)^\s*COMMIT(?:\s+TRANSACTION)?\s*;?\s*$$".r
-  private val rollbackTxnRe = raw"(?is)^\s*ROLLBACK(?:\s+TRANSACTION)?\s*;?\s*$$".r
-  // head of any table-mutating statement this runner (or the script
-  // engine it delegates to) can execute — matched on masked text
-  private val txnTargetRe =
-    raw"(?is)^\s*(?:MERGE\s+(?:INTO\s+)?|DELETE\s+FROM\s+|UPDATE\s+|TRUNCATE\s+TABLE\s+|DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?|INSERT\s+(?:INTO\s+)?)`?([\w.$$-]+)".r
-  private val txnCreateRe =
-    raw"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.$$-]+)".r
 
   private def beginTransaction(): Unit = {
     if (txn.isDefined) throw new IllegalStateException(
@@ -194,23 +176,23 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     */
   private[engine] def abandonTxnForTest(): Unit = txn.foreach(endTxn)
 
-  // ScriptRunner delegates its transaction/DML statements here so the
+  // ScriptRunner's loop hands its transaction/DML statements here, so the
   // scripting and DML surfaces compose — these are its seam
   private[engine] def txnOpen: Boolean = txn.isDefined
   private[engine] def rollbackOpenTxn(): Unit = if (txn.isDefined) rollback()
-  private[engine] def noteMutationForTxn(destFqn: String): Unit =
-    snapshotForTxn(destFqn)
-  private[engine] def noteDestructiveForTxn(destFqn: String): Unit = {
-    snapshotForTxn(destFqn)
-    txn.foreach(_.pins.get(runner.catalogName(destFqn))
-      .foreach(pin => TxnPin.moveToKeep(spark, pin)))
-  }
 
   /** Pin `destFqn`'s pre-statement FILE SET on its first mutation inside
     * the open transaction (no-op outside one, for re-touched tables,
     * and for tables the transaction itself created). Metadata only —
-    * one recursive listing, no rows read.
+    * one recursive listing, no rows read. A `destructive` statement,
+    * which deletes the table's files, first moves the pinned files aside.
     */
+  private[engine] def pinForTxn(destFqn: String, destructive: Boolean): Unit = {
+    snapshotForTxn(destFqn)
+    if (destructive) txn.foreach(_.pins.get(runner.catalogName(destFqn))
+      .foreach(pin => TxnPin.moveToKeep(spark, pin)))
+  }
+
   private def snapshotForTxn(destFqn: String): Unit = txn.foreach { st =>
     val cat = runner.catalogName(destFqn)
     if (!st.created.contains(cat) && !st.pins.contains(cat)) {
@@ -251,10 +233,6 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     if (fs.exists(loc)) walk(loc, "") else Seq.empty
   }
 
-
-  private val truncateRe =
-    raw"(?is)^\s*TRUNCATE\s+TABLE\s+`?([\w.$$-]+)`?\s*;?\s*$$".r
-
   /** Matches against the literal/comment-masked statement and reads the
     * capture groups back from the ORIGINAL text — masking is
     * length-preserving, so group offsets carry over. Keeps keywords like
@@ -264,124 +242,64 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     */
   private final class MaskedRe(re: scala.util.matching.Regex) {
     def unapplySeq(stmt: String): Option[List[String]] =
-      re.findFirstMatchIn(maskLiterals(stmt)).map { m =>
-        (1 to m.groupCount).map(g =>
-          if (m.start(g) < 0) null else stmt.substring(m.start(g), m.end(g))).toList
-      }
+      findMasked(re, stmt).map(_.map(_.orNull).toList)
   }
   private lazy val MergeTable = new MaskedRe(mergeTableRe)
   private lazy val Merge = new MaskedRe(mergeRe)
   private lazy val Delete = new MaskedRe(deleteRe)
   private lazy val Truncate = new MaskedRe(truncateRe)
-  private lazy val Drop = new MaskedRe(dropRe)
-
-  // BigQuery allows omitting INTO: `INSERT t VALUES …` / `INSERT t SELECT …`
-  private val insertNoIntoRe = raw"(?is)^(\s*)INSERT\s+(?!INTO\b|OVERWRITE\b)".r
-
-  def runStatement(stmt0: String): Unit = {
-    val stmt = insertNoIntoRe.replaceFirstIn(stmt0, "$1INSERT INTO ")
-    val trimmed = stmt.trim
-    // list-per-query freshness for opted-in external tables (e54 seam)
-    ExternalTables.refreshReferenced(spark, trimmed)
-    if (beginTxnRe.findFirstIn(trimmed).isDefined) return beginTransaction()
-    if (commitTxnRe.findFirstIn(trimmed).isDefined) return commit()
-    if (rollbackTxnRe.findFirstIn(trimmed).isDefined) return rollback()
-    if (txn.isDefined) {
-      // identify the statement's write target on masked text (identifier
-      // positions are mask-invariant) and pin its pre-state; CREATE [OR
-      // REPLACE] TABLE also routes here — an existing destination gets
-      // pinned, a fresh one is dropped on rollback. Statements that
-      // physically DELETE files (DROP; CREATE OR REPLACE's implicit
-      // drop) additionally move the pinned files aside first.
-      val masked = maskLiterals(stmt)
-      txnTargetRe.findFirstMatchIn(masked)
-        .orElse(txnCreateRe.findFirstMatchIn(masked))
-        .foreach { m =>
-          if (destructiveHeadRe.findFirstIn(masked).isDefined)
-            noteDestructiveForTxn(m.group(1))
-          else snapshotForTxn(m.group(1))
-        }
-    }
-    dispatch(stmt)
-  }
 
   private val subqueryRe = raw"(?is)\(\s*SELECT\b".r
 
-  private val destructiveHeadRe =
-    raw"(?is)^\s*(?:DROP\s+TABLE|CREATE\s+OR\s+REPLACE\s+TABLE)\b".r
-
-  private def dispatch(stmt: String): Unit = {
-    // snapshot-clone tables are read-only by BigQuery contract: block
-    // every mutation before it touches storage (DROP stays legal —
-    // BigQuery allows deleting a snapshot table)
-    val maskedForRo = maskLiterals(stmt)
-    if (raw"(?is)^\s*DROP\b".r.findFirstIn(maskedForRo).isEmpty)
-      txnTargetRe.findFirstMatchIn(maskedForRo).foreach(m =>
-        CloneRegistry.requireWritable(runner.catalogName(m.group(1))))
+  /** Run one DML or transaction statement whose head `h` ScriptRunner's
+    * loop read; `stmt` starts at the verb. The loop has already checked
+    * the target writable and pinned it for an open transaction.
+    */
+  private[engine] def execute(h: StatementSplitter.Head, stmt: String): Unit = {
     // heal the target BEFORE the statement resolves its read plan: a
     // crashed predecessor's half-swapped directory — or a dead
-    // transaction's intermediate state — must not be captured into
-    // the statement's file listing (the listing resolves at plan
+    // transaction's intermediate state — must not be captured into the
+    // statement's file listing (the listing resolves at plan
     // construction, before overwriteSelf's own pre-heal runs)
-    txnTargetRe.findFirstMatchIn(maskedForRo).foreach { m =>
-      val cat = runner.catalogName(m.group(1))
-      if (spark.catalog.tableExists(cat)) PartitionCommit.recover(spark, cat)
+    h.name.map(runner.catalogName).filter(spark.catalog.tableExists)
+      .foreach(PartitionCommit.recover(spark, _))
+    (h.verb, stmt) match {
+      case ("BEGIN TRANSACTION", _) => beginTransaction()
+      case ("COMMIT", _) => commit()
+      case ("ROLLBACK", _) => rollback()
+      case ("MERGE", MergeTable(destFqn, tAlias, srcTable, sAlias, onCond, whenClauses)) =>
+        merge(destFqn, tAlias, s"SELECT * FROM ${runner.catalogName(srcTable)}",
+          sAlias, onCond, whenClauses)
+      case ("MERGE", Merge(destFqn, tAlias, srcQuery, sAlias, onCond, whenClauses)) =>
+        merge(destFqn, tAlias, srcQuery, sAlias, onCond, whenClauses)
+      case ("DELETE", Delete(destFqn, alias, cond)) =>
+        // aliased DELETE: references through the alias are the table's
+        delete(destFqn, if (alias == null) cond else stripAlias(cond, alias))
+      case ("UPDATE", UpdateFromStmt(destFqn, tAlias, sets, fromSrc, cond)) =>
+        updateFrom(destFqn, tAlias, sets, fromSrc, cond)
+      case ("UPDATE", UpdateStmt(destFqn, alias, sets, cond)) =>
+        if (alias == null) update(destFqn, sets, cond)
+        else if (subqueryRe.findFirstIn(sets).isDefined ||
+                 subqueryRe.findFirstIn(cond).isDefined)
+          // correlated-subquery SETs must keep their alias-qualified outer
+          // references intact: stripAlias over the whole text would turn
+          // `WHERE s.k = a.k` into `s.k = k`, re-resolving the correlation
+          // against the INNER table (always-true join → global aggregate
+          // instead of the per-key value, silently). The subquery path in
+          // update() aliases the outer scan by this statement's alias, so
+          // qualified references resolve exactly as BigQuery does.
+          update(destFqn, sets, cond, outerAlias = alias)
+        else update(destFqn, stripAlias(sets, alias), stripAlias(cond, alias))
+      case ("TRUNCATE", Truncate(destFqn)) =>
+        // staged-swap empty rewrite, not spark.sql TRUNCATE: (a) inside a
+        // transaction the displaced files must survive as pointers for
+        // rollback, (b) outside one the old image becomes a time-travel
+        // snapshot instead of being destroyed — matching every other
+        // whole-table DML here
+        val dest = runner.catalogName(destFqn)
+        overwriteSelf(dest, spark.table(dest).limit(0))
+      case _ => throw new IllegalArgumentException(s"malformed ${h.verb} statement: $stmt")
     }
-    dispatchMatched(stmt)
-  }
-
-  private def dispatchMatched(stmt: String): Unit = stmt match {
-    case MergeTable(destFqn, tAlias, srcTable, sAlias, onCond, whenClauses) =>
-      merge(destFqn, tAlias, s"SELECT * FROM ${runner.catalogName(srcTable)}",
-        sAlias, onCond, whenClauses)
-    case Merge(destFqn, tAlias, srcQuery, sAlias, onCond, whenClauses) =>
-      merge(destFqn, tAlias, srcQuery, sAlias, onCond, whenClauses)
-    case Delete(destFqn, alias, cond) =>
-      // aliased DELETE: references through the alias are the table's
-      delete(destFqn, if (alias == null) cond else stripAlias(cond, alias))
-    case UpdateFromStmt(destFqn, tAlias, sets, fromSrc, cond) =>
-      updateFrom(destFqn, tAlias, sets, fromSrc, cond)
-    case UpdateStmt(destFqn, alias, sets, cond) =>
-      if (alias == null) update(destFqn, sets, cond)
-      else if (subqueryRe.findFirstIn(sets).isDefined ||
-               subqueryRe.findFirstIn(cond).isDefined)
-        // correlated-subquery SETs must keep their alias-qualified outer
-        // references intact: stripAlias over the whole text would turn
-        // `WHERE s.k = a.k` into `s.k = k`, re-resolving the correlation
-        // against the INNER table (always-true join → global aggregate
-        // instead of the per-key value, silently). The subquery path in
-        // update() aliases the outer scan by this statement's alias, so
-        // qualified references resolve exactly as BigQuery does.
-        update(destFqn, sets, cond, outerAlias = alias)
-      else update(destFqn, stripAlias(sets, alias), stripAlias(cond, alias))
-    case Truncate(destFqn) =>
-      // staged-swap empty rewrite, not spark.sql TRUNCATE: (a) inside a
-      // transaction the displaced files must survive as pointers for
-      // rollback, (b) outside one the old image becomes a time-travel
-      // snapshot instead of being destroyed — matching every other
-      // whole-table DML here
-      val dest = runner.catalogName(destFqn)
-      overwriteSelf(dest, spark.table(dest).limit(0))
-    case Drop(destFqn) =>
-      // BigQuery rejects DROP TABLE on a materialized view; a plain
-      // drop here would also leave the MV registry's mark dangling
-      val cat = runner.catalogName(destFqn)
-      if (MvRegistry.definitionOf(cat).isDefined)
-        throw new IllegalArgumentException(
-          "use DROP MATERIALIZED VIEW to remove a materialized view")
-      spark.sql(s"DROP TABLE IF EXISTS $cat")
-      // dropping a snapshot table is legal; a later unrelated table
-      // with the same name must not inherit its read-only mark
-      CloneRegistry.unmark(cat)
-    case other => // plain statement (e.g. a SELECT or engine-supported DDL)
-      // a DML verb that didn't match its recognizer must fail HERE:
-      // ScriptRunner routes DML verbs back to this runner, so bouncing
-      // a malformed statement to a fresh ScriptRunner would loop
-      val head = StatementSplitter.firstKeyword(other)
-      if (Set("MERGE", "UPDATE", "DELETE", "TRUNCATE").contains(head))
-        throw new IllegalArgumentException(s"malformed $head statement: $other")
-      new ScriptRunner(spark).runStatement(other)
-      ()
   }
 
   /** Literal- and comment-blind copy of a statement: every character
@@ -418,11 +336,7 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     * length-preserving). Group g → None when unmatched.
     */
   private def findMasked(re: scala.util.matching.Regex,
-      s: String): Option[IndexedSeq[Option[String]]] =
-    re.findFirstMatchIn(maskLiterals(s)).map { m =>
-      (1 to m.groupCount).map(g =>
-        if (m.start(g) < 0) None else Some(s.substring(m.start(g), m.end(g))))
-    }
+      s: String): Option[IndexedSeq[Option[String]]] = findMaskedAt(re, s).map(_._2)
 
   /** Like [[findMasked]] but also returns the match's start offset —
     * merge() uses the textual order of WHEN clauses for BigQuery's
@@ -435,15 +349,6 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
         if (m.start(g) < 0) None else Some(s.substring(m.start(g), m.end(g)))))
     }
 
-  /** UPDATE…FROM recognizer over literal-masked text (FROM/WHERE inside
-    * string literals can't steer it). The FROM and the outer WHERE are
-    * located by a paren-depth scan — only DEPTH-0 keywords split the
-    * statement, so a subquery source with its own WHERE
-    * (`FROM (SELECT … WHERE …) src WHERE join-cond`) parses correctly
-    * and a FROM inside a SET expression (EXTRACT/SUBSTRING forms) never
-    * misroutes a plain UPDATE. Captured pieces are cut from the
-    * ORIGINAL text by position (masking is length-preserving).
-    */
   /** Plain `UPDATE t [AS a] SET … WHERE …` with a PAREN-AWARE split at
     * the top-level WHERE: a SET value holding a correlated subquery
     * (`SET v = (SELECT … WHERE …)`) must not have the statement cut at
@@ -482,6 +387,15 @@ class DmlRunner(spark: SparkSession, runner: TransformRunner) {
     }
   }
 
+  /** UPDATE…FROM recognizer over literal-masked text (FROM/WHERE inside
+    * string literals can't steer it). The FROM and the outer WHERE are
+    * located by a paren-depth scan — only DEPTH-0 keywords split the
+    * statement, so a subquery source with its own WHERE
+    * (`FROM (SELECT … WHERE …) src WHERE join-cond`) parses correctly
+    * and a FROM inside a SET expression (EXTRACT/SUBSTRING forms) never
+    * misroutes a plain UPDATE. Captured pieces are cut from the
+    * ORIGINAL text by position (masking is length-preserving).
+    */
   private object UpdateFromStmt {
     private val headRe =
       raw"(?is)^\s*UPDATE\s+`?([\w.$$-]+)`?(?:\s+(?:AS\s+)?(\w+))?\s+SET\s".r

@@ -79,9 +79,6 @@ object Lineage {
     * are excluded (the analyzer scopes them; at parse level we collect
     * them from the UnresolvedWith/CTE nodes), as is the destination.
     */
-  private val createTempNameRe =
-    raw"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+`?([\w.]+)`?\b.*".r
-
   def findDependenciesWithCatalyst(spark: SparkSession, query: String,
       destination: String): Result = {
     val ignored = findDependenciesWithRegex(query, destination).ignored
@@ -89,9 +86,8 @@ object Lineage {
     // temp tables DEFINED by the script are intermediate state, not
     // upstream dependencies — a later statement reading one must not
     // report it
-    val tempFull = stmts.collect {
-      case createTempNameRe(n) => n
-    }.toSet
+    val tempFull = stmts.map(StatementSplitter.head)
+      .filter(_.verb == "CREATE TEMP TABLE").flatMap(_.name).toSet
     // short names only shadow UNQUALIFIED references (temp views are
     // single-part); a qualified table that happens to share the last
     // segment is a genuine upstream dependency

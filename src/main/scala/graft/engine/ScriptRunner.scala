@@ -18,8 +18,10 @@ import scala.collection.mutable
   * scalar or small array by construction. Temp tables become Spark temp
   * views (distributed, never collected).
   */
-class ScriptRunner(spark: SparkSession) {
+class ScriptRunner private[engine] (spark: SparkSession, shared: Option[DmlRunner]) {
   import ScriptRunner._
+
+  def this(spark: SparkSession) = this(spark, None)
 
   // native graft_* expressions (graft_normalize backs NORMALIZE) must
   // resolve in any session that runs rewritten SQL
@@ -120,9 +122,15 @@ class ScriptRunner(spark: SparkSession) {
     */
   private def evalDriverLocal(exprSql: String): Option[Any] = try {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{Alias, SubqueryExpression, Unevaluable}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal, SubqueryExpression, Unevaluable}
     import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
     val parsed = spark.sessionState.sqlParser.parseExpression(exprSql)
+    // a literal, a DECLARE's usual DEFAULT, needs no analysis
+    parsed match {
+      case l: Literal => return Some(createToScalaConverter(l.dataType)(l.value))
+      case _ =>
+    }
     if (parsed.exists {
         case _: UnresolvedAttribute => true // a column ⇒ table context
         case _: SubqueryExpression => true
@@ -145,8 +153,7 @@ class ScriptRunner(spark: SparkSession) {
           scala.None
         else {
           val v = a.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-          Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToScalaConverter(a.dataType)(v))
+          Some(createToScalaConverter(a.dataType)(v))
         }
       case _ => scala.None // aggregates/generators: real plan shapes
     }
@@ -209,8 +216,8 @@ class ScriptRunner(spark: SparkSession) {
       val res =
         try runScript(Dialect.normalizeLiteralForms(script))
         catch { case _: ReturnSignal => scala.None } // RETURN = clean exit
-      // same end-of-script contract as DmlRunner.run: an open
-      // transaction rolls back and reports — never lose writes silently
+      // BigQuery rolls back a transaction left open when the script
+      // ends and reports it — losing writes silently is never right
       if (txnOpen) {
         rollbackOpenTxn()
         throw new IllegalStateException(
@@ -224,7 +231,8 @@ class ScriptRunner(spark: SparkSession) {
       case _: ContinueSignal =>
         throw new IllegalStateException("CONTINUE/ITERATE outside of a loop")
       case e: Throwable if txnOpen =>
-        // a statement failure inside an open transaction aborts it
+        // a statement failure inside an open transaction aborts it: undo
+        // every write since BEGIN TRANSACTION, then surface the error
         rollbackOpenTxn()
         throw e
     }
@@ -323,7 +331,7 @@ class ScriptRunner(spark: SparkSession) {
   // level (BigQuery scripting semantics)
   private final class ReturnSignal extends RuntimeException
 
-  private def runWhile(stmt: String, label: Option[String] = scala.None): Option[DataFrame] = {
+  private def runWhile(stmt: String, label: Option[String]): Option[DataFrame] = {
     val ms = topMarkers(stmt, Set("DO"))
     require(ms.length >= 2 && ms.head.text == "DO" && ms.last.text == "END",
       s"malformed WHILE: $stmt")
@@ -351,7 +359,7 @@ class ScriptRunner(spark: SparkSession) {
     * exit, so a guard overrun (no BREAK ever taken) is an error, not a
     * silent stop.
     */
-  private def runLoop(stmt: String, label: Option[String] = scala.None): Option[DataFrame] = {
+  private def runLoop(stmt: String, label: Option[String]): Option[DataFrame] = {
     val ms = topMarkers(stmt, Set.empty)
     require(ms.nonEmpty && ms.last.text == "END", s"malformed LOOP: $stmt")
     val lTok = StatementSplitter.annotate(stmt).head
@@ -377,7 +385,7 @@ class ScriptRunner(spark: SparkSession) {
     * it can still terminate the loop), BREAK exits immediately — both
     * per the BigQuery scripting spec.
     */
-  private def runRepeat(stmt: String, label: Option[String] = scala.None): Option[DataFrame] = {
+  private def runRepeat(stmt: String, label: Option[String]): Option[DataFrame] = {
     val ms = topMarkers(stmt, Set("UNTIL"))
     require(ms.length >= 2 && ms.last.text == "END", s"malformed REPEAT: $stmt")
     val untilTok = ms.find(_.text == "UNTIL").getOrElse(
@@ -463,7 +471,7 @@ class ScriptRunner(spark: SparkSession) {
     * each body statement still executes distributed. Row count capped
     * to catch a data-sized query being misused as a loop driver.
     */
-  private def runFor(stmt: String, label: Option[String] = scala.None): Option[DataFrame] = {
+  private def runFor(stmt: String, label: Option[String]): Option[DataFrame] = {
     val m = forHeadRe.findFirstMatchIn(stmt).getOrElse(
       throw new IllegalArgumentException(s"malformed FOR: $stmt"))
     val rec = m.group(1)
@@ -540,13 +548,6 @@ class ScriptRunner(spark: SparkSession) {
     }
   }
 
-  /** Render non-control statements with variables substituted WITHOUT
-    * executing any writes — lineage support for scripts whose table
-    * references only appear after substitution (cf. the reference's
-    * fake-select probing, `main.go:282-323`). Variable evaluation runs
-    * driver-side scalar SELECTs only; failures leave the variable NULL
-    * so rendering never aborts lineage extraction.
-    */
   /** Replace control-flow scaffolding (IF/THEN/ELSE/END IF, WHILE/DO,
     * FOR, BEGIN/EXCEPTION/END) with `;` so the statements and
     * conditions INSIDE blocks surface as top-level pieces — lineage is
@@ -554,7 +555,7 @@ class ScriptRunner(spark: SparkSession) {
     */
   private def stripControl(stmt0: String): Seq[String] = {
     if (!Set("IF", "WHILE", "FOR", "BEGIN", "LOOP", "REPEAT", "CASE")
-        .contains(StatementSplitter.firstKeyword(stmt0)))
+        .contains(StatementSplitter.head(stmt0).verb))
       return Seq(stmt0)
     // the exception clause is one fixed phrase — strip it before the
     // token pass so WHEN/THEN inside MERGE statements are untouched
@@ -599,20 +600,28 @@ class ScriptRunner(spark: SparkSession) {
     StatementSplitter.split(sb.toString)
   }
 
+  /** Render non-control statements with variables substituted WITHOUT
+    * executing any writes — lineage support for scripts whose table
+    * references only appear after substitution (cf. the reference's
+    * fake-select probing, `main.go:282-323`). Variable evaluation runs
+    * driver-side scalar SELECTs only; failures leave the variable NULL
+    * so rendering never aborts lineage extraction.
+    */
   def renderStatements(script: String): Seq[String] =
     StatementSplitter.splitBlocks(script).flatMap(stripControl).flatMap { stmt =>
-      stmt match {
-        case declareRe(name, _, default) =>
+      val h = StatementSplitter.head(stmt)
+      (h.verb, h.body(stmt)) match {
+        case ("DECLARE", declareRe(name, _, default)) =>
           variables(name) =
             if (default != null) scala.util.Try(evalToLiteral(default)).getOrElse("NULL")
             else "NULL"
           Seq.empty
-        case setStructRe(name, select) =>
+        case ("SET", setStructRe(name, select)) =>
           variables(name) = scala.util.Try {
             literalOf(spark.sql(Dialect.rewrite(substituteVars(select.trim))).collect()(0))
           }.getOrElse("NULL")
           Seq.empty
-        case setSimpleRe(name, e) if !stmt.trim.toUpperCase.startsWith("SET (") =>
+        case ("SET", setSimpleRe(name, e)) =>
           variables(name) = scala.util.Try(evalToLiteral(e)).getOrElse("NULL")
           Seq.empty
         case _ => Seq(substituteVars(stmt))
@@ -624,7 +633,7 @@ class ScriptRunner(spark: SparkSession) {
     * compose (conditional COMMIT inside IF, DELETE in a loop body, …).
     * Created on first use: pure relational scripts never pay for it.
     */
-  private var dmlRunnerOpt: Option[DmlRunner] = scala.None
+  private var dmlRunnerOpt: Option[DmlRunner] = shared
   private def dmlRunner: DmlRunner = dmlRunnerOpt.getOrElse {
     val d = new DmlRunner(spark, new TransformRunner(spark))
     dmlRunnerOpt = Some(d)
@@ -634,75 +643,52 @@ class ScriptRunner(spark: SparkSession) {
   private[engine] def rollbackOpenTxn(): Unit =
     dmlRunnerOpt.foreach(_.rollbackOpenTxn())
 
-  def runStatement(stmt0: String): Option[DataFrame] = {
-    val stmt = insertNoIntoRe.replaceFirstIn(stmt0, "$1INSERT INTO ")
-    val subbed = substituteVars(stmt)
+  def runStatement(stmt: String): Option[DataFrame] = {
+    val h = StatementSplitter.head(stmt)
+    val body = h.body(stmt).trim
+    val subbed = substituteVars(body)
     // list-per-query freshness for opted-in external tables (e54 seam)
     ExternalTables.refreshReferenced(spark, subbed)
-    txnMutationHeadRe.findFirstMatchIn(subbed).foreach { m =>
-      val target = m.group(1).replace("`", "")
+    if (tableWriters(h.verb)) h.name.foreach { target =>
       // the read-only contract (snapshot tables, materialized views)
-      // must hold on the script path too: a plain INSERT INTO through
-      // runSimpleStatement's generic spark.sql would otherwise mutate a
-      // snapshot silently. DROP stays legal (BigQuery allows deleting a
-      // snapshot table) and CREATE OR REPLACE explicitly supersedes the
-      // marked table — both release the mark where they execute.
-      if (insertOrLoadHeadRe.findFirstIn(subbed).isDefined)
+      // holds for every write into an existing table. DROP stays legal
+      // (BigQuery allows deleting a snapshot table) and CREATE OR REPLACE
+      // explicitly supersedes the marked table — both release the mark
+      // where they execute.
+      if (!h.verb.startsWith("CREATE") && h.verb != "DROP TABLE")
         CloneRegistry.requireWritable(destTableName(target))
-      if (txnOpen) {
-        if (destructiveScriptHeadRe.findFirstIn(subbed).isDefined)
-          dmlRunner.noteDestructiveForTxn(target)
-        else dmlRunner.noteMutationForTxn(target)
-      }
+      if (txnOpen) dmlRunner.pinForTxn(target, h.destructive)
     }
-    stmt.trim match {
-      case loopLabelRe(label0, rest0) =>
-        val label = Some(label0.toUpperCase)
-        // the closing `END <kw> <label>` drops its label so the loop
-        // parsers see the plain form
-        val rest = rest0.replaceAll(
-          raw"(?is)\bEND\s+(LOOP|WHILE|FOR|REPEAT)\s+" +
-            java.util.regex.Pattern.quote(label0) + raw"\s*(;?\s*)$$",
-          "END $1$2")
-        return StatementSplitter.firstKeyword(rest) match {
-          case "LOOP" => runLoop(rest, label)
-          case "WHILE" => runWhile(rest, label)
-          case "FOR" => runFor(rest, label)
-          case "REPEAT" => runRepeat(rest, label)
-          case other => throw new IllegalArgumentException(
-            s"label '$label0' may only prefix LOOP/WHILE/FOR/REPEAT, got $other")
-        }
-      case _ =>
-    }
-    StatementSplitter.firstKeyword(stmt) match {
-      case "IF" => runIf(stmt)
-      case "WHILE" => runWhile(stmt)
-      case "FOR" => runFor(stmt)
-      case "LOOP" => runLoop(stmt)
-      case "REPEAT" => runRepeat(stmt)
-      case "CASE" => runCase(stmt)
-      case "BEGIN" if !stmt.trim.toUpperCase.startsWith("BEGIN TRANSACTION") =>
-        runBegin(stmt)
-      case "BEGIN" | "COMMIT" | "ROLLBACK" =>
-        dmlRunner.runStatement(substituteVars(stmt)); scala.None
-      case "MERGE" | "UPDATE" | "DELETE" | "TRUNCATE" =>
+    // a labeled loop's closing `END <kw> <label>` drops its label so the
+    // loop parsers see the plain form
+    val label = h.label.map(_.toUpperCase)
+    val unlabeled = h.label.fold(body)(l => body.replaceAll(
+      raw"(?is)\bEND\s+(LOOP|WHILE|FOR|REPEAT)\s+" + java.util.regex.Pattern.quote(l) +
+        raw"\s*(;?\s*)$$", "END $1$2"))
+    h.verb match {
+      case "IF" => runIf(body)
+      case "WHILE" => runWhile(unlabeled, label)
+      case "FOR" => runFor(unlabeled, label)
+      case "LOOP" => runLoop(unlabeled, label)
+      case "REPEAT" => runRepeat(unlabeled, label)
+      case "CASE" => runCase(body)
+      case "BEGIN" => runBegin(body)
+      case "BEGIN TRANSACTION" | "COMMIT" | "ROLLBACK" |
+          "MERGE" | "UPDATE" | "DELETE" | "TRUNCATE" =>
         // TVF calls in a DML source (`MERGE … USING (SELECT * FROM
         // f(x))`) expand here — DmlRunner has no TVF registry
-        dmlRunner.runStatement(expandTableFunctions(substituteVars(stmt)))
+        dmlRunner.execute(h, expandTableFunctions(subbed))
         scala.None
-      case "ASSERT" => runAssert(stmt)
-      case "RAISE" => runRaise(stmt)
-      case "EXPORT" => runExportData(stmt)
-      case "LOAD" => runLoadData(stmt)
-      case "BREAK" | "LEAVE" => throw new BreakSignal(signalLabel(stmt))
-      case "CONTINUE" | "ITERATE" => throw new ContinueSignal(signalLabel(stmt))
+      case "ASSERT" => runAssert(body)
+      case "RAISE" => runRaise(body)
+      case "EXPORT DATA" => runExportData(body)
+      case "LOAD DATA" => runLoadData(body)
+      case "BREAK" | "LEAVE" => throw new BreakSignal(h.name.map(_.toUpperCase))
+      case "CONTINUE" | "ITERATE" => throw new ContinueSignal(h.name.map(_.toUpperCase))
       case "RETURN" => throw new ReturnSignal
-      case _ => runSimpleStatement(stmt)
+      case _ => runSimpleStatement(h, body)
     }
   }
-
-  private def signalLabel(stmt: String): Option[String] =
-    loopJumpLabelRe.findFirstMatchIn(stmt).map(_.group(1).toUpperCase)
 
   /** EXPORT DATA OPTIONS(uri='…/part-*.ext', format='CSV|JSON|PARQUET'
     * [, header=…, field_delimiter=…, overwrite=…]) AS SELECT … — the
@@ -925,34 +911,29 @@ class ScriptRunner(spark: SparkSession) {
     * something a batch engine can promise. MVs are read-only to DML,
     * as in BigQuery.
     */
-  private def runCreateMv(stmt: String): Option[DataFrame] = stmt.trim match {
-    case createMvRe(orReplace, ifNotExists, rawName, query) =>
-      val dest = destTableName(rawName.replace("`", ""))
-      if (spark.catalog.tableExists(dest) && orReplace == null) {
-        if (ifNotExists != null) return scala.None
-        throw new IllegalArgumentException(
-          s"$dest already exists; use CREATE OR REPLACE MATERIALIZED VIEW")
-      }
-      CloneRegistry.unmark(dest) // OR REPLACE over a previous MV
-      materializeMv(dest, query, setupMvIncremental(dest, query))
-      MvRegistry.register(dest, query)
-      CloneRegistry.markReadOnly(dest, mvReadOnlyReason)
-      scala.None
-    case other =>
-      throw new IllegalArgumentException(s"malformed CREATE MATERIALIZED VIEW: $other")
+  private def runCreateMv(orReplace: String, ifNotExists: String, rawName: String,
+      query: String): Option[DataFrame] = {
+    val dest = destTableName(rawName.replace("`", ""))
+    if (spark.catalog.tableExists(dest) && orReplace == null) {
+      if (ifNotExists != null) return scala.None
+      throw new IllegalArgumentException(
+        s"$dest already exists; use CREATE OR REPLACE MATERIALIZED VIEW")
+    }
+    CloneRegistry.unmark(dest) // OR REPLACE over a previous MV
+    materializeMv(dest, query, setupMvIncremental(dest, query))
+    MvRegistry.register(dest, query)
+    CloneRegistry.markReadOnly(dest, mvReadOnlyReason)
+    scala.None
   }
 
-  private def runDropMv(stmt: String): Option[DataFrame] = stmt.trim match {
-    case dropMvRe(ifExists, rawName) =>
-      val dest = destTableName(rawName.replace("`", ""))
-      if (MvRegistry.definitionOf(dest).isEmpty && ifExists == null)
-        throw new IllegalArgumentException(s"$dest is not a materialized view")
-      spark.sql(s"DROP TABLE IF EXISTS $dest")
-      MvRegistry.drop(dest)
-      CloneRegistry.unmark(dest)
-      scala.None
-    case other =>
-      throw new IllegalArgumentException(s"malformed DROP MATERIALIZED VIEW: $other")
+  private def runDropMv(ifExists: String, rawName: String): Option[DataFrame] = {
+    val dest = destTableName(rawName.replace("`", ""))
+    if (MvRegistry.definitionOf(dest).isEmpty && ifExists == null)
+      throw new IllegalArgumentException(s"$dest is not a materialized view")
+    spark.sql(s"DROP TABLE IF EXISTS $dest")
+    MvRegistry.drop(dest)
+    CloneRegistry.unmark(dest)
+    scala.None
   }
 
   /** CALL BQ.REFRESH_MATERIALIZED_VIEW('name') — re-materialize. */
@@ -1048,7 +1029,6 @@ class ScriptRunner(spark: SparkSession) {
     substituteVars(stmt.trim) match {
     case loadDataRe(mode, rawName, colList, optsText) =>
       val dest = destTableName(rawName.replace("`", ""))
-      CloneRegistry.requireWritable(dest)
       val uriBody = urisBody(optsText)
         .getOrElse(throw new IllegalArgumentException(
           "LOAD DATA requires a uris=[…] option"))
@@ -1415,65 +1395,61 @@ class ScriptRunner(spark: SparkSession) {
     * metadata BigQuery stores but a local engine has nothing to do
     * with, so they are accepted and dropped.
     */
-  private def runSchemaDdl(stmt: String): Option[DataFrame] = stmt.trim match {
-    case schemaDdlRe(verb, ifEx, rawName, opts, cascade) =>
-      val db = rawName.replace("`", "").split("\\.")
-        .map(_.replace("-", "_")).mkString("__")
-      if (verb.equalsIgnoreCase("CREATE")) {
-        val ine = if (ifEx != null) "IF NOT EXISTS " else ""
-        def opt(k: String): Option[String] = Option(opts).flatMap(o =>
-          optionRe.findAllMatchIn(o).find(_.group(1).equalsIgnoreCase(k))
-            .map(_.group(2)))
-        val comment = opt("description")
-          .map(v => s" COMMENT ${v.replace("''", "'")}").getOrElse("")
-        // BigQuery's dataset location option: a region string ('EU') is
-        // inert here; a path-looking value maps to the database LOCATION
-        // (the local-engine analog of placing the dataset's storage)
-        val location = opt("location")
-          .map(v => v.stripPrefix("'").stripSuffix("'"))
-          .filter(_.contains("/"))
-          .map(p => s" LOCATION '${p.replace("'", "''")}'").getOrElse("")
-        spark.sql(s"CREATE DATABASE $ine$db$comment$location")
-      } else {
-        val ie = if (ifEx != null) "IF EXISTS " else ""
-        val casc = if (cascade != null) " CASCADE" else ""
-        spark.sql(s"DROP DATABASE $ie$db$casc")
-      }
-      scala.None
-    case other => throw new IllegalArgumentException(s"malformed SCHEMA DDL: $other")
+  private def runSchemaDdl(verb: String, ifEx: String, rawName: String, opts: String,
+      cascade: String): Option[DataFrame] = {
+    val db = rawName.replace("`", "").split("\\.")
+      .map(_.replace("-", "_")).mkString("__")
+    if (verb.equalsIgnoreCase("CREATE")) {
+      val ine = if (ifEx != null) "IF NOT EXISTS " else ""
+      def opt(k: String): Option[String] = Option(opts).flatMap(o =>
+        optionRe.findAllMatchIn(o).find(_.group(1).equalsIgnoreCase(k))
+          .map(_.group(2)))
+      val comment = opt("description")
+        .map(v => s" COMMENT ${v.replace("''", "'")}").getOrElse("")
+      // BigQuery's dataset location option: a region string ('EU') is
+      // inert here; a path-looking value maps to the database LOCATION
+      // (the local-engine analog of placing the dataset's storage)
+      val location = opt("location")
+        .map(v => v.stripPrefix("'").stripSuffix("'"))
+        .filter(_.contains("/"))
+        .map(p => s" LOCATION '${p.replace("'", "''")}'").getOrElse("")
+      spark.sql(s"CREATE DATABASE $ine$db$comment$location")
+    } else {
+      val ie = if (ifEx != null) "IF EXISTS " else ""
+      val casc = if (cascade != null) " CASCADE" else ""
+      spark.sql(s"DROP DATABASE $ie$db$casc")
+    }
+    scala.None
   }
 
   /** CREATE [OR REPLACE] VIEW — stored with the REWRITTEN body (Spark
     * resolves the view text itself at read time) and the BigQuery FQN
     * mapped like every other destination.
     */
-  private def runCreateView(stmt: String): Option[DataFrame] = stmt.trim match {
-    case createViewRe(orReplace, ine, rawName, opts, query) =>
-      val dest = destTableName(rawName.replace("`", ""))
-      val or = if (orReplace != null) "OR REPLACE " else ""
-      val i = if (ine != null) "IF NOT EXISTS " else ""
-      spark.sql(s"CREATE ${or}VIEW $i$dest AS " + prep(query))
-      // OPTIONS: description → view comment; other options are inert
-      // service metadata (same policy as ALTER VIEW SET OPTIONS)
-      Option(opts).foreach { o =>
-        optionRe.findAllMatchIn(o)
-          .find(_.group(1).equalsIgnoreCase("description"))
-          .foreach(m => spark.sql(
-            s"ALTER VIEW $dest SET TBLPROPERTIES ('comment' = ${m.group(2)})"))
-      }
-      ExternalTables.noteViewChange()
-      scala.None
-    case other => throw new IllegalArgumentException(s"malformed CREATE VIEW: $other")
+  private def runCreateView(orReplace: String, ine: String, rawName: String,
+      opts: String, query: String): Option[DataFrame] = {
+    val dest = destTableName(rawName.replace("`", ""))
+    val or = if (orReplace != null) "OR REPLACE " else ""
+    val i = if (ine != null) "IF NOT EXISTS " else ""
+    spark.sql(s"CREATE ${or}VIEW $i$dest AS " + prep(query))
+    // OPTIONS: description → view comment; other options are inert
+    // service metadata (same policy as ALTER VIEW SET OPTIONS)
+    Option(opts).foreach { o =>
+      optionRe.findAllMatchIn(o)
+        .find(_.group(1).equalsIgnoreCase("description"))
+        .foreach(m => spark.sql(
+          s"ALTER VIEW $dest SET TBLPROPERTIES ('comment' = ${m.group(2)})"))
+    }
+    ExternalTables.noteViewChange()
+    scala.None
   }
 
-  private def runDropView(stmt: String): Option[DataFrame] = stmt.trim match {
-    case dropViewRe(ifExists, rawName) =>
-      val dest = destTableName(rawName.replace("`", ""))
-      val ie = if (ifExists != null) "IF EXISTS " else ""
-      spark.sql(s"DROP VIEW $ie$dest")
-      ExternalTables.noteViewChange()
-      scala.None
-    case other => throw new IllegalArgumentException(s"malformed DROP VIEW: $other")
+  private def runDropView(ifExists: String, rawName: String): Option[DataFrame] = {
+    val dest = destTableName(rawName.replace("`", ""))
+    val ie = if (ifExists != null) "IF EXISTS " else ""
+    spark.sql(s"DROP VIEW $ie$dest")
+    ExternalTables.noteViewChange()
+    scala.None
   }
 
   /** BigQuery column DDL on parquet tables. ADD COLUMN maps to Spark's
@@ -1484,138 +1460,137 @@ class ScriptRunner(spark: SparkSession) {
     * preserving partitioning. SET OPTIONS lands as table properties
     * (`description` becomes the comment).
     */
-  private def runAlterTable(stmt: String): Option[DataFrame] = stmt.trim match {
-    case alterTableRe(ifExists, rawName, rest) =>
-      val dest = destTableName(rawName.replace("`", ""))
-      if (!spark.catalog.tableExists(dest)) {
-        if (ifExists != null) return scala.None
-        throw new IllegalArgumentException(s"table $dest does not exist")
-      }
-      val cols = spark.catalog.listColumns(dest).collect()
-      val partCols = cols.filter(_.isPartition).map(_.name).toSeq
-      val dataFirst = cols.filterNot(_.isPartition).map(_.name).toSeq ++ partCols
-      def quote(c: String) = s"`${c.replace("`", "")}`"
-      val head = rest.trim.split("\\s+").take(2).mkString(" ").toUpperCase
-      head match {
-        case "ADD COLUMN" =>
-          val adds = SqlLex.items(rest, angle = true).map {
-            case addColRe(ine, c, tpe) =>
-              (ine != null, c.replace("`", ""), sparkType(tpe.trim))
-            case bad => throw new IllegalArgumentException(
-              s"malformed ADD COLUMN clause: $bad")
-          }
-          val existing = cols.map(_.name.toLowerCase).toSet
-          val todo = adds.filterNot { case (ine, c, _) =>
-            val there = existing.contains(c.toLowerCase)
-            if (there && !ine) throw new IllegalArgumentException(
-              s"column $c already exists in $dest")
-            there
-          }
-          if (todo.nonEmpty)
-            spark.sql(s"ALTER TABLE $dest ADD COLUMNS (" +
-              todo.map { case (_, c, t) => s"${quote(c)} $t" }.mkString(", ") + ")")
-        case "RENAME COLUMN" =>
-          rest.trim match {
-            case rnRe(from0, to0) =>
-              val (from, to) = (from0.replace("`", ""), to0.replace("`", ""))
-              if (!cols.exists(_.name.equalsIgnoreCase(from)))
-                throw new IllegalArgumentException(s"no column $from in $dest")
+  private def runAlterTable(ifExists: String, rawName: String,
+      rest: String): Option[DataFrame] = {
+    val dest = destTableName(rawName.replace("`", ""))
+    if (!spark.catalog.tableExists(dest)) {
+      if (ifExists != null) return scala.None
+      throw new IllegalArgumentException(s"table $dest does not exist")
+    }
+    val cols = spark.catalog.listColumns(dest).collect()
+    val partCols = cols.filter(_.isPartition).map(_.name).toSeq
+    val dataFirst = cols.filterNot(_.isPartition).map(_.name).toSeq ++ partCols
+    def quote(c: String) = s"`${c.replace("`", "")}`"
+    val head = rest.trim.split("\\s+").take(2).mkString(" ").toUpperCase
+    head match {
+      case "ADD COLUMN" =>
+        val adds = SqlLex.items(rest, angle = true).map {
+          case addColRe(ine, c, tpe) =>
+            (ine != null, c.replace("`", ""), sparkType(tpe.trim))
+          case bad => throw new IllegalArgumentException(
+            s"malformed ADD COLUMN clause: $bad")
+        }
+        val existing = cols.map(_.name.toLowerCase).toSet
+        val todo = adds.filterNot { case (ine, c, _) =>
+          val there = existing.contains(c.toLowerCase)
+          if (there && !ine) throw new IllegalArgumentException(
+            s"column $c already exists in $dest")
+          there
+        }
+        if (todo.nonEmpty)
+          spark.sql(s"ALTER TABLE $dest ADD COLUMNS (" +
+            todo.map { case (_, c, t) => s"${quote(c)} $t" }.mkString(", ") + ")")
+      case "RENAME COLUMN" =>
+        rest.trim match {
+          case rnRe(from0, to0) =>
+            val (from, to) = (from0.replace("`", ""), to0.replace("`", ""))
+            if (!cols.exists(_.name.equalsIgnoreCase(from)))
+              throw new IllegalArgumentException(s"no column $from in $dest")
+            val proj = dataFirst.map(c =>
+              if (c.equalsIgnoreCase(from)) s"${quote(c)} AS ${quote(to)}" else quote(c))
+            val newParts = partCols.map(c => if (c.equalsIgnoreCase(from)) to else c)
+            rebuildTable(dest, proj, newParts)
+          case bad => throw new IllegalArgumentException(
+            s"malformed RENAME COLUMN: $bad")
+        }
+      case "DROP COLUMN" =>
+        val drops = SqlLex.items(rest).map {
+          case dropColRe(ie, c) => (ie != null, c.replace("`", ""))
+          case bad => throw new IllegalArgumentException(
+            s"malformed DROP COLUMN clause: $bad")
+        }
+        val gone = drops.filter { case (ie, c) =>
+          val there = cols.exists(_.name.equalsIgnoreCase(c))
+          if (!there && !ie) throw new IllegalArgumentException(
+            s"no column $c in $dest")
+          there
+        }.map(_._2.toLowerCase).toSet
+        if (partCols.exists(c => gone.contains(c.toLowerCase)))
+          throw new IllegalArgumentException(
+            "cannot drop a partitioning column") // BigQuery errors too
+        if (gone.nonEmpty) {
+          val keep = dataFirst.filterNot(c => gone.contains(c.toLowerCase))
+          if (keep.isEmpty) throw new IllegalArgumentException(
+            s"cannot drop every column of $dest")
+          rebuildTable(dest, keep.map(quote), partCols)
+        }
+      case "ADD PRIMARY" | "ADD FOREIGN" | "ADD CONSTRAINT" =>
+        // BigQuery table constraints are metadata-only: NOT ENFORCED
+        // is the ONLY mode BigQuery accepts (used for optimizer join
+        // elimination, never validated), so accepting-and-dropping
+        // preserves every observable result. ENFORCED stays loud —
+        // BigQuery rejects it too.
+        if (notEnforcedRe.findFirstIn(rest).isEmpty)
+          throw new IllegalArgumentException(
+            "only NOT ENFORCED table constraints are supported " +
+              "(BigQuery enforces none either)")
+      case "DROP CONSTRAINT" | "DROP PRIMARY" =>
+        // metadata-only constraints: nothing physical to drop
+      case "ALTER COLUMN" =>
+        // BigQuery ALTER COLUMN: SET DATA TYPE rebuilds with a cast
+        // (BigQuery allows widening; the cast fails loud on narrowing
+        // data); DROP NOT NULL is a no-op here (parquet columns are
+        // nullable already); other forms fail loud
+        rest.trim match {
+          case typeRe(ie, c0, tpe) =>
+            val cName = c0.replace("`", "")
+            if (!cols.exists(_.name.equalsIgnoreCase(cName))) {
+              if (ie == null) throw new IllegalArgumentException(
+                s"no column $cName in $dest")
+            } else {
+              if (partCols.exists(_.equalsIgnoreCase(cName)))
+                throw new IllegalArgumentException(
+                  "cannot change the type of a partitioning column")
+              val t = sparkType(tpe.trim)
               val proj = dataFirst.map(c =>
-                if (c.equalsIgnoreCase(from)) s"${quote(c)} AS ${quote(to)}" else quote(c))
-              val newParts = partCols.map(c => if (c.equalsIgnoreCase(from)) to else c)
-              rebuildTable(dest, proj, newParts)
-            case bad => throw new IllegalArgumentException(
-              s"malformed RENAME COLUMN: $bad")
-          }
-        case "DROP COLUMN" =>
-          val drops = SqlLex.items(rest).map {
-            case dropColRe(ie, c) => (ie != null, c.replace("`", ""))
-            case bad => throw new IllegalArgumentException(
-              s"malformed DROP COLUMN clause: $bad")
-          }
-          val gone = drops.filter { case (ie, c) =>
-            val there = cols.exists(_.name.equalsIgnoreCase(c))
-            if (!there && !ie) throw new IllegalArgumentException(
-              s"no column $c in $dest")
-            there
-          }.map(_._2.toLowerCase).toSet
-          if (partCols.exists(c => gone.contains(c.toLowerCase)))
-            throw new IllegalArgumentException(
-              "cannot drop a partitioning column") // BigQuery errors too
-          if (gone.nonEmpty) {
-            val keep = dataFirst.filterNot(c => gone.contains(c.toLowerCase))
-            if (keep.isEmpty) throw new IllegalArgumentException(
-              s"cannot drop every column of $dest")
-            rebuildTable(dest, keep.map(quote), partCols)
-          }
-        case "ADD PRIMARY" | "ADD FOREIGN" | "ADD CONSTRAINT" =>
-          // BigQuery table constraints are metadata-only: NOT ENFORCED
-          // is the ONLY mode BigQuery accepts (used for optimizer join
-          // elimination, never validated), so accepting-and-dropping
-          // preserves every observable result. ENFORCED stays loud —
-          // BigQuery rejects it too.
-          if (notEnforcedRe.findFirstIn(rest).isEmpty)
-            throw new IllegalArgumentException(
-              "only NOT ENFORCED table constraints are supported " +
-                "(BigQuery enforces none either)")
-        case "DROP CONSTRAINT" | "DROP PRIMARY" =>
-          // metadata-only constraints: nothing physical to drop
-        case "ALTER COLUMN" =>
-          // BigQuery ALTER COLUMN: SET DATA TYPE rebuilds with a cast
-          // (BigQuery allows widening; the cast fails loud on narrowing
-          // data); DROP NOT NULL is a no-op here (parquet columns are
-          // nullable already); other forms fail loud
-          rest.trim match {
-            case typeRe(ie, c0, tpe) =>
-              val cName = c0.replace("`", "")
-              if (!cols.exists(_.name.equalsIgnoreCase(cName))) {
-                if (ie == null) throw new IllegalArgumentException(
-                  s"no column $cName in $dest")
-              } else {
-                if (partCols.exists(_.equalsIgnoreCase(cName)))
-                  throw new IllegalArgumentException(
-                    "cannot change the type of a partitioning column")
-                val t = sparkType(tpe.trim)
-                val proj = dataFirst.map(c =>
-                  if (c.equalsIgnoreCase(cName))
-                    s"CAST(${quote(c)} AS $t) AS ${quote(c)}"
-                  else quote(c))
-                rebuildTable(dest, proj, partCols)
-              }
-            case dropNnRe(ie, c0) =>
-              val cName = c0.replace("`", "")
-              if (!cols.exists(_.name.equalsIgnoreCase(cName)) && ie == null)
-                throw new IllegalArgumentException(s"no column $cName in $dest")
-            case bad => throw new IllegalArgumentException(
-              s"unsupported ALTER COLUMN form (SET DATA TYPE / DROP NOT NULL): $bad")
-          }
-        case "RENAME TO" =>
-          // BigQuery RENAME TO takes the bare new table name; Spark
-          // renames within the same database
-          val newName = rest.trim.stripPrefix("RENAME").trim.stripPrefix("TO")
-            .trim.stripSuffix(";").trim.replace("`", "")
-          require(bareNameRe.matches(newName),
-            s"RENAME TO expects a bare table name, got: $newName")
-          val db = dest.split("\\.").dropRight(1).mkString(".")
-          val target = if (db.isEmpty) newName else s"$db.$newName"
-          spark.sql(s"ALTER TABLE $dest RENAME TO $target")
-        case "SET OPTIONS" =>
-          val body = rest.trim.stripPrefix("SET").trim
-            .stripPrefix("OPTIONS").trim.stripPrefix("(").stripSuffix(";").trim
-            .stripSuffix(")")
-          val props = optionRe.findAllMatchIn(body).map { m =>
-            val v = m.group(2)
-            val clean = if (v.startsWith("'"))
-              v.substring(1, v.length - 1).replace("''", "'") else v
-            val key = if (m.group(1).equalsIgnoreCase("description")) "comment"
-              else m.group(1)
-            s"'${key.replace("'", "''")}' = '${clean.replace("'", "\\'")}'"
-          }.toSeq
-          if (props.nonEmpty)
-            spark.sql(s"ALTER TABLE $dest SET TBLPROPERTIES (${props.mkString(", ")})")
-      }
-      scala.None
-    case other => throw new IllegalArgumentException(s"malformed ALTER TABLE: $other")
+                if (c.equalsIgnoreCase(cName))
+                  s"CAST(${quote(c)} AS $t) AS ${quote(c)}"
+                else quote(c))
+              rebuildTable(dest, proj, partCols)
+            }
+          case dropNnRe(ie, c0) =>
+            val cName = c0.replace("`", "")
+            if (!cols.exists(_.name.equalsIgnoreCase(cName)) && ie == null)
+              throw new IllegalArgumentException(s"no column $cName in $dest")
+          case bad => throw new IllegalArgumentException(
+            s"unsupported ALTER COLUMN form (SET DATA TYPE / DROP NOT NULL): $bad")
+        }
+      case "RENAME TO" =>
+        // BigQuery RENAME TO takes the bare new table name; Spark
+        // renames within the same database
+        val newName = rest.trim.stripPrefix("RENAME").trim.stripPrefix("TO")
+          .trim.stripSuffix(";").trim.replace("`", "")
+        require(bareNameRe.matches(newName),
+          s"RENAME TO expects a bare table name, got: $newName")
+        val db = dest.split("\\.").dropRight(1).mkString(".")
+        val target = if (db.isEmpty) newName else s"$db.$newName"
+        spark.sql(s"ALTER TABLE $dest RENAME TO $target")
+      case "SET OPTIONS" =>
+        val body = rest.trim.stripPrefix("SET").trim
+          .stripPrefix("OPTIONS").trim.stripPrefix("(").stripSuffix(";").trim
+          .stripSuffix(")")
+        val props = optionRe.findAllMatchIn(body).map { m =>
+          val v = m.group(2)
+          val clean = if (v.startsWith("'"))
+            v.substring(1, v.length - 1).replace("''", "'") else v
+          val key = if (m.group(1).equalsIgnoreCase("description")) "comment"
+            else m.group(1)
+          s"'${key.replace("'", "''")}' = '${clean.replace("'", "\\'")}'"
+        }.toSeq
+        if (props.nonEmpty)
+          spark.sql(s"ALTER TABLE $dest SET TBLPROPERTIES (${props.mkString(", ")})")
+    }
+    scala.None
   }
 
   /** Staged column-DDL rebuild: new image under a stage name, then the
@@ -1638,46 +1613,48 @@ class ScriptRunner(spark: SparkSession) {
   }
 
   /** CREATE TABLE … LIKE (schema only) / COPY (schema + data). */
-  private def runCreateLike(stmt: String): Option[DataFrame] = stmt.trim match {
-    case createLikeRe(ine, rawName, verb, rawSrc) =>
-      val dest = destTableName(rawName.replace("`", ""))
-      val src = destTableName(rawSrc.replace("`", ""))
-      val i = if (ine != null) "IF NOT EXISTS " else ""
-      if (verb.equalsIgnoreCase("LIKE"))
-        spark.sql(s"CREATE TABLE $i$dest LIKE $src USING PARQUET")
-      else
-        spark.sql(s"CREATE TABLE $i$dest USING PARQUET AS SELECT * FROM $src")
-      scala.None
-    case other => throw new IllegalArgumentException(s"malformed CREATE TABLE: $other")
+  private def runCreateLike(ine: String, rawName: String, verb: String,
+      rawSrc: String): Option[DataFrame] = {
+    val dest = destTableName(rawName.replace("`", ""))
+    val src = destTableName(rawSrc.replace("`", ""))
+    val i = if (ine != null) "IF NOT EXISTS " else ""
+    if (verb.equalsIgnoreCase("LIKE"))
+      spark.sql(s"CREATE TABLE $i$dest LIKE $src USING PARQUET")
+    else
+      spark.sql(s"CREATE TABLE $i$dest USING PARQUET AS SELECT * FROM $src")
+    scala.None
   }
 
-  private def runSimpleStatement(stmt: String): Option[DataFrame] = stmt match {
-    case executeImmediateRe(tail) => runExecuteImmediate(tail.trim)
-    case createProcRe(orReplace, ifNotExists, name, params, body) =>
+  /** A statement of any other kind: each arm takes the kind its head
+    * names and parses it with that kind's regex; whatever no arm parses
+    * goes to Spark as a query.
+    */
+  private def runSimpleStatement(h: StatementSplitter.Head,
+      stmt: String): Option[DataFrame] = (h.verb, stmt) match {
+    case ("EXECUTE IMMEDIATE", executeImmediateRe(tail)) => runExecuteImmediate(tail.trim)
+    case ("CREATE PROCEDURE", createProcRe(orReplace, ifNotExists, name, params, body)) =>
       runCreateProcedure(orReplace, ifNotExists, name, params, body)
-    case callRe(name, args) => runCall(name, args)
-    case dropProcRe(ifExists, name) =>
+    case ("CALL", callRe(name, args)) => runCall(name, args)
+    case ("DROP PROCEDURE", dropProcRe(ifExists, name)) =>
       if (procedures.remove(procKey(name)).isEmpty && ifExists == null)
         throw new IllegalArgumentException(s"procedure $name does not exist")
       None
-    case createTvfRe(orReplace, ifNotExists, name, params, body) =>
+    case ("CREATE TABLE FUNCTION", createTvfRe(orReplace, ifNotExists, name, params, body)) =>
       runCreateTvf(orReplace, ifNotExists, name, params, body)
-    case dropTvfRe(ifExists, name) =>
-      // must precede the generic DROP TABLE path (which would read
-      // `FUNCTION` as a table name)
+    case ("DROP TABLE FUNCTION", dropTvfRe(ifExists, name)) =>
       if (tableFunctions.remove(procKey(name)).isEmpty && ifExists == null)
         throw new IllegalArgumentException(s"table function $name does not exist")
       None
-    case declareRe(name, tpe, default) =>
+    case ("DECLARE", declareRe(name, tpe, default)) =>
       declaredTypes(name) = sparkType(tpe)
       variables(name) =
         if (default != null) evalToLiteral(s"CAST(($default) AS ${declaredTypes(name)})")
         else "NULL"
       None
-    case setMultiRe(names, rhs) =>
+    case ("SET", setMultiRe(names, rhs)) =>
       val vars = names.split(",").map(_.trim).toSeq
       val exprs: Seq[String] =
-        if (selectHeadRe.findFirstIn(rhs).isDefined) {
+        if (StatementSplitter.head(rhs).verb == "SELECT") {
           val row = spark.sql(Dialect.rewrite(substituteVars(rhs.trim))).collect()(0)
           // SELECT AS STRUCT yields one struct column; unwrap its fields
           val r = if (row.length == 1 && row.get(0).isInstanceOf[org.apache.spark.sql.Row])
@@ -1693,20 +1670,20 @@ class ScriptRunner(spark: SparkSession) {
         }
       }
       None
-    case setStructRe(name, select) =>
+    case ("SET", setStructRe(name, select)) =>
       variables(name) = {
         val sql = Dialect.rewrite(substituteVars(select.trim))
         val row = spark.sql(sql).collect()(0)
         literalOf(row)
       }
       None
-    case setSimpleRe(name, expr) if !stmt.trim.toUpperCase.startsWith("SET (") =>
+    case ("SET", setSimpleRe(name, expr)) =>
       variables(name) = declaredTypes.get(name) match {
         case Some(t) => evalToLiteral(s"CAST(($expr) AS $t)")
         case scala.None => evalToLiteral(expr)
       }
       None
-    case createFnJsRe(name) =>
+    case ("CREATE TEMP FUNCTION", createFnJsRe(name)) =>
       // SURVEY §7.2: JS-body UDFs are out of scope; the engine accepts a
       // registered Scala equivalent instead.
       throw new UnsupportedOperationException(
@@ -1714,7 +1691,7 @@ class ScriptRunner(spark: SparkSession) {
           s"""running the script: either spark.udf.register("$name", (…) => …) """ +
           s"from Scala, or a SQL-bodied `CREATE TEMP FUNCTION $name(…) AS (…)` " +
           "which this engine translates to a Spark SQL UDF")
-    case createFnRe(name, params, returns, body) =>
+    case ("CREATE TEMP FUNCTION", createFnRe(name, params, returns, body)) =>
       // BigQuery SQL-bodied temp function → Spark 4 SQL UDF
       val sparkParams = params.split(",").filter(_.trim.nonEmpty).map { p =>
         val Array(n, t) = p.trim.split("\\s+", 2)
@@ -1724,7 +1701,7 @@ class ScriptRunner(spark: SparkSession) {
       spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $name($sparkParams)$ret " +
         s"RETURN ${Dialect.rewrite(body)}")
       None
-    case createPersistentFnRe(orRepl, ifNot, name0, params, returns, body) =>
+    case ("CREATE FUNCTION", createPersistentFnRe(orRepl, ifNot, name0, params, returns, body)) =>
       val canonical = name0.replace("`", "")
       val flat = FnRegistry.flatten(canonical)
       val exists = spark.sessionState.functionRegistry.functionExists(
@@ -1744,7 +1721,7 @@ class ScriptRunner(spark: SparkSession) {
         FnRegistry.register(canonical)
         None
       }
-    case dropFnRe(ifExists, name0) =>
+    case ("DROP FUNCTION", dropFnRe(ifExists, name0)) =>
       // BigQuery DROP FUNCTION drops temp and persistent alike; Spark
       // needs the TEMPORARY spelling for session functions
       val canonical = name0.replace("`", "")
@@ -1753,25 +1730,24 @@ class ScriptRunner(spark: SparkSession) {
         if (ifExists != null) "IF EXISTS " else ""}$flat")
       FnRegistry.remove(canonical)
       None
-    case ext if createExternalRe.findFirstIn(ext.trim).isDefined =>
+    case ("CREATE EXTERNAL TABLE", ext) if createExternalRe.findFirstIn(ext).isDefined =>
       runCreateExternal(ext)
-    case mv if createMvRe.findFirstIn(mv.trim).isDefined => runCreateMv(mv)
-    case mv if dropMvRe.findFirstIn(mv.trim).isDefined => runDropMv(mv)
-    case dt if dropTableHeadRe.findFirstMatchIn(dt.trim).exists(m =>
-        MvRegistry.definitionOf(
-          destTableName(m.group(1).replace("`", ""))).isDefined) =>
+    case ("CREATE MATERIALIZED VIEW", createMvRe(orReplace, ifNotExists, rawName, query)) =>
+      runCreateMv(orReplace, ifNotExists, rawName, query)
+    case ("DROP MATERIALIZED VIEW", dropMvRe(ifExists, rawName)) => runDropMv(ifExists, rawName)
+    case ("DROP TABLE", dropTableRe(ifExists, rawName)) =>
+      val dest = destTableName(rawName)
       // BigQuery rejects DROP TABLE on an MV too — a plain drop would
       // also leave the registry's read-only mark dangling
-      throw new IllegalArgumentException(
+      if (MvRegistry.definitionOf(dest).isDefined) throw new IllegalArgumentException(
         "use DROP MATERIALIZED VIEW to remove a materialized view")
-    case dt if dropTableHeadRe.findFirstMatchIn(dt.trim).isDefined =>
+      spark.sql(s"DROP TABLE ${Option(ifExists).getOrElse("")}$dest")
       // dropping a snapshot table is legal; release its read-only mark
       // so a later unrelated table with the same name is writable
-      val m = dropTableHeadRe.findFirstMatchIn(dt.trim).get
-      spark.sql(Dialect.rewrite(substituteVars(dt)))
-      CloneRegistry.unmark(destTableName(m.group(1).replace("`", "")))
+      CloneRegistry.unmark(dest)
       None
-    case createCloneRe(snapshot, ifNotExists, name, srcName, systemTime) =>
+    case ("CREATE TABLE" | "CREATE SNAPSHOT TABLE",
+        createCloneRe(snapshot, ifNotExists, name, srcName, systemTime)) =>
       // BigQuery `CREATE [SNAPSHOT] TABLE … CLONE src [FOR SYSTEM_TIME
       // AS OF …]`: materialize the source's image — optionally the
       // historical one the e49 snapshot resolver serves — as a new
@@ -1787,17 +1763,19 @@ class ScriptRunner(spark: SparkSession) {
       if (!existedBefore) CloneRegistry.unmark(dest)
       val ine = if (ifNotExists != null) "IF NOT EXISTS " else ""
       val st = Option(systemTime).map(" " + _).getOrElse("")
-      spark.sql(s"CREATE TABLE $ine$dest USING PARQUET AS " +
-        Dialect.rewrite(s"SELECT * FROM $srcName$st"))
+      spark.sql(s"CREATE TABLE $ine$dest USING PARQUET AS " + prep(s"SELECT * FROM $srcName$st"))
       // mark only when this CREATE actually created: an IF NOT EXISTS
       // short-circuit must not freeze the pre-existing unrelated table
       if (snapshot != null && !existedBefore) CloneRegistry.markReadOnly(dest)
       None
-    case sc if schemaDdlRe.findFirstIn(sc.trim).isDefined => runSchemaDdl(sc)
-    case v if createViewRe.findFirstIn(v.trim).isDefined => runCreateView(v)
-    case v if dropViewRe.findFirstIn(v.trim).isDefined => runDropView(v)
-    case a if alterTableRe.findFirstIn(a.trim).isDefined => runAlterTable(a)
-    case alterSchemaRe(ifEx, rawName, opts) =>
+    case ("CREATE SCHEMA" | "DROP SCHEMA", schemaDdlRe(verb, ifEx, rawName, opts, cascade)) =>
+      runSchemaDdl(verb, ifEx, rawName, opts, cascade)
+    case ("CREATE VIEW", createViewRe(orReplace, ine, rawName, opts, query)) =>
+      runCreateView(orReplace, ine, rawName, opts, query)
+    case ("DROP VIEW", dropViewRe(ifExists, rawName)) => runDropView(ifExists, rawName)
+    case ("ALTER TABLE", alterTableRe(ifExists, rawName, rest)) =>
+      runAlterTable(ifExists, rawName, rest)
+    case ("ALTER SCHEMA", alterSchemaRe(ifEx, rawName, opts)) =>
       val db = rawName.replace("`", "").split("\\.")
         .map(_.replace("-", "_")).mkString("__")
       if (!spark.catalog.databaseExists(db)) {
@@ -1807,7 +1785,7 @@ class ScriptRunner(spark: SparkSession) {
         .find(_.group(1).equalsIgnoreCase("description"))
         .foreach(m => spark.sql(s"COMMENT ON DATABASE $db IS ${m.group(2)}"))
       scala.None
-    case alterViewRe(ifEx, rawName, opts) =>
+    case ("ALTER VIEW" | "ALTER MATERIALIZED VIEW", alterViewRe(ifEx, rawName, opts)) =>
       val dest = destTableName(rawName.replace("`", ""))
       if (!spark.catalog.tableExists(dest)) {
         if (ifEx == null) throw new IllegalArgumentException(
@@ -1817,8 +1795,9 @@ class ScriptRunner(spark: SparkSession) {
         .foreach(m => spark.sql(
           s"ALTER VIEW $dest SET TBLPROPERTIES ('comment' = ${m.group(2)})"))
       scala.None
-    case c if createLikeRe.findFirstIn(c.trim).isDefined => runCreateLike(c)
-    case createTableAsRe(orReplace, ifNotExists, name, tail, query) =>
+    case ("CREATE TABLE", createLikeRe(ine, rawName, verb, rawSrc)) =>
+      runCreateLike(ine, rawName, verb, rawSrc)
+    case ("CREATE TABLE", createTableAsRe(orReplace, ifNotExists, name, tail, query)) =>
       // BigQuery CTAS on a real (non-temp) destination. v1 catalogs
       // reject REPLACE TABLE, so OR REPLACE becomes drop-then-create.
       val dest = destTableName(name)
@@ -1835,15 +1814,15 @@ class ScriptRunner(spark: SparkSession) {
       val (part, comment) = parseCreateTail(Option(tail).getOrElse(""))
       spark.sql(s"CREATE TABLE $ine$dest USING PARQUET$part$comment AS " + prep(query))
       None
-    case ct if createColsHeadRe.findFirstIn(ct.trim).isDefined =>
-      runCreateColsTable(ct.trim)
-    case createTempRe(n1, q1, n2, q2) =>
+    case ("CREATE TABLE" | "CREATE TEMP TABLE", ct)
+        if createColsHeadRe.findFirstIn(ct).isDefined =>
+      runCreateColsTable(ct)
+    case ("CREATE TEMP TABLE", createTempRe(n1, q1, n2, q2)) =>
       val (name, query) = if (n1 != null) (n1, q1) else (n2, q2)
       val viewName = name.split("\\.").last // temp views are single-part
       spark.sql(prep(query)).createOrReplaceTempView(viewName)
       None
-    case other =>
-      Some(spark.sql(prep(other)))
+    case _ => Some(spark.sql(prep(stmt)))
   }
 
   /** BigQuery CREATE TABLE tail clauses (between the name/column list
@@ -2088,6 +2067,11 @@ object ScriptRunner {
   /** Declares a trigger of this object, for the gate spec. */
   private val trigger = new SqlLex.Triggers
 
+  // the statement kinds that write the table their head names: inside an
+  // open transaction that table is pinned before the write runs
+  private val tableWriters = Set("INSERT", "LOAD DATA", "MERGE", "UPDATE", "DELETE",
+    "TRUNCATE", "DROP TABLE", "CREATE TABLE", "CREATE SNAPSHOT TABLE")
+
   private val declareRe =
     raw"(?is)^DECLARE\s+(\w+)\s+([\w<>,() ]+?)(?:\s+DEFAULT\s+(.+))?$$".r
 
@@ -2138,46 +2122,20 @@ object ScriptRunner {
   private val dropProcRe =
     raw"(?is)^DROP\s+PROCEDURE\s+(IF\s+EXISTS\s+)?(`[\w.-]+`|[\w.-]+)\s*$$".r
 
-  // mutation heads THIS runner executes itself — inside an open
-  // transaction their target must be pinned before the write runs
-  private val txnMutationHeadRe =
-    raw"(?is)^\s*(?:INSERT\s+(?:INTO\s+)?|CREATE\s+(?:OR\s+REPLACE\s+)?(?:SNAPSHOT\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?|DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?|LOAD\s+DATA\s+(?:INTO|OVERWRITE)\s+)(`[^`]+`|[\w.\-]+)".r
-
-  // script-path statements that physically DELETE the target's files
-  // (DROP; CREATE OR REPLACE's implicit drop; LOAD DATA OVERWRITE) —
-  // inside a transaction their pinned pre-state must move aside first
-  private val destructiveScriptHeadRe =
-    raw"(?is)^\s*(?:DROP\s+TABLE|CREATE\s+OR\s+REPLACE\s+(?:SNAPSHOT\s+)?TABLE|LOAD\s+DATA\s+OVERWRITE)\b".r
-
-  // BigQuery allows omitting INTO: `INSERT t VALUES …` / `INSERT t SELECT …`
-  private val insertNoIntoRe = raw"(?is)^(\s*)INSERT\s+(?!INTO\b|OVERWRITE\b)".r
-
-  private val insertOrLoadHeadRe = raw"(?is)^\s*(?:INSERT|LOAD\s+DATA)\b".r
-
-  private val selectHeadRe = raw"(?is)^\s*SELECT\b".r
-
   // block scaffolding: FOR's head, the EXCEPTION clause (as a block's
-  // handler head, and anywhere when lineage strips control flow), the
-  // keyword after END, and a BREAK/CONTINUE's label
+  // handler head, and anywhere when lineage strips control flow) and the
+  // keyword after END
   private val forHeadRe = raw"(?is)^FOR\s+(\w+)\s+IN\s*\(".r
   private val exceptionHeadRe = raw"(?is)^EXCEPTION\s+WHEN\s+ERROR\s+THEN\b".r
   private val exceptionClauseRe =
     trigger(raw"(?is)\bEXCEPTION\s+WHEN\s+ERROR\s+THEN\b", "EXCEPTION")
   private val endBlockRe = raw"(?is)^END\s+(IF|WHILE|LOOP|FOR|REPEAT|CASE)".r
-  private val loopJumpLabelRe =
-    raw"(?is)^\s*(?:BREAK|LEAVE|CONTINUE|ITERATE)\s+([A-Za-z_]\w*)\s*;?\s*$$".r
 
   // the system variables an EXCEPTION handler reads
   private val errorVarRe = trigger(raw"(?i)@@error\.(message|statement_text)", "@@ERROR.")
 
   // one quoted entry of an OPTIONS uris list
   private val quotedUriRe = raw"'((?:[^']|'')*)'".r
-
-  // `label: LOOP|WHILE|FOR|REPEAT …` — strip the label (and its
-  // repetition after the closing END <kw>) and remember it for the
-  // loop's BREAK/CONTINUE matching
-  private val loopLabelRe =
-    raw"(?is)^\s*([A-Za-z_]\w*)\s*:\s*((?:LOOP|WHILE|FOR|REPEAT)\b.*)$$".r
 
   private val exportDataRe =
     raw"(?is)^EXPORT\s+DATA\s+OPTIONS\s*\((.*?)\)\s+AS\s+(.+)$$".r
@@ -2193,9 +2151,6 @@ object ScriptRunner {
 
   private val dropMvRe =
     raw"(?is)^DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*$$".r
-
-  private val dropTableHeadRe =
-    raw"(?is)^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)".r
 
   private val loadDataRe =
     raw"(?is)^LOAD\s+DATA\s+(INTO|OVERWRITE)\s+(`[^`]+`|[\w.\-]+)\s*(?:\(([^)]*)\)\s*)?FROM\s+FILES\s*\((.*)\)\s*$$".r
@@ -2246,6 +2201,9 @@ object ScriptRunner {
 
   private val dropViewRe =
     raw"(?is)^DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
+
+  private val dropTableRe =
+    raw"(?is)^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(`[^`]+`|[\w.\-]+)\s*;?\s*$$".r
 
   // ALTER TABLE column clauses
   private val addColRe = raw"(?is)^ADD\s+COLUMN\s+(IF\s+NOT\s+EXISTS\s+)?(`?[\w]+`?)\s+(.+)$$".r

@@ -115,18 +115,113 @@ object StatementSplitter {
     out.result()
   }
 
-  private val ddlKeywords = Set("CREATE", "DROP", "ALTER", "DECLARE")
+  /** A statement's head, read once from its leading words past blanks and
+    * comments, so that every "what kind of statement is this" reads the
+    * same answer.
+    *  - `verb`: the statement's kind, its leading keywords without the OR
+    *    REPLACE and IF [NOT] EXISTS modifiers or a preposition (INTO,
+    *    FROM, OVERWRITE, TABLE after TRUNCATE), TEMPORARY spelled TEMP:
+    *    "SELECT", "INSERT", "LOAD DATA", "CREATE TEMP TABLE",
+    *    "DROP TABLE FUNCTION", "BEGIN TRANSACTION".
+    *  - `name`: the table, view, routine, schema or loop label named right
+    *    after those keywords, backticks removed.
+    *  - `destructive`: the statement deletes the named table's files
+    *    (DROP TABLE, CREATE OR REPLACE [SNAPSHOT] TABLE, LOAD DATA or
+    *    INSERT with OVERWRITE).
+    *  - `label`: the `label:` prefix of a loop.
+    *  - `start`: where the verb begins; `intoAt`: where an INSERT that
+    *    leaves out INTO names its table, else -1.
+    */
+  final case class Head(verb: String, name: Option[String], destructive: Boolean,
+      label: Option[String], start: Int, intoAt: Int) {
 
-  /** First significant (non-comment) keyword of a statement. */
-  def firstKeyword(stmt: String): String = {
-    val start = SqlLex.skipBlank(stmt, 0)
-    var end = start
-    while (end < stmt.length && !stmt.charAt(end).isWhitespace &&
-        !SqlLex.startsComment(stmt, end)) end += 1
-    stmt.substring(start, end).toUpperCase
+    /** `stmt` from its verb on; an INSERT that names its table without
+      * INTO gets the INTO written in.
+      */
+    def body(stmt: String): String =
+      if (intoAt < 0) stmt.substring(start)
+      else stmt.substring(start, intoAt) + "INTO " + stmt.substring(intoAt)
   }
 
-  def isDdl(stmt: String): Boolean = ddlKeywords.contains(firstKeyword(stmt))
+  // the nouns of CREATE/DROP/ALTER, longest first
+  private val nouns = Seq(Seq("TABLE", "FUNCTION"), Seq("MATERIALIZED", "VIEW"),
+    Seq("EXTERNAL", "TABLE"), Seq("SNAPSHOT", "TABLE"), Seq("TEMP", "TABLE"),
+    Seq("TEMPORARY", "TABLE"), Seq("TEMP", "FUNCTION"), Seq("TEMPORARY", "FUNCTION"),
+    Seq("TABLE"), Seq("VIEW"), Seq("FUNCTION"), Seq("PROCEDURE"), Seq("SCHEMA"))
+  private val loopWords = Set("LOOP", "WHILE", "FOR", "REPEAT")
+
+  /** The [[Head]] of `stmt`. */
+  def head(stmt: String): Head = {
+    // the leading tokens: a name (word characters, `.`, `$`, `-` and
+    // backticked parts) or one other character
+    val ts = Vector.newBuilder[(String, Int)]
+    var i = SqlLex.skipBlank(stmt, 0)
+    var n = 0
+    while (i < stmt.length && n < 9) {
+      var j = i
+      while (j < stmt.length && !SqlLex.startsComment(stmt, j) &&
+          (SqlLex.isWordChar(stmt.charAt(j)) || ".$-`".indexOf(stmt.charAt(j)) >= 0))
+        j = if (stmt.charAt(j) == '`') SqlLex.regionEnd(stmt, j) else j + 1
+      if (j == i) j = i + 1
+      ts += ((stmt.substring(i, j), i))
+      n += 1
+      i = SqlLex.skipBlank(stmt, j)
+    }
+    val t = ts.result()
+    def up(k: Int) = if (k < t.length) t(k)._1.toUpperCase(java.util.Locale.ROOT) else ""
+    var k = 0
+    def take(ws: String*): Boolean =
+      ws.indices.forall(j => up(k + j) == ws(j)) && { k += ws.length; true }
+    val label =
+      if (up(1) == ":" && loopWords(up(2))) { k = 2; Some(t(0)._1) } else None
+    val start = if (k < t.length) t(k)._2 else stmt.length
+    val first = up(k)
+    k += 1
+    var named = true
+    var overwrite = false
+    var orReplace = false
+    var intoAt = -1
+    val verb = first match {
+      case "CREATE" | "DROP" | "ALTER" =>
+        orReplace = take("OR", "REPLACE")
+        nouns.find(ws => take(ws: _*)) match {
+          case Some(noun) =>
+            take("IF", "NOT", "EXISTS") || take("IF", "EXISTS")
+            (first +: noun.map(w => if (w == "TEMPORARY") "TEMP" else w)).mkString(" ")
+          case None => named = false; first
+        }
+      case "INSERT" =>
+        overwrite = take("OVERWRITE")
+        if (overwrite || take("INTO")) take("TABLE")
+        else if (k < t.length) intoAt = t(k)._2
+        first
+      case "LOAD" if take("DATA") =>
+        overwrite = take("OVERWRITE")
+        named = overwrite || take("INTO")
+        "LOAD DATA"
+      case "MERGE" => take("INTO"); first
+      case "DELETE" => take("FROM"); first
+      case "TRUNCATE" => take("TABLE"); first
+      case "UPDATE" | "CALL" | "BREAK" | "LEAVE" | "CONTINUE" | "ITERATE" => first
+      case "BEGIN" if take("TRANSACTION") => "BEGIN TRANSACTION"
+      case "EXECUTE" if take("IMMEDIATE") => named = false; "EXECUTE IMMEDIATE"
+      case "EXPORT" if take("DATA") => named = false; "EXPORT DATA"
+      case _ => named = false; first
+    }
+    val name = if (!named || k >= t.length) None else {
+      val (raw, _) = t(k)
+      if (SqlLex.isWordChar(raw.head) || raw.head == '`') Some(raw.replace("`", "")) else None
+    }
+    if (name.isEmpty) intoAt = -1
+    val destructive = overwrite || verb == "DROP TABLE" ||
+      (orReplace && (verb == "CREATE TABLE" || verb == "CREATE SNAPSHOT TABLE"))
+    Head(verb, name, destructive, label, start, intoAt)
+  }
+
+  private val ddlKeywords = Set("CREATE", "DROP", "ALTER", "DECLARE")
+
+  /** DDL by the first keyword of the statement's head. */
+  def isDdl(stmt: String): Boolean = ddlKeywords.contains(head(stmt).verb.takeWhile(_ != ' '))
 
   /** `MergeReplaceQuery.parsed_sql` — `query.py:155-179`: split the
     * script into DDL headers + exactly one DML/CTE body; a single

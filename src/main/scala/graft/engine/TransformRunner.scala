@@ -452,7 +452,11 @@ class TransformRunner(spark: SparkSession) {
     ConcurrentTaskExecutor.execute(tasks, conf.concurrency)
   }
 
-  /** A17 + A12: MERGE — user-authored script executed after rendering. */
+  /** A17 + A12: MERGE — the user-authored script, executed after
+    * rendering with full scripting (DECLARE/SET, IF, loops, procedures)
+    * and one end-of-script transaction contract: [[DmlRunner.run]] runs
+    * it through ScriptRunner's loop.
+    */
   def dmlTransform(conf: TaskConfig, sql: String, window: TaskWindow,
       executionTime: LocalDateTime, dryRun: Boolean): Unit = {
     val rendered = render(sql, conf, window, executionTime)

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.streaming.StreamingOps.Scratch
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +25,7 @@ class DmlRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def freshTable(rows: Seq[(String, Long)]): Unit = {
     spark.sql("DROP DATABASE IF EXISTS dmlspec CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("dmlspec")
+    val loc = Scratch.onDisk("dmlspec")
     spark.sql(s"CREATE DATABASE dmlspec LOCATION '$loc'")
     spark.sql("CREATE TABLE dmlspec.t (k STRING, v BIGINT) USING parquet")
     val values = rows.map { case (k, v) => s"('$k', $v)" }.mkString(", ")
@@ -88,7 +89,7 @@ class DmlRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the self-overwrite must force static mode or the emptied partition's
     // rows would silently survive the DELETE
     spark.sql("DROP DATABASE IF EXISTS dmlspec CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("dmlspecp")
+    val loc = Scratch.onDisk("dmlspecp")
     spark.sql(s"CREATE DATABASE dmlspec LOCATION '$loc'")
     spark.sql(
       "CREATE TABLE dmlspec.t (k STRING, v BIGINT) USING parquet PARTITIONED BY (p STRING)")
@@ -147,7 +148,7 @@ class DmlRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // see pre-update values — a chained withColumn fold would feed the
     // second SET the first one's output
     spark.sql("DROP DATABASE IF EXISTS dmlspec CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("dmlspec")
+    val loc = Scratch.onDisk("dmlspec")
     spark.sql(s"CREATE DATABASE dmlspec LOCATION '$loc'")
     spark.sql("CREATE TABLE dmlspec.sw (a BIGINT, b BIGINT) USING parquet")
     spark.sql("INSERT INTO dmlspec.sw VALUES (1, 10), (2, 20)")
@@ -159,7 +160,7 @@ class DmlRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("UPDATE WHERE references a SET column's OLD value") {
     spark.sql("DROP DATABASE IF EXISTS dmlspec CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("dmlspec")
+    val loc = Scratch.onDisk("dmlspec")
     spark.sql(s"CREATE DATABASE dmlspec LOCATION '$loc'")
     spark.sql("CREATE TABLE dmlspec.st (status STRING, note STRING) USING parquet")
     spark.sql("INSERT INTO dmlspec.st VALUES ('F', 'old'), ('X', 'keep')")
@@ -525,7 +526,7 @@ class DmlRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("MERGE UPDATE SET values holding commas equal the same update without one") {
     def merged(set: String): (String, Seq[Long]) = {
       spark.sql("DROP DATABASE IF EXISTS dmlspec CASCADE")
-      val loc = java.nio.file.Files.createTempDirectory("dmlspec")
+      val loc = Scratch.onDisk("dmlspec")
       spark.sql(s"CREATE DATABASE dmlspec LOCATION '$loc'")
       spark.sql("CREATE TABLE dmlspec.n (k STRING, note STRING, tags ARRAY<BIGINT>) USING parquet")
       spark.sql("INSERT INTO dmlspec.n VALUES ('a', 'old', array(0L))")

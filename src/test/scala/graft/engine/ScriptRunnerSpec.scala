@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.streaming.StreamingOps.Scratch
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -297,7 +298,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("EXPORT DATA writes the query result and reports the row count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_export")
+    val dir = Scratch.onDisk("graft_export")
     val out = new ScriptRunner(spark).run(
       s"""EXPORT DATA OPTIONS(uri='$dir/out/part-*.csv', format='CSV',
          |  header=true, overwrite=true) AS
@@ -325,7 +326,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("EXPORT DATA rejects a uri without exactly one '*' wildcard") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_export_bad")
+    val dir = Scratch.onDisk("graft_export_bad")
     val e = intercept[IllegalArgumentException] {
       new ScriptRunner(spark).run(
         s"EXPORT DATA OPTIONS(uri='$dir/out/part.csv', format='CSV') AS SELECT 1 AS x")
@@ -339,7 +340,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LOAD DATA loads CSV with both schema sources and both modes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_load")
+    val dir = Scratch.onDisk("graft_load")
     spark.sql("DROP TABLE IF EXISTS graft_loadspec_t")
     val sr = new ScriptRunner(spark)
     sr.run(
@@ -370,7 +371,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LOAD DATA with a column list inserts by NAME, not position") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_load_byname")
+    val dir = Scratch.onDisk("graft_load_byname")
     spark.sql("DROP TABLE IF EXISTS graft_loadspec_n")
     // destination column order (sq, k) is the REVERSE of the load list
     spark.sql("CREATE TABLE graft_loadspec_n (sq BIGINT, k BIGINT) USING PARQUET")
@@ -423,7 +424,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CREATE EXTERNAL TABLE reads files live — a later file shows up") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext")
+    val dir = Scratch.onDisk("graft_ext")
     spark.sql("DROP TABLE IF EXISTS graft_extspec_t")
     val sr = new ScriptRunner(spark)
     sr.run(
@@ -445,7 +446,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("RENAME/DROP COLUMN rebuild preserves partitioning and data") {
     spark.sql("DROP DATABASE IF EXISTS graft__altp CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("altp")
+    val loc = Scratch.onDisk("altp")
     spark.sql(s"CREATE DATABASE graft__altp LOCATION '$loc'")
     val sr = new ScriptRunner(spark)
     sr.run(
@@ -474,7 +475,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft.autoRefresh external table sees a newly-dropped file without REFRESH") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_autoref")
+    val dir = Scratch.onDisk("graft_autoref")
     spark.sql("DROP TABLE IF EXISTS graft_autoref_t")
     spark.sql("DROP TABLE IF EXISTS graft_autoref_ctl")
     java.nio.file.Files.writeString(
@@ -504,7 +505,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("autoRefresh reaches tables referenced through a VIEW or TVF") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_autoref2")
+    val dir = Scratch.onDisk("graft_autoref2")
     spark.sql("DROP TABLE IF EXISTS graft_autoref2_t")
     spark.sql("DROP VIEW IF EXISTS graft_autoref2_v")
     java.nio.file.Files.writeString(
@@ -542,7 +543,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("autoRefresh matches whole names, not substrings") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_autoref3")
+    val dir = Scratch.onDisk("graft_autoref3")
     spark.sql("DROP TABLE IF EXISTS graft_ar3")
     spark.sql("DROP TABLE IF EXISTS graft_ar3x")
     java.nio.file.Files.writeString(
@@ -613,7 +614,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CREATE TABLE tails on CTAS and column-list forms; ALTER COLUMN; INTO-less INSERT") {
     spark.sql("DROP DATABASE IF EXISTS graft__ddl9 CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("ddl9")
+    val loc = Scratch.onDisk("ddl9")
     spark.sql(s"CREATE DATABASE graft__ddl9 LOCATION '$loc'")
     val sr = new ScriptRunner(spark)
     // CTAS with CLUSTER BY (layout-only) + OPTIONS (description → comment)
@@ -1077,7 +1078,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("script-path INSERT INTO a snapshot table or MV is rejected, not silent") {
     spark.sql("DROP DATABASE IF EXISTS graft__rospec CASCADE")
-    val roLoc = java.nio.file.Files.createTempDirectory("rospec")
+    val roLoc = Scratch.onDisk("rospec")
     spark.sql(s"CREATE DATABASE graft__rospec LOCATION '$roLoc'")
     MvRegistry.drop("graft__rospec.mvro")
     CloneRegistry.unmark("graft__rospec.snap2")
@@ -1106,7 +1107,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rollback of an in-transaction DROP restores a snapshot table's read-only mark") {
     spark.sql("DROP DATABASE IF EXISTS graft__rotx CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("rotx")
+    val loc = Scratch.onDisk("rotx")
     spark.sql(s"CREATE DATABASE graft__rotx LOCATION '$loc'")
     CloneRegistry.unmark("graft__rotx.frozen")
     spark.sql("CREATE TABLE graft__rotx.src (k BIGINT) USING PARQUET")
@@ -1129,11 +1130,11 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("transaction rollback undoes LOAD DATA OVERWRITE (file-destroying script path)") {
     spark.sql("DROP DATABASE IF EXISTS graft__loadtx CASCADE")
-    val dbLoc = java.nio.file.Files.createTempDirectory("loadtx")
+    val dbLoc = Scratch.onDisk("loadtx")
     spark.sql(s"CREATE DATABASE graft__loadtx LOCATION '$dbLoc'")
     spark.sql("CREATE TABLE graft__loadtx.t (k BIGINT) USING PARQUET")
     spark.sql("INSERT INTO graft__loadtx.t VALUES (1), (2), (3)")
-    val csv = java.nio.file.Files.createTempDirectory("loadtx_csv")
+    val csv = Scratch.onDisk("loadtx_csv")
     java.nio.file.Files.writeString(java.nio.file.Path.of(s"$csv/in.csv"), "7\n8\n")
     val sr = new ScriptRunner(spark)
     sr.run(
@@ -1156,7 +1157,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partition-scoped MV refresh touches only the stale partition's files") {
     spark.sql("DROP DATABASE IF EXISTS graft__mvinc CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("mvinc")
+    val loc = Scratch.onDisk("mvinc")
     spark.sql(s"CREATE DATABASE graft__mvinc LOCATION '$loc'")
     val sr = new ScriptRunner(spark)
     MvRegistry.drop("graft__mvinc.mv")
@@ -1206,7 +1207,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MV incremental refresh handles Hive-escaped partition values") {
     spark.sql("DROP DATABASE IF EXISTS graft__mvesc CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("mvesc")
+    val loc = Scratch.onDisk("mvesc")
     spark.sql(s"CREATE DATABASE graft__mvesc LOCATION '$loc'")
     MvRegistry.drop("graft__mvesc.mv")
     CloneRegistry.unmark("graft__mvesc.mv")
@@ -1230,7 +1231,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MV incremental refresh recomputes a stale NULL base partition") {
     spark.sql("DROP DATABASE IF EXISTS graft__mvnull CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("mvnull")
+    val loc = Scratch.onDisk("mvnull")
     spark.sql(s"CREATE DATABASE graft__mvnull LOCATION '$loc'")
     MvRegistry.drop("graft__mvnull.mv")
     CloneRegistry.unmark("graft__mvnull.mv")
@@ -1255,7 +1256,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MV incremental refresh commit is crash-atomic (journal heals)") {
     spark.sql("DROP DATABASE IF EXISTS graft__mvcr CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("mvcr")
+    val loc = Scratch.onDisk("mvcr")
     spark.sql(s"CREATE DATABASE graft__mvcr LOCATION '$loc'")
     MvRegistry.drop("graft__mvcr.mv")
     CloneRegistry.unmark("graft__mvcr.mv")
@@ -1280,7 +1281,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MV refresh falls back to full rebuild when the base was re-partitioned") {
     spark.sql("DROP DATABASE IF EXISTS graft__mvrp CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("mvrp")
+    val loc = Scratch.onDisk("mvrp")
     spark.sql(s"CREATE DATABASE graft__mvrp LOCATION '$loc'")
     MvRegistry.drop("graft__mvrp.mv")
     CloneRegistry.unmark("graft__mvrp.mv")
@@ -1307,7 +1308,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CREATE SNAPSHOT TABLE IF NOT EXISTS must not freeze a pre-existing table") {
     spark.sql("DROP DATABASE IF EXISTS graft__rospec2 CASCADE")
-    val roLoc = java.nio.file.Files.createTempDirectory("rospec2")
+    val roLoc = Scratch.onDisk("rospec2")
     spark.sql(s"CREATE DATABASE graft__rospec2 LOCATION '$roLoc'")
     CloneRegistry.unmark("graft__rospec2.plain3")
     spark.sql("CREATE TABLE graft__rospec2.src3 (k BIGINT) USING PARQUET")
@@ -1375,7 +1376,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("TVF expansion survives literal commas/parens, CTE references, and literal-lookalikes") {
     spark.sql("DROP DATABASE IF EXISTS tvfhard CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("tvfhard")
+    val loc = Scratch.onDisk("tvfhard")
     spark.sql(s"CREATE DATABASE tvfhard LOCATION '$loc'")
     spark.sql("CREATE TABLE tvfhard.t (k STRING, v BIGINT) USING parquet")
     spark.sql("INSERT INTO tvfhard.t VALUES ('a,b', 1), ('c(d', 2), ('lo', 3)")
@@ -1417,7 +1418,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CREATE TABLE FUNCTION expands in FROM with typed parameter substitution") {
     spark.sql("DROP DATABASE IF EXISTS tvfspec CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("tvfspec")
+    val loc = Scratch.onDisk("tvfspec")
     spark.sql(s"CREATE DATABASE tvfspec LOCATION '$loc'")
     spark.sql("CREATE TABLE tvfspec.t (k STRING, v BIGINT) USING parquet")
     spark.sql("INSERT INTO tvfspec.t VALUES ('a', 1), ('b', 2), ('c', 3)")
@@ -1538,7 +1539,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sr = new ScriptRunner(spark)
     sr.run("DROP SCHEMA IF EXISTS `graft.alt9` CASCADE")
     sr.run(s"CREATE SCHEMA `graft.alt9` OPTIONS(location = " +
-      s"'${java.nio.file.Files.createTempDirectory("alt9")}')")
+      s"'${Scratch.onDisk("alt9")}')")
     sr.run(
       """CREATE TABLE `graft.alt9.rn` AS SELECT 7 AS x;
         |ALTER TABLE `graft.alt9.rn` RENAME TO rn2""".stripMargin)
@@ -1561,7 +1562,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sr = new ScriptRunner(spark)
     sr.run("DROP SCHEMA IF EXISTS `graft.ddl8` CASCADE")
     sr.run(s"CREATE SCHEMA `graft.ddl8` OPTIONS(location = " +
-      s"'${java.nio.file.Files.createTempDirectory("ddl8")}')")
+      s"'${Scratch.onDisk("ddl8")}')")
     // expression partitioning + options: layout hints drop, semantics hold
     sr.run(
       """CREATE TABLE `graft.ddl8.t1` (ts TIMESTAMP, v INT64)
@@ -1712,7 +1713,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("table functions may reference other table functions (bounded)") {
     spark.sql("DROP DATABASE IF EXISTS tvfspec2 CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("tvfspec2")
+    val loc = Scratch.onDisk("tvfspec2")
     spark.sql(s"CREATE DATABASE tvfspec2 LOCATION '$loc'")
     spark.sql("CREATE TABLE tvfspec2.t (v BIGINT) USING parquet")
     spark.sql("INSERT INTO tvfspec2.t VALUES (1), (2)")
@@ -1765,7 +1766,7 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("STRUCT<…> commas stay inside one ADD COLUMN type and one TVF parameter") {
     spark.sql("DROP DATABASE IF EXISTS graft__structcol CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("structcol")
+    val loc = Scratch.onDisk("structcol")
     spark.sql(s"CREATE DATABASE graft__structcol LOCATION '$loc'")
     val sr = new ScriptRunner(spark)
     sr.run("CREATE TABLE graft.structcol.t AS SELECT 1 AS k")
@@ -1841,5 +1842,85 @@ class ScriptRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
       .get.collect().head.getLong(0)
     assert(v == 72L)
     sr.run("DROP TABLE FUNCTION two_tvf")
+  }
+
+  test("CREATE TABLE … CLONE reads FOR SYSTEM_TIME AS OF a script variable") {
+    spark.sql("DROP DATABASE IF EXISTS clonevar CASCADE")
+    spark.sql(s"CREATE DATABASE clonevar LOCATION '${Scratch.onDisk("clonevar")}'")
+    spark.sql("CREATE TABLE clonevar.t (v BIGINT) USING PARQUET")
+    spark.sql("INSERT INTO clonevar.t VALUES (1), (2), (3)")
+    Thread.sleep(5) // commit boundaries are wall-clock millis
+    new ScriptRunner(spark).run(
+      """DECLARE t2 TIMESTAMP DEFAULT CURRENT_TIMESTAMP();
+        |DELETE FROM clonevar.t WHERE v >= 2;
+        |CREATE TABLE clonevar.c CLONE clonevar.t FOR SYSTEM_TIME AS OF t2""".stripMargin)
+    assert(spark.table("clonevar.t").count() == 1L)
+    assert(spark.table("clonevar.c").count() == 3L, "the clone reads the image as of t2")
+  }
+
+  test("a comment or blank lines before a statement's head change nothing, in both runners") {
+    val csv = Scratch.onDisk("plant_csv")
+    java.nio.file.Files.writeString(java.nio.file.Path.of(csv, "in.csv"), "d,4\n")
+    val load = s"FROM FILES(format='CSV', uris=['$csv/*.csv'])"
+    // one script per head family the classifier routes, and the rows of
+    // plant.t it leaves; plant.snap is a read-only snapshot of plant.t
+    val families = Seq(
+      Seq("DECLARE n INT64 DEFAULT 2", "DELETE FROM plant.t WHERE v < n") -> "b=2 c=3",
+      Seq("DECLARE n INT64", "SET n = 2", "DELETE FROM plant.t WHERE v < n") -> "b=2 c=3",
+      Seq("MERGE INTO plant.t T USING (SELECT 'a' AS k, 10 AS v) S ON T.k = S.k " +
+        "WHEN MATCHED THEN UPDATE SET v = S.v") -> "a=10 b=2 c=3",
+      Seq("UPDATE plant.t SET v = v + 1 WHERE k = 'b'") -> "a=1 b=3 c=3",
+      Seq("DELETE FROM plant.t WHERE k = 'a'") -> "b=2 c=3",
+      Seq("TRUNCATE TABLE plant.t") -> "",
+      Seq("INSERT plant.t VALUES ('d', 4)") -> "a=1 b=2 c=3 d=4",
+      Seq("INSERT INTO plant.snap VALUES ('x', 9)") -> "a=1 b=2 c=3",
+      Seq(s"LOAD DATA INTO plant.t $load") -> "a=1 b=2 c=3 d=4",
+      Seq("DROP TABLE plant.t") -> "absent",
+      Seq("CREATE TEMP TABLE stage AS SELECT k, v * 10 AS v FROM plant.t",
+        "INSERT INTO plant.t SELECT * FROM stage WHERE v > 20") -> "a=1 b=2 c=3 c=30",
+      Seq("CREATE TABLE plant.copy CLONE plant.t",
+        "DELETE FROM plant.copy WHERE k = 'a'") -> "a=1 b=2 c=3",
+      Seq("IF (SELECT count(*) FROM plant.t) = 3 THEN DELETE FROM plant.t WHERE k = 'a'; " +
+        "END IF") -> "b=2 c=3",
+      Seq("BEGIN TRANSACTION", "DELETE FROM plant.t WHERE k = 'a'",
+        s"LOAD DATA OVERWRITE plant.t $load", "DROP TABLE plant.t",
+        "ROLLBACK TRANSACTION") -> "a=1 b=2 c=3",
+      Seq("BEGIN TRANSACTION", "UPDATE plant.t SET v = 0 WHERE k = 'c'",
+        "COMMIT TRANSACTION") -> "a=1 b=2 c=0")
+    def rows(t: String): String =
+      if (!spark.catalog.tableExists(t)) "absent"
+      else spark.table(t).collect().map(r => s"${r.get(0)}=${r.get(1)}").sorted.mkString(" ")
+    // the outcome, the three tables, whether Spark holds a session
+    // variable `n` (a DECLARE Spark ran itself) and the script's lineage
+    def observe(script: String, run: String => Unit): Seq[String] = {
+      spark.sql("DROP TEMPORARY VARIABLE IF EXISTS n")
+      spark.sql("DROP DATABASE IF EXISTS plant CASCADE")
+      spark.sql(s"CREATE DATABASE plant LOCATION '${Scratch.onDisk("plant")}'")
+      spark.sql("CREATE TABLE plant.t (k STRING, v BIGINT) USING PARQUET")
+      spark.sql("INSERT INTO plant.t VALUES ('a', 1), ('b', 2), ('c', 3)")
+      spark.sql("CREATE TABLE plant.snap USING PARQUET AS SELECT * FROM plant.t")
+      CloneRegistry.markReadOnly("plant.snap")
+      val outcome = scala.util.Try(run(script))
+        .fold(e => s"error ${e.getClass.getSimpleName}", _ => "ok")
+      Seq(outcome, rows("plant.t"), rows("plant.snap"), rows("plant.copy"),
+        scala.util.Try(spark.sql("SELECT n").collect()).isSuccess.toString,
+        Lineage.findDependenciesInScript(spark, script, "plant.out")
+          .dependencies.sorted.mkString(" "))
+    }
+    val runners = Seq[(String, String => Unit)](
+      "ScriptRunner" -> { s => new ScriptRunner(spark).run(s); () },
+      "DmlRunner" -> (s => new DmlRunner(spark, new TransformRunner(spark)).run(s)))
+    // blank lines, a line comment and a block comment
+    val plant = "\n\n-- c\n/* c */ "
+    for ((family, want) <- families) {
+      val expected = observe(family.mkString(";\n"), runners.head._2)
+      assert(expected(1) == want, s"${expected.mkString(" | ")} after:\n$family")
+      // unplanted, then planted before each head in turn
+      val scripts = family.mkString(";\n") +: family.indices.map(i =>
+        family.updated(i, plant + family(i)).mkString(";\n"))
+      for ((name, run) <- runners; script <- scripts)
+        assert(observe(script, run) == expected, s"$name on:\n$script")
+    }
+    CloneRegistry.unmark("plant.snap")
   }
 }

@@ -69,4 +69,24 @@ class StatementSplitterSpec extends AnyFunSuite {
     assert(!StatementSplitter.isDdl("WITH a AS (SELECT 1) SELECT * FROM a"))
     assert(!StatementSplitter.isDdl("MERGE INTO t USING s ON c WHEN MATCHED THEN DELETE"))
   }
+
+  test("a statement's head: verb, named table and destructiveness, past comments") {
+    import StatementSplitter.{Head, head}
+    assert(head("-- c\n/* d */ CREATE OR REPLACE TEMPORARY TABLE IF NOT EXISTS `p.d.t` AS x") ==
+      Head("CREATE TEMP TABLE", Some("p.d.t"), false, None, 13, -1))
+    assert(head("CREATE OR REPLACE TABLE t AS SELECT 1").destructive)
+    assert(head("DROP TABLE FUNCTION f") == Head("DROP TABLE FUNCTION", Some("f"), false, None, 0, -1))
+    assert(head("DROP TABLE IF EXISTS t").destructive)
+    assert(head("LOAD DATA OVERWRITE t FROM FILES()") ==
+      Head("LOAD DATA", Some("t"), true, None, 0, -1))
+    assert(head("INSERT OVERWRITE TABLE t SELECT 1").destructive)
+    val bare = "  INSERT t VALUES (1)"
+    assert(head(bare).body(bare) == "INSERT INTO t VALUES (1)")
+    assert(head("lbl: WHILE TRUE DO BREAK lbl; END WHILE lbl") ==
+      Head("WHILE", None, false, Some("lbl"), 5, -1))
+    assert(head("BREAK lbl").name.contains("lbl"))
+    assert(head("BEGIN TRANSACTION").verb == "BEGIN TRANSACTION")
+    assert(head("BEGIN SELECT 1; END").verb == "BEGIN")
+    assert(head("SELECT 1").name.isEmpty)
+  }
 }
