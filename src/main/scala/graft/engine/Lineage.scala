@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
 
 import scala.collection.concurrent.TrieMap
 import scala.util.Try
@@ -80,32 +81,51 @@ object Lineage {
     * them from the UnresolvedWith/CTE nodes), as is the destination.
     */
   def findDependenciesWithCatalyst(spark: SparkSession, query: String,
+      destination: String): Result =
+    findDependenciesWithCatalyst(spark, StatementSplitter.split(query), destination)
+
+  /** Script-aware lineage: evaluate DECLARE/SET variables the way
+    * ScriptRunner does (driver-side scalars, no writes) and extract
+    * dependencies from the substituted text — covers scripts whose
+    * table references only materialize after variable substitution.
+    */
+  def findDependenciesInScript(spark: SparkSession, script: String,
+      destination: String): Result =
+    findDependenciesWithCatalyst(spark, new ScriptRunner(spark).renderStatements(script),
+      destination)
+
+  /** The Catalyst path over statements already split: each statement is
+    * handed on as it is, never joined to its neighbours and split again
+    * (a statement ending in a `--` comment would swallow the `;`).
+    */
+  private def findDependenciesWithCatalyst(spark: SparkSession, stmts: Seq[String],
       destination: String): Result = {
-    val ignored = findDependenciesWithRegex(query, destination).ignored
-    val stmts = StatementSplitter.split(query)
+    val regex = stmts.map(findDependenciesWithRegex(_, destination))
+    val ignored = regex.flatMap(_.ignored)
+    val heads = stmts.map(StatementSplitter.head)
     // temp tables DEFINED by the script are intermediate state, not
     // upstream dependencies — a later statement reading one must not
     // report it
-    val tempFull = stmts.map(StatementSplitter.head)
-      .filter(_.verb == "CREATE TEMP TABLE").flatMap(_.name).toSet
+    val tempFull = heads.filter(_.verb == "CREATE TEMP TABLE").flatMap(_.name).toSet
     // short names only shadow UNQUALIFIED references (temp views are
     // single-part); a qualified table that happens to share the last
     // segment is a genuine upstream dependency
     val tempShort = tempFull.map(_.split("\\.").last)
-    val deps = stmts.flatMap { stmt =>
-      Try(spark.sessionState.sqlParser.parsePlan(
-          Dialect.rewrite(stmt, mapFqns = false))).toOption match {
-        case Some(plan) =>
-          val rels = relationsOf(plan)
-          // parsed-but-opaque statements (EXECUTE IMMEDIATE of a query
-          // string, IDENTIFIER() clauses) expose no relations at parse
-          // level — scan their text, like the reference's fake-select
-          // probing of scripts its parser can't see through
-          if (rels.nonEmpty) rels
-          else findDependenciesWithRegex(stmt, destination).dependencies
-        case scala.None =>
-          // script statement Catalyst can't parse → regex fallback
-          findDependenciesWithRegex(stmt, destination).dependencies
+    val deps = stmts.lazyZip(heads).lazyZip(regex).flatMap { (stmt, head, rx) =>
+      // Spark rejects CREATE TEMP TABLE only after a full parse, so the
+      // temp table's query is parsed on its own
+      val text = if (head.verb != "CREATE TEMP TABLE") stmt else head.body(stmt) match {
+        case ScriptRunner.createTempRe(n1, q1, _, q2) => if (n1 != null) q1 else q2
+        case _ => stmt
+      }
+      relations(spark, text) match {
+        case Some(rels) if rels.nonEmpty => rels
+        // a statement Catalyst can't parse, or a parsed-but-opaque one
+        // (EXECUTE IMMEDIATE of a query string, IDENTIFIER() clauses)
+        // that exposes no relations at parse level: scan its text, like
+        // the reference's fake-select probing of scripts its parser
+        // can't see through
+        case _ => rx.dependencies
       }
     }
     val ignoredSet = ignored.toSet
@@ -114,16 +134,54 @@ object Lineage {
         (!d.contains(".") && tempShort(d))), ignored)
   }
 
-  /** Script-aware lineage: evaluate DECLARE/SET variables the way
-    * ScriptRunner does (driver-side scalars, no writes) and extract
-    * dependencies from the substituted text — covers scripts whose
-    * table references only materialize after variable substitution.
+  // --- relation cache ---------------------------------------------------
+  // A job's statements repeat from run to run (a hot window, a loop
+  // body), and the Catalyst parse is the bulk of lineage: each distinct
+  // statement is parsed once and only its relation names are kept,
+  // never the plan.
+  //
+  // CACHE SOUNDNESS INVARIANT: the key holds everything that decides
+  // whether a rewritten text parses and how it names a table — the
+  // session parser's class (extensions may swap it) and the SqlApiConf
+  // flags the parser reads: ansiEnabled, enforceReservedKeywords,
+  // doubleQuotedIdentifiers (`"ds"."t"` is a name or a string) and
+  // legacyIdentifierClauseOnly. A text containing `${` bypasses the
+  // cache, because SparkSqlParser substitutes session confs into it
+  // before parsing, so the same text can name different tables. The
+  // text is the String Dialect's rewrite cache already holds, so the key
+  // copies nothing.
+  private final case class ParseKey(parser: Class[_], ansi: Boolean, reserved: Boolean,
+      doubleQuoted: Boolean, legacyIdentifier: Boolean, text: String)
+  // a job's hot statements plus room for the ones seen once, which a
+  // clear sweeps out: steadybench compile_lineage repeats about 100
+  // statements, and 512 entries (at most ~0.35 MB) hit 52% of lookups
+  // where 2,048 hit 53%
+  private val RelationCacheMax = 512
+  private val relationCache = TrieMap[ParseKey, Option[Seq[String]]]()
+
+  /** The relations of `stmt` after the Dialect rewrite, or None when
+    * Catalyst can't parse it.
     */
-  def findDependenciesInScript(spark: SparkSession, script: String,
-      destination: String): Result = {
-    val rendered = new ScriptRunner(spark).renderStatements(script).mkString(";\n")
-    findDependenciesWithCatalyst(spark, rendered, destination)
+  private def relations(spark: SparkSession, stmt: String): Option[Seq[String]] = {
+    val text = Dialect.rewrite(stmt, mapFqns = false)
+    val parser = spark.sessionState.sqlParser
+    def parse() = Try(parser.parsePlan(text)).toOption.map(relationsOf)
+    if (text.contains("${")) parse()
+    else {
+      val conf = SQLConf.get
+      val key = ParseKey(parser.getClass, conf.ansiEnabled, conf.enforceReservedKeywords,
+        conf.doubleQuotedIdentifiers, conf.legacyIdentifierClauseOnly, text)
+      relationCache.getOrElse(key, {
+        if (relationCache.size > RelationCacheMax) relationCache.clear()
+        val rels = parse()
+        relationCache.put(key, rels)
+        rels
+      })
+    }
   }
+
+  /** Empties the relation cache, so a test can compare with a cold one. */
+  private[graft] def clearRelationCache(): Unit = relationCache.clear()
 
   private def relationsOf(plan: LogicalPlan): Seq[String] = {
     val cteNames = scala.collection.mutable.Set[String]()
@@ -168,6 +226,10 @@ object Lineage {
   // Int key would let colliding pairs serve each other's cached lineage
   private val cache = TrieMap[(String, String), Entry]()
   val CacheTtlMillis: Long = 24L * 3600 * 1000
+  // the TTL is checked only on read, so the size is bounded as well,
+  // clearing on overflow like Dialect's rewrite cache
+  private[graft] val CacheMax = 2048
+  private[graft] def cacheSize: Int = cache.size
 
   def cached(spark: SparkSession, query: String, destination: String): Result =
     cachedAt(spark, query, destination, System.currentTimeMillis())
@@ -180,6 +242,7 @@ object Lineage {
     val key = (query, destination)
     cache.get(key).filter(e => now - e.at < CacheTtlMillis).map(_.result).getOrElse {
       val r = findDependenciesWithCatalyst(spark, query, destination)
+      if (cache.size > CacheMax) cache.clear()
       cache.put(key, Entry(r, now))
       r
     }

@@ -2084,7 +2084,10 @@ object ScriptRunner {
   private val setMultiRe =
     raw"(?is)^SET\s*\(\s*(\w+(?:\s*,\s*\w+)+)\s*\)\s*=\s*\((.+)\)$$".r
 
-  private val createTempRe =
+  /** `CREATE TEMP TABLE name AS query`: the name and query are groups 1
+    * and 2 for a parenthesised query, else 3 and 4.
+    */
+  private[engine] val createTempRe =
     raw"(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+`?([\w.]+)`?\s+AS\s*\((.+)\)$$|^CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+`?([\w.]+)`?\s+AS\s+(.+)$$".r
 
   private val createTableAsRe =

@@ -1,10 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.StreamingOps.Scratch
 
 /** End-to-end CLI contract (A29/A30): env map in → macro-rendered query
   * through the load-method engine → destination rows + xcom JSON out.
@@ -23,11 +25,11 @@ class GraftRunSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("env contract end-to-end: macros render, APPEND writes, xcom emitted") {
-    val jobDir = Files.createTempDirectory("graft_job")
+    val jobDir = Paths.get(Scratch.onDisk("graft_job"))
     Files.createDirectories(jobDir.resolve("in"))
     val xcom = jobDir.resolve("xcom.json")
     spark.sql("DROP DATABASE IF EXISTS graft__gr CASCADE")
-    spark.sql(s"CREATE DATABASE graft__gr LOCATION '${Files.createTempDirectory("graft_gr")}'")
+    spark.sql(s"CREATE DATABASE graft__gr LOCATION '${Scratch.onDisk("graft_gr")}'")
     spark.sql("CREATE TABLE graft__gr.src (id BIGINT, d STRING) USING parquet")
     spark.sql(
       "INSERT INTO graft__gr.src VALUES (1, '2024-01-01'), (2, '2024-01-02'), (3, '2024-01-03')")
@@ -55,11 +57,11 @@ class GraftRunSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("spillover_date.sql under JOB_DIR routes through the spillover path") {
-    val jobDir = Files.createTempDirectory("graft_job_sp")
+    val jobDir = Paths.get(Scratch.onDisk("graft_job_sp"))
     Files.createDirectories(jobDir.resolve("in"))
     val xcom = jobDir.resolve("xcom.json")
     spark.sql("DROP DATABASE IF EXISTS graft__gr3 CASCADE")
-    spark.sql(s"CREATE DATABASE graft__gr3 LOCATION '${Files.createTempDirectory("graft_gr3")}'")
+    spark.sql(s"CREATE DATABASE graft__gr3 LOCATION '${Scratch.onDisk("graft_gr3")}'")
     spark.sql("CREATE TABLE graft__gr3.src (id BIGINT, d STRING) USING parquet")
     spark.sql(
       """INSERT INTO graft__gr3.src VALUES
@@ -88,11 +90,11 @@ class GraftRunSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dry-run renders and plans but writes nothing, still emits xcom") {
-    val jobDir = Files.createTempDirectory("graft_job_dry")
+    val jobDir = Paths.get(Scratch.onDisk("graft_job_dry"))
     Files.createDirectories(jobDir.resolve("in"))
     val xcom = jobDir.resolve("xcom.json")
     spark.sql("DROP DATABASE IF EXISTS graft__gr2 CASCADE")
-    spark.sql(s"CREATE DATABASE graft__gr2 LOCATION '${Files.createTempDirectory("graft_gr2")}'")
+    spark.sql(s"CREATE DATABASE graft__gr2 LOCATION '${Scratch.onDisk("graft_gr2")}'")
     spark.sql("CREATE TABLE graft__gr2.src (id BIGINT, d STRING) USING parquet")
     spark.sql("INSERT INTO graft__gr2.src VALUES (1, '2024-01-02')")
     spark.sql("CREATE TABLE graft__gr2.dst (id BIGINT, d STRING) USING parquet")

@@ -4,6 +4,7 @@ import java.time.LocalDateTime
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.config.AppConfig
+import graft.streaming.StreamingOps.Scratch
 
 /** Env-contract cases from `config.py:203-260`. */
 class AppConfigSpec extends AnyFunSuite {
@@ -45,7 +46,7 @@ class AppConfigSpec extends AnyFunSuite {
   }
 
   test("job dir file discovery") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_app")
+    val dir = java.nio.file.Paths.get(Scratch.onDisk("graft_app"))
     val in = dir.resolve("in")
     java.nio.file.Files.createDirectories(in)
     java.nio.file.Files.writeString(in.resolve("query.sql"), "SELECT 1")

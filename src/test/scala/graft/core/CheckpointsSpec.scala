@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.StreamingOps.Scratch
+
 /** Checkpoints.cut must be a localCheckpoint on a bare local session
   * and a RELIABLE checkpoint (recompute-safe at cluster scale) once a
   * checkpoint dir is configured — and a gate that runs through the cut
@@ -36,7 +38,7 @@ class CheckpointsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assume(new java.io.File(sfDir).isDirectory)
     val before = graft.SparkEntry.queries("q61_graph_reachability")(spark, sfDir)
       .collect().map(_.toString).sorted
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val dir = Scratch.onDisk("graft_ckpt_")
     spark.conf.set("spark.sql.graft.checkpointDir", dir)
     try {
       val out = Checkpoints.cut(Seq(4, 5).toDF("x"))

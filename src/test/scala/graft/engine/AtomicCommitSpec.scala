@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.config.{LoadMethod, TaskConfig}
 import graft.core.window.CustomWindow
+import graft.streaming.StreamingOps.Scratch
 
 /** Crash-atomicity of the staged-swap partition commit (VERDICT r6 #2):
   * the reference gets multi-partition atomicity from BigQuery's job
@@ -38,7 +39,7 @@ class AtomicCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def freshDest(rows: (Long, String)*): Unit = {
     spark.sql("DROP DATABASE IF EXISTS ac__ds CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("acspec")
+    val loc = Scratch.onDisk("acspec")
     spark.sql(s"CREATE DATABASE ac__ds LOCATION '$loc'")
     spark.sql(
       "CREATE TABLE ac__ds.t (v BIGINT, d STRING) USING parquet PARTITIONED BY (d)")
@@ -148,7 +149,7 @@ class AtomicCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def freshDml(rows: (String, Long)*): Unit = {
     spark.sql("DROP DATABASE IF EXISTS dmlac CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("dmlac")
+    val loc = Scratch.onDisk("dmlac")
     spark.sql(s"CREATE DATABASE dmlac LOCATION '$loc'")
     spark.sql("CREATE TABLE dmlac.t (k STRING, v BIGINT) USING parquet")
     val values = rows.map { case (k, v) => s"('$k', $v)" }.mkString(", ")
@@ -207,7 +208,7 @@ class AtomicCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("PARTITIONED DML rewrite crash recovers, emptied partitions drop (MSCK path)") {
     spark.sql("DROP DATABASE IF EXISTS dmlacp CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("dmlacp")
+    val loc = Scratch.onDisk("dmlacp")
     spark.sql(s"CREATE DATABASE dmlacp LOCATION '$loc'")
     spark.sql(
       "CREATE TABLE dmlacp.t (v BIGINT, d STRING) USING parquet PARTITIONED BY (d)")
@@ -339,7 +340,7 @@ class AtomicCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("PARTITIONED table transaction rollback restores rows and partitions") {
     spark.sql("DROP DATABASE IF EXISTS dmltxp CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("dmltxp")
+    val loc = Scratch.onDisk("dmltxp")
     spark.sql(s"CREATE DATABASE dmltxp LOCATION '$loc'")
     spark.sql(
       "CREATE TABLE dmltxp.t (v BIGINT, d STRING) USING parquet PARTITIONED BY (d)")

@@ -68,4 +68,18 @@ class LineageCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.dependencies == Seq("proj.playground.x"))
     assert(b.dependencies == Seq("proj.playground.x2"))
   }
+
+  test("one query for more destinations than the bound: the cache clears, " +
+      "and an evicted entry is recomputed") {
+    val q = "SELECT * FROM proj.playground.cache_src_bound"
+    val t0 = 15000L
+    val first = Lineage.cachedAt(spark, q, "proj.bound.d0", t0)
+    (1 to Lineage.CacheMax + 1).foreach { i =>
+      Lineage.cachedAt(spark, q, s"proj.bound.d$i", t0)
+      assert(Lineage.cacheSize <= Lineage.CacheMax + 1)
+    }
+    val again = Lineage.cachedAt(spark, q, "proj.bound.d0", t0)
+    assert(!(again eq first), "the entry must have been evicted by the overflow clear")
+    assert(again == first)
+  }
 }

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.config.{LoadMethod, TaskConfig}
 import graft.core.window.CustomWindow
+import graft.streaming.StreamingOps.Scratch
 
 /** REPLACE-on-partitioned break-marker semantics beyond the e02 gate
   * flow: the reference errors only when there are FEWER queries than
@@ -34,7 +35,7 @@ class MultiPartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def freshDest(): Unit = {
     spark.sql("DROP DATABASE IF EXISTS mp__ds CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("mpspec")
+    val loc = Scratch.onDisk("mpspec")
     spark.sql(s"CREATE DATABASE mp__ds LOCATION '$loc'")
     spark.sql(
       "CREATE TABLE mp__ds.t (v BIGINT, d STRING) USING parquet PARTITIONED BY (d)")

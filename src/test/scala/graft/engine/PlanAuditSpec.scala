@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{EngineQueries, PipelineQueries, RelationalQueries, Tables}
+import graft.streaming.StreamingOps.Scratch
 
 /** Physical-plan audits: the properties that make these operators hold
   * at 100 TB — filters reaching the parquet scan, column pruning, small
@@ -369,7 +370,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("partitioned write prunes reads to one partition on read-back") {
     Tables.views(spark, sfDir, "orders")
     spark.sql("DROP DATABASE IF EXISTS plan_audit CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("plan_audit").toAbsolutePath
+    val loc = Scratch.onDisk("plan_audit")
     spark.sql(s"CREATE DATABASE plan_audit LOCATION '$loc'")
     spark.sql("CREATE TABLE plan_audit.t (cnt BIGINT, d STRING) USING PARQUET PARTITIONED BY (d)")
     spark.sql(

@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.SparkSession
@@ -9,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.config.{LoadMethod, QueryPriority, TaskConfig}
 import graft.core.window.CustomWindow
+import graft.streaming.StreamingOps.Scratch
 
 /** A26: QUERY_PRIORITY (config.py:159-163) routes each run's Spark jobs
   * into a FAIR scheduler pool — INTERACTIVE outweighs BATCH.
@@ -37,7 +37,7 @@ class QueryPrioritySpec extends AnyFunSuite with BeforeAndAfterAll {
     queryPriority = priority)
 
   private def runOnce(priority: QueryPriority): String = {
-    val loc = Files.createTempDirectory("graft_prio")
+    val loc = Scratch.onDisk("graft_prio")
     spark.sql("DROP DATABASE IF EXISTS graft__prio CASCADE")
     spark.sql(s"CREATE DATABASE graft__prio LOCATION '$loc'")
     spark.sql("CREATE TABLE graft__prio.out (x BIGINT) USING PARQUET")

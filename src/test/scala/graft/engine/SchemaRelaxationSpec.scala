@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.SparkSession
@@ -9,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.config.{LoadMethod, TaskConfig}
 import graft.core.window.CustomWindow
+import graft.streaming.StreamingOps.Scratch
 
 /** ALLOW_FIELD_RELAXATION (`bigquery_service.py:111-115`): REQUIRED →
   * NULLABLE mode evolution is permitted only when the flag is on; a
@@ -38,7 +38,7 @@ class SchemaRelaxationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def fresh(): Unit = {
     spark.sql("DROP DATABASE IF EXISTS graft__relax CASCADE")
-    val loc = Files.createTempDirectory("graft_relax")
+    val loc = Scratch.onDisk("graft_relax")
     spark.sql(s"CREATE DATABASE graft__relax LOCATION '$loc'")
     spark.sql("CREATE TABLE graft__relax.t (id BIGINT, note STRING) USING PARQUET")
     spark.sql("ALTER TABLE graft__relax.t SET TBLPROPERTIES ('graft.required.columns'='note')")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.StreamingOps.Scratch
+
 /** `FOR SYSTEM_TIME AS OF` resolved against the full pre-write images
   * the staged-swap commit protocol retains: every whole-table rewrite
   * (DML, REPLACE) moves the old contents to a `.graft_snap_<millis>`
@@ -25,7 +27,7 @@ class TimeTravelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def freshDest(): Unit = {
     spark.sql("DROP DATABASE IF EXISTS tt__ds CASCADE")
-    val loc = java.nio.file.Files.createTempDirectory("ttspec")
+    val loc = Scratch.onDisk("ttspec")
     spark.sql(s"CREATE DATABASE tt__ds LOCATION '$loc'")
     spark.sql("CREATE TABLE tt__ds.t (v BIGINT, k STRING) USING parquet")
     spark.sql("INSERT INTO tt__ds.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.StreamingOps.Scratch
+
 /** Analyzer-based lineage resolves views to base tables — the corpus
   * behavior of `main_test.go:855-964` (view1 → viewtable1/2) without a
   * network dry-run.
@@ -19,7 +21,7 @@ class ViewLineageSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("views expand to base tables; CTEs and direct scans mix") {
-    val loc = java.nio.file.Files.createTempDirectory("lineage_vw")
+    val loc = Scratch.onDisk("lineage_vw")
     spark.sql("DROP DATABASE IF EXISTS lin CASCADE")
     spark.sql(s"CREATE DATABASE lin LOCATION '$loc'")
     spark.sql("CREATE TABLE lin.viewtable1 (id BIGINT, v STRING) USING parquet")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.StreamingOps.Scratch
+
 /** Physical-type conformance for the driver testdata read path. The
   * driver has regenerated `/root/testdata` with DIFFERENT parquet
   * physical types between rounds (TIMESTAMP(NANOS) through round 4,
@@ -69,7 +71,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = agg.writeStream.format("memory")
       .queryName("tables_spec_ntz").outputMode("complete")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("tables_spec_ckpt").toString)
+        Scratch.onDisk("tables_spec_ckpt"))
       .start()
     try q.processAllAvailable() finally q.stop()
     assert(spark.table("tables_spec_ntz").count() > 0)
